@@ -306,8 +306,6 @@ class MoonTable:
         # other segment over by reference — the driver never touches
         # unaffected metadata (cf. the reference's changed-manifests-
         # only iceberg sync, puffin_writer_proxy.rs:253-364).
-        compacted_df = scan_op.file_list_df(
-            self.spark, sorted(compacted), "path")
         out_dicts = []
         for rec in records:
             for out in rec["outputs"]:
@@ -357,6 +355,8 @@ class MoonTable:
                 # staleness check as a join, not a driver dict: any
                 # compacted input whose (dv_path, dv_cardinality)
                 # changed — or that vanished — invalidates the rewrite
+                compacted_df = scan_op.file_list_df(
+                    self.spark, sorted(compacted), "path")
                 old_sel = (self.store.manifest_df(
                     self.spark, commit_base.version)
                     .join(F.broadcast(compacted_df), on="path",

@@ -1,4 +1,4 @@
-"""Z-order (Morton) clustering key, vectorized.
+"""Z-order (Morton) clustering key.
 
 moonlink has **no** Z-order/Hilbert clustering (verified in SURVEY.md —
 its compactor emits files strictly in input file-id order,
@@ -9,22 +9,26 @@ BASELINE.json's north rule.  Design:
 1. each dimension is mapped to a *numeric proxy* that preserves order —
    strings take their first-7-bytes big-endian integer (lexicographic
    within the prefix), numerics cast to float64;
-2. per-dimension quantile boundaries (``df.approxQuantile`` — one
-   column-pruned pass over the data, executed by Spark, never collected
-   row-wise) rank-normalize the proxy into ``2**bits`` buckets, so skewed
-   distributions still fill the key space evenly;
-3. a pandas UDF interleaves the bucket bits (classic Morton
-   part1by1 spread, pure numpy — no per-row Python) into one long
-   ``zkey``.
+2. per-dimension quantile boundaries rank-normalize the proxy into
+   ``2**bits`` buckets, so skewed distributions still fill the key space
+   evenly.  They come from one seeded, bounded sample collected to the
+   driver (:func:`compute_zorder_boundaries`); the quantiles are numpy;
+3. the bucket bits are interleaved (Morton part1by1 spread) into one
+   long ``zkey``.  The default Morton key is a plain Spark expression
+   (:func:`with_zorder_key`), so the rewrite's scan stage never leaves
+   the JVM; only the Hilbert curve runs as a pandas UDF.
 
-The zkey is a *physical layout* device only: rewrites
-``repartitionByRange`` on it and sort within partitions, which gives every
-output file a narrow (repo, path) footprint -> tight per-file min/max
-bounds in the manifest -> effective file pruning.  No Catalyst rule is
-needed; the key never survives into committed data files.
+The zkey is a *physical layout* device only: rewrites split it into
+ranges at the global zkey cutpoints (``ZCUTS_KEY``) and sort within
+partitions, which gives every output file a narrow (repo, path)
+footprint -> tight per-file min/max bounds in the manifest -> effective
+file pruning.  No Catalyst rule is needed; the key never survives into
+committed data files.
 """
 
 from __future__ import annotations
+
+import threading
 
 import numpy as np
 import pandas as pd
@@ -38,12 +42,67 @@ from pyspark.sql.functions import pandas_udf
 ZCUTS_KEY = "__zcuts__"
 
 
+class ZOrderBoundaries(dict):
+    """One job's boundaries: ``{column: float64 array, ZCUTS_KEY: int64
+    array}``, as returned by :func:`compute_zorder_boundaries`.
+
+    Every bin of a job keys its rows from the same boundaries, so the
+    zkey's Column expressions are built once per job and kept here:
+    :func:`with_zorder_key` looks them up instead of re-spelling two
+    4095-element literal arrays per dimension (and the interleave) on
+    the driver for every bin.  The lock makes the concurrently-submitted
+    bins wait for the first build instead of each doing their own."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._lock = threading.Lock()
+        self._key_stages: dict[tuple, list] = {}
+
+    def key_stages(self, key: tuple, build):
+        """The stages memoized under ``key``; ``build()`` makes them on
+        the first call."""
+        with self._lock:
+            if key not in self._key_stages:
+                self._key_stages[key] = build()
+            return self._key_stages[key]
+
+
 def _string_proxy_np(s: pd.Series) -> np.ndarray:
     """First-7-bytes big-endian integer of a string column (vectorized)."""
     encoded = s.fillna("").str.encode("utf-8", "ignore")
     raw = encoded.to_numpy(dtype="S8")  # truncate/pad to 8 bytes
     v = np.frombuffer(raw.tobytes(), dtype=">u8").astype(np.uint64)
     return (v >> np.uint64(8)).astype(np.float64)  # top 7 bytes, fits f64<2^56
+
+
+def _quantiles(values: np.ndarray, probs: np.ndarray) -> np.ndarray:
+    """``np.quantile(values, probs)`` (its default ``linear`` method)
+    from one full sort.
+
+    ``np.quantile`` partitions the array around every requested index;
+    with 4095 of them that costs 100+ ms per call on a 10^4-value
+    sample, against well under a millisecond for one sort.  The index,
+    weight and interpolation arithmetic below is numpy's own, step for
+    step, so the result is bit-equal to ``np.quantile`` for float and
+    integer input (a test pins this).  The one exception is the sign of
+    a zero: ``-0.0`` and ``0.0`` compare equal, so which one a sort or a
+    partition places first may differ — ranks are unaffected."""
+    a = np.sort(values)
+    virtual = (a.size - 1) * probs
+    lo = np.floor(virtual)
+    hi = lo + 1
+    top = virtual >= a.size - 1  # at or past the last value: take it
+    lo[top] = -1
+    hi[top] = -1
+    t = virtual - lo
+    below, above = a[lo.astype(np.intp)], a[hi.astype(np.intp)]
+    diff = np.subtract(above, below)
+    out = np.add(below, diff * t)
+    np.subtract(above, diff * (1 - t), out=out, where=t >= 0.5,
+                 casting="unsafe", dtype=out.dtype)
+    if a.dtype.kind == "f" and np.isnan(a[-1]):
+        out[:] = np.nan  # NaN sorts last; np.quantile then returns it
+    return out
 
 
 def compute_zorder_boundaries(
@@ -71,26 +130,27 @@ def compute_zorder_boundaries(
     # footer sweep, while the manifest sum is free
     n = total_rows if total_rows is not None else sel.count()
     if n == 0:
-        return {c: np.array([], dtype=np.float64) for c in columns}
+        return ZOrderBoundaries(
+            {c: np.array([], dtype=np.float64) for c in columns})
     fraction = min(1.0, (sample_cap * 1.25) / n)
     sample = (sel.sample(fraction=fraction, seed=seed).limit(sample_cap)
               .toPandas())
     dtypes = dict(df.dtypes)
     n_b = (1 << bits) - 1
     probs = np.linspace(0.0, 1.0, n_b + 2)[1:-1]
-    out: dict[str, np.ndarray] = {}
+    out = ZOrderBoundaries()
     bucketed = []
     for c in columns:
         vals = (_string_proxy_np(sample[c].astype(str))
                 if dtypes[c] == "string"
                 else sample[c].fillna(0).to_numpy(dtype=np.float64))
-        out[c] = np.quantile(vals, probs).astype(np.float64)
+        out[c] = _quantiles(vals, probs).astype(np.float64)
         bucketed.append(np.searchsorted(out[c], vals, side="right"))
     # global zkey distribution cutpoints (ZCUTS_KEY): rewrite bins carve
     # these into per-output-file ranges so output splits are explicit
     # and deterministic (no runtime range sampling)
     zk = CURVES[curve](bucketed, bits)
-    out[ZCUTS_KEY] = np.quantile(
+    out[ZCUTS_KEY] = _quantiles(
         zk, np.linspace(0.0, 1.0, 4097)[1:-1]).astype(np.int64)
     return out
 
@@ -194,46 +254,96 @@ def _double_array_lit(vals: list[float]):
     return F.expr(f"CAST(split('{body}', ',') AS array<double>)")
 
 
-def _jvm_rank(proxy, bnds: np.ndarray):
-    """#{boundary <= proxy} (``np.searchsorted`` side='right'), as a
-    whole-stage-codegen expression: a two-level search over *literal*
-    boundary arrays — a coarse filter over every-64th boundary picks the
-    block, a fine filter over that 64-element slice finishes.  ~128
-    comparisons/row instead of 4095 (flat filter measured 31 s / 4M
-    rows; two-level 3.0 s — faster than the pandas-UDF searchsorted it
-    replaces, and it scales with task slots instead of bottlenecking on
-    the Arrow→Python worker pipe)."""
+# boundaries per fine block of the two-level rank search
+_RANK_BLOCK = 64
+
+
+def _jvm_block(proxy, bnds: np.ndarray):
+    """Coarse step of :func:`_jvm_rank`: how many of every-64th boundary
+    are <= proxy, i.e. the 64-boundary block the proxy falls in."""
+    coarse = _double_array_lit(bnds[_RANK_BLOCK - 1::_RANK_BLOCK])
+    return F.size(F.filter(coarse, lambda b: b <= proxy))
+
+
+def _jvm_rank(proxy, bnds: np.ndarray, block=None):
+    """#{boundary <= proxy} (``np.searchsorted`` side='right') as a
+    Spark expression: a two-level search over *literal* boundary arrays
+    — a coarse filter over every-64th boundary picks the block
+    (:func:`_jvm_block`, or the precomputed ``block`` column), a fine
+    filter over that 64-element slice finishes.  ~128 comparisons per
+    row instead of 4095.
+
+    ``proxy`` is evaluated inside the filter lambdas once per array
+    element, and the block index twice, so callers keying many rows
+    pass both as column references (see :func:`with_zorder_key`)."""
     vals = [float(x) for x in bnds]
     if not vals:
         return F.lit(0).cast("long")
-    block = 64
-    if len(vals) <= block:
+    if len(vals) <= _RANK_BLOCK:
         # small boundary sets (bits <= 6): one flat filter — the coarse
         # slice would be EMPTY and an empty array literal cannot be
         # spelled through split('') under ANSI casts
         return F.size(F.filter(_double_array_lit(vals),
                                lambda b: b <= proxy)).cast("long")
-    arr = _double_array_lit(vals)
-    coarse = _double_array_lit(vals[block - 1::block])
-    blk = F.size(F.filter(coarse, lambda b: b <= proxy))
-    fine = F.slice(arr, blk * block + 1, block)
-    return (blk * block
+    if block is None:
+        block = _jvm_block(proxy, bnds)
+    fine = F.slice(_double_array_lit(vals), block * _RANK_BLOCK + 1,
+                   _RANK_BLOCK)
+    return (block * _RANK_BLOCK
             + F.size(F.filter(fine, lambda b: b <= proxy))).cast("long")
+
+
+def _jvm_part1by1(x, bits: int):
+    """JVM twin of :func:`_part1by1_16` (the same spread steps) on the
+    low ``bits`` bits of a long Column."""
+    x = x.bitwiseAND(F.lit((1 << bits) - 1))
+    for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F),
+                        (2, 0x33333333), (1, 0x55555555)):
+        x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
+    return x
 
 
 def _jvm_morton(ranks: list, bits: int):
     """JVM twin of :func:`morton_interleave` (same bit layout: dim 0
     takes the higher interleaved bit)."""
     ndim = len(ranks)
+    ranks = [r.cast("long") for r in ranks]
     if ndim == 1:
-        return ranks[0].cast("long")
+        return ranks[0]
+    if ndim == 2 and bits <= 16:
+        return F.shiftleft(_jvm_part1by1(ranks[0], bits), 1).bitwiseOR(
+            _jvm_part1by1(ranks[1], bits))
     out = F.lit(0).cast("long")
     for d, r in enumerate(ranks):
-        r = r.cast("long")
         for i in range(bits):
             bit = F.shiftright(r, i).bitwiseAND(F.lit(1))
             out = out + F.shiftleft(bit, i * ndim + (ndim - 1 - d))
     return out
+
+
+def _morton_stages(col_kinds: list[tuple[str, bool]],
+                   bnds: dict[str, np.ndarray], bits: int,
+                   out_col: str) -> list[dict]:
+    """The Morton zkey as successive projections: proxies, coarse block
+    indices, ranks, then the interleave.  Each intermediate is its own
+    column, so the string proxy (four string conversions) and the block
+    search run once per row instead of once per boundary compared
+    inside the rank's filter lambdas, and each rank once instead of
+    once per interleaved bit: Catalyst does not inline a non-trivial
+    projection back into a consumer that uses it more than once."""
+    proxies, blocks, ranks = {}, {}, {}
+    for i, (c, is_str) in enumerate(col_kinds):
+        proxy, block = f"__zproxy{i}", None
+        proxies[proxy] = (
+            _jvm_string_proxy(F.col(c)) if is_str
+            else F.coalesce(F.col(c).cast("double"), F.lit(0.0)))
+        if len(bnds[c]) > _RANK_BLOCK:
+            block = f"__zblock{i}"
+            blocks[block] = _jvm_block(F.col(proxy), bnds[c])
+            block = F.col(block)
+        ranks[f"__zrank{i}"] = _jvm_rank(F.col(proxy), bnds[c], block)
+    zkey = _jvm_morton([F.col(r) for r in ranks], bits)
+    return [proxies, blocks, ranks, {out_col: zkey}]
 
 
 def with_zorder_key(
@@ -246,33 +356,27 @@ def with_zorder_key(
 ) -> DataFrame:
     """Append the space-filling-curve key column (Morton or Hilbert).
 
-    Morton (the default) is computed entirely JVM-side — rank via
-    two-level literal-array search, interleave via shift/or — keeping
-    the whole rewrite scan stage inside whole-stage codegen: no Arrow
-    round-trip of the clustering columns through Python (measured: the
-    pandas-UDF stage was the one part of the maintenance job that did
-    not scale with task slots).  Hilbert (stateful per-bit rotations)
-    stays a vectorized pandas UDF."""
+    Morton (the default) is computed entirely JVM-side — per dimension
+    one proxy, one coarse and one fine literal-array filter (~128
+    comparisons per row at 12 bits), then a shift/or interleave —
+    keeping the rewrite scan stage free of any Arrow round-trip through
+    Python.  Given a :class:`ZOrderBoundaries` the Column expressions
+    are built once and reused by every later call.  Hilbert (stateful
+    per-bit rotations) stays a vectorized pandas UDF."""
     dtypes = dict(df.dtypes)
     col_kinds = [(c, dtypes[c] == "string") for c in columns]
     bnds = {c: np.asarray(boundaries[c], dtype=np.float64) for c in columns}
 
     if curve == "morton":
-        # each rank lands in its own intermediate column so the heavy
-        # rank subtree (two literal-array filters) appears ONCE in the
-        # plan, not once per interleaved bit — multi-use projections
-        # are not re-inlined, so the per-row cost is 2 array searches
-        # per dimension regardless of `bits`
-        tmp = []
-        for i, (c, is_str) in enumerate(col_kinds):
-            proxy = (_jvm_string_proxy(F.col(c)) if is_str
-                     else F.coalesce(F.col(c).cast("double"), F.lit(0.0)))
-            name = f"__zrank{i}"
-            df = df.withColumn(name, _jvm_rank(proxy, bnds[c]))
-            tmp.append(name)
-        return df.withColumn(
-            out_col,
-            _jvm_morton([F.col(t) for t in tmp], bits)).drop(*tmp)
+        def build():
+            return _morton_stages(col_kinds, bnds, bits, out_col)
+        stages = (boundaries.key_stages((tuple(col_kinds), bits, out_col),
+                                        build)
+                  if isinstance(boundaries, ZOrderBoundaries) else build())
+        for stage in stages:
+            if stage:
+                df = df.withColumns(stage)
+        return df.drop(*[n for st in stages[:-1] for n in st])
 
     interleave = CURVES[curve]
 

@@ -49,6 +49,7 @@ from moonlink_spark.operators.scan import (
     POS_COL,
     deletes_df,
     file_list_df,
+    local_df,
     scan_files,
 )
 from moonlink_spark.snapshotstore import SnapshotStore
@@ -172,9 +173,8 @@ def changes(spark: SparkSession, store: SnapshotStore,
     if not parts:
         ddl = store.read_snapshot(to_version).properties.get("schema_ddl") \
             or ", ".join(f"`{c}` string" for c in final_schema)
-        return spark.createDataFrame(
-            [], f"{ddl}, {CHANGE_TYPE_COL} string, "
-                f"{COMMIT_VERSION_COL} int")
+        return local_df(spark, f"{ddl}, {CHANGE_TYPE_COL} string, "
+                               f"{COMMIT_VERSION_COL} int")
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)

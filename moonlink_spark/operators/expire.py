@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark import refs
 from moonlink_spark.fs import remove_many
+from moonlink_spark.operators.scan import local_df
 from moonlink_spark.snapshotstore import DATA_DIR, DV_DIR, SnapshotStore
 
 _DELETE_BATCH = 1024
@@ -80,7 +81,7 @@ def list_files_df(spark: SparkSession, store: SnapshotStore):
                 if fs.is_file(os.path.join(path, n))]
 
     if not units:
-        return spark.createDataFrame([], "f string")
+        return local_df(spark, "f string")
     rdd = (spark.sparkContext
            .parallelize(units, len(units))
            .flatMap(_ls))

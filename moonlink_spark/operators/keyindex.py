@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.snapshotstore import SnapshotStore
 from moonlink_spark.fs import part_files, remove_many, rename_many
+from moonlink_spark.operators.scan import local_df
 
 IDX_DIR = "idx"
 COV_DIR = os.path.join(IDX_DIR, "files")
@@ -227,7 +228,7 @@ def candidate_files(spark: SparkSession, store: SnapshotStore,
                 .select(F.col(FILE_ENT_COL).alias("path"))
                 .distinct())
     else:
-        hits = spark.createDataFrame([], "path string")
+        hits = local_df(spark, "path string")
     covered = spark.read.parquet(*cov).select("path").distinct()
     uncovered = (manifest.select("path")
                  .join(covered, on="path", how="left_anti"))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from moonlink_spark.config import CompactionConfig
+from moonlink_spark.operators.scan import local_df
 
 
 @dataclass
@@ -102,7 +103,7 @@ def ordered_cumsum(df: DataFrame, order_col: str, value_col: str,
         acc += int(r["_s"] or 0)
     if not offs:
         offs = [(0, 0)]
-    off_df = spark.createDataFrame(offs, "_part int, _off long")
+    off_df = local_df(spark, "_part int, _off long", list(zip(*offs)))
     w = (Window.partitionBy("_part").orderBy(order_col)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     out = (part.join(F.broadcast(off_df), on="_part", how="left")

@@ -25,10 +25,13 @@ pinned reader sees (cf. ``union_read/read_state.rs:20-50``).
 
 from __future__ import annotations
 
-from typing import Mapping
+from typing import Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from moonlink_spark.snapshotstore import Snapshot, SnapshotStore
 
@@ -203,14 +206,39 @@ def predicate_exprs(predicates: Mapping[str, object] | None):
     return out
 
 
+def local_df(spark: SparkSession, schema: str | StructType,
+             columns: Sequence[Sequence] = ()) -> DataFrame:
+    """A driver-built DataFrame from column value lists (none: empty),
+    handed to Spark as one Arrow table.
+
+    ``spark.createDataFrame`` on Python rows plans as ``Scan
+    ExistingRDD``: the rows are pickled into a ``PythonRDD``, and every
+    job that reads the frame starts Python workers to unpickle them
+    again (0.2-0.5 s per job on a 4-core host, even for a handful of
+    rows).  An Arrow table plans as ``LocalTableScan`` and never leaves
+    the JVM once handed over."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if columns:
+        table = pa.table([pa.array(vals, type=f.type)
+                          for vals, f in zip(columns, arrow_schema)],
+                         schema=arrow_schema)
+    else:
+        table = arrow_schema.empty_table()
+    return spark.createDataFrame(table, schema=schema)
+
+
 def file_list_df(spark: SparkSession, files: list[str],
                  col: str = FILE_COL) -> DataFrame:
     """A one-column DataFrame of file paths, for semi-joining instead of
     a literal ``isin`` list: an IN-expression over thousands of paths
     bloats the plan tree (and its codegen) linearly, while a broadcast
     semi-join against this DataFrame stays O(1) in plan size no matter
-    how many files the manifest selected."""
-    return spark.createDataFrame([(f,) for f in files], f"{col} string")
+    how many files the manifest selected.  Built from Arrow
+    (:func:`local_df`), so the semi-join's jobs start no Python
+    worker."""
+    return local_df(spark, f"`{col}` string", [files])
 
 
 def deletes_df(spark: SparkSession, store: SnapshotStore,
@@ -221,7 +249,7 @@ def deletes_df(spark: SparkSession, store: SnapshotStore,
     ``iceberg_table_syncer.rs:376-435``), so the union over sidecars is
     exactly the deleted set."""
     if not dv_paths:
-        return spark.createDataFrame([], f"{FILE_COL} string, {POS_COL} long")
+        return local_df(spark, f"{FILE_COL} string, {POS_COL} long")
     dv = spark.read.parquet(*[store.abs(p) for p in dv_paths])
     wanted = file_list_df(spark, data_files, "referenced_file")
     return (
@@ -395,7 +423,7 @@ def scan(
         ddl = snapshot.properties.get("schema_ddl")
         if not ddl:
             ddl = ", ".join(f"`{c}` string" for c in snapshot.schema)
-        empty = spark.createDataFrame([], ddl)
+        empty = local_df(spark, ddl)
         if with_location:
             if FILE_COL not in empty.columns:
                 empty = empty.withColumn(FILE_COL,

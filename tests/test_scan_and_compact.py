@@ -168,3 +168,33 @@ def test_fully_deleted_file_skipped_at_planning(spark, tmp_path):
     store = SnapshotStore(w)
     oracle = live_rows_pandas(store, store.current_version())
     assert spark_sha_multiset(live) == content_sha_multiset(oracle)
+
+
+def test_driver_built_frames_plan_as_local_scans(spark):
+    """File lists and empty frames are handed to Spark as Arrow tables:
+    a ``LocalTableScan`` starts no Python worker in the jobs that read
+    it, where a frame built from Python rows (``Scan ExistingRDD``)
+    does in every one."""
+    from pyspark.sql.types import StructType
+
+    from moonlink_spark.operators.scan import file_list_df, local_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    files = file_list_df(spark, ["data/a.parquet", "data/b.parquet"], "path")
+    assert files.dtypes == [("path", "string")]
+    assert "LocalTableScan" in plan(files)
+    assert sorted(r["path"] for r in files.collect()) == [
+        "data/a.parquet", "data/b.parquet"]
+
+    none = file_list_df(spark, [])
+    assert none.dtypes == [("_mlfile", "string")]
+    assert "LocalTableScan" in plan(none) and none.count() == 0
+
+    ddl = ("a string, b long, c array<long>, d map<string,int>, "
+           "e struct<x:int,y:string>, f timestamp, g timestamp_ntz, "
+           "h date, i decimal(10,2)")
+    empty = local_df(spark, ddl)
+    assert empty.schema == StructType.fromDDL(ddl)
+    assert "LocalTableScan" in plan(empty) and empty.count() == 0

@@ -254,3 +254,88 @@ def test_range_salts_perfect_packing(spark):
         # salts[i] must occupy partition i: a bijection, no collisions
         assert sorted(placed.values()) == list(range(n))
         assert all(placed[s] == i for i, s in enumerate(salts))
+
+
+def test_quantiles_bit_equal_to_np_quantile():
+    """The one-sort quantile helper must return exactly what
+    np.quantile returns — boundaries decide every row's zkey, and so
+    the committed layout — on random, heavily tied, tiny, below-4095
+    and non-finite samples, and on int64 zkeys."""
+    from moonlink_spark.functions.zorder import _quantiles
+
+    rng = np.random.default_rng(3)
+    probs = np.linspace(0.0, 1.0, 4097)[1:-1]
+    zk = morton_interleave([rng.integers(0, 4096, 9442),
+                            rng.integers(0, 4096, 9442)], 12)
+    samples = {
+        "random": rng.normal(size=9442) * 1e15,
+        "tied": rng.integers(0, 7, 9442).astype(np.float64),
+        "n=1": np.array([42.5]),
+        "n<4095": rng.uniform(-1e3, 1e3, 1000),
+        "nonfinite": np.array([1.0, np.inf, -np.inf, 3.0, 2.0]),
+        "nan": np.array([1.0, np.nan, 2.0]),
+        "int64 zkeys": zk,
+        "int64 tied": np.repeat(zk[:5], 800),
+    }
+    for name, vals in samples.items():
+        with np.errstate(invalid="ignore"):  # inf - inf, as in numpy
+            exp = np.quantile(vals, probs)
+            got = _quantiles(vals, probs)
+        assert got.dtype == exp.dtype, name
+        assert np.array_equal(got.view(np.uint64), exp.view(np.uint64)), \
+            name
+
+
+def test_zorder_key_evaluates_string_proxy_once(spark):
+    """Each string dimension's proxy (encode/hex/rpad/conv) must be its
+    own projection: inlined into the rank's filter lambdas it would be
+    re-evaluated for every boundary compared.  The second call on the
+    same job's boundaries reuses the built expressions."""
+    df = spark.createDataFrame(
+        [("org1/r", "a/b.py", 1.0), ("org2/s", "c/d.py", -2.0),
+         (None, "e.py", None)],
+        "repo string, path string, score double")
+    bnds = compute_zorder_boundaries(df, ["repo", "path", "score"], bits=12)
+    first = with_zorder_key(df, ["repo", "path"], bnds, bits=12)
+    plan = first._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("conv(") == 2
+    second = with_zorder_key(df, ["repo", "path"], bnds, bits=12)
+    assert len(bnds._key_stages) == 1
+    assert (sorted(first.collect(), key=str)
+            == sorted(second.collect(), key=str))
+
+
+def test_zorder_key_stages_built_once_under_concurrent_bins():
+    """A job's bins key their rows concurrently from one boundaries
+    object: exactly one of them may build the zkey expressions, and
+    every bin must get that same build."""
+    import sys
+    import threading
+    import time
+
+    from moonlink_spark.functions.zorder import ZOrderBoundaries
+
+    bnds = ZOrderBoundaries(repo=np.array([1.0]))
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.01)  # widen the check-then-act window
+        return [object()]
+
+    got = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(
+            target=lambda: got.append(bnds.key_stages(("k",), build)))
+            for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(got) == 16
+    assert all(g is got[0] for g in got)
