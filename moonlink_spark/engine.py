@@ -43,6 +43,7 @@ from moonlink_spark.snapshotstore import (
     CommitConflict,
     Snapshot,
     SnapshotStore,
+    read_pinned,
     shard_rel,
 )
 
@@ -244,7 +245,8 @@ class MoonTable:
         if all_dv:
             deletes = scan_op.deletes_df(
                 self.spark, self.store, all_dv,
-                [p for b in run_bins for p in b.files]).persist()
+                {f: p for b in run_bins for f, p in b.dv_files.items()}
+            ).persist()
 
         prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -409,8 +411,7 @@ class MoonTable:
             return base
         live_files = (mdf.filter(F.col("dv_path").isNotNull())
                       .select(F.col("path").alias("referenced_file")))
-        dv = (self.spark.read.parquet(
-                *[self.store.abs(p) for p in live_dv])
+        dv = (read_pinned(self.spark, [self.store.abs(p) for p in live_dv])
               .join(F.broadcast(live_files), on="referenced_file",
                     how="left_semi")
               .select("referenced_file",
@@ -437,21 +438,12 @@ class MoonTable:
             pairs.append((os.path.join(tmp, part), self.store.abs(rel)))
             new_rels.append(rel)
         rename_many(self.store.fs, pairs)
-        # one job over the renamed sidecars recovers file → (sidecar,
-        # cardinality); no per-part collect loop
-        upd = (self.spark.read.parquet(
-                  *[self.store.abs(r) for r in new_rels])
-               .select(F.col("referenced_file").alias("path"),
-                       merge_op._rel_file_expr(
-                           F.input_file_name(),
-                           self.store.warehouse).alias("_new_dv"),
-                       F.col("cardinality").alias("_new_card")))
         # delta commit: only the files whose DV pointer moved rewrite
         # their manifest segment; everything else carries by reference.
         # The updated set is the files-with-DVs being consolidated —
-        # the operation's own working set, never the whole table.
-        updated = {r["path"]: (r["_new_dv"], r["_new_card"])
-                   for r in upd.collect()}
+        # the operation's own working set, never the whole table; it is
+        # read back from the renamed sidecars on the driver (no job).
+        updated = merge_op.dv_pointers(self.store, new_rels)
         props = dict(base.properties)
         props.update({"flush_lsn": base.flush_lsn, "job_id": job_id,
                       "operation": "optimize-index",

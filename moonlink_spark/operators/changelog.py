@@ -47,12 +47,12 @@ from pyspark.sql import functions as F
 from moonlink_spark.operators.scan import (
     FILE_COL,
     POS_COL,
+    _with_relative_file,
     deletes_df,
-    file_list_df,
     local_df,
     scan_files,
 )
-from moonlink_spark.snapshotstore import SnapshotStore
+from moonlink_spark.snapshotstore import SnapshotStore, read_pinned
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
@@ -86,10 +86,8 @@ def _version_changes(spark: SparkSession, store: SnapshotStore,
             "re-sync consumers from a snapshot at or after it")
     if op not in _LOGICAL_OPS:
         return None
-    m_b = spark.read.parquet(
-        *store.read_snapshot(version).manifest_paths)
-    m_a = spark.read.parquet(
-        *store.read_snapshot(snap_b.parent).manifest_paths)
+    m_b = read_pinned(spark, snap_b.manifest_paths)
+    m_a = read_pinned(spark, store.read_snapshot(snap_b.parent).manifest_paths)
     ddl = snap_b.properties.get("schema_ddl")
     out = []
 
@@ -104,7 +102,8 @@ def _version_changes(spark: SparkSession, store: SnapshotStore,
             sum(r["dv_cardinality"] for r in added),
             schema_ddl=ddl, project=snap_b.schema,
             column_defaults=snap_b.properties.get("column_defaults"),
-            dv_files=[r["path"] for r in added if r["dv_path"]])
+            dv_files={r["path"]: r["dv_path"] for r in added
+                      if r["dv_path"]})
         out.append(ins.withColumn(CHANGE_TYPE_COL, F.lit("insert")))
 
     # -- deletes: DV growth on files common to A and B ------------------
@@ -121,11 +120,13 @@ def _version_changes(spark: SparkSession, store: SnapshotStore,
     if changed:
         files = [r["path"] for r in changed]
         dv_b = deletes_df(spark, store,
-                          sorted({r["dv_path"] for r in changed}), files)
-        old_paths = sorted({r["_adv"] for r in changed if r["_adv"]})
+                          sorted({r["dv_path"] for r in changed}),
+                          {r["path"]: r["dv_path"] for r in changed})
+        old_of = {r["path"]: r["_adv"] for r in changed if r["_adv"]}
         delta = dv_b
-        if old_paths:
-            dv_a = deletes_df(spark, store, old_paths, files)
+        if old_of:
+            dv_a = deletes_df(spark, store, sorted(set(old_of.values())),
+                              old_of)
             # newer sidecars are supersets (merge-on-write), so the
             # delta is a plain anti-join on (file, pos)
             delta = dv_b.join(dv_a, on=[FILE_COL, POS_COL],
@@ -133,13 +134,8 @@ def _version_changes(spark: SparkSession, store: SnapshotStore,
         reader = spark.read
         if ddl:
             reader = reader.schema(ddl)
-        rows = reader.parquet(*[store.abs(p) for p in files])
-        rows = rows.withColumn(
-            FILE_COL,
-            F.replace(
-                F.regexp_replace(F.col("_metadata.file_path"),
-                                 "^file:/*", "/"),
-                F.lit(store.warehouse + "/"), F.lit("")))
+        rows = _with_relative_file(
+            reader.parquet(*[store.abs(p) for p in files]), store)
         dels = (rows.join(F.broadcast(delta), on=[FILE_COL, POS_COL],
                           how="left_semi")
                 .drop(FILE_COL)

@@ -142,8 +142,7 @@ def expire_snapshots(
 
     reachable = None
     for v in keep:
-        m = spark.read.parquet(
-            *store.read_snapshot(v).manifest_paths)
+        m = store.manifest_df(spark, v)
         files = m.select(F.col("path").alias("f")).union(
             m.filter(F.col("dv_path").isNotNull())
             .select(F.col("dv_path").alias("f")))

@@ -51,7 +51,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from moonlink_spark.snapshotstore import SnapshotStore
+from moonlink_spark.snapshotstore import SnapshotStore, read_pinned
 from moonlink_spark.fs import part_files, remove_many, rename_many
 from moonlink_spark.operators.scan import local_df
 
@@ -155,7 +155,7 @@ def write_index(spark: SparkSession, store: SnapshotStore,
             "files left uncovered — run optimize('index') to rebuild")
         return
     ent = (_with_relative_file(
-               spark.read.parquet(*[store.abs(r) for r in data_rels])
+               read_pinned(spark, [store.abs(r) for r in data_rels])
                .select(*key_columns, "_metadata"), store)
            .select(key_hash(key_columns).alias(HASH_COL),
                    F.col("_mlfile").alias(FILE_ENT_COL))
@@ -223,13 +223,13 @@ def candidate_files(spark: SparkSession, store: SnapshotStore,
     for b in buckets:
         parts.extend(_bucket_parts(store, b))
     if parts:
-        hits = (spark.read.parquet(*parts)
+        hits = (read_pinned(spark, parts)
                 .join(hashes, on=HASH_COL, how="left_semi")
                 .select(F.col(FILE_ENT_COL).alias("path"))
                 .distinct())
     else:
         hits = local_df(spark, "path string")
-    covered = spark.read.parquet(*cov).select("path").distinct()
+    covered = read_pinned(spark, cov).select("path").distinct()
     uncovered = (manifest.select("path")
                  .join(covered, on="path", how="left_anti"))
     return hits.union(uncovered).distinct()
@@ -290,7 +290,7 @@ def consolidate_index(spark: SparkSession, store: SnapshotStore,
 
     new_parts = 0
     if old_parts:
-        ent = (spark.read.parquet(*old_parts)
+        ent = (read_pinned(spark, old_parts)
                .join(live_paths.withColumnRenamed("path", FILE_ENT_COL),
                      on=FILE_ENT_COL, how="left_semi")
                .distinct()
@@ -316,7 +316,7 @@ def consolidate_index(spark: SparkSession, store: SnapshotStore,
         store.fs.rmtree(tmp)
 
     if old_cov:
-        merged_cov = (spark.read.parquet(*old_cov)
+        merged_cov = (read_pinned(spark, old_cov)
                       .join(live_paths, on="path", how="left_semi")
                       .distinct().orderBy("path"))
         import pyarrow as pa

@@ -13,8 +13,10 @@ merge-on-sync (``iceberg_table_syncer.rs:376-435``):
   the snapshot scan (moonlink's hash-index point lookup becomes a
   broadcast join when the change set is small — the common CDC case — or
   a salted shuffle join for huge batches over skewed keys);
-- new positions are unioned with each file's existing DV (newer sidecars
-  are supersets, so scans may read any mix of old+new sidecars safely);
+- the batch's matched positions are grouped into one row per affected
+  file and unioned with that file's CURRENT DV row (the sidecar its
+  manifest entry names), so every new sidecar row is a superset of the
+  file's previous DV;
 - inserted rows land in fresh snappy "ingest" files (tiny-file MoR debt,
   by design — a later ``optimize()`` folds everything copy-on-write).
 
@@ -23,8 +25,9 @@ successor manifest is computed as a DataFrame (old manifest left-joined
 with the new per-file DV mapping, unioned with the fresh ingest
 entries) and streamed into the commit (cf. the reference's
 manifest-rewrite-as-data design, ``puffin_writer_proxy.rs:253-364``).
-Only change-batch-sized artifacts (affected file list, ingest file
-stats) touch the driver.
+Only change-batch-sized artifacts touch the driver: the affected file
+list, those files' manifest rows and new DV pointers (read with
+pyarrow, no Spark job), and the ingest file stats.
 
 Concurrency: artifact names embed a per-attempt random nonce, so two
 committers racing from the same base version can never overwrite each
@@ -56,7 +59,8 @@ from moonlink_spark.operators.rewrite import assign_positions, footer_stats_many
 from moonlink_spark.operators.scan import (
     FILE_COL,
     POS_COL,
-    file_list_df,
+    _with_relative_file,
+    local_df,
     scan,
 )
 from moonlink_spark.snapshotstore import (
@@ -64,6 +68,7 @@ from moonlink_spark.snapshotstore import (
     DV_DIR,
     Snapshot,
     SnapshotStore,
+    read_pinned,
     shard_rel,
 )
 
@@ -82,11 +87,20 @@ OP_COL = "_op"
 RELATIONAL_COMMIT_FILES = 100_000
 
 
-def _rel_file_expr(col, warehouse: str):
-    """Manifest-relative path from an ``input_file_name()`` value."""
-    return F.replace(
-        F.regexp_replace(col, "^file:/*", "/"),
-        F.lit(warehouse + "/"), F.lit(""))
+def dv_pointers(store: SnapshotStore,
+                rels: list[str]) -> dict[str, tuple[str, int]]:
+    """path → (sidecar, cardinality) for every row of the just-written
+    DV sidecars ``rels``: two columns read on the driver with pyarrow,
+    for callers that hand the mapping to ``commit_delta`` anyway."""
+    import pyarrow.parquet as pq
+    out = {}
+    for rel in rels:
+        t = pq.read_table(store.abs(rel),
+                          columns=["referenced_file", "cardinality"])
+        for f, card in zip(t["referenced_file"].to_pylist(),
+                           t["cardinality"].to_pylist()):
+            out[f] = (rel, card)
+    return out
 
 
 def _commit_full_relational(spark, store, snapshot, upd, added,
@@ -149,7 +163,7 @@ def merge_into(
     job_id = f"{job_tag}-v{snapshot.version:06d}-{nonce}"
     data_cols = [c for c in snapshot.schema if c != POS_COL]
     changes = changes.persist()
-    new_dels = None
+    new_dv = None
     try:
         # -- 1. match change keys to live row positions ------------------
         # manifest-bounds pruning: files whose [min,max] range on the
@@ -180,13 +194,15 @@ def merge_into(
         if (config.index_key_columns
                 and tuple(key_columns) == tuple(config.index_key_columns)):
             keep = keyindex.candidate_files(
-                spark, store, spark.read.parquet(*snapshot.manifest_paths),
+                spark, store, read_pinned(spark, snapshot.manifest_paths),
                 changes, list(key_columns),
                 n_buckets=config.index_buckets)
         loc = scan(spark, store, snapshot, with_location=True,
                    predicates=predicates, keep_files=keep).select(
             *key_columns, FILE_COL, POS_COL)
-        keys = changes.select(*key_columns).distinct()
+        # no distinct(): a repeated key matches the same positions
+        # twice, and collect_set below keeps each once
+        keys = changes.select(*key_columns)
         if broadcast_changes:
             matched = loc.join(F.broadcast(keys), on=key_columns,
                                how="inner")
@@ -201,51 +217,72 @@ def merge_into(
             # salt — every probe row meets exactly one replica of its key
             matched = probe.join(build, on=[*key_columns, skew.SALT_COL],
                                  how="inner").drop(skew.SALT_COL)
-        new_dels = matched.select(FILE_COL, POS_COL).persist()
 
         # -- 2. merge with existing DVs per affected file ----------------
-        # `affected` is change-batch-sized (the files a CDC batch
-        # touches), not table-sized — safe to plan with driver-side.
-        manifest = spark.read.parquet(*snapshot.manifest_paths)
-        affected = [r[FILE_COL] for r in
-                    new_dels.select(FILE_COL).distinct().collect()]
-        upd = None  # DataFrame (path, _new_dv, _new_card) or None
+        # One row per affected file: the matched positions grouped once
+        # and cached, so the DV write below reads the cache.  `affected`
+        # is its file column — change-batch-sized (the files a CDC batch
+        # touches), not table-sized, so safe to plan with driver-side.
+        new_dv = (matched.groupBy(F.col(FILE_COL).alias("referenced_file"))
+                  .agg(F.array_sort(F.collect_set(POS_COL))
+                       .alias("positions"))
+                  .persist())
+        affected = [r[0] for r in
+                    new_dv.select("referenced_file").collect()]
+        relational = len(affected) > RELATIONAL_COMMIT_FILES
+        upd = None  # relational: DataFrame (path, _new_dv, _new_card)
+        updated = {}  # delta commit: path -> (dv_path, dv_cardinality)
         t_dv = _time.monotonic()
         if affected:
-            aff_paths = file_list_df(spark, affected, "path")
-            old_dv_paths = sorted(
-                r["dv_path"] for r in
-                manifest.join(F.broadcast(aff_paths), on="path",
-                              how="left_semi")
-                .filter(F.col("dv_path").isNotNull())
-                .select("dv_path").distinct().collect())
-            old = None
+            # each affected file's current sidecar, and its row count:
+            # DV sidecars record it (DV-bitmap sizing parity with the
+            # puffin blob property ``mooncake-deletion-vector-max-num-rows``).
+            # Below the relational threshold these are driver lookups in
+            # the manifest segments commit_delta rewrites anyway; above
+            # it the same frame comes from the manifest by join.
+            if relational:
+                cur = (store.manifest_df(spark, snapshot.version)
+                       .join(new_dv.select(
+                           F.col("referenced_file").alias("path")),
+                           on="path", how="left_semi")
+                       .select(F.col("path").alias("referenced_file"),
+                               "dv_path",
+                               F.col("rows").alias("max_row_count")))
+                old_dv_paths = sorted(
+                    r[0] for r in cur.filter(F.col("dv_path").isNotNull())
+                    .select("dv_path").distinct().collect())
+            else:
+                ents = store.manifest_lookup(snapshot.version, affected,
+                                             ("dv_path", "rows"))
+                cur = F.broadcast(local_df(
+                    spark, "referenced_file string, dv_path string, "
+                           "max_row_count long",
+                    [affected, [ents[f]["dv_path"] for f in affected],
+                     [ents[f]["rows"] for f in affected]]))
+                old_dv_paths = sorted({e["dv_path"] for e in ents.values()
+                                       if e["dv_path"]})
+            merged = new_dv.join(cur, on="referenced_file")
             if old_dv_paths:
-                old = (
-                    spark.read.parquet(
-                        *[store.abs(p) for p in old_dv_paths])
-                    .join(F.broadcast(file_list_df(
-                        spark, affected, "referenced_file")),
-                        on="referenced_file", how="left_semi")
-                    .select(F.col("referenced_file").alias(FILE_COL),
-                            F.explode("positions").alias(POS_COL)))
-            alldels = new_dels if old is None else new_dels.union(old)
-            merged = (
-                alldels.groupBy(FILE_COL)
-                .agg(F.array_sort(F.collect_set(POS_COL)).alias("positions"))
-                .withColumn("cardinality", F.size("positions").cast("long"))
-                .withColumnRenamed(FILE_COL, "referenced_file")
-            )
-            # DV sidecars record the referenced file's row count
-            # (DV-bitmap sizing parity with the puffin blob property
-            # ``mooncake-deletion-vector-max-num-rows``); it comes from
-            # the manifest by join, never a driver map.
-            rows_map = (manifest
-                        .join(F.broadcast(aff_paths), on="path",
-                              how="left_semi")
-                        .select(F.col("path").alias("referenced_file"),
-                                F.col("rows").alias("max_row_count")))
-            merged = merged.join(rows_map, on="referenced_file")
+                # each file's row in its CURRENT sidecar only, paired on
+                # (file, sidecar): superseded rows of the file in older
+                # sidecars never join, so there is nothing to explode
+                # and deduplicate — one array union per file
+                old = (_with_relative_file(
+                           read_pinned(spark, [store.abs(p)
+                                               for p in old_dv_paths]),
+                           store, "dv_path")
+                       .select("referenced_file", "dv_path",
+                               F.col("positions").alias("_old")))
+                merged = (merged.join(old, how="left",
+                                      on=["referenced_file", "dv_path"])
+                          .withColumn("positions", F.coalesce(
+                              F.array_sort(F.array_union("positions",
+                                                         "_old")),
+                              F.col("positions"))))
+            merged = merged.select(
+                "referenced_file", "positions",
+                F.size("positions").cast("long").alias("cardinality"),
+                "max_row_count")
 
             tmp = os.path.join(store.warehouse, "tmp", job_id, "dv")
             n_dv = max(1, math.ceil(len(affected) / 512))
@@ -261,15 +298,20 @@ def merge_into(
                 pairs.append((os.path.join(tmp, part), store.abs(rel)))
                 new_rels.append(rel)
             rename_many(store.fs, pairs)
-            # one job over the renamed sidecars recovers the per-file
-            # mapping (file → sidecar, cardinality); input_file_name()
-            # identifies the sidecar each row landed in
-            upd = (spark.read.parquet(*[store.abs(r) for r in new_rels])
-                   .select(
-                       F.col("referenced_file").alias("path"),
-                       _rel_file_expr(F.input_file_name(),
-                                      store.warehouse).alias("_new_dv"),
-                       F.col("cardinality").alias("_new_card")))
+            # the per-file mapping (file → sidecar, cardinality): read
+            # back on the driver for a delta commit; as a DataFrame for
+            # the relational one, the sidecar taken from the row's scan
+            # metadata
+            if relational:
+                upd = (_with_relative_file(
+                           read_pinned(spark, [store.abs(r)
+                                               for r in new_rels]),
+                           store, "_new_dv")
+                       .select(F.col("referenced_file").alias("path"),
+                               "_new_dv",
+                               F.col("cardinality").alias("_new_card")))
+            else:
+                updated = dv_pointers(store, new_rels)
             store.fs.rmtree(os.path.join(store.warehouse, "tmp", job_id))
             # DV build + publish wall (OTEL sync_deletion_vectors
             # analogue, iceberg_persistence.rs:59-86)
@@ -316,11 +358,11 @@ def merge_into(
 
         # -- 4. commit: manifest DELTA -----------------------------------
         # A MERGE's metadata footprint is exactly its working set: the
-        # affected files' new DV pointers (``upd`` — change-batch-sized,
-        # already driver-safe per the `affected` collect above) plus the
-        # fresh ingest entries.  commit_delta rewrites only the manifest
-        # segments those files live in; the rest of a 10^12-entry
-        # manifest is carried by reference.  Past
+        # affected files' new DV pointers (``updated`` — change-batch-
+        # sized, already driver-safe per the `affected` collect above)
+        # plus the fresh ingest entries.  commit_delta rewrites only the
+        # manifest segments those files live in; the rest of a
+        # 10^12-entry manifest is carried by reference.  Past
         # ``RELATIONAL_COMMIT_FILES`` affected files the dict would be
         # the driver's biggest allocation — the commit goes relational
         # instead (streamed full manifest, O(partition) driver rows).
@@ -347,13 +389,9 @@ def merge_into(
         })
         if extra_properties:
             props.update(extra_properties)
-        if upd is not None and len(affected) > RELATIONAL_COMMIT_FILES:
+        if upd is not None:
             return _commit_full_relational(
                 spark, store, snapshot, upd, added, props, config)
-        updated = {}
-        if upd is not None:
-            updated = {r["path"]: (r["_new_dv"], r["_new_card"])
-                       for r in upd.collect()}
         return store.commit_delta(
             snapshot.version,
             added=added,
@@ -364,6 +402,6 @@ def merge_into(
             expected_parent=snapshot.version,
         )
     finally:
-        if new_dels is not None:
-            new_dels.unpersist()
+        if new_dv is not None:
+            new_dv.unpersist()
         changes.unpersist()

@@ -42,9 +42,10 @@ class CompactionBin:
     bin_id: int
     files: list[str] = field(default_factory=list)
     dv_paths: list[str] = field(default_factory=list)
-    # files (subset of ``files``) that have any delete rows — the scan
-    # routes only these through the DV anti-join; clean files bypass it
-    dv_files: list[str] = field(default_factory=list)
+    # files (subset of ``files``) that have any delete rows, each mapped
+    # to its DV sidecar — the scan routes only these through the DV
+    # anti-join; clean files bypass it
+    dv_files: dict[str, str] = field(default_factory=dict)
     rows: int = 0
     bytes: int = 0
     deleted_rows: int = 0
@@ -153,7 +154,7 @@ def _bins_from_rows(rows: list[dict],
         b.bytes += row["bytes"]
         b.deleted_rows += row["dv_cardinality"]
         if row["dv_path"]:
-            b.dv_files.append(row["path"])
+            b.dv_files[row["path"]] = row["dv_path"]
             if row["dv_path"] not in b.dv_paths:
                 b.dv_paths.append(row["dv_path"])
     return [bins[k] for k in sorted(bins)]

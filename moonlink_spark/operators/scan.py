@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from moonlink_spark.snapshotstore import Snapshot, SnapshotStore
+from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
 
 # Below this many deleted rows (summed manifest dv_cardinality) the DV
 # side is broadcast.  8M (file,pos) pairs ≈ a few hundred MB broadcast —
@@ -48,11 +48,13 @@ FILE_COL = "_mlfile"
 POS_COL = "_pos"
 
 
-def _with_relative_file(df: DataFrame, store: SnapshotStore) -> DataFrame:
-    """Attach the manifest-relative file path of each row from parquet
-    scan metadata (JVM-side expression, no UDF)."""
+def _with_relative_file(df: DataFrame, store: SnapshotStore,
+                        col: str = FILE_COL) -> DataFrame:
+    """Attach, as ``col``, the manifest-relative path of the parquet file
+    each row was read from (JVM-side expression on the scan metadata,
+    no UDF)."""
     return df.withColumn(
-        FILE_COL,
+        col,
         F.replace(
             F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
             F.lit(store.warehouse + "/"), F.lit("")),
@@ -242,23 +244,40 @@ def file_list_df(spark: SparkSession, files: list[str],
 
 
 def deletes_df(spark: SparkSession, store: SnapshotStore,
-               dv_paths: list[str], data_files: list[str]) -> DataFrame:
-    """Exploded delete vectors: one row per deleted (file, position),
-    restricted to ``data_files``.  Newer DV sidecars for a file are
-    supersets of older ones (merge-on-write, cf.
-    ``iceberg_table_syncer.rs:376-435``), so the union over sidecars is
-    exactly the deleted set."""
-    if not dv_paths:
+               dv_paths: list[str],
+               data_files: Mapping[str, str] | Sequence[str]) -> DataFrame:
+    """Exploded delete vectors of ``data_files``: one row per deleted
+    (file, position), read from the sidecars ``dv_paths``.
+
+    ``data_files`` normally maps each file to the sidecar its manifest
+    entry names (``dv_path``), and a file's positions are read from that
+    sidecar only: a newer sidecar row for a file is a superset of the
+    older ones (merge-on-write, cf. ``iceberg_table_syncer.rs:376-435``),
+    so it alone is the file's deleted set.  Older sidecars may still hold
+    a superseded row for the file; pairing on (file, sidecar) skips
+    those, so no (file, position) repeats and nothing needs
+    deduplicating.
+
+    A plain file list (no pairing known) takes every listed sidecar's
+    rows for those files; positions may then repeat, which the DV
+    anti-join, this frame's consumer, does not mind."""
+    if not dv_paths or not data_files:
         return local_df(spark, f"{FILE_COL} string, {POS_COL} long")
-    dv = spark.read.parquet(*[store.abs(p) for p in dv_paths])
-    wanted = file_list_df(spark, data_files, "referenced_file")
+    dv = read_pinned(spark, [store.abs(p) for p in dv_paths])
+    if isinstance(data_files, Mapping):
+        dv = _with_relative_file(dv, store, "dv_path")
+        wanted = local_df(spark, "referenced_file string, dv_path string",
+                          [list(data_files), list(data_files.values())])
+        on = ["referenced_file", "dv_path"]
+    else:
+        wanted = file_list_df(spark, list(data_files), "referenced_file")
+        on = ["referenced_file"]
     return (
-        dv.join(F.broadcast(wanted), on="referenced_file", how="left_semi")
+        dv.join(F.broadcast(wanted), on=on, how="left_semi")
         .select(
             F.col("referenced_file").alias(FILE_COL),
             F.explode("positions").alias(POS_COL),
         )
-        .distinct()
     )
 
 
@@ -274,7 +293,7 @@ def scan_files(
     project: list[str] | None = None,
     column_defaults: Mapping[str, object] | None = None,
     deletes: DataFrame | None = None,
-    dv_files: list[str] | None = None,
+    dv_files: Mapping[str, str] | Sequence[str] | None = None,
 ) -> DataFrame:
     """Read an explicit file set applying its delete vectors.
 
@@ -284,9 +303,11 @@ def scan_files(
     the DV sidecars per scan.
 
     ``dv_files`` (when the caller knows it from the manifest: the
-    subset of ``data_files`` whose ``dv_path`` is non-null) routes ONLY
-    those files through the anti-join; clean files are read plainly and
-    unioned in.  This matters at scale: after maintenance most files
+    subset of ``data_files`` whose ``dv_path`` is non-null, best as a
+    file → ``dv_path`` mapping so each file's deletes come from its own
+    sidecar only, see :func:`deletes_df`) routes ONLY those files
+    through the anti-join; clean files are read plainly and unioned
+    in.  This matters at scale: after maintenance most files
     carry no DVs, and above ``BROADCAST_DV_ROWS`` the anti-join is a
     shuffle — without the split every row of every clean file would
     shuffle on (file, pos) just to survive a join that cannot touch it
@@ -319,7 +340,7 @@ def scan_files(
         return d
 
     if dv_files is not None:
-        dvset = set(dv_files)
+        dvset = dv_files if isinstance(dv_files, Mapping) else set(dv_files)
         dirty = [f for f in data_files if f in dvset]
         clean = [f for f in data_files if f not in dvset]
     else:
@@ -332,7 +353,9 @@ def scan_files(
                 F.broadcast(file_list_df(spark, dirty)),
                 on=FILE_COL, how="left_semi")
         else:
-            dels = deletes_df(spark, store, dv_paths, dirty)
+            dels = deletes_df(
+                spark, store, dv_paths,
+                dv_files if isinstance(dv_files, Mapping) else dirty)
         if dv_cardinality <= BROADCAST_DV_ROWS:
             dels = F.broadcast(dels)
         live = _read(dirty).join(dels, on=[FILE_COL, POS_COL],
@@ -372,7 +395,7 @@ def scan(
     hands the predicate to the pyarrow reader (row-level dataset
     filter at the scan) on that path instead."""
     manifest = prune_manifest(
-        spark.read.parquet(*snapshot.manifest_paths), predicates)
+        read_pinned(spark, snapshot.manifest_paths), predicates)
     if keep_files is not None:
         manifest = manifest.join(keep_files, on="path", how="left_semi")
     # Planning collects (path, dv_path, dv_cardinality) — file *lists*,
@@ -437,7 +460,8 @@ def scan(
         schema_ddl=snapshot.properties.get("schema_ddl"),
         project=snapshot.schema,
         column_defaults=snapshot.properties.get("column_defaults"),
-        dv_files=[r["path"] for r in plan_rows if r["dv_path"]])
+        dv_files={r["path"]: r["dv_path"] for r in plan_rows
+                  if r["dv_path"]})
     if apply_row_filters:
         for cond in predicate_exprs(predicates):
             out = out.filter(cond)  # Catalyst pushes to the parquet scan

@@ -2117,7 +2117,8 @@ def delta_log_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state = dls.reconstruct_state(store)         # the log IS the input
     files = sorted(state)
-    dv_files = sorted(p for p, e in state.items() if e.get("dv_path"))
+    dv_files = {p: e["dv_path"] for p, e in state.items()
+                if e.get("dv_path")}
     dv_paths = sorted({e["dv_path"] for e in state.values()
                        if e.get("dv_path")})
     dv_card = sum(int(e.get("dv_cardinality") or 0)

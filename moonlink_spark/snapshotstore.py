@@ -201,6 +201,82 @@ def bound_type(ddl: str | None) -> pa.DataType | None:
     return _DDL_TO_ARROW.get(base)
 
 
+def _as_nullable(dt):
+    """``dt`` with every field and element nullable — what Spark makes
+    of any file source schema (``StructType.asNullable``)."""
+    from pyspark.sql import types as T
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _as_nullable(f.dataType))
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType),
+                         _as_nullable(dt.valueType))
+    return dt
+
+
+def footer_schema(spark, path: str):
+    """The Spark read schema of a parquet file, from its footer alone (a
+    driver read, no Spark job), or ``None`` where the footer's types do
+    not map one-to-one onto what Spark would infer (INT96 and nanosecond
+    timestamps, unsigned ints, …) and only Spark's own inference is
+    right."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    md = pq.read_metadata(path)
+    if any(md.schema.column(i).physical_type == "INT96"
+           for i in range(md.num_columns)):
+        return None
+
+    ntz = str(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
+                             "true")).lower() == "true"
+    # pyarrow restores dictionary-encoded columns from the arrow schema
+    # it stored; Spark reads their values
+    arrow = [pa.field(f.name, f.type.value_type if pat.is_dictionary(f.type)
+                      else f.type)
+             for f in md.schema.to_arrow_schema()]
+    if any(pat.is_timestamp(f.type) and f.type.unit == "ns" for f in arrow):
+        return None
+    try:
+        struct = from_arrow_schema(pa.schema(arrow),
+                                   prefer_timestamp_ntz=ntz)
+    except (TypeError, ValueError, NotImplementedError):
+        return None
+    return _as_nullable(struct)
+
+
+def read_pinned(spark, paths):
+    """``spark.read.parquet(*paths)`` with the read schema pinned from the
+    first file's footer (:func:`footer_schema`).  Without a schema every
+    read starts a schema-inference job (``parquet at …``) that costs
+    more than reading a small manifest segment or DV sidecar itself.
+    Spark infers from one file too, so the result is the same: this is
+    for files the engine writes, where every file of one read shares
+    one schema (a version's manifest segments, DV sidecars, index
+    parts)."""
+    paths = list(paths)
+    reader = spark.read
+    struct = footer_schema(spark, paths[0])
+    if struct is not None:
+        reader = reader.schema(struct)
+    return reader.parquet(*paths)
+
+
+def _range_hits(seg: dict, paths: list[str]) -> bool:
+    """Whether a segment's [min_path, max_path] range holds any of the
+    sorted ``paths``; a segment of unknown range (v1) always may."""
+    import bisect
+    if not paths:
+        return False
+    lo, hi = seg.get("min_path"), seg.get("max_path")
+    if lo is None or hi is None:
+        return True
+    i = bisect.bisect_left(paths, lo)
+    return i < len(paths) and paths[i] <= hi
+
+
 _MANIFEST_BATCH_ROWS = 65_536
 
 # Entries per manifest segment.  Segments are the unit a delta commit
@@ -335,9 +411,40 @@ class SnapshotStore:
             else self.fs.mtime(self.header_path(version))
 
     def manifest_df(self, spark, version: int | None = None):
-        """The manifest as a Spark DataFrame — the planner's input."""
+        """The manifest as a Spark DataFrame — the planner's input.  Its
+        schema is pinned from the first segment's footer
+        (:func:`read_pinned`): building the frame starts no Spark job;
+        the segments are read only by the query that uses it."""
         snap = self.read_snapshot(version)
-        return spark.read.parquet(*snap.manifest_paths)
+        return read_pinned(spark, snap.manifest_paths)
+
+    def manifest_lookup(self, version: int, paths: Iterable[str],
+                        columns: Iterable[str]) -> dict[str, dict]:
+        """``columns`` of the manifest entries of ``paths``, driver-side:
+        path → {column: value}.  Reads only the segments whose path range
+        can hold one of them — the segments :meth:`commit_delta` reads
+        and rewrites when it updates the same paths — with a vectorized
+        arrow filter.  For change-sized path sets; raises
+        ``RuntimeError`` if a path is not in the manifest."""
+        import pyarrow.compute as pc
+
+        wanted = sorted(set(paths))
+        cols = ["path", *columns]
+        out: dict[str, dict] = {}
+        for seg in self.manifest_segments(version):
+            if seg.get("entries") == 0 or not _range_hits(seg, wanted):
+                continue
+            t = pq.read_table(self.abs(seg["path"]), columns=cols)
+            t = t.filter(pc.is_in(t["path"], value_set=pa.array(
+                wanted, type=pa.string())))
+            for row in t.to_pylist():
+                out[row.pop("path")] = row
+        if len(out) != len(wanted):
+            missing = [p for p in wanted if p not in out]
+            raise RuntimeError(
+                f"v{version} manifest lacks {len(missing)} paths "
+                f"(first: {missing[:3]})")
+        return out
 
     def manifest_entries(self, version: int | None = None) -> list[dict]:
         """Driver-side manifest rows, globally path-sorted
@@ -808,21 +915,11 @@ class SnapshotStore:
         found: set[str] = set()
         next_idx = 0
 
-        def _intersects(seg: dict) -> bool:
-            if not affected:
-                return False
-            lo, hi = seg.get("min_path"), seg.get("max_path")
-            if lo is None or hi is None:
-                return True  # unknown range (v1 segment): conservative
-            import bisect
-            i = bisect.bisect_left(affected, lo)
-            return i < len(affected) and affected[i] <= hi
-
         candidates = []
         for seg in base_segs:
             if seg.get("entries") == 0:
                 continue  # empty segment: nothing to carry
-            if not _intersects(seg):
+            if not _range_hits(seg, affected):
                 kept_descs.append(dict(seg))
                 continue
             candidates.append(seg)
