@@ -308,21 +308,7 @@ class MoonTable:
         # other segment over by reference — the driver never touches
         # unaffected metadata (cf. the reference's changed-manifests-
         # only iceberg sync, puffin_writer_proxy.rs:253-364).
-        out_dicts = []
-        for rec in records:
-            for out in rec["outputs"]:
-                flat = {"path": out["path"], "rows": out["rows"],
-                        "bytes": out["bytes"], "dv_path": None,
-                        "dv_cardinality": 0}
-                for c in self.config.stats_columns:
-                    mn, mx = (out.get("bounds") or {}).get(c, (None, None))
-                    flat[f"min_{c}"] = mn
-                    flat[f"max_{c}"] = mx
-                    flat[f"null_{c}"] = (out.get("null_counts")
-                                         or {}).get(c)
-                    flat[f"ndv_{c}"] = (out.get("ndv") or {}).get(c)
-                out_dicts.append(flat)
-        out_dicts.sort(key=lambda e: e["path"])
+        outputs = [out for rec in records for out in rec["outputs"]]
         commit_base = base
         for attempt in range(5):
             metrics["phase_seconds"]["commit_start_at"] = round(
@@ -337,7 +323,7 @@ class MoonTable:
             try:
                 snap = self.store.commit_delta(
                     commit_base.version,
-                    added=out_dicts, removed=sorted(compacted),
+                    added=outputs, removed=sorted(compacted),
                     schema=commit_base.schema,
                     stats_columns=self.config.stats_columns,
                     properties=props,

@@ -2,9 +2,8 @@
 
 Mirrors the reference's accessor layer
 (``src/moonlink/src/storage/filesystem/accessor/`` — every metadata or
-file-plumbing operation goes through one trait object, with an
-object-storage cache behind it, ``storage/cache/object_storage/``), so
-that the engine can run against a posix warehouse in the sandbox and an
+file-plumbing operation goes through one trait object), so that the
+engine can run against a posix warehouse in the sandbox and an
 object store on a real cluster by swapping one class.
 
 Scope: this seam covers the *driver's* metadata and file-plumbing
@@ -29,6 +28,9 @@ version hint, ``storage/table/iceberg/file_catalog.rs:640-665``):
   lack rename: implement as copy + delete of a *never-published* temp
   object, which is safe because only ``publish_cas`` makes state
   visible).
+
+Every accessor is stateless and picklable: :func:`expire.list_files_df`
+ships ``store.fs`` to the executors that list the warehouse.
 """
 
 from __future__ import annotations
@@ -61,16 +63,6 @@ class PosixFileSystem:
     def mtime(self, path: str) -> float:
         """Last-modified epoch seconds (object store: LastModified)."""
         return os.path.getmtime(path)
-
-    def stat_token(self, path: str) -> tuple:
-        """Change-detection token for cache validation: equal tokens ⇒
-        unchanged content.  Posix: (size, mtime_ns, inode, ctime_ns) —
-        nanosecond stamps defeat the coarse-mtime race and the inode
-        catches atomic-rename replacement (write-temp+rename allocates a
-        NEW inode even when size and mtime collide).  An object-store
-        implementation returns the etag."""
-        st = os.stat(path)
-        return (st.st_size, st.st_mtime_ns, st.st_ino, st.st_ctime_ns)
 
     def list(self, path: str) -> list[str]:
         return os.listdir(path)
@@ -218,306 +210,3 @@ def remove_many(fs: PosixFileSystem, paths: Iterable[str],
     with ThreadPoolExecutor(
             max_workers=min(max_workers, len(paths))) as pool:
         list(pool.map(fs.remove, paths))
-
-
-class CachingFileSystem:
-    """Read-through byte cache over any accessor — the driver-side
-    analogue of the reference's object-storage cache
-    (``storage/cache/object_storage/base_cache.rs``: budgeted cache in
-    front of remote reads with eviction; its file-handle pinning has no
-    analogue here because :meth:`read_bytes` returns whole immutable
-    byte strings, never partial handles).
-
-    Scope and safety:
-
-    - only :meth:`read_bytes` is cached; every entry is validated
-      against the object's current ``stat_token`` on EVERY hit — one
-      stat/HEAD instead of a full GET, never a stale read.  The posix
-      token is (size, mtime_ns, inode, ctime_ns), so a cross-process
-      writer replacing a same-length file inside mtime granularity is
-      still caught (atomic replace = new inode; in-place rewrite = new
-      ctime_ns).  On an object store that is the etag HEAD the
-      reference's cache also performs.  Inner filesystems without
-      ``stat_token`` fall back to (size, mtime) and should be treated
-      as single-writer-process-only.
-    - mutators (write/rename/remove/CAS) invalidate before delegating;
-      :meth:`publish_cas` delegates wholesale so its precondition read
-      is ALWAYS uncached — the commit point never trusts this cache.
-    - eviction is size-budgeted LRU; an object larger than the whole
-      budget is returned uncached.
-    - thread-safe (the REST/RPC servers read concurrently).
-
-    What this buys at scale: snapshot headers, refs, WAL segment
-    indexes and version hints are re-read on every scan/commit cycle;
-    against an object store each is a GET round-trip.  Data-file and
-    manifest PARQUET reads go through Spark/pyarrow on executors and
-    are out of scope (the executors' cache is cluster-local NVMe).
-    """
-
-    def __init__(self, inner: PosixFileSystem | None = None,
-                 max_bytes: int = 64 << 20):
-        import threading
-        from collections import OrderedDict
-        self.inner = inner or PosixFileSystem()
-        self.max_bytes = max_bytes
-        self._lock = threading.Lock()
-        # path -> (stat_token, bytes); OrderedDict end = most recent
-        self._entries: "OrderedDict[str, tuple[tuple, bytes]]" = \
-            OrderedDict()
-        self._bytes = 0
-        self.hits = 0
-        self.misses = 0
-        self.evictions = 0
-
-    # -- cached read -----------------------------------------------------
-    def _token(self, path: str) -> tuple:
-        tok = getattr(self.inner, "stat_token", None)
-        if tok is not None:
-            return tok(path)
-        return (self.inner.size(path), self.inner.mtime(path))
-
-    def read_bytes(self, path: str) -> bytes:
-        try:
-            token = self._token(path)
-        except OSError:
-            self._invalidate(path)
-            return self.inner.read_bytes(path)  # raises consistently
-        with self._lock:
-            ent = self._entries.get(path)
-            if ent is not None and ent[0] == token:
-                self._entries.move_to_end(path)
-                self.hits += 1
-                return ent[1]
-        data = self.inner.read_bytes(path)
-        # re-stat: cache only if the object was stable across the read
-        # (a concurrent replace between stat and read would otherwise
-        # pin mismatched token/bytes)
-        try:
-            stable = self._token(path) == token
-        except OSError:
-            stable = False
-        with self._lock:
-            self.misses += 1
-            if stable and len(data) <= self.max_bytes:
-                old = self._entries.pop(path, None)
-                if old is not None:
-                    self._bytes -= len(old[1])
-                self._entries[path] = (token, data)
-                self._bytes += len(data)
-                while self._bytes > self.max_bytes:
-                    _, (_, edata) = self._entries.popitem(last=False)
-                    self._bytes -= len(edata)
-                    self.evictions += 1
-        return data
-
-    def _invalidate(self, *paths: str) -> None:
-        with self._lock:
-            for p in paths:
-                ent = self._entries.pop(p, None)
-                if ent is not None:
-                    self._bytes -= len(ent[1])
-
-    # -- invalidating mutators -------------------------------------------
-    def write_atomic(self, path: str, data: bytes) -> None:
-        self._invalidate(path)
-        self.inner.write_atomic(path, data)
-
-    def publish_cas(self, path: str, data: bytes,
-                    expected: bytes | None) -> bool:
-        self._invalidate(path)
-        return self.inner.publish_cas(path, data, expected)
-
-    def create_exclusive(self, path: str, data: bytes) -> bool:
-        self._invalidate(path)
-        return self.inner.create_exclusive(path, data)
-
-    def rename(self, src: str, dst: str) -> None:
-        self._invalidate(src, dst)
-        self.inner.rename(src, dst)
-
-    def remove(self, path: str) -> None:
-        self._invalidate(path)
-        self.inner.remove(path)
-
-    def rmtree(self, path: str) -> None:
-        with self._lock:
-            doomed = [p for p in self._entries
-                      if p.startswith(path.rstrip("/") + "/")
-                      or p == path]
-        self._invalidate(*doomed)
-        self.inner.rmtree(path)
-
-    def copy(self, src: str, dst: str) -> None:
-        self._invalidate(dst)
-        self.inner.copy(src, dst)
-
-    # -- pure delegation -------------------------------------------------
-    def exists(self, path: str) -> bool:
-        return self.inner.exists(path)
-
-    def is_file(self, path: str) -> bool:
-        return self.inner.is_file(path)
-
-    def is_dir(self, path: str) -> bool:
-        return self.inner.is_dir(path)
-
-    def size(self, path: str) -> int:
-        return self.inner.size(path)
-
-    def mtime(self, path: str) -> float:
-        return self.inner.mtime(path)
-
-    def list(self, path: str) -> list[str]:
-        return self.inner.list(path)
-
-    def walk_files(self, root: str) -> Iterator[str]:
-        return self.inner.walk_files(root)
-
-    def makedirs(self, path: str) -> None:
-        self.inner.makedirs(path)
-
-
-class TransientIOError(IOError):
-    """A retryable I/O failure (throttled object store, 5xx, socket
-    reset).  :class:`ChaosFileSystem` raises these;
-    :class:`RetryingFileSystem` absorbs them."""
-
-
-class ThrottledFileSystem:
-    """Token-bucket bandwidth throttle over any accessor — the
-    ``ThrottleConfig`` layer of the reference's accessor stack
-    (``storage/filesystem/accessor_config.rs`` + OpenDAL
-    ThrottleLayer; ``throttle_test.rs`` proves sequential writes slow
-    to the configured bandwidth).  Charges bytes moved by
-    read_bytes/write_atomic/copy against a (bandwidth, burst) bucket
-    and sleeps until tokens accrue; metadata ops are free (the layer
-    models object-store bandwidth caps, not request counts)."""
-
-    def __init__(self, inner: PosixFileSystem | None = None, *,
-                 bandwidth: int = 8 << 20, burst: int | None = None):
-        import threading
-        import time as _time
-        if bandwidth <= 0:
-            raise ValueError(f"bandwidth must be positive: {bandwidth}")
-        self.inner = inner or PosixFileSystem()
-        self.bandwidth = bandwidth
-        self.burst = burst if burst is not None else 2 * bandwidth
-        self._tokens = float(self.burst)
-        self._t = _time.monotonic()
-        self._lock = threading.Lock()
-        self._time = _time
-
-    def _charge(self, n: int) -> None:
-        while True:
-            with self._lock:
-                now = self._time.monotonic()
-                self._tokens = min(
-                    self.burst,
-                    self._tokens + (now - self._t) * self.bandwidth)
-                self._t = now
-                if self._tokens >= n or n > self.burst:
-                    # oversized objects charge the whole bucket once
-                    self._tokens -= min(n, self._tokens)
-                    return
-                wait = (n - self._tokens) / self.bandwidth
-            self._time.sleep(min(wait, 0.5))
-
-    def read_bytes(self, path: str) -> bytes:
-        data = self.inner.read_bytes(path)
-        self._charge(len(data))
-        return data
-
-    def write_atomic(self, path: str, data: bytes) -> None:
-        self._charge(len(data))
-        self.inner.write_atomic(path, data)
-
-    def copy(self, src: str, dst: str) -> None:
-        try:
-            self._charge(self.inner.size(src))
-        except OSError:
-            pass
-        self.inner.copy(src, dst)
-
-    def __getattr__(self, name: str):
-        return getattr(self.inner, name)
-
-
-class ChaosFileSystem:
-    """Deterministic fault injector — the accessor chaos wrapper
-    (``filesystem_accessor_chaos_wrapper.rs`` / ``chaos_generator.rs``):
-    every Nth-ish operation (seeded PRNG, reproducible) raises
-    :class:`TransientIOError` BEFORE delegating, so a fault never
-    half-applies an operation.  ``publish_cas`` is exempt by default —
-    the reference injects around the commit point, not inside it (a
-    failed CAS is already a modeled outcome)."""
-
-    FAULTED = ("read_bytes", "write_atomic", "rename", "remove",
-               "copy", "list", "create_exclusive")
-
-    def __init__(self, inner: PosixFileSystem | None = None, *,
-                 error_rate: float = 0.2, seed: int = 0):
-        import random
-        self.inner = inner or PosixFileSystem()
-        self.error_rate = error_rate
-        self._rng = random.Random(seed)
-        self.faults_injected = 0
-
-    def _maybe_fault(self, op: str, path: str) -> None:
-        if self._rng.random() < self.error_rate:
-            self.faults_injected += 1
-            raise TransientIOError(f"injected fault: {op}({path})")
-
-    def __getattr__(self, name: str):
-        target = getattr(self.inner, name)
-        if name not in self.FAULTED:
-            return target
-
-        def faulted(*a, **k):
-            self._maybe_fault(name, a[0] if a else "")
-            return target(*a, **k)
-        return faulted
-
-
-class RetryingFileSystem:
-    """Bounded-retry layer — the accessor ``retry_config``
-    (``accessor_config.rs``; OpenDAL RetryLayer): transient failures
-    retry with exponential backoff, non-transient errors and
-    exhaustion propagate.  Safe to wrap every operation because the
-    accessor contract makes each either atomic (write_atomic, CAS,
-    posix rename) or idempotent-on-retry (reads, listings, remove of
-    an already-removed path is the one exception — NotFound after a
-    successful-but-unacked delete is treated as success, the standard
-    object-store idiom)."""
-
-    def __init__(self, inner: PosixFileSystem | None = None, *,
-                 retries: int = 4, backoff_s: float = 0.01,
-                 retry_on: type | tuple = TransientIOError):
-        import time as _time
-        self.inner = inner or PosixFileSystem()
-        self.retries = retries
-        self.backoff_s = backoff_s
-        self.retry_on = retry_on
-        self.retries_used = 0
-        self._time = _time
-
-    def _call(self, name: str, *a, **k):
-        target = getattr(self.inner, name)
-        attempt = 0
-        while True:
-            try:
-                return target(*a, **k)
-            except self.retry_on:
-                attempt += 1
-                if attempt > self.retries:
-                    raise
-                self.retries_used += 1
-                self._time.sleep(self.backoff_s * (2 ** (attempt - 1)))
-            except FileNotFoundError:
-                if name == "remove" and attempt > 0:
-                    return None  # earlier attempt deleted it: success
-                raise
-
-    def __getattr__(self, name: str):
-        if name.startswith("_"):
-            raise AttributeError(name)
-        return lambda *a, **k: self._call(name, *a, **k)

@@ -39,15 +39,17 @@ layer — local posix in the sandbox, s3://-style URIs on a cluster.
 
 from __future__ import annotations
 
+import operator
 import os
 from collections.abc import Iterator, Mapping
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from moonlink_spark.operators.scan import (BROADCAST_DV_ROWS, FILE_COL,
-                                           POS_COL)
+                                           POS_COL, predicate_exprs)
 from moonlink_spark.snapshotstore import SnapshotStore
 
 # Pruned-manifest entry count above which scan() switches from
@@ -75,39 +77,6 @@ def _spark_schema_for(spark: SparkSession, store: SnapshotStore,
         raise ValueError("empty manifest and no schema_ddl: cannot "
                          "derive a read schema")
     return from_arrow_schema(pq.read_schema(store.abs(sample[0]["path"])))
-
-
-def _pa_filter_expr(row_filters: Mapping[str, object]):
-    """Render the scan predicate mini-language as a pyarrow dataset
-    expression (row-level filtering AT the reader).  Built executor-side
-    from the plain mapping — dataset expressions are not shipped."""
-    import pyarrow.dataset as pds
-    expr = None
-    for col, pred in row_filters.items():
-        f = pds.field(col)
-        if not isinstance(pred, tuple):
-            pred = ("==", pred)
-        op = pred[0]
-        if op == "==":
-            e = f == pred[1]
-        elif op == "<":
-            e = f < pred[1]
-        elif op == "<=":
-            e = f <= pred[1]
-        elif op == ">":
-            e = f > pred[1]
-        elif op == ">=":
-            e = f >= pred[1]
-        elif op == "between":
-            e = (f >= pred[1]) & (f <= pred[2])
-        elif op == "is_null":
-            e = f.is_null()
-        elif op == "not_null":
-            e = ~f.is_null()
-        else:
-            raise ValueError(f"unknown predicate op {op!r}")
-        expr = e if expr is None else expr & e
-    return expr
 
 
 def surviving_row_groups(group_rows: list[int],
@@ -163,9 +132,14 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+        import pyarrow.dataset as pds
         import pyarrow.parquet as pq
         logical = [f for f in arrow_schema if f.name != FILE_COL]
-        expr = (_pa_filter_expr(row_filters) if row_filters else None)
+        # built here from the plain mapping: dataset expressions are
+        # not shipped
+        expr = (reduce(operator.and_, predicate_exprs(row_filters,
+                                                      pds.field))
+                if row_filters else None)
         filter_cols = set(row_filters or ())
 
         def deleted_ordinals(dv_relpath: str, relpath: str):
@@ -175,7 +149,6 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
             (merge.py / engine._optimize_index), so the dataset filter
             prunes foreign row groups by footer stats — each dirty
             file reads ~its own slice, not the whole shared sidecar."""
-            import pyarrow.dataset as pds
             mine = pds.dataset(
                 os.path.join(warehouse, dv_relpath), format="parquet"
             ).to_table(columns=["positions"],
@@ -224,7 +197,6 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                     yield rb, pos
                     pos += rb.num_rows
                 return
-            import pyarrow.dataset as pds
             scanner = pds.Scanner.from_dataset(
                 pds.dataset(path, format="parquet"),
                 columns=cols, filter=expr,
@@ -396,7 +368,6 @@ def scan_distributed(
                 out = out.withColumn(col, F.coalesce(F.col(col),
                                                      F.lit(default)))
     if row_filters:
-        from moonlink_spark.operators.scan import predicate_exprs
         for cond in predicate_exprs(row_filters):
             out = out.filter(cond)
     if not with_location:

@@ -123,8 +123,20 @@ def _commit_full_relational(spark, store, snapshot, upd, added,
                                    F.col("dv_cardinality")))
             .drop("_new_dv", "_new_card"))
     if added:
+        # manifest-row shape: flat min_/max_/null_/ndv_ columns
+        rows = []
+        for e in added:
+            flat = {"path": e["path"], "rows": e["rows"],
+                    "bytes": e["bytes"], "dv_path": None,
+                    "dv_cardinality": 0}
+            for c in config.stats_columns:
+                flat[f"min_{c}"], flat[f"max_{c}"] = e["bounds"].get(
+                    c, (None, None))
+                flat[f"null_{c}"] = e["null_counts"].get(c)
+                flat[f"ndv_{c}"] = e.get("ndv", {}).get(c)
+            rows.append(flat)
         succ = succ.unionByName(
-            spark.createDataFrame(added, schema=succ.schema),
+            spark.createDataFrame(rows, schema=succ.schema),
             allowMissingColumns=False)
     ordered = succ.orderBy("path")
     entries = (r.asDict() for r in ordered.toLocalIterator())
@@ -366,19 +378,6 @@ def merge_into(
         # ``RELATIONAL_COMMIT_FILES`` affected files the dict would be
         # the driver's biggest allocation — the commit goes relational
         # instead (streamed full manifest, O(partition) driver rows).
-        added = []
-        for e in new_entries:
-            flat = {"path": e["path"], "rows": e["rows"],
-                    "bytes": e["bytes"], "dv_path": None,
-                    "dv_cardinality": 0}
-            for c in config.stats_columns:
-                mn, mx = (e.get("bounds") or {}).get(c, (None, None))
-                flat[f"min_{c}"] = mn
-                flat[f"max_{c}"] = mx
-                flat[f"null_{c}"] = (e.get("null_counts") or {}).get(c)
-                flat[f"ndv_{c}"] = (e.get("ndv") or {}).get(c)
-            added.append(flat)
-
         props = dict(snapshot.properties)
         props.update({
             "flush_lsn": snapshot.flush_lsn + 1,
@@ -391,10 +390,10 @@ def merge_into(
             props.update(extra_properties)
         if upd is not None:
             return _commit_full_relational(
-                spark, store, snapshot, upd, added, props, config)
+                spark, store, snapshot, upd, new_entries, props, config)
         return store.commit_delta(
             snapshot.version,
-            added=added,
+            added=new_entries,
             updated=updated,
             schema=snapshot.schema,
             stats_columns=config.stats_columns,

@@ -25,10 +25,11 @@ pinned reader sees (cf. ``union_read/read_state.rs:20-50``).
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+import operator
+from typing import Callable, Mapping, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -177,32 +178,32 @@ def prune_manifest(manifest: DataFrame,
     return manifest
 
 
-def predicate_exprs(predicates: Mapping[str, object] | None):
+_COMPARE = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
+
+
+def predicate_exprs(predicates: Mapping[str, object] | None,
+                    field: Callable = F.col) -> list:
     """The same predicate mini-language as :func:`prune_manifest`,
-    rendered as Spark row-filter Columns (for callers that want the
-    rows filtered, not just the files pruned)."""
+    rendered as row filters (for callers that want the rows filtered,
+    not just the files pruned): one expression per column, built on
+    ``field(col)``.  ``F.col`` renders Spark Columns;
+    ``pyarrow.dataset.field`` renders dataset expressions for filtering
+    AT the reader.  Both backends share ``== < <= > >= & ~`` and spell
+    only the null test differently."""
     out = []
     for col, pred in (predicates or {}).items():
-        c = F.col(col)
+        c = field(col)
         if not isinstance(pred, tuple):
             pred = ("==", pred)
         op = pred[0]
-        if op == "==":
-            out.append(c == F.lit(pred[1]))
-        elif op == "<":
-            out.append(c < F.lit(pred[1]))
-        elif op == "<=":
-            out.append(c <= F.lit(pred[1]))
-        elif op == ">":
-            out.append(c > F.lit(pred[1]))
-        elif op == ">=":
-            out.append(c >= F.lit(pred[1]))
+        if op in _COMPARE:
+            out.append(_COMPARE[op](c, pred[1]))
         elif op == "between":
-            out.append((c >= F.lit(pred[1])) & (c <= F.lit(pred[2])))
-        elif op == "is_null":
-            out.append(c.isNull())
-        elif op == "not_null":
-            out.append(c.isNotNull())
+            out.append((c >= pred[1]) & (c <= pred[2]))
+        elif op in ("is_null", "not_null"):
+            null = c.isNull() if isinstance(c, Column) else c.is_null()
+            out.append(null if op == "is_null" else ~null)
         else:
             raise ValueError(f"unknown predicate op {op!r}")
     return out

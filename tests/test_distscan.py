@@ -171,6 +171,74 @@ def test_row_filter_pushdown_parity_both_paths(spark, aftermath,
     assert _multiset(dist2) == _multiset(twin.select(dist2.columns))
 
 
+def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
+    """``scan.predicate_exprs`` renders one mini-language for two
+    backends.  Per predicate form, the Spark filter and the pyarrow
+    dataset filter over the same parquet file (nulls in every column)
+    keep exactly the rows a Python oracle keeps — so a pyarrow renderer
+    that keeps extra rows fails here even though ``scan_distributed``
+    re-applies the Spark filter after the pushdown."""
+    import datetime as dt
+    import functools
+    import operator
+
+    import pyarrow as pa
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+
+    d = dt.date
+    cols = {
+        "id": list(range(10)),
+        "n": [1, None, 3, 5, None, 7, 9, 2, 5, 6],
+        "s": ["a", "b", None, "d", "e", None, "g", "h", "b", "a"],
+        "day": [d(2024, 1, i) if i % 4 else None for i in range(1, 11)],
+    }
+    path = str(tmp_path / "preds.parquet")
+    pq.write_table(pa.table(cols), path)
+    sdf = spark.read.parquet(path)
+    dataset = pds.dataset(path, format="parquet")
+    rows = [dict(zip(cols, vals)) for vals in zip(*cols.values())]
+
+    def holds(v, pred):
+        if not isinstance(pred, tuple):
+            pred = ("==", pred)
+        op, args = pred[0], pred[1:]
+        if op == "is_null":
+            return v is None
+        if op == "not_null":
+            return v is not None
+        if v is None:
+            return False
+        if op == "between":
+            return args[0] <= v <= args[1]
+        return {"==": operator.eq, "<": operator.lt, "<=": operator.le,
+                ">": operator.gt, ">=": operator.ge}[op](v, args[0])
+
+    forms = [5, ("==", 5), ("<", 5), ("<=", 5), (">", 5), (">=", 5),
+             ("between", 3, 6), ("is_null",), ("not_null",)]
+    cases = ([{"n": f} for f in forms]
+             + [{"s": "b"}, {"s": ("between", "b", "e")},
+                {"s": ("is_null",)}, {"day": ("<", d(2024, 1, 6))},
+                {"day": ("not_null",)},
+                {"n": (">=", 2), "s": ("not_null",),
+                 "day": ("between", d(2024, 1, 2), d(2024, 1, 9))}])
+    for preds in cases:
+        want = sorted(r["id"] for r in rows
+                      if all(holds(r[c], p) for c, p in preds.items()))
+        via_spark = sdf
+        for cond in scan_op.predicate_exprs(preds):
+            via_spark = via_spark.filter(cond)
+        got_spark = sorted(r["id"] for r in via_spark.collect())
+        expr = functools.reduce(
+            operator.and_, scan_op.predicate_exprs(preds, pds.field))
+        got_arrow = sorted(dataset.to_table(filter=expr)["id"].to_pylist())
+        assert got_spark == got_arrow == want, preds
+
+    for field in (F.col, pds.field):
+        with pytest.raises(ValueError, match="unknown predicate op"):
+            scan_op.predicate_exprs({"n": ("!=", 5)}, field)
+
+
 def test_surviving_row_groups_pure():
     """The row-group skip decision, unit-level: groups fully covered by
     the DV drop; partially covered or untouched groups keep their

@@ -1,39 +1,35 @@
-"""Accessor stack layers (fs.py): throttle, chaos injection, retry —
-the analogues of the reference accessor's ThrottleConfig / chaos
-wrapper / RetryConfig (``storage/filesystem/accessor_config.rs``,
-``throttle_test.rs``, ``filesystem_accessor_chaos_wrapper.rs``)."""
+"""Accessor stack layers over the fs seam: chaos injection and retry
+(``tests/fs_faults.py``) — the analogues of the reference accessor's
+chaos wrapper / RetryConfig (``storage/filesystem/accessor_config.rs``,
+``filesystem_accessor_chaos_wrapper.rs``)."""
 
-import time
+import inspect
 
 import pytest
+from pyspark import cloudpickle
 
-from moonlink_spark.fs import (ChaosFileSystem, PosixFileSystem,
-                               RetryingFileSystem, ThrottledFileSystem,
-                               TransientIOError)
+from moonlink_spark import fs as fs_mod
+from moonlink_spark.fs import PosixFileSystem
+from tests.fs_faults import (ChaosFileSystem, RetryingFileSystem,
+                             TransientIOError)
 
 
-def test_throttle_limits_sequential_write_bandwidth(tmp_path):
-    """Port of throttle_test.rs test_throttle_sequential_writes: 6 x
-    256 KiB writes at 512 KiB/s (512 KiB burst) must take >= ~2 s;
-    unthrottled takes a blink."""
-    data = b"x" * (256 << 10)
-    fs = ThrottledFileSystem(PosixFileSystem(),
-                             bandwidth=512 << 10, burst=512 << 10)
-    t0 = time.monotonic()
-    for i in range(6):
-        fs.write_atomic(str(tmp_path / f"t{i}"), data)
-    throttled = time.monotonic() - t0
-    # 1.5 MiB total minus the 0.5 MiB burst => >= ~2 s of refill
-    assert throttled >= 1.5
-
-    base = PosixFileSystem()
-    t0 = time.monotonic()
-    for i in range(6):
-        base.write_atomic(str(tmp_path / f"b{i}"), data)
-    assert (time.monotonic() - t0) < throttled / 3
-    # reads charge the bucket too; metadata ops are free
-    fs.exists(str(tmp_path / "t0"))
-    assert fs.read_bytes(str(tmp_path / "t0")) == data
+def test_every_accessor_round_trips_through_cloudpickle(tmp_path):
+    """The seam contract: ``expire.list_files_df`` ships ``store.fs`` to
+    executors, so every accessor class in ``fs.py`` must pickle (no
+    locks, handles or caches) and still work on the other side."""
+    accessors = [c for _, c in inspect.getmembers(fs_mod, inspect.isclass)
+                 if c.__module__ == fs_mod.__name__
+                 and not issubclass(c, BaseException)]
+    assert PosixFileSystem in accessors
+    for cls in accessors:
+        fs = cloudpickle.loads(cloudpickle.dumps(cls()))
+        assert type(fs) is cls
+        p = str(tmp_path / cls.__name__)
+        fs.write_atomic(p, b"payload")
+        fs.rename(p, p + ".moved")
+        assert fs.read_bytes(p + ".moved") == b"payload"
+        assert fs.list(str(tmp_path)).count(cls.__name__ + ".moved") == 1
 
 
 def test_chaos_is_deterministic_and_pre_delegation(tmp_path):
@@ -114,16 +110,15 @@ def test_full_stack_engine_lifecycle_under_chaos(spark, tmp_path):
 
 def test_data_plane_reads_bypass_fs_seam(spark, tmp_path):
     """States the executor-cache delegation boundary as a test: the fs
-    seam (and therefore CachingFileSystem and the throttle/chaos/retry
-    layers) is the METADATA/CONTROL plane only — across a full
-    scan → optimize(full) → scan lifecycle, no data file or DV sidecar
-    payload is ever read through ``fs.read_bytes``.  Data-plane bytes
-    move through Spark's parquet source and executor-side pyarrow
+    seam (and therefore any layer wrapped around it, such as the
+    chaos/retry layers) is the METADATA/CONTROL plane only — across a
+    full scan → optimize(full) → scan lifecycle, no data file or DV
+    sidecar payload is ever read through ``fs.read_bytes``.  Data-plane
+    bytes move through Spark's parquet source and executor-side pyarrow
     (`mapInArrow`), whose caching at 100 TB is the cluster's own
     executor-local NVMe — the reference's object-storage cache
     (`storage/cache/object_storage/*`) maps to that layer, not to the
-    driver seam (the honest scoping stated in fs.CachingFileSystem's
-    docstring, now pinned here)."""
+    driver seam."""
     from moonlink_spark.engine import MoonTable
     from moonlink_spark.snapshotstore import SnapshotStore
     from moonlink_spark.synth import synthesize_cdc_aftermath
