@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark import metrics as mtr
 from moonlink_spark.config import CompactionConfig, TableConfig
-from moonlink_spark.fs import part_files, rename_many
+from moonlink_spark.fs import rename_many
 from moonlink_spark.functions.zorder import compute_zorder_boundaries
 from moonlink_spark.operators import expire as expire_op
 from moonlink_spark.operators import merge as merge_op
@@ -44,7 +44,7 @@ from moonlink_spark.snapshotstore import (
     Snapshot,
     SnapshotStore,
     read_pinned,
-    shard_rel,
+    staged_names,
 )
 
 # index-merge trigger: min 16 small DV sidecars, mirroring
@@ -395,34 +395,27 @@ class MoonTable:
             mtr.observe("sync_file_indices_latency",
                        (_time.monotonic() - t_start) * 1000.0)
             return base
+        # each file's current row, from the sidecar its entry names, as
+        # it is: newer rows are supersets, so nothing needs re-merging
         live_files = (mdf.filter(F.col("dv_path").isNotNull())
-                      .select(F.col("path").alias("referenced_file")))
-        dv = (read_pinned(self.spark, [self.store.abs(p) for p in live_dv])
-              .join(F.broadcast(live_files), on="referenced_file",
-                    how="left_semi")
-              .select("referenced_file",
-                      F.explode("positions").alias("pos"), "max_row_count"))
-        merged = (
-            dv.groupBy("referenced_file")
-            .agg(F.array_sort(F.collect_set("pos")).alias("positions"),
-                 F.max("max_row_count").alias("max_row_count"))
-            .withColumn("cardinality", F.size("positions").cast("long"))
-            .select("referenced_file", "positions", "cardinality",
-                    "max_row_count")
-        )
+                      .select(F.col("path").alias("referenced_file"),
+                              "dv_path"))
+        merged = (scan_op._with_relative_file(
+                      read_pinned(self.spark,
+                                  [self.store.abs(p) for p in live_dv]),
+                      self.store, "dv_path")
+                  .join(F.broadcast(live_files),
+                        on=["referenced_file", "dv_path"], how="left_semi")
+                  .select("referenced_file", "positions", "cardinality",
+                          "max_row_count"))
         tmp = os.path.join(self.store.warehouse, "tmp", job_id)
         n_files_with_dv = mdf.filter(F.col("dv_path").isNotNull()).count()
         n_out = max(1, math.ceil(n_files_with_dv / 4096))
         (merged.repartitionByRange(n_out, "referenced_file")
          .sortWithinPartitions("referenced_file")
          .write.mode("overwrite").option("compression", "zstd").parquet(tmp))
-        parts = part_files(self.store.fs, tmp)
-        new_rels = []
-        pairs = []
-        for j, part in enumerate(parts):
-            rel = shard_rel(DV_DIR, f"dv-{job_id}-{j:04d}.parquet")
-            pairs.append((os.path.join(tmp, part), self.store.abs(rel)))
-            new_rels.append(rel)
+        pairs, new_rels = staged_names(self.store, tmp, DV_DIR,
+                                       f"dv-{job_id}")
         rename_many(self.store.fs, pairs)
         # delta commit: only the files whose DV pointer moved rewrite
         # their manifest segment; everything else carries by reference.
@@ -434,7 +427,7 @@ class MoonTable:
         props.update({"flush_lsn": base.flush_lsn, "job_id": job_id,
                       "operation": "optimize-index",
                       "metrics": {"dv_sidecars_in": len(live_dv),
-                                  "dv_sidecars_out": len(parts)}})
+                                  "dv_sidecars_out": len(new_rels)}})
         snap = self.store.commit_delta(
             base.version, updated=updated, schema=base.schema,
             stats_columns=self.config.stats_columns,

@@ -24,7 +24,7 @@ import uuid
 from pyspark.sql import DataFrame
 
 from moonlink_spark.config import TableConfig
-from moonlink_spark.fs import part_files, rename_many
+from moonlink_spark.fs import rename_many
 from moonlink_spark.operators.rewrite import (
     assign_positions,
     footer_stats_many,
@@ -34,7 +34,7 @@ from moonlink_spark.snapshotstore import (
     CommitConflict,
     Snapshot,
     SnapshotStore,
-    shard_rel,
+    staged_names,
 )
 
 INGEST_ROLL_ROWS = 131_072  # mem-slice flush row budget analogue
@@ -80,12 +80,7 @@ def append_rows(
     tmp = os.path.join(store.warehouse, "tmp", job_id, "app")
     (final.write.mode("overwrite")
      .option("compression", config.ingest_compression).parquet(tmp))
-    rels = []
-    pairs = []
-    for j, part in enumerate(part_files(store.fs, tmp)):
-        rel = shard_rel(DATA_DIR, f"data-{job_id}-{j:04d}.parquet")
-        pairs.append((os.path.join(tmp, part), store.abs(rel)))
-        rels.append(rel)
+    pairs, rels = staged_names(store, tmp, DATA_DIR, f"data-{job_id}")
     rename_many(store.fs, pairs)
     new_entries = []
     for rel, st in zip(rels, footer_stats_many(

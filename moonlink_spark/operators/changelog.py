@@ -19,16 +19,17 @@ store's immutable manifests):
   after them are row-identical.
 - inserts at version N = rows of data files present in manifest N but
   not N−1 (merge ingest files / bulk-loaded files).
-- deletes at version N = rows at positions newly present in a file's
-  delete vector at N relative to N−1, read back from the (still
-  retained) data file.  Requires N−1 not expired — the changelog
-  window is bounded by the retention policy, exactly like any CDC log.
+- deletes at version N = rows of the files whose delete vector changed
+  that are live at N−1 and whose position is in the file's delete
+  vector at N, read back from the (still retained) data file through
+  the scan's own reader (``scan_files``).  Requires N−1 not expired —
+  the changelog window is bounded by the retention policy, exactly like
+  any CDC log.
 
 Scale shape: per-version work is one manifest anti-join (added files),
-one DV-delta anti-join on exploded positions, and a semi-join of the
-changed files' rows against the delta — all change-batch-sized, never
-table-sized; the version loop is driver-side over an explicitly
-requested window.
+a scan of the changed files as of N−1 and its semi-join against N's
+delete vectors — all change-batch-sized, never table-sized; the version
+loop is driver-side over an explicitly requested window.
 
 Consumer replay rule (multi-version windows): per key, the LAST event
 in the window wins — insert beats delete at the same commit version
@@ -47,7 +48,6 @@ from pyspark.sql import functions as F
 from moonlink_spark.operators.scan import (
     FILE_COL,
     POS_COL,
-    _with_relative_file,
     deletes_df,
     local_df,
     scan_files,
@@ -110,34 +110,33 @@ def _version_changes(spark: SparkSession, store: SnapshotStore,
     changed = (
         m_b.alias("b")
         .join(m_a.select(F.col("path"),
-                         F.col("dv_path").alias("_adv")).alias("a"),
+                         F.col("dv_path").alias("_adv"),
+                         F.col("dv_cardinality").alias("_acard")).alias("a"),
               on="path")
         .filter(F.col("b.dv_path").isNotNull()
                 & ~F.col("b.dv_path").eqNullSafe(F.col("_adv")))
         .select("path", F.col("b.dv_path").alias("dv_path"),
-                F.col("_adv"))
+                "_adv", "_acard")
         .collect())
     if changed:
-        files = [r["path"] for r in changed]
+        # the changed files' rows live at A (read as A's scan reads
+        # them, column defaults included) whose (file, pos) is in B's
+        # DV: B's sidecar row is a superset of A's, so this is exactly
+        # the rows B deleted
+        old_of = {r["path"]: r["_adv"] for r in changed if r["_adv"]}
+        live_a = scan_files(
+            spark, store,
+            [r["path"] for r in changed],
+            sorted(set(old_of.values())),
+            sum(r["_acard"] or 0 for r in changed),
+            with_location=True, schema_ddl=ddl, project=snap_b.schema,
+            column_defaults=snap_b.properties.get("column_defaults"),
+            dv_files=old_of)
         dv_b = deletes_df(spark, store,
                           sorted({r["dv_path"] for r in changed}),
                           {r["path"]: r["dv_path"] for r in changed})
-        old_of = {r["path"]: r["_adv"] for r in changed if r["_adv"]}
-        delta = dv_b
-        if old_of:
-            dv_a = deletes_df(spark, store, sorted(set(old_of.values())),
-                              old_of)
-            # newer sidecars are supersets (merge-on-write), so the
-            # delta is a plain anti-join on (file, pos)
-            delta = dv_b.join(dv_a, on=[FILE_COL, POS_COL],
-                              how="left_anti")
-        reader = spark.read
-        if ddl:
-            reader = reader.schema(ddl)
-        rows = _with_relative_file(
-            reader.parquet(*[store.abs(p) for p in files]), store)
-        dels = (rows.join(F.broadcast(delta), on=[FILE_COL, POS_COL],
-                          how="left_semi")
+        dels = (live_a.join(F.broadcast(dv_b), on=[FILE_COL, POS_COL],
+                            how="left_semi")
                 .drop(FILE_COL)
                 .withColumn(CHANGE_TYPE_COL, F.lit("delete")))
         out.append(dels)

@@ -8,12 +8,12 @@ exceed driver heap (the round-3 audit named ``scan.py:316`` as the next
 scale boundary at the 10^12-file design point).
 
 This module is the scale path: the pruned manifest STAYS a DataFrame.
-Planning work (fully-deleted-file skip, dirty/clean DV split, plan
-statistics) runs as distributed relational ops; each executor task then
-reads the files named by its own slice of the plan via pyarrow inside
-``mapInArrow`` — Arrow record batches end to end, no pandas detour and
-no per-row Python.  This is the PySpark-native analogue of what a
-DataSourceV2 relation with distributed split planning (Iceberg's
+Planning work (fully-deleted-file skip, the plan's entry count) runs as
+distributed relational ops; each executor task then reads the files
+named by its own slice of the plan via pyarrow inside ``mapInArrow`` —
+Arrow record batches end to end, no pandas detour and no per-row
+Python.  This is the PySpark-native analogue of what a DataSourceV2
+relation with distributed split planning (Iceberg's
 ``SparkBatchQueryScan``) does on the JVM: the driver holds O(1) state
 (a plan DataFrame lineage + one aggregate row), never O(files).
 
@@ -21,11 +21,13 @@ Semantics are identical to ``scan.scan``:
 
 - positions are row ordinals within each data file (pyarrow preserves
   parquet row order; ordinals accumulate across row-group batches);
-- delete-vector sidecars are exploded executor-side with
-  ``list_flatten``/``list_parent_indices`` and anti-joined on
-  (file, pos); clean files bypass the anti-join entirely (DV-split
-  routing, cf. ``moonlink_datafusion/src/table_provider.rs:96-130``
-  attaching a RowSelection only to files that have one);
+- a file's deleted rows are its row in the sidecar its manifest entry
+  names (``dv_path``) — newer sidecar rows are supersets, so that row
+  alone is the file's deleted set.  The reader reads it once per file,
+  skips the row groups it fully covers and drops the deleted positions
+  from every batch it yields: no DV side, no join (the reference
+  attaches a per-file ``RowSelection`` the same way,
+  ``moonlink_datafusion/src/table_provider.rs:96-130``);
 - fully-deleted files (dv_cardinality == rows) are dropped at planning
   time — here by a distributed filter instead of a driver loop;
 - schema evolution: files predating an added column yield typed nulls;
@@ -48,8 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from moonlink_spark.operators.scan import (BROADCAST_DV_ROWS, FILE_COL,
-                                           POS_COL, predicate_exprs)
+from moonlink_spark.operators.scan import FILE_COL, POS_COL, predicate_exprs
 from moonlink_spark.snapshotstore import SnapshotStore
 
 # Pruned-manifest entry count above which scan() switches from
@@ -107,9 +108,9 @@ def surviving_row_groups(group_rows: list[int],
 def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                  row_filters: Mapping[str, object] | None = None):
     """mapInArrow body: read each plan row's parquet file with pyarrow,
-    emit batches cast to the target schema with (file, pos) attached.
-    Everything inside is Arrow-native C++ — the Python layer only routes
-    batches.
+    emit its live rows cast to the target schema with (file, pos)
+    attached.  Everything inside is Arrow-native C++ — the Python layer
+    only routes batches.
 
     ``row_filters`` pushes the predicate into the pyarrow dataset
     scanner (row-level, single-threaded per file so row order — and
@@ -118,16 +119,13 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
     ``_pos`` column): filtering there would renumber positions; such
     files read unfiltered and the Spark-side filter finishes the job.
 
-    When the plan carries a ``dv_path`` column (dirty files), the
-    file's named DV sidecar drives ROW-GROUP SKIPPING: groups whose
-    ordinal range is fully deleted are never read (the common CDC
-    aftermath — a wholly-deleted commit file's worth of rows inside a
-    partially dirty bin).  Correct by the superset invariant: the
-    Spark-side anti-join set is the union of all sidecars referencing
-    the file, a superset of the named sidecar's positions, so a skipped
-    row could never have survived the anti-join.  Partially-deleted
-    groups read normally (positions jump to each group's start
-    ordinal); the anti-join finishes the row-level work."""
+    A plan row's ``dv_path`` names the sidecar holding the file's
+    deleted positions.  They are read once per file and used twice:
+    row groups whose ordinal range they fully cover are never read (the
+    common CDC aftermath — a wholly-deleted commit file's worth of rows
+    inside a partially dirty bin), and every yielded batch drops the
+    rows whose position is among them.  The skip is exact: the named
+    row is the file's whole deleted set."""
     def reader(batches) -> Iterator:
         import numpy as np
         import pyarrow as pa
@@ -160,31 +158,26 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                 return None
             return np.unique(pos.to_numpy(zero_copy_only=False))
 
-        def file_batches(path, avail, cols, dv_relpath, relpath):
+        def file_batches(path, avail, cols, dels):
             """Yield (record_batch, start_ordinal) pairs."""
             pf = pq.ParquetFile(path)
-            groups = None  # None = read everything
-            if dv_relpath is not None:
-                dels = deleted_ordinals(dv_relpath, relpath)
-                if dels is not None:
-                    md = pf.metadata
-                    sizes = [md.row_group(g).num_rows
-                             for g in range(md.num_row_groups)]
-                    surv = surviving_row_groups(sizes, dels)
-                    if len(surv) < len(sizes):
-                        groups = surv
-            if groups is not None:
-                for g, start in groups:
-                    pos = start
-                    for rb in pf.iter_batches(
-                            batch_size=_READ_BATCH_ROWS,
-                            row_groups=[g], columns=cols):
-                        yield rb, pos
-                        pos += rb.num_rows
-                return
+            if dels is not None:
+                md = pf.metadata
+                sizes = [md.row_group(g).num_rows
+                         for g in range(md.num_row_groups)]
+                surv = surviving_row_groups(sizes, dels)
+                if len(surv) < len(sizes):
+                    for g, start in surv:
+                        pos = start
+                        for rb in pf.iter_batches(
+                                batch_size=_READ_BATCH_ROWS,
+                                row_groups=[g], columns=cols):
+                            yield rb, pos
+                            pos += rb.num_rows
+                    return
             # push only when _pos is a REAL file column AND it is being
             # read: the output schema always carries positions (the DV
-            # join key), and synthesized ordinals over a filtered read
+            # key), and synthesized ordinals over a filtered read
             # would renumber — including when a caller's projection
             # omitted _pos from ``cols`` even though the file has it
             can_push = (expr is not None and POS_COL in avail
@@ -208,17 +201,15 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                 pos += rb.num_rows
 
         for b in batches:
-            has_dv = "dv_path" in b.schema.names
-            dv_col = (b.column("dv_path").to_pylist()
-                      if has_dv else None)
-            for i, relpath in enumerate(b.column("path").to_pylist()):
+            for relpath, dv_relpath in zip(b.column("path").to_pylist(),
+                                           b.column("dv_path").to_pylist()):
                 fpath = os.path.join(warehouse, relpath)
-                dv_relpath = dv_col[i] if has_dv else None
+                dels = (deleted_ordinals(dv_relpath, relpath)
+                        if dv_relpath is not None else None)
                 avail = set(pq.read_schema(fpath).names)
                 cols = ([c for c in read_cols if c in avail]
                         if read_cols is not None else None)
-                for rb, pos in file_batches(fpath, avail, cols,
-                                            dv_relpath, relpath):
+                for rb, pos in file_batches(fpath, avail, cols, dels):
                     n = rb.num_rows
                     tb = pa.Table.from_batches([rb])
                     arrays = []
@@ -229,39 +220,21 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                                 .cast(fld.type))
                         elif fld.name == POS_COL:
                             # writers materialize _pos as a data column
-                            # (the DV join key); a file without it gets
+                            # (the DV key); a file without it gets
                             # ordinals — positions ARE row ordinals
                             arrays.append(pa.array(
                                 np.arange(pos, pos + n), pa.int64()))
                         else:
                             arrays.append(pa.nulls(n, fld.type))
                     arrays.append(pa.array([relpath] * n, pa.string()))
-                    yield pa.RecordBatch.from_arrays(
+                    out = pa.RecordBatch.from_arrays(
                         arrays, schema=arrow_schema)
-    return reader
-
-
-def _dv_reader(warehouse: str):
-    """mapInArrow body: explode DV sidecars to (file, pos) rows with
-    Arrow list kernels — no Python-level loop over positions."""
-    def reader(batches) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        out_schema = pa.schema([pa.field(FILE_COL, pa.string()),
-                                pa.field(POS_COL, pa.int64())])
-        for b in batches:
-            for relpath in b.column("dv_path").to_pylist():
-                t = pq.read_table(
-                    os.path.join(warehouse, relpath),
-                    columns=["referenced_file", "positions"])
-                pos = pc.list_flatten(t["positions"])
-                idx = pc.list_parent_indices(t["positions"])
-                ref = pc.take(t["referenced_file"], idx)
-                yield pa.RecordBatch.from_arrays(
-                    [ref.combine_chunks().cast(pa.string()),
-                     pos.combine_chunks().cast(pa.int64())],
-                    schema=out_schema)
+                    if dels is not None:
+                        positions = out.column(POS_COL).to_numpy(
+                            zero_copy_only=False)
+                        out = out.filter(
+                            pa.array(~np.isin(positions, dels)))
+                    yield out
     return reader
 
 
@@ -270,8 +243,8 @@ def _read_plan(spark: SparkSession, store: SnapshotStore, plan: DataFrame,
                read_cols: list[str] | None,
                row_filters: Mapping[str, object] | None = None
                ) -> DataFrame:
-    """Turn a ``path`` (+ optional ``dv_path``) plan DataFrame into the
-    rows of those files.  Parallelism: one task per plan partition;
+    """Turn a ``(path, dv_path)`` plan DataFrame into the live rows of
+    those files.  Parallelism: one task per plan partition;
     round-robin repartition spreads files so stragglers are
     single-file, not single-task-many-files."""
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -299,10 +272,10 @@ def scan_distributed(
     row_filters: Mapping[str, object] | None = None,
 ) -> DataFrame:
     """Scan the (already pruned) manifest without collecting its file
-    list.  Driver-side state: one 2-value aggregate row (entry count +
-    total DV cardinality) and, when no schema DDL is pinned, one sample
-    footer.  Everything else — the fully-deleted skip, the dirty/clean
-    split, the reads, the DV anti-join — is the distributed plan.
+    list.  Driver-side state: one aggregate row (the entry count) and,
+    when no schema DDL is pinned, one sample footer.  Everything else —
+    the fully-deleted skip, the reads, each file's deletes — is the
+    distributed plan.
 
     ``row_filters`` (scan's predicate mini-language) is pushed into the
     pyarrow reader per file (row-level) AND re-applied as a Spark
@@ -311,16 +284,7 @@ def scan_distributed(
     live = manifest.filter(
         ~(F.col("rows").isNotNull()
           & (F.coalesce("dv_cardinality", F.lit(0)) >= F.col("rows"))))
-    stats = live.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("dv_path").isNotNull(),
-                     F.coalesce("dv_cardinality", F.lit(0)))
-              ).alias("dvc"),
-        F.sum(F.when(F.col("dv_path").isNotNull(), 1).otherwise(0)
-              ).alias("n_dirty")).first()
-    n_files = int(stats["n"] or 0)
-    dv_card = int(stats["dvc"] or 0)
-    n_dirty = int(stats["n_dirty"] or 0)
+    n_files = int(live.agg(F.count(F.lit(1)).alias("n")).first()["n"])
 
     struct = _spark_schema_for(spark, store, live, schema_ddl)
     if project:
@@ -333,35 +297,8 @@ def scan_distributed(
     push_filters = {c: p for c, p in (row_filters or {}).items()
                     if c not in (column_defaults or {})} or None
 
-    clean = _read_plan(spark, store,
-                       live.filter(F.col("dv_path").isNull())
-                       .select("path"),
-                       n_files - n_dirty, struct, read_cols, push_filters)
-    if n_dirty:
-        # the dirty plan carries dv_path so the reader can skip
-        # fully-deleted row groups from the file's named sidecar
-        dirty_rows = _read_plan(spark, store,
-                                live.filter(F.col("dv_path").isNotNull())
-                                .select("path", "dv_path"),
-                                n_dirty, struct, read_cols, push_filters)
-        dv_plan = (live.filter(F.col("dv_path").isNotNull())
-                   .select("dv_path").distinct())
-        dels = (dv_plan.repartition(
-                    max(1, min(n_dirty,
-                               spark.sparkContext.defaultParallelism)))
-                .mapInArrow(_dv_reader(store.warehouse),
-                            schema=f"{FILE_COL} string, {POS_COL} long")
-                # sidecars may reference files pruned out of this scan
-                .join(live.filter(F.col("dv_path").isNotNull())
-                      .select(F.col("path").alias(FILE_COL)),
-                      on=FILE_COL, how="left_semi")
-                .distinct())
-        if dv_card <= BROADCAST_DV_ROWS:
-            dels = F.broadcast(dels)
-        out = clean.unionByName(
-            dirty_rows.join(dels, on=[FILE_COL, POS_COL], how="left_anti"))
-    else:
-        out = clean
+    out = _read_plan(spark, store, live.select("path", "dv_path"),
+                     n_files, struct, read_cols, push_filters)
     if column_defaults:
         for col, default in column_defaults.items():
             if default is not None and col in out.columns:

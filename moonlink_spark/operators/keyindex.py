@@ -116,6 +116,32 @@ def _bucket_parts(store: SnapshotStore, bucket: int) -> list[str]:
             if n.endswith(".parquet")]
 
 
+def _publish_buckets(store: SnapshotStore, ent: DataFrame,
+                     n_buckets: int, job_id: str) -> int:
+    """Write ``ent`` (carrying a ``bucket`` column) partitioned by
+    bucket, then move each bucket's parts into that bucket's index
+    directory as ``idx-<job_id>-<j>.parquet``.  Returns the number of
+    parts published."""
+    tmp = os.path.join(store.warehouse, "tmp", f"idx-{job_id}")
+    (ent.repartition(n_buckets, F.col("bucket"))
+     .write.mode("overwrite").partitionBy("bucket")
+     .option("compression", "zstd").parquet(tmp))
+    pairs = []
+    for name in sorted(store.fs.list(tmp)):
+        if not name.startswith("bucket="):
+            continue
+        b = int(name.split("=", 1)[1])
+        store.fs.makedirs(_bucket_dir(store, b))
+        for j, part in enumerate(part_files(store.fs,
+                                            os.path.join(tmp, name))):
+            pairs.append((os.path.join(tmp, name, part),
+                          os.path.join(_bucket_dir(store, b),
+                                       f"idx-{job_id}-{j:04d}.parquet")))
+    rename_many(store.fs, pairs)
+    store.fs.rmtree(tmp)
+    return len(pairs)
+
+
 def coverage_parts(store: SnapshotStore) -> list[str]:
     d = os.path.join(store.warehouse, COV_DIR)
     if not store.fs.is_dir(d):
@@ -162,23 +188,7 @@ def write_index(spark: SparkSession, store: SnapshotStore,
            .distinct()
            .withColumn("bucket",
                        F.pmod(F.col(HASH_COL), F.lit(n_buckets))))
-    tmp = os.path.join(store.warehouse, "tmp", f"idx-{job_id}")
-    (ent.repartition(n_buckets, F.col("bucket"))
-     .write.mode("overwrite").partitionBy("bucket")
-     .option("compression", "zstd").parquet(tmp))
-    pairs = []
-    for name in sorted(store.fs.list(tmp)):
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        store.fs.makedirs(_bucket_dir(store, b))
-        for j, part in enumerate(part_files(store.fs,
-                                            os.path.join(tmp, name))):
-            pairs.append((os.path.join(tmp, name, part),
-                          os.path.join(_bucket_dir(store, b),
-                                       f"idx-{job_id}-{j:04d}.parquet")))
-    rename_many(store.fs, pairs)
-    store.fs.rmtree(tmp)
+    _publish_buckets(store, ent, n_buckets, job_id)
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -296,24 +306,7 @@ def consolidate_index(spark: SparkSession, store: SnapshotStore,
                .distinct()
                .withColumn("bucket",
                            F.pmod(F.col(HASH_COL), F.lit(n_buckets))))
-        tmp = os.path.join(store.warehouse, "tmp", f"idx-{job_id}")
-        (ent.repartition(n_buckets, F.col("bucket"))
-         .write.mode("overwrite").partitionBy("bucket")
-         .option("compression", "zstd").parquet(tmp))
-        pairs = []
-        for name in sorted(store.fs.list(tmp)):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
-            store.fs.makedirs(_bucket_dir(store, b))
-            for j, part in enumerate(part_files(store.fs,
-                                                os.path.join(tmp, name))):
-                pairs.append((os.path.join(tmp, name, part),
-                              os.path.join(_bucket_dir(store, b),
-                                           f"idx-{job_id}-{j:04d}.parquet")))
-                new_parts += 1
-        rename_many(store.fs, pairs)
-        store.fs.rmtree(tmp)
+        new_parts = _publish_buckets(store, ent, n_buckets, job_id)
 
     if old_cov:
         merged_cov = (read_pinned(spark, old_cov)

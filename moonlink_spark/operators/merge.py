@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from moonlink_spark import metrics as mtr
 from moonlink_spark.config import TableConfig
 from moonlink_spark.operators import keyindex, skew
-from moonlink_spark.fs import part_files, rename_many
+from moonlink_spark.fs import rename_many
 from moonlink_spark.operators.rewrite import assign_positions, footer_stats_many
 from moonlink_spark.operators.scan import (
     FILE_COL,
@@ -69,7 +69,7 @@ from moonlink_spark.snapshotstore import (
     Snapshot,
     SnapshotStore,
     read_pinned,
-    shard_rel,
+    staged_names,
 )
 
 OP_COL = "_op"
@@ -302,13 +302,8 @@ def merge_into(
              .sortWithinPartitions("referenced_file")
              .write.mode("overwrite").option("compression", "zstd")
              .parquet(tmp))
-            parts = part_files(store.fs, tmp)
-            new_rels = []
-            pairs = []
-            for j, part in enumerate(parts):
-                rel = shard_rel(DV_DIR, f"dv-{job_id}-{j:04d}.parquet")
-                pairs.append((os.path.join(tmp, part), store.abs(rel)))
-                new_rels.append(rel)
+            pairs, new_rels = staged_names(store, tmp, DV_DIR,
+                                           f"dv-{job_id}")
             rename_many(store.fs, pairs)
             # the per-file mapping (file → sidecar, cardinality): read
             # back on the driver for a delta commit; as a DataFrame for
@@ -344,14 +339,8 @@ def merge_into(
                 .sortWithinPartitions(*key_columns))
             (final.write.mode("overwrite")
              .option("compression", config.ingest_compression).parquet(tmp))
-            parts = part_files(store.fs, tmp)
-            rels = []
-            pairs = []
-            for j, part in enumerate(parts):
-                rel = shard_rel(DATA_DIR,
-                                f"data-{job_id}-{j:04d}.parquet")
-                pairs.append((os.path.join(tmp, part), store.abs(rel)))
-                rels.append(rel)
+            pairs, rels = staged_names(store, tmp, DATA_DIR,
+                                       f"data-{job_id}")
             rename_many(store.fs, pairs)
             for rel, st in zip(rels, footer_stats_many(
                     [store.abs(r) for r in rels], config.stats_columns)):

@@ -48,9 +48,9 @@ from moonlink_spark.config import TableConfig
 from moonlink_spark.functions.zorder import ZCUTS_KEY, with_zorder_key
 from moonlink_spark.operators.planner import CompactionBin
 from moonlink_spark.operators.scan import FILE_COL, POS_COL, scan_files
-from moonlink_spark.fs import part_files, rename_many
+from moonlink_spark.fs import rename_many
 from moonlink_spark.snapshotstore import (DATA_DIR, SnapshotStore,
-                                          shard_rel)
+                                          staged_names)
 
 ZKEY_COL = "_zkey"
 OLDPOS_COL = "_oldpos"
@@ -341,14 +341,8 @@ def rewrite_bin(
 
     # deterministic final names (assigned in part order before any
     # rename runs), renamed concurrently — the finalization tail
-    parts = part_files(store.fs, tmp_dir)
-    rels = []
-    pairs = []
-    for j, part in enumerate(parts):
-        rel = shard_rel(
-            DATA_DIR, f"data-{job_id}-b{bin.bin_id:05d}-{j:04d}.parquet")
-        pairs.append((os.path.join(tmp_dir, part), store.abs(rel)))
-        rels.append(rel)
+    pairs, rels = staged_names(store, tmp_dir, DATA_DIR,
+                               f"data-{job_id}-b{bin.bin_id:05d}")
     rename_many(store.fs, pairs)
     t_finalize = time.monotonic() - t0 - t_rewrite
     stats = footer_stats_many([store.abs(r) for r in rels],

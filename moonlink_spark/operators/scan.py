@@ -246,35 +246,28 @@ def file_list_df(spark: SparkSession, files: list[str],
 
 def deletes_df(spark: SparkSession, store: SnapshotStore,
                dv_paths: list[str],
-               data_files: Mapping[str, str] | Sequence[str]) -> DataFrame:
+               data_files: Mapping[str, str]) -> DataFrame:
     """Exploded delete vectors of ``data_files``: one row per deleted
     (file, position), read from the sidecars ``dv_paths``.
 
-    ``data_files`` normally maps each file to the sidecar its manifest
-    entry names (``dv_path``), and a file's positions are read from that
+    ``data_files`` maps each file to the sidecar its manifest entry
+    names (``dv_path``), and a file's positions are read from that
     sidecar only: a newer sidecar row for a file is a superset of the
     older ones (merge-on-write, cf. ``iceberg_table_syncer.rs:376-435``),
     so it alone is the file's deleted set.  Older sidecars may still hold
     a superseded row for the file; pairing on (file, sidecar) skips
     those, so no (file, position) repeats and nothing needs
-    deduplicating.
-
-    A plain file list (no pairing known) takes every listed sidecar's
-    rows for those files; positions may then repeat, which the DV
-    anti-join, this frame's consumer, does not mind."""
+    deduplicating."""
     if not dv_paths or not data_files:
         return local_df(spark, f"{FILE_COL} string, {POS_COL} long")
-    dv = read_pinned(spark, [store.abs(p) for p in dv_paths])
-    if isinstance(data_files, Mapping):
-        dv = _with_relative_file(dv, store, "dv_path")
-        wanted = local_df(spark, "referenced_file string, dv_path string",
-                          [list(data_files), list(data_files.values())])
-        on = ["referenced_file", "dv_path"]
-    else:
-        wanted = file_list_df(spark, list(data_files), "referenced_file")
-        on = ["referenced_file"]
+    dv = _with_relative_file(
+        read_pinned(spark, [store.abs(p) for p in dv_paths]), store,
+        "dv_path")
+    wanted = local_df(spark, "referenced_file string, dv_path string",
+                      [list(data_files), list(data_files.values())])
     return (
-        dv.join(F.broadcast(wanted), on=on, how="left_semi")
+        dv.join(F.broadcast(wanted), on=["referenced_file", "dv_path"],
+                how="left_semi")
         .select(
             F.col("referenced_file").alias(FILE_COL),
             F.explode("positions").alias(POS_COL),
@@ -294,7 +287,7 @@ def scan_files(
     project: list[str] | None = None,
     column_defaults: Mapping[str, object] | None = None,
     deletes: DataFrame | None = None,
-    dv_files: Mapping[str, str] | Sequence[str] | None = None,
+    dv_files: Mapping[str, str],
 ) -> DataFrame:
     """Read an explicit file set applying its delete vectors.
 
@@ -303,12 +296,11 @@ def scan_files(
     compaction fan-out) build and persist it once instead of re-reading
     the DV sidecars per scan.
 
-    ``dv_files`` (when the caller knows it from the manifest: the
-    subset of ``data_files`` whose ``dv_path`` is non-null, best as a
-    file → ``dv_path`` mapping so each file's deletes come from its own
-    sidecar only, see :func:`deletes_df`) routes ONLY those files
-    through the anti-join; clean files are read plainly and unioned
-    in.  This matters at scale: after maintenance most files
+    ``dv_files`` maps each file of ``data_files`` that carries a DV to
+    the sidecar its manifest entry names (``dv_path``); each file's
+    deletes come from that sidecar only (see :func:`deletes_df`).  Only
+    those files go through the anti-join; clean files are read plainly
+    and unioned in.  This matters at scale: after maintenance most files
     carry no DVs, and above ``BROADCAST_DV_ROWS`` the anti-join is a
     shuffle — without the split every row of every clean file would
     shuffle on (file, pos) just to survive a join that cannot touch it
@@ -340,12 +332,8 @@ def scan_files(
                                                      F.lit(default)))
         return d
 
-    if dv_files is not None:
-        dvset = dv_files if isinstance(dv_files, Mapping) else set(dv_files)
-        dirty = [f for f in data_files if f in dvset]
-        clean = [f for f in data_files if f not in dvset]
-    else:
-        dirty, clean = list(data_files), []
+    dirty = [f for f in data_files if f in dv_files]
+    clean = [f for f in data_files if f not in dv_files]
     if not dirty or (deletes is None and not dv_paths):
         live = _read(data_files)  # no delete row can touch any file
     else:
@@ -354,9 +342,7 @@ def scan_files(
                 F.broadcast(file_list_df(spark, dirty)),
                 on=FILE_COL, how="left_semi")
         else:
-            dels = deletes_df(
-                spark, store, dv_paths,
-                dv_files if isinstance(dv_files, Mapping) else dirty)
+            dels = deletes_df(spark, store, dv_paths, dv_files)
         if dv_cardinality <= BROADCAST_DV_ROWS:
             dels = F.broadcast(dels)
         live = _read(dirty).join(dels, on=[FILE_COL, POS_COL],

@@ -60,7 +60,7 @@ from typing import Any, Iterable
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from moonlink_spark.fs import DEFAULT_FS, PosixFileSystem
+from moonlink_spark.fs import DEFAULT_FS, PosixFileSystem, part_files
 
 SNAPSHOT_DIR = "snapshots"
 DATA_DIR = "data"
@@ -96,6 +96,22 @@ def shard_rel(sub_dir: str, name: str,
     import zlib
     h = zlib.crc32(name.encode("utf-8")) % n_shards
     return os.path.join(sub_dir, f"s{h:02x}", name)
+
+
+def staged_names(store: SnapshotStore, tmp_dir: str, sub_dir: str,
+                 stem: str) -> tuple[list[tuple[str, str]], list[str]]:
+    """Final names for the part files a Spark write left in
+    ``tmp_dir``: part ``j`` (in part order) becomes
+    ``shard_rel(sub_dir, f"{stem}-{j:04d}.parquet")``.  Returns the
+    ``(src, dst)`` rename pairs and the manifest-relative names; the
+    caller runs the renames.  Names are fixed before any rename runs, so
+    completion order cannot change the result."""
+    pairs, rels = [], []
+    for j, part in enumerate(part_files(store.fs, tmp_dir)):
+        rel = shard_rel(sub_dir, f"{stem}-{j:04d}.parquet")
+        pairs.append((os.path.join(tmp_dir, part), store.abs(rel)))
+        rels.append(rel)
+    return pairs, rels
 
 
 class CommitConflict(RuntimeError):

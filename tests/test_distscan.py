@@ -319,3 +319,55 @@ def test_engine_scan_switches_at_threshold(spark, aftermath, monkeypatch):
     before = _multiset(table.scan(0))
     monkeypatch.setattr(distscan, "PLAN_DISTRIBUTED_FILES", 0)
     assert _multiset(table.scan(0)) == before
+
+
+def test_hot_file_deletes_applied_in_reader_without_join(spark, tmp_path):
+    """A hot file merged 4 times while other files keep pointing at the
+    older sidecars, which still hold a superseded row for it: the
+    distributed scan returns exactly the driver-planned scan's rows
+    (locations included), and it applies each file's deletes inside its
+    reader — the executed plan has no join."""
+    import pyarrow.parquet as pq
+
+    w = str(tmp_path / "wh-hot")
+    synthesize_cdc_aftermath(w, seed=37, n_files=8, rows_per_file=(30, 60),
+                             n_repos=3, content_bytes=(32, 64))
+    keys = ["repo", "path", "commit"]
+    t = MoonTable(spark, w)
+    loc = (scan_op.scan(spark, t.store, t.store.read_snapshot(),
+                        with_location=True)
+           .select(*keys, scan_op.FILE_COL).orderBy(*keys).collect())
+    by_file: dict[str, list] = {}
+    for r in loc:
+        by_file.setdefault(r[scan_op.FILE_COL], []).append(tuple(r[:3]))
+    files = sorted(by_file, key=lambda f: (-len(by_file[f]), f))
+    hot, others = files[0], files[1:4]
+    rounds = [(0, others[0], 0), (1, others[1], 0), (2, others[2], 0),
+              (3, others[0], 1)]
+    sidecars = []
+    for hot_i, other, other_i in rounds:
+        batch = spark.createDataFrame(
+            [(*by_file[hot][hot_i], None, None, "delete"),
+             (*by_file[other][other_i], None, None, "delete")],
+            "repo string, path string, commit string, lang string, "
+            "content string, _op string")
+        snap = t.merge(batch, key_columns=keys)
+        ents = {e["path"]: e for e in t.store.manifest_entries(
+            snap.version)}
+        sidecars.append(ents[hot]["dv_path"])
+    # premise: an older sidecar, still named by another file, holds a
+    # superseded row for the hot file
+    assert ents[others[1]]["dv_path"] == sidecars[1] != sidecars[-1]
+    assert hot in pq.read_table(t.store.abs(sidecars[1]),
+                                columns=["referenced_file"]
+                                )["referenced_file"].to_pylist()
+
+    dist = distscan.scan_distributed(
+        spark, t.store, spark.read.parquet(*snap.manifest_paths),
+        schema_ddl=snap.properties["schema_ddl"], project=snap.schema,
+        with_location=True)
+    default = scan_op.scan(spark, t.store, snap, with_location=True)
+    assert _multiset(dist) == _multiset(default.select(dist.columns))
+    assert dist.count() == len(loc) - 2 * len(rounds)
+    plan = dist._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan

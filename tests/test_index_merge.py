@@ -71,3 +71,32 @@ def test_lineage_metrics_surface(spark, tmp_path):
     for r in recs:
         assert r["rows_out"] == r["rows_in"] - r["rows_deleted"]
         assert r["bytes_out"] > 0 and r["outputs"]
+
+
+def test_index_merge_keeps_each_files_named_row(spark, tmp_path):
+    """Consolidation moves each file's DV row as it is: after
+    optimize("index"), every file's row in its new sidecar decodes to
+    its row in the sidecar it was named in before."""
+    import pyarrow.parquet as pq
+
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=71, n_files=80, rows_per_file=(30, 80),
+                             n_repos=6, content_bytes=(48, 96),
+                             dv_files_per_sidecar=1)
+    store = SnapshotStore(w)
+    cols = ["positions", "cardinality", "max_row_count"]
+
+    def named_rows(version):
+        out = {}
+        for e in store.manifest_entries(version):
+            if not e["dv_path"]:
+                continue
+            rows = [r for r in pq.read_table(store.abs(e["dv_path"]))
+                    .to_pylist() if r["referenced_file"] == e["path"]]
+            assert len(rows) == 1, (e["path"], e["dv_path"])
+            out[e["path"]] = {c: rows[0][c] for c in cols}
+        return out
+
+    before = named_rows(0)
+    assert MoonTable(spark, w).optimize("index").version == 1
+    assert named_rows(1) == before

@@ -110,8 +110,10 @@ def test_distributed_planning_scan_parity(spark, aftermath, monkeypatch):
 def test_dv_split_scan_equals_legacy_single_antijoin(spark, aftermath):
     """scan_files routes only DV-bearing files through the anti-join
     (clean files are read plainly and unioned in); the result is
-    identical to the legacy everything-through-the-join shape, and a
-    scan declared all-clean plans no join at all."""
+    identical to the distributed scan, which applies each file's
+    deletes inside its own reader with no join, and a scan declared
+    all-clean plans no join at all."""
+    from moonlink_spark.operators import distscan
     from moonlink_spark.operators import scan as scan_op
 
     w, _ = aftermath
@@ -129,12 +131,13 @@ def test_dv_split_scan_equals_legacy_single_antijoin(spark, aftermath):
             sum(e["dv_cardinality"] for e in entries))
     split = scan_op.scan_files(
         spark, store, *args,
-        dv_files=[e["path"] for e in dirty], **kw)
-    legacy = scan_op.scan_files(spark, store, *args, dv_files=None, **kw)
-    assert spark_sha_multiset(split) == spark_sha_multiset(legacy)
+        dv_files={e["path"]: e["dv_path"] for e in dirty}, **kw)
+    dist = distscan.scan_distributed(
+        spark, store, spark.read.parquet(*snap.manifest_paths), **kw)
+    assert spark_sha_multiset(split) == spark_sha_multiset(dist)
 
     clean_only = scan_op.scan_files(
-        spark, store, [clean[0]["path"]], [], 0, dv_files=[], **kw)
+        spark, store, [clean[0]["path"]], [], 0, dv_files={}, **kw)
     plan = clean_only._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert clean_only.count() == clean[0]["rows"]
