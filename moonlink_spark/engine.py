@@ -26,6 +26,8 @@ import math
 import os
 from typing import Mapping
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,10 +35,11 @@ from moonlink_spark import metrics as mtr
 from moonlink_spark.config import CompactionConfig, TableConfig
 from moonlink_spark.fs import rename_many
 from moonlink_spark.functions.zorder import compute_zorder_boundaries
+from moonlink_spark.operators import changelog
 from moonlink_spark.operators import expire as expire_op
 from moonlink_spark.operators import merge as merge_op
 from moonlink_spark.operators import scan as scan_op
-from moonlink_spark.operators.planner import plan_compaction
+from moonlink_spark.operators.planner import plan_compaction, trigger_counts
 from moonlink_spark.operators.rewrite import rewrite_bin
 from moonlink_spark.snapshotstore import (
     DV_DIR,
@@ -140,7 +143,6 @@ class MoonTable:
                 to_version: int | None = None) -> DataFrame:
         """Row-level change events committed after ``from_version`` (the
         incremental-read surface; see :mod:`operators.changelog`)."""
-        from moonlink_spark.operators import changelog
         return changelog.changes(self.spark, self.store,
                                  from_version, to_version)
 
@@ -175,12 +177,7 @@ class MoonTable:
         t_start = _time.monotonic()
         comp = (self.config.compaction.for_full_mode()
                 if mode == "full" else self.config.compaction)
-        manifest = self.manifest(base.version)
-        bins = plan_compaction(
-            manifest, comp,
-            manifest_path=base.manifest_paths,
-            manifest_bytes=sum(self.store.fs.size(p)
-                               for p in base.manifest_paths))
+        bins = plan_compaction(base.manifest_paths, comp)
         if not bins:
             return base  # the `Nothing` outcome
         t_plan = _time.monotonic() - t_start
@@ -384,11 +381,11 @@ class MoonTable:
                 key_columns=list(self.config.index_key_columns),
                 n_buckets=self.config.index_buckets,
                 job_id=job_id)
-        # the sidecar list is planning metadata (files to read) — the
-        # only driver-side materialization in this path
-        live_dv = sorted(r["dv_path"] for r in
-                         mdf.filter(F.col("dv_path").isNotNull())
-                         .select("dv_path").distinct().collect())
+        # the sidecar census is planning metadata (files to read, and
+        # how many files name one): one driver read of the dv_path column
+        named = pq.read_table(base.manifest_paths,
+                              columns=["dv_path"])["dv_path"].drop_null()
+        live_dv = sorted(pc.unique(named).to_pylist())
         if len(live_dv) < MIN_DV_SIDECARS_TO_MERGE:
             # the `Nothing` outcome still took a real evaluation pass —
             # its wall belongs in the histogram like any other run
@@ -409,8 +406,7 @@ class MoonTable:
                   .select("referenced_file", "positions", "cardinality",
                           "max_row_count"))
         tmp = os.path.join(self.store.warehouse, "tmp", job_id)
-        n_files_with_dv = mdf.filter(F.col("dv_path").isNotNull()).count()
-        n_out = max(1, math.ceil(n_files_with_dv / 4096))
+        n_out = max(1, math.ceil(len(named) / 4096))
         (merged.repartitionByRange(n_out, "referenced_file")
          .sortWithinPartitions("referenced_file")
          .write.mode("overwrite").option("compression", "zstd").parquet(tmp))
@@ -726,15 +722,17 @@ class MoonTable:
           (trigger thresholds still shape candidate selection).
         - ``"force_full"`` — compact everything (``ForceFull``).
         - ``"skip"`` — evaluate nothing (the reference's Skip option).
-        - ``"evaluate"`` — compute the trigger counts (one manifest
-          aggregate) but never act; ``decision`` stays ``"none"``.
+        - ``"evaluate"`` — compute the trigger counts (one driver pass
+          over the manifest) but never act; ``decision`` stays ``"none"``.
           What a scheduler polls between sweeps.
 
         Returns an auditable decision record: the decision, the trigger
         counts it was based on, and the version window.  The trigger
-        evaluation is ONE aggregate over the manifest DataFrame (never a
-        listing of data files), so it costs O(manifest) regardless of
-        table size — cheap enough to call after every ingest batch.
+        evaluation is one driver pass over the manifest segments with
+        the planner's own trigger mask (``planner.trigger_counts``; no
+        Spark job, never a listing of data files), so it costs
+        O(manifest) regardless of table size — cheap enough to call
+        after every ingest batch.
         """
         if option not in ("best_effort", "force_regular", "force_full",
                           "skip", "evaluate"):
@@ -752,22 +750,9 @@ class MoonTable:
             mtr.record_decision(rec)
             return rec
 
-        mdf = self.store.manifest_df(self.spark, v0)
-        comp = self.config.compaction
-        deleted_frac = (F.col("dv_cardinality")
-                        / F.greatest(F.col("rows"), F.lit(1)))
-        if comp.deletion_trigger_fraction > 0:
-            qualify = (F.col("bytes") < F.lit(comp.target_file_bytes)) | (
-                deleted_frac >= F.lit(comp.deletion_trigger_fraction))
-        else:  # full mode: everything qualifies (planner.select_candidates)
-            qualify = F.lit(True)
-        counts = mdf.agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum(F.when(F.col("dv_path").isNotNull(), 1).otherwise(0))
-            .alias("n_dv"),
-            F.sum(F.when(qualify, 1).otherwise(0)).alias("n_cand")
-        ).collect()[0]
-        n_candidates = int(counts["n_cand"] or 0)
+        counts = trigger_counts(self.store.read_snapshot(v0).manifest_paths,
+                                self.config.compaction)
+        n_candidates = counts["n_cand"]
         n_blocks = 0
         if self.config.index_key_columns:
             from moonlink_spark.operators import keyindex
@@ -775,9 +760,9 @@ class MoonTable:
                 len(keyindex._bucket_parts(self.store, b))
                 for b in range(self.config.index_buckets))
         rec["reasons"] = {
-            "n_files": int(counts["n_files"]),
-            "n_compact_candidates": int(n_candidates),
-            "n_dv_sidecars": int(counts["n_dv"] or 0),
+            "n_files": counts["n_files"],
+            "n_compact_candidates": n_candidates,
+            "n_dv_sidecars": counts["n_dv"],
             "n_index_blocks": n_blocks,
             "min_files_to_compact":
                 self.config.compaction.min_files_to_compact,
@@ -800,7 +785,7 @@ class MoonTable:
         if n_candidates >= self.config.compaction.min_files_to_compact:
             snap = self.optimize("data")
             rec.update(decision="data", version_after=snap.version)
-        elif (int(counts["n_dv"] or 0) >= MIN_DV_SIDECARS_TO_MERGE
+        elif (counts["n_dv"] >= MIN_DV_SIDECARS_TO_MERGE
               or n_blocks >= MIN_DV_SIDECARS_TO_MERGE):
             snap = self.optimize("index")
             rec.update(decision="index", version_after=snap.version)
@@ -867,12 +852,11 @@ class MoonTable:
         ``moonlink_backend/src/lib.rs:292-306``).  Footer reads run in a
         thread pool (the reference buffers at a fixed parallelism).
         Paths are warehouse-relative (manifest ``path`` values)."""
-        import pyarrow.parquet as _pq
         from concurrent.futures import ThreadPoolExecutor
 
         def one(rel: str) -> bytes:
             import io
-            md = _pq.ParquetFile(self.store.abs(rel)).metadata
+            md = pq.ParquetFile(self.store.abs(rel)).metadata
             buf = io.BytesIO()
             md.write_metadata_file(buf)
             return buf.getvalue()

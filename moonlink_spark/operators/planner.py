@@ -17,17 +17,23 @@ Each bin is an independent Spark job (read -> DV anti-join -> Z-order ->
 write ≈ ``bin_target_bytes`` of input), checkpointed with a lineage
 record before commit, so a killed maintenance job resumes at bin
 granularity.  Binning is a running-sum bucket assignment over the
-manifest DataFrame ordered by path (deterministic), computed with a
-window cumsum.  The plan itself (bin -> file list) necessarily reaches
-the driver — it is job-launch metadata, streamed out with
-``toLocalIterator`` so the driver never holds more than the current
-partition of manifest rows.
+candidates ordered by path (deterministic).
+
+The plan (bin -> file list) is job-launch metadata that must reach the
+driver, so planning runs there: one pyarrow pass over the snapshot's
+manifest segments, one vectorized trigger mask per segment
+(:func:`_qualifies`, shared with ``maintain()``'s trigger counts).  With
+a file cap the driver keeps only the running smallest candidates, so it
+holds one segment plus the cap, never the whole manifest.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -59,19 +65,6 @@ class CompactionBin:
         if self.rows == 0:
             return 0
         return int(self.bytes * (self.live_rows / self.rows))
-
-
-def select_candidates(manifest: DataFrame,
-                      config: CompactionConfig) -> DataFrame:
-    """DataFrame filter implementing the compaction trigger."""
-    deleted_frac = F.col("dv_cardinality") / F.greatest(F.col("rows"),
-                                                        F.lit(1))
-    cond = (F.col("bytes") < F.lit(config.target_file_bytes))
-    if config.deletion_trigger_fraction > 0:
-        cond = cond | (deleted_frac >= F.lit(config.deletion_trigger_fraction))
-    else:  # full mode: everything qualifies
-        cond = F.lit(True)
-    return manifest.filter(cond)
 
 
 def ordered_cumsum(df: DataFrame, order_col: str, value_col: str,
@@ -116,20 +109,11 @@ def ordered_cumsum(df: DataFrame, order_col: str, value_col: str,
     return out
 
 
-# Manifests below this on-disk size plan DRIVER-SIDE with pyarrow —
-# zero Spark jobs.  Planning a few-hundred-row manifest through
-# DataFrame jobs costs whole seconds of pure scheduler latency (it was
-# the largest serial term in the scaling profile); the distributed path
-# exists for the 10^8+-entry manifests where the data is the problem.
-# Same threshold idea as Iceberg's local-vs-distributed planning mode.
-LOCAL_PLAN_MAX_MANIFEST_BYTES = 32 * 1024 * 1024
-
-
 def _bins_from_rows(rows: list[dict],
                     config: CompactionConfig) -> list[CompactionBin]:
-    """Shared tail of both planning paths: rows (dicts with path/rows/
-    bytes/dv_path/dv_cardinality, ascending path, already filtered and
-    capped) → running-sum bins + the min-candidate gate."""
+    """Rows (dicts with path/rows/bytes/dv_path/dv_cardinality,
+    ascending path, already filtered and capped) → running-sum bins +
+    the min-candidate gate."""
     if len(rows) < config.min_files_to_compact:
         # moonlink's `Nothing` outcome (too few candidates to bother
         # merging).  In FULL mode only (deletion trigger disabled ⇒
@@ -160,72 +144,69 @@ def _bins_from_rows(rows: list[dict],
     return [bins[k] for k in sorted(bins)]
 
 
-def plan_compaction_local(manifest_paths: list[str],
-                          config: CompactionConfig) -> list[CompactionBin]:
-    """Driver-side planning over a small manifest (pyarrow, no Spark
-    jobs) — identical semantics to the DataFrame path: same candidate
-    predicate, same smallest-first cap, same path-ordered running-sum
-    binning."""
-    import pyarrow.parquet as pq
+_PLAN_COLUMNS = ["path", "rows", "bytes", "dv_path", "dv_cardinality"]
 
-    if isinstance(manifest_paths, str):
-        manifest_paths = [manifest_paths]
-    rows = []
-    for p in manifest_paths:
-        rows.extend(pq.read_table(
-            p, columns=["path", "rows", "bytes", "dv_path",
-                        "dv_cardinality"]).to_pylist())
+
+def _qualifies(table: pa.Table, config: CompactionConfig) -> pa.Array:
+    """The compaction trigger as a boolean mask over manifest rows:
+    undersized, or at least ``deletion_trigger_fraction`` of the rows
+    deleted (float64 division, a NULL cardinality counts as 0).  With
+    the deletion trigger disabled (full mode) every row qualifies."""
     frac = config.deletion_trigger_fraction
-    if frac > 0:
-        cand = [r for r in rows
-                if r["bytes"] < config.target_file_bytes
-                or (r["dv_cardinality"] or 0) / max(r["rows"], 1) >= frac]
-    else:
-        cand = rows
-    if config.max_files_to_compact < (1 << 62):
-        cand = sorted(cand, key=lambda r: (r["bytes"], r["path"]))[
-            :config.max_files_to_compact]
-    cand.sort(key=lambda r: r["path"])
-    return _bins_from_rows(cand, config)
+    if frac <= 0:
+        return pa.repeat(True, table.num_rows)
+    deleted = pc.divide(
+        pc.cast(pc.fill_null(table["dv_cardinality"], 0), pa.float64()),
+        pc.cast(pc.max_element_wise(table["rows"], 1), pa.float64()))
+    return pc.or_kleene(pc.less(table["bytes"], config.target_file_bytes),
+                        pc.greater_equal(deleted, frac))
 
 
-def plan_compaction(manifest: DataFrame,
-                    config: CompactionConfig, *,
-                    manifest_path: str | list[str] | None = None,
-                    manifest_bytes: int | None = None
-                    ) -> list[CompactionBin]:
+def trigger_counts(manifest_paths: list[str],
+                   config: CompactionConfig) -> dict:
+    """``maintain()``'s trigger inputs from one driver pass over the
+    manifest segments: ``n_files``, ``n_dv`` (entries naming a DV
+    sidecar) and ``n_cand`` (entries :func:`_qualifies` admits)."""
+    n_files = n_dv = n_cand = 0
+    for p in manifest_paths:
+        t = pq.read_table(p, columns=["rows", "bytes", "dv_path",
+                                      "dv_cardinality"])
+        n_files += t.num_rows
+        n_dv += t.num_rows - t["dv_path"].null_count
+        n_cand += pc.sum(_qualifies(t, config)).as_py() or 0
+    return {"n_files": n_files, "n_dv": n_dv, "n_cand": n_cand}
+
+
+def plan_compaction(manifest_paths: list[str],
+                    config: CompactionConfig) -> list[CompactionBin]:
     """Select candidates, cap per-op file count, pack into bins.
 
     Returns ``[]`` when fewer than ``min_files_to_compact`` candidates
     exist (the ``Nothing`` outcome of ``get_payload_to_compact``).
-
-    When the caller passes ``manifest_path`` (one path or the segment
-    list) and the manifest objects are small
-    (``LOCAL_PLAN_MAX_MANIFEST_BYTES`` total), planning runs driver-side
-    with pyarrow — the plan is identical, minus several whole-table-
-    irrelevant Spark jobs of scheduler latency.
     """
-    if (manifest_path is not None and manifest_bytes is not None
-            and manifest_bytes <= LOCAL_PLAN_MAX_MANIFEST_BYTES):
-        return plan_compaction_local(manifest_path, config)
-    cand = select_candidates(manifest, config)
-    # smallest-first cap at max_files_to_compact (prod 32) — moonlink's
-    # one-op budget; "full" mode sets the cap effectively unbounded.
-    if config.max_files_to_compact < (1 << 62):
-        cand = (cand.orderBy(F.col("bytes").asc(), F.col("path").asc())
-                .limit(config.max_files_to_compact))
-
-    # deterministic order; the running-sum binning itself happens in
-    # _bins_from_rows over the streamed iterator (O(candidate files) of
-    # small dicts, batched by toLocalIterator — the driver holds one
-    # batch).  An earlier revision also ran the two-phase distributed
-    # cumsum here and then discarded it: _bins_from_rows recomputes the
-    # identical running sum, so the extra Spark jobs were dead work.
-    ordered = (cand.select("path", "rows", "bytes", "dv_path",
-                           "dv_cardinality")
-               .orderBy("path"))
-    rows = [r.asDict() for r in ordered.toLocalIterator()]
-    return _bins_from_rows(rows, config)
+    cap = config.max_files_to_compact
+    keys = [("bytes", "ascending"), ("path", "ascending")]
+    kept: list[pa.Table] = []
+    for p in manifest_paths:
+        t = pq.read_table(p, columns=_PLAN_COLUMNS)
+        kept.append(t.filter(_qualifies(t, config)))
+        if cap < (1 << 62):
+            # smallest-first cap (prod 32, moonlink's one-op budget):
+            # keep only the running smallest ``max_files_to_compact``
+            t = pa.concat_tables(kept)
+            if t.num_rows > cap:
+                t = t.take(pc.select_k_unstable(t, cap, keys))
+            kept = [t]
+    # delta-commit segments can overlap in path range: one global sort
+    cand = pa.concat_tables(kept).sort_by("path")
+    # column-wise through numpy: ~10x faster than ``to_pylist`` at 10^6
+    # rows (a NULL would turn an integer column to float, hence the 0)
+    cols = [c.to_numpy(zero_copy_only=False).tolist() for c in (
+        cand["path"], cand["rows"], cand["bytes"], cand["dv_path"],
+        pc.fill_null(cand["dv_cardinality"], 0))]
+    return _bins_from_rows(
+        [{"path": p, "rows": r, "bytes": b, "dv_path": d,
+          "dv_cardinality": n} for p, r, b, d, n in zip(*cols)], config)
 
 
 def ordered_running_max(df: DataFrame, order_cols: list[str],

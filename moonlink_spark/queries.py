@@ -270,11 +270,10 @@ def manifest_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The compaction planner's size-tiered binning (planner.py):
     running-sum over a manifest ordered by file name, bin id =
     floor(cumsum_before / bin_target). Manifest synthesized from orders
-    buckets so the oracle can replay it.  Uses the planner's own
-    two-phase ``ordered_cumsum`` (range-partitioned windows + broadcast
-    prefix offsets) — the registered query exercises the same
-    no-global-window shape the engine runs, so it scales past one task
-    at 10^8+ manifest rows."""
+    buckets so the oracle can replay it.  The planner bins on the
+    driver; this query runs the same running sum as a DataFrame, through
+    the two-phase ``ordered_cumsum`` (range-partitioned windows +
+    broadcast prefix offsets), so no single task holds the manifest."""
     from moonlink_spark.operators.planner import ordered_cumsum
 
     o = _t(spark, sf_dir, "orders")

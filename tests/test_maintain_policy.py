@@ -168,3 +168,39 @@ def test_clustering_stats_matches_naive_sweep(spark):
         want[p] = int(run_max is not None and lo <= run_max)
         run_max = hi if run_max is None else max(run_max, hi)
     assert got == want
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job the status store has seen, after the listener
+    bus has delivered all events posted so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().jobsList(None).iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
+def test_evaluate_starts_no_spark_job(spark, tmp_path):
+    """The trigger counts come from one driver pass over the manifest
+    segments: evaluating starts no Spark job, and the counts equal a
+    plain count over the manifest entries."""
+    t = _mk(spark, tmp_path, min_files=4)
+    _append_files(spark, t, 5)
+    t.merge(spark.createDataFrame(
+        [("org1/r", "src/f1.rs", f"{1:08x}", None, None, "delete")],
+        ROW_DDL + ", _op string"), key_columns=KEYS)
+    before = _job_ids(spark)
+    rec = t.maintain("evaluate")
+    assert _job_ids(spark) == before
+    cfg = t.config.compaction
+    ents = t.store.manifest_entries()
+    assert rec["decision"] == "none"
+    assert rec["reasons"]["n_files"] == len(ents) == 5
+    assert rec["reasons"]["n_dv_sidecars"] == sum(
+        e["dv_path"] is not None for e in ents) == 1
+    assert rec["reasons"]["n_compact_candidates"] == sum(
+        e["bytes"] < cfg.target_file_bytes
+        or (e["dv_cardinality"] or 0) / max(e["rows"], 1)
+        >= cfg.deletion_trigger_fraction for e in ents)
