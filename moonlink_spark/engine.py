@@ -228,12 +228,6 @@ class MoonTable:
         run_bins = bins if max_bins is None else bins[:max_bins]
         from concurrent.futures import ThreadPoolExecutor
 
-        # AQE is disabled for the rewrite fan-out: adaptive re-planning
-        # adds a materialization barrier per shuffle, and with many
-        # concurrent jobs whose scan stages run Arrow/pandas UDFs the
-        # barriers serialize badly (measured ~6x slowdown at 16
-        # concurrent bins).  The bin jobs have a fixed two-stage shape
-        # (scan→sort-write), so AQE has nothing to adapt anyway.
         # the candidate set's delete vectors, exploded once and cached —
         # every bin anti-joins against (a filter of) this one DataFrame
         # instead of re-reading the DV sidecar parquet per bin
@@ -245,6 +239,14 @@ class MoonTable:
                 {f: p for b in run_bins for f, p in b.dv_files.items()}
             ).persist()
 
+        # AQE is disabled for the rewrite fan-out: adaptive re-planning
+        # adds a materialization barrier per shuffle, and concurrent bin
+        # jobs serialized on those barriers (~6x slowdown measured at 16
+        # concurrent bins, back when the zkey ran Arrow/pandas UDFs in
+        # the scan stages).  The zkey is JVM-only now and this rationale
+        # has not been measured since (ROADMAP #3, step 1).  The bin jobs
+        # have a fixed two-stage shape (scan→sort-write), so AQE has
+        # nothing to adapt anyway.
         prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
@@ -337,29 +339,21 @@ class MoonTable:
                 if attempt == 4:
                     raise
                 new_base = self.store.read_snapshot()
-                # staleness check as a join, not a driver dict: any
-                # compacted input whose (dv_path, dv_cardinality)
-                # changed — or that vanished — invalidates the rewrite
-                compacted_df = scan_op.file_list_df(
-                    self.spark, sorted(compacted), "path")
-                old_sel = (self.store.manifest_df(
-                    self.spark, commit_base.version)
-                    .join(F.broadcast(compacted_df), on="path",
-                          how="left_semi")
-                    .select("path", F.col("dv_path").alias("_odv"),
-                            F.col("dv_cardinality").alias("_ocard")))
-                new_sel = (self.store.manifest_df(
-                    self.spark, new_base.version)
-                    .select("path", F.col("dv_path").alias("_ndv"),
-                            F.col("dv_cardinality").alias("_ncard"),
-                            F.lit(True).alias("_present")))
-                stale = (old_sel.join(new_sel, on="path", how="left")
-                         .filter(F.col("_present").isNull()
-                                 | ~F.col("_ndv").eqNullSafe(F.col("_odv"))
-                                 | ~F.coalesce("_ncard", F.lit(0))
-                                 .eqNullSafe(F.coalesce("_ocard",
-                                                        F.lit(0))))
-                         .limit(1).count())
+
+                def deletes(version: int) -> dict:
+                    return {p: (e["dv_path"], e["dv_cardinality"] or 0)
+                            for p, e in self.store.manifest_lookup(
+                                version, compacted,
+                                ("dv_path", "dv_cardinality")).items()}
+                # staleness check on the driver (``compacted`` is already
+                # a driver set): any compacted input whose (dv_path,
+                # dv_cardinality) changed — or that vanished —
+                # invalidates the rewrite
+                try:
+                    stale = (deletes(new_base.version)
+                             != deletes(commit_base.version))
+                except RuntimeError:  # an input vanished
+                    stale = True
                 if stale:
                     raise CommitConflict(
                         "compacted inputs changed concurrently; "

@@ -1,11 +1,11 @@
 """Distributed scan planning: the file list never lands on the driver.
 
 The default read path (``operators/scan.py``) plans like Iceberg's
-driver does — collect the pruned manifest's (path, dv_path) projection,
-hand the path list to Spark's parquet source.  That is the right call up
-to a few million manifest entries; past it, even the *pruned* list can
-exceed driver heap (the round-3 audit named ``scan.py:316`` as the next
-scale boundary at the 10^12-file design point).
+driver does — read the manifest segments' (path, dv_path,
+dv_cardinality) columns with pyarrow, pruned by the bounds, and hand the
+path list to Spark's parquet source.  That is the right call up to a few
+million manifest entries; past it, even the *pruned* list can exceed
+driver heap at the 10^12-file design point.
 
 This module is the scale path: the pruned manifest STAYS a DataFrame.
 Planning work (fully-deleted-file skip, the plan's entry count) runs as
@@ -53,11 +53,12 @@ from pyspark.sql import types as T
 from moonlink_spark.operators.scan import FILE_COL, POS_COL, predicate_exprs
 from moonlink_spark.snapshotstore import SnapshotStore
 
-# Pruned-manifest entry count above which scan() switches from
-# driver-collected planning to this module.  ~100 bytes/entry puts the
-# default at ~100 MB of driver heap — far below the point of pain, so
-# the switch happens well before the driver is at risk.  Tests lower it
-# to force the distributed path on small warehouses.
+# Manifest entry count (the snapshot header's unpruned total,
+# ``Snapshot.entry_count``) above which scan() switches from the
+# driver-read plan to this module.  ~100 bytes/entry puts the default at
+# ~100 MB of driver heap — far below the point of pain, so the switch
+# happens well before the driver is at risk.  Tests lower it to force
+# the distributed path on small warehouses.
 PLAN_DISTRIBUTED_FILES = 1_000_000
 
 _READ_BATCH_ROWS = 1 << 16

@@ -122,7 +122,6 @@ def expire_snapshots(
     retain_last: int = 2,
     clean_tmp_older_than_seconds: float = 24 * 3600,
     collect_audit: bool = True,
-    delete_workers: int = 16,
 ) -> dict:
     """Expire all but the newest ``retain_last`` versions; delete orphaned
     data/DV files and stale crashed-job tmp directories.  Returns
@@ -158,20 +157,16 @@ def expire_snapshots(
     n_deleted = 0
     batch: list[str] = []
 
-    def _flush(b: list[str]) -> None:
-        remove_many(store.fs, [store.abs(rel) for rel in b],
-                    max_workers=delete_workers)
-
     for r in orphans_df.toLocalIterator():
         batch.append(r["f"])
         if len(batch) >= _DELETE_BATCH:
-            _flush(batch)
+            remove_many(store.fs, [store.abs(rel) for rel in batch])
             n_deleted += len(batch)
             if collect_audit or not deleted:
                 deleted.extend(batch)
             batch = []
     if batch:
-        _flush(batch)
+        remove_many(store.fs, [store.abs(rel) for rel in batch])
         n_deleted += len(batch)
         if collect_audit or not deleted:
             deleted.extend(batch)

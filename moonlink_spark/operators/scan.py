@@ -13,8 +13,9 @@ The Spark expression of moonlink's read path:
   deleted-row cardinality is small (the common case — DVs are per-file
   bitmaps), else it is a regular shuffled join on a high-cardinality key
   (no skew: the key is (file, position)).
-- file pruning via manifest min/max bounds happens *before* the scan by
-  filtering the manifest DataFrame (cf. per-file stats pruning,
+- file pruning via manifest min/max bounds happens *before* the scan,
+  as the plan is read from the manifest segments on the driver
+  (:func:`driver_plan`; cf. per-file stats pruning,
   ``parquet_stats_utils.rs:327-412``) — files whose bound range cannot
   contain the predicate value are never listed to the reader.
 
@@ -26,12 +27,17 @@ pinned reader sees (cf. ``union_read/read_state.rs:20-50``).
 from __future__ import annotations
 
 import operator
+from decimal import Decimal
+from functools import reduce
 from typing import Callable, Mapping, Sequence
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 from pyspark.sql.types import StructType
 
 from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
@@ -40,10 +46,6 @@ from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
 # side is broadcast.  8M (file,pos) pairs ≈ a few hundred MB broadcast —
 # comfortably under typical executor memory.
 BROADCAST_DV_ROWS = 8_000_000
-
-# Driver-collected planning above ~1M entries hands off to
-# ``operators/distscan.py`` (the manifest stays a DataFrame; executors
-# read their own plan slices) — see ``distscan.PLAN_DISTRIBUTED_FILES``.
 
 FILE_COL = "_mlfile"
 POS_COL = "_pos"
@@ -73,8 +75,6 @@ def _check_pred_type(bound_dtype: str, col: str, values: tuple) -> None:
     type, else Catalyst's implicit casts decide the semantics silently."""
     import datetime
 
-    import decimal as _decimal
-
     base = bound_dtype.split("(")[0].strip().lower()
     group_of = {
         "string": "string", "varchar": "string",
@@ -96,7 +96,7 @@ def _check_pred_type(bound_dtype: str, col: str, values: tuple) -> None:
             got = "integral"
         elif isinstance(v, float):
             got = "numeric"
-        elif isinstance(v, _decimal.Decimal):
+        elif isinstance(v, Decimal):
             got = "decimal"
         elif isinstance(v, str):
             got = "string"
@@ -119,10 +119,23 @@ def _check_pred_type(bound_dtype: str, col: str, values: tuple) -> None:
                 "be implicitly cast and silently wrong")
 
 
-def prune_manifest(manifest: DataFrame,
-                   predicates: Mapping[str, object] | None) -> DataFrame:
-    """Filter manifest entries whose [min,max] bounds can satisfy the
-    predicates.  Unknown bounds (nulls) are conservatively kept.
+_COMPARE = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
+            ">": operator.gt, ">=": operator.ge}
+
+
+def _is_null(c):
+    """The null test, spelled per backend."""
+    return c.isNull() if isinstance(c, Column) else c.is_null()
+
+
+def bound_exprs(predicates: Mapping[str, object] | None,
+                dtypes: Mapping[str, str],
+                field: Callable = F.col) -> list:
+    """File pruning by manifest bounds: one keep-expression per
+    predicate over ``min_<c>``/``max_<c>``/``null_<c>``/``rows``, built
+    on ``field(name)`` as in :func:`predicate_exprs`; ``dtypes`` maps the
+    manifest's columns to Spark type strings.  Unknown bounds (nulls)
+    are conservatively kept.
 
     Predicate forms per column:
       value                  — equality
@@ -137,54 +150,57 @@ def prune_manifest(manifest: DataFrame,
     its row count cannot satisfy IS NOT NULL.  Unknown (NULL) counts are
     conservatively kept.
     """
-    if not predicates:
-        return manifest
-    dtypes = dict(manifest.dtypes)
-    for col, pred in predicates.items():
-        if isinstance(pred, tuple) and pred[0] in ("is_null", "not_null"):
+    out = []
+    for col, pred in (predicates or {}).items():
+        if not isinstance(pred, tuple):
+            pred = ("==", pred)
+        op, values = pred[0], tuple(pred[1:])
+        if op in ("is_null", "not_null"):
             nc = f"null_{col}"
             if nc not in dtypes:
                 continue  # manifest predates null counts: keep all
-            n = F.col(nc)
-            if pred[0] == "is_null":
-                keep = n > 0
-            else:
-                keep = n < F.col("rows")
-            manifest = manifest.filter(n.isNull() | keep)
+            n = field(nc)
+            keep = n > 0 if op == "is_null" else n < field("rows")
+            out.append(_is_null(n) | keep)
             continue
         bdt = dtypes.get(f"min_{col}")
         if bdt is None:
             raise ValueError(f"no bounds for column {col!r} in manifest")
-        _check_pred_type(
-            bdt, col,
-            tuple(pred[1:]) if isinstance(pred, tuple) else (pred,))
-        lo, hi = F.col(f"min_{col}"), F.col(f"max_{col}")
-        unknown = lo.isNull() | hi.isNull()
-        if not isinstance(pred, tuple):
-            pred = ("==", pred)
-        op = pred[0]
-        if op == "==":
-            keep = (lo <= F.lit(pred[1])) & (hi >= F.lit(pred[1]))
-        elif op in ("<", "<="):
-            # any row can be < v only if the file's min is
-            keep = lo < F.lit(pred[1]) if op == "<" else lo <= F.lit(pred[1])
-        elif op in (">", ">="):
-            keep = hi > F.lit(pred[1]) if op == ">" else hi >= F.lit(pred[1])
-        elif op == "between":
-            keep = (hi >= F.lit(pred[1])) & (lo <= F.lit(pred[2]))
+        _check_pred_type(bdt, col, values)
+        lo, hi = field(f"min_{col}"), field(f"max_{col}")
+        unknown = _is_null(lo) | _is_null(hi)
+        if bdt.startswith("decimal") and not isinstance(lo, Column):
+            # pyarrow misorders decimals of unequal scale and refuses an
+            # int literal: compare at one type holding both exactly, as
+            # Spark's decimal promotion does
+            t = pa.decimal128(38, max(
+                [int(bdt[:-1].split(",")[1])]
+                + [-Decimal(v).as_tuple().exponent for v in values]))
+            lo, hi = lo.cast(t), hi.cast(t)
+            values = tuple(pa.scalar(Decimal(v), t) for v in values)
+        if op in ("==", "between"):  # == v is between v and v
+            keep = (hi >= values[0]) & (lo <= values[-1])
+        elif op in _COMPARE:
+            # any row can be < v only if the file's min is (> v: max)
+            keep = _COMPARE[op](lo if op[0] == "<" else hi, values[0])
         else:
             raise ValueError(f"unknown predicate op {op!r}")
-        manifest = manifest.filter(unknown | keep)
+        out.append(unknown | keep)
+    return out
+
+
+def prune_manifest(manifest: DataFrame,
+                   predicates: Mapping[str, object] | None) -> DataFrame:
+    """Filter manifest entries whose [min,max] bounds can satisfy the
+    predicates (:func:`bound_exprs` rendered on Spark Columns)."""
+    for keep in bound_exprs(predicates, dict(manifest.dtypes)):
+        manifest = manifest.filter(keep)
     return manifest
-
-
-_COMPARE = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
-            ">": operator.gt, ">=": operator.ge}
 
 
 def predicate_exprs(predicates: Mapping[str, object] | None,
                     field: Callable = F.col) -> list:
-    """The same predicate mini-language as :func:`prune_manifest`,
+    """The same predicate mini-language as :func:`bound_exprs`,
     rendered as row filters (for callers that want the rows filtered,
     not just the files pruned): one expression per column, built on
     ``field(col)``.  ``F.col`` renders Spark Columns;
@@ -202,7 +218,7 @@ def predicate_exprs(predicates: Mapping[str, object] | None,
         elif op == "between":
             out.append((c >= pred[1]) & (c <= pred[2]))
         elif op in ("is_null", "not_null"):
-            null = c.isNull() if isinstance(c, Column) else c.is_null()
+            null = _is_null(c)
             out.append(null if op == "is_null" else ~null)
         else:
             raise ValueError(f"unknown predicate op {op!r}")
@@ -354,6 +370,27 @@ def scan_files(
     return live
 
 
+def driver_plan(manifest_paths: Sequence[str],
+                predicates: Mapping[str, object] | None) -> pa.Table:
+    """``(path, dv_path, dv_cardinality)`` of the manifest entries whose
+    bounds can satisfy ``predicates`` (:func:`bound_exprs`) and that hold
+    a live row, read on the driver with pyarrow (no Spark job), as every
+    table format's planner reads its manifests.  A file whose DV covers
+    every row is skipped (DVs are exact positional deletes; common in CDC
+    aftermath, where a short-lived key set lands in one tiny file and is
+    deleted wholesale before compaction reclaims it)."""
+    segments = pds.dataset(list(manifest_paths), format="parquet")
+    dtypes = {f.name: from_arrow_type(f.type).simpleString()
+              for f in segments.schema}
+    live = ~(pds.field("rows").is_valid()
+             & (pc.coalesce(pds.field("dv_cardinality"), 0)
+                >= pds.field("rows")))
+    return segments.to_table(
+        columns=["path", "dv_path", "dv_cardinality"],
+        filter=reduce(operator.and_,
+                      bound_exprs(predicates, dtypes, pds.field), live))
+
+
 def scan(
     spark: SparkSession,
     store: SnapshotStore,
@@ -369,8 +406,9 @@ def scan(
 
     ``keep_files`` (one-column ``path`` DataFrame) restricts the scan to
     those manifest entries — the key-index candidate set computed by
-    MERGE (``operators/keyindex.py``); applied as a semi-join before the
-    planning projection.
+    MERGE (``operators/keyindex.py``).  Below the distscan switch its
+    paths are collected once and filter the driver plan; above it, it
+    is semi-joined to the manifest DataFrame.
 
     ``apply_row_filters=True`` additionally applies ``predicates`` as
     ROW filters (default: file pruning only — surviving files return
@@ -381,30 +419,21 @@ def scan(
     ``mapInArrow`` cannot cross the Python boundary — passing it here
     hands the predicate to the pyarrow reader (row-level dataset
     filter at the scan) on that path instead."""
-    manifest = prune_manifest(
-        read_pinned(spark, snapshot.manifest_paths), predicates)
-    if keep_files is not None:
-        manifest = manifest.join(keep_files, on="path", how="left_semi")
-    # Planning collects (path, dv_path, dv_cardinality) — file *lists*,
-    # not data.  This mirrors what every table format's driver-side
-    # planner does (Iceberg manifests are read at planning time too); the
-    # manifest stays a DataFrame until this final projection.  Above
-    # the distscan threshold even the pruned list is too big for the
-    # driver, and planning itself goes distributed: the manifest stays
-    # a DataFrame end-to-end and executors read their own plan slices.
+    # the switch reads the header's entry count, an upper bound on the
+    # pruned plan (``Snapshot.entry_count``); pre-upgrade snapshots sum
+    # the segment footers' row counts
     from moonlink_spark.operators import distscan
-    # The decision count comes free from the snapshot header (segment
-    # descriptors record per-segment entry counts) — no extra Spark job
-    # over the manifest parquet on the common path.  The header total is
-    # an upper bound on the pruned manifest, so a heavily-pruned scan of
-    # a huge table goes distributed "unnecessarily" — conservative in
-    # the direction that can never blow the driver; distscan is exact
-    # and cheap at small plan sizes.  Pre-upgrade snapshots without
-    # per-segment counts fall back to the count job.
     n_entries = snapshot.entry_count
     if n_entries is None:
-        n_entries = manifest.count()
+        n_entries = sum(pq.read_metadata(p).num_rows
+                        for p in snapshot.manifest_paths)
     if n_entries > distscan.PLAN_DISTRIBUTED_FILES:
+        # the manifest stays a DataFrame end to end: executors read
+        # their own plan slices
+        manifest = prune_manifest(
+            read_pinned(spark, snapshot.manifest_paths), predicates)
+        if keep_files is not None:
+            manifest = manifest.join(keep_files, on="path", how="left_semi")
         return distscan.scan_distributed(
             spark, store, manifest,
             schema_ddl=snapshot.properties.get("schema_ddl"),
@@ -412,19 +441,15 @@ def scan(
             column_defaults=snapshot.properties.get("column_defaults"),
             with_location=with_location,
             row_filters=predicates if apply_row_filters else None)
-    plan_rows = manifest.select("path", "dv_path", "dv_cardinality",
-                                "rows").collect()
-    # Fully-deleted files (DV covers every row — DVs are exact positional
-    # deletes, so dv_cardinality == rows means zero live rows) are
-    # skipped at planning time: no read, no anti-join traffic.  Common
-    # in CDC aftermath where a short-lived key set lands in one tiny
-    # file and is deleted wholesale before compaction reclaims it.
-    plan_rows = [r for r in plan_rows
-                 if not (r["rows"] is not None
-                         and int(r["dv_cardinality"] or 0) >= int(r["rows"]))]
-    files = [r["path"] for r in plan_rows]
-    dv_paths = sorted({r["dv_path"] for r in plan_rows if r["dv_path"]})
-    dv_card = sum(r["dv_cardinality"] for r in plan_rows)
+    plan = driver_plan(snapshot.manifest_paths, predicates)
+    if keep_files is not None:
+        keep = keep_files.select("path").toArrow()["path"]
+        plan = plan.filter(pc.is_in(plan["path"], value_set=keep))
+    files = plan["path"].to_pylist()
+    dv_files = {f: d for f, d in zip(files, plan["dv_path"].to_pylist())
+                if d is not None}
+    dv_paths = sorted(set(dv_files.values()))
+    dv_card = pc.sum(plan["dv_cardinality"]).as_py() or 0
     if not files:
         # Empty scan (empty table, or pruning eliminated every file —
         # e.g. a MERGE batch of brand-new keys outside all file bounds).
@@ -435,9 +460,7 @@ def scan(
             ddl = ", ".join(f"`{c}` string" for c in snapshot.schema)
         empty = local_df(spark, ddl)
         if with_location:
-            if FILE_COL not in empty.columns:
-                empty = empty.withColumn(FILE_COL,
-                                         F.lit(None).cast("string"))
+            empty = empty.withColumn(FILE_COL, F.lit(None).cast("string"))
             if POS_COL not in empty.columns:
                 empty = empty.withColumn(POS_COL, F.lit(None).cast("long"))
         return empty
@@ -447,8 +470,7 @@ def scan(
         schema_ddl=snapshot.properties.get("schema_ddl"),
         project=snapshot.schema,
         column_defaults=snapshot.properties.get("column_defaults"),
-        dv_files={r["path"]: r["dv_path"] for r in plan_rows
-                  if r["dv_path"]})
+        dv_files=dv_files)
     if apply_row_filters:
         for cond in predicate_exprs(predicates):
             out = out.filter(cond)  # Catalyst pushes to the parquet scan

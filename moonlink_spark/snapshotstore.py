@@ -135,28 +135,12 @@ class Snapshot:
     # planner pick driver vs distributed planning without running a
     # count job over the manifest parquet (it is an UPPER bound on any
     # pruned manifest, so the decision is conservative the safe way:
-    # never driver-collect something bigger than the header says).
+    # never plan on the driver something bigger than the header says).
     entry_count: int | None = None
 
     @property
     def flush_lsn(self) -> int:
         return int(self.properties.get("flush_lsn", 0))
-
-    @property
-    def manifest_path(self) -> str:
-        """Back-compat accessor for single-segment snapshots; a
-        multi-segment manifest has no single path — use
-        ``manifest_paths``."""
-        if len(self.manifest_paths) != 1:
-            raise RuntimeError(
-                f"v{self.version} manifest has "
-                f"{len(self.manifest_paths)} segments; use manifest_paths")
-        return self.manifest_paths[0]
-
-
-def _atomic_write(path: str, data: bytes) -> None:
-    """Back-compat shim — new code goes through ``store.fs``."""
-    DEFAULT_FS.write_atomic(path, data)
 
 
 # Manifest parquet schema. Bounds columns are appended as
@@ -294,6 +278,15 @@ def _range_hits(seg: dict, paths: list[str]) -> bool:
 
 
 _MANIFEST_BATCH_ROWS = 65_536
+
+
+def _segment_rows(path: str):
+    """The rows of one manifest segment as dicts, in file (ascending
+    ``path``) order, one ``_MANIFEST_BATCH_ROWS`` batch at a time."""
+    for batch in pq.ParquetFile(path).iter_batches(
+            batch_size=_MANIFEST_BATCH_ROWS):
+        yield from batch.to_pylist()
+
 
 # Entries per manifest segment.  Segments are the unit a delta commit
 # rewrites and the unit the list file tracks: smaller segments mean a
@@ -463,15 +456,10 @@ class SnapshotStore:
         return out
 
     def manifest_entries(self, version: int | None = None) -> list[dict]:
-        """Driver-side manifest rows, globally path-sorted
-        (test/inspection helper — the planner itself goes through
-        :meth:`manifest_df`)."""
-        snap = self.read_snapshot(version)
-        out: list[dict] = []
-        for p in snap.manifest_paths:
-            out.extend(pq.read_table(p).to_pylist())
-        out.sort(key=lambda e: e["path"])
-        return out
+        """Driver-side manifest rows, globally path-sorted, as one list
+        (test/inspection helper; the scan and compaction planners read
+        only the segment columns they need with pyarrow)."""
+        return list(self.manifest_rows_iter(version))
 
     def manifest_rows_iter(self, version: int | None = None):
         """Stream manifest rows (dicts, ascending ``path``) with bounded
@@ -481,14 +469,8 @@ class SnapshotStore:
         import heapq
 
         snap = self.read_snapshot(version)
-
-        def seg_iter(path):
-            pf = pq.ParquetFile(path)
-            for batch in pf.iter_batches(batch_size=_MANIFEST_BATCH_ROWS):
-                yield from batch.to_pylist()
-
         yield from heapq.merge(
-            *[seg_iter(p) for p in snap.manifest_paths],
+            *[_segment_rows(p) for p in snap.manifest_paths],
             key=lambda e: e["path"])
 
     # -- write -----------------------------------------------------------
@@ -1055,18 +1037,14 @@ class SnapshotStore:
         victims = by_size[:n_merge]
         survivors = [d for d in descs if d not in victims]
 
-        def seg_iter(desc):
-            pf = pq.ParquetFile(self.abs(desc["path"]))
-            for batch in pf.iter_batches(batch_size=_MANIFEST_BATCH_ROWS):
-                yield from batch.to_pylist()
-
         used = {int(d["path"].rsplit("-p", 1)[1].split(".")[0])
                 for d in descs
                 if f"manifest-v{version:06d}-p" in d["path"]}
         start = (max(used) + 1) if used else 0
         merged = self.write_manifest(
             version,
-            heapq.merge(*[seg_iter(d) for d in victims],
+            heapq.merge(*[_segment_rows(self.abs(d["path"]))
+                          for d in victims],
                         key=lambda e: e["path"]),
             stats_columns, stats_types=stats_types, presorted=True,
             start_idx=start, allow_legacy_name=False,

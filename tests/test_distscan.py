@@ -177,7 +177,8 @@ def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
     dataset filter over the same parquet file (nulls in every column)
     keep exactly the rows a Python oracle keeps — so a pyarrow renderer
     that keeps extra rows fails here even though ``scan_distributed``
-    re-applies the Spark filter after the pushdown."""
+    re-applies the Spark filter after the pushdown.  The same holds for
+    the bound renderer both planners prune the manifest with."""
     import datetime as dt
     import functools
     import operator
@@ -237,6 +238,70 @@ def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
     for field in (F.col, pds.field):
         with pytest.raises(ValueError, match="unknown predicate op"):
             scan_op.predicate_exprs({"n": ("!=", 5)}, field)
+
+    # The bound half, ``scan.bound_exprs``: over one manifest with typed
+    # bounds, unknown (null) bounds and null counts of 0, ``rows`` and
+    # unknown, Spark's ``prune_manifest`` and the driver plan's pyarrow
+    # dataset filter keep the same files, and refuse the same inputs.
+    from decimal import Decimal as D
+
+    from moonlink_spark.snapshotstore import SnapshotStore, read_pinned
+
+    ts = dt.datetime
+    types = {"s": "string", "i": "int", "d": "decimal(10,2)",
+             "day": "date", "ts": "timestamp"}
+    bounds = [  # per file: (lo, hi) per column, then the null count
+        ({"s": ("a", "c"), "i": (1, 10), "d": (D("1.00"), D("9.95")),
+          "day": (d(2024, 1, 1), d(2024, 1, 5)),
+          "ts": (ts(2024, 1, 1), ts(2024, 1, 5, 12))}, 0),
+        ({"s": ("d", "f"), "i": (11, 50), "d": (D("10.00"), D("20.50")),
+          "day": (d(2024, 1, 6), d(2024, 2, 1)),
+          "ts": (ts(2024, 1, 6), ts(2024, 2, 1))}, 10),
+        ({}, None),
+        ({"s": ("b", "b"), "i": (5, 5), "d": (D("9.95"), D("10.00")),
+          "day": (d(2024, 1, 5), d(2024, 1, 5)),
+          "ts": (ts(2024, 1, 5, 12), ts(2024, 1, 5, 12))}, 3),
+        ({"s": (None, "e"), "i": (20, None), "d": (None, D("3.50")),
+          "day": (d(2024, 3, 1), None), "ts": (None, ts(2023, 1, 1))}, 0),
+    ]
+    store = SnapshotStore(str(tmp_path / "wh-bounds"))
+    store.init_warehouse()
+    descs = store.write_manifest(0, [
+        {"path": f"data/f{k}.parquet", "rows": 10, "bytes": 100,
+         "dv_path": None, "dv_cardinality": 0, "bounds": b,
+         "null_counts": {c: nulls for c in types}}
+        for k, (b, nulls) in enumerate(bounds)], list(types),
+        stats_types=types)
+    segs = [store.abs(x["path"]) for x in descs]
+    manifest = read_pinned(spark, segs)
+    values = {"s": ("b", "c", "d"), "i": (5, 10, 11),
+              "d": (D("9.95"), D("9.951"), 10),
+              "day": (d(2024, 1, 5), d(2024, 1, 6), d(2024, 2, 2)),
+              "ts": (ts(2024, 1, 5, 12), ts(2024, 1, 6), ts(2022, 1, 1))}
+    cases = [{c: f} for c, (lo, mid, hi) in values.items()
+             for f in (mid, ("==", lo), ("<", mid), ("<=", lo),
+                       (">", mid), (">=", hi), ("between", lo, mid),
+                       ("is_null",), ("not_null",))]
+    cases.append({"i": ("between", 4, 12), "s": ("not_null",)})
+    pruned = 0
+    for preds in cases:
+        via_spark = {r["path"] for r in scan_op.prune_manifest(
+            manifest, preds).select("path").collect()}
+        via_arrow = set(
+            scan_op.driver_plan(segs, preds)["path"].to_pylist())
+        assert via_spark == via_arrow, preds
+        pruned += len(via_spark) < len(bounds)
+    assert pruned > len(cases) // 2  # the filters do prune
+    for bad, err in [({"i": ("==", "5")}, TypeError),
+                     ({"s": ("==", 7)}, TypeError),
+                     ({"d": ("==", 10.0)}, TypeError),
+                     ({"day": ("==", ts(2024, 1, 5))}, TypeError),
+                     ({"nosuch": 1}, ValueError),
+                     ({"i": ("!=", 5)}, ValueError)]:
+        with pytest.raises(err):
+            scan_op.prune_manifest(manifest, bad)
+        with pytest.raises(err):
+            scan_op.driver_plan(segs, bad)
 
 
 def test_surviving_row_groups_pure():

@@ -241,3 +241,59 @@ def test_manifest_lookup_reads_named_paths(tmp_path, missing):
     got = store.manifest_lookup(0, want, ("dv_path", "rows"))
     assert got == {e["path"]: {"dv_path": e["dv_path"], "rows": e["rows"]}
                    for e in (ents[1], ents[-1])}
+
+
+def test_scan_plans_without_spark_job(spark, tmp_path, monkeypatch):
+    """Below ``PLAN_DISTRIBUTED_FILES``, ``scan()`` reads its plan from
+    the manifest segments on the driver: building the DataFrame starts
+    no Spark job — plain, predicated, or over a file whose DV covers
+    every row, which the plan skips.  With the switch lowered the same
+    calls go through ``scan_distributed`` and return the same rows."""
+    from moonlink_spark.operators import distscan
+    from moonlink_spark.operators import scan as scan_op
+
+    w = str(tmp_path / "wh")
+    _aftermath(w)
+    t = MoonTable(spark, w, CFG)
+    loc = scan(spark, t.store, t.store.read_snapshot(), with_location=True)
+    victim = loc.select(FILE_COL).first()[FILE_COL]
+    dels = (loc.filter(F.col(FILE_COL) == victim).select(*KEYS)
+            .withColumn("lang", F.lit(None).cast("string"))
+            .withColumn("content", F.lit(None).cast("string"))
+            .withColumn("_op", F.lit("delete")))
+    snap = t.merge(dels, key_columns=KEYS)
+    assert any(e["path"] == victim and e["dv_cardinality"] == e["rows"]
+               for e in t.store.manifest_entries(snap.version))
+
+    planned = []
+    real_scan_files = scan_op.scan_files
+
+    def recording(spark_, store_, data_files, *a, **k):
+        planned.append(list(data_files))
+        return real_scan_files(spark_, store_, data_files, *a, **k)
+    monkeypatch.setattr(scan_op, "scan_files", recording)
+    cases = [{}, {"predicates": {"repo": ("between", "org0", "org1")}},
+             {"predicates": {"path": ("not_null",)},
+              "with_location": True}]
+    got = []
+    for kw in cases:
+        before = _job_ids(spark)
+        got.append(scan(spark, t.store, snap, **kw))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        assert _job_ids(spark) == before, kw
+    assert len(planned) == len(cases)
+    assert all(planned) and not any(victim in p for p in planned)
+
+    dist = []
+    real_dist = distscan.scan_distributed
+
+    def counting(*a, **k):
+        dist.append(1)
+        return real_dist(*a, **k)
+    monkeypatch.setattr(distscan, "PLAN_DISTRIBUTED_FILES", 0)
+    monkeypatch.setattr(distscan, "scan_distributed", counting)
+    for kw, df in zip(cases, got):
+        other = scan(spark, t.store, snap, **kw)
+        assert sorted(map(tuple, other.select(df.columns).collect())) \
+            == sorted(map(tuple, df.collect())), kw
+    assert len(dist) == len(cases)

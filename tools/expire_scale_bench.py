@@ -10,8 +10,9 @@ fixed in `operators/expire.py`).  This tool records the evidence:
    spread across the hash-shard directories — the CDC-aftermath debris
    expiry exists to clean up;
 2. run `expire_snapshots` on fresh copies of that warehouse at two
-   `delete_workers` settings, timing the distributed listing and the
-   full expire separately;
+   delete pool sizes (`fs.remove_many`'s `max_workers`, swapped in for
+   the run), timing the distributed listing and the full expire
+   separately;
 3. print one JSON document (commit as EXPIRE_SCALE.json).
 
 Usage: python tools/expire_scale_bench.py [n_orphans] [workers_lo,hi]
@@ -26,6 +27,8 @@ import sys
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -33,7 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from moonlink_spark import MoonTable  # noqa: E402
-from moonlink_spark.fs import PosixFileSystem  # noqa: E402
+from moonlink_spark.fs import PosixFileSystem, remove_many  # noqa: E402
+from moonlink_spark.operators import expire  # noqa: E402
 from moonlink_spark.operators.expire import (expire_snapshots,  # noqa: E402
                                              list_files_df)
 from moonlink_spark.snapshotstore import (DATA_DIR, SnapshotStore,  # noqa: E402
@@ -113,9 +117,10 @@ def main() -> None:
                 if latency_ms:
                     store.fs = _LatencyFS(latency_ms / 1000.0)
                 t0 = time.monotonic()
-                rec = expire_snapshots(spark, store, retain_last=1,
-                                       collect_audit=False,
-                                       delete_workers=workers)
+                with mock.patch.object(expire, "remove_many", partial(
+                        remove_many, max_workers=workers)):
+                    rec = expire_snapshots(spark, store, retain_last=1,
+                                           collect_audit=False)
                 wall = round(time.monotonic() - t0, 2)
                 key = (f"delete_workers={workers}"
                        + (f",delete_latency_ms={latency_ms:g}"
