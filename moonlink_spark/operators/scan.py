@@ -26,6 +26,7 @@ pinned reader sees (cf. ``union_read/read_state.rs:20-50``).
 
 from __future__ import annotations
 
+import datetime
 import operator
 from decimal import Decimal
 from functools import reduce
@@ -37,8 +38,10 @@ import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import (BooleanType, DataType, DateType, DecimalType,
+                               FractionalType, IntegralType, StringType,
+                               StructType, TimestampNTZType, TimestampType)
 
 from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
 
@@ -64,7 +67,22 @@ def _with_relative_file(df: DataFrame, store: SnapshotStore,
     )
 
 
-def _check_pred_type(bound_dtype: str, col: str, values: tuple) -> None:
+# A predicate value must fall in its bounds' comparison group; the first
+# match wins (a bool is an int, a datetime a date, a decimal fractional).
+_BOUND_GROUPS = ((StringType, "string"), (BooleanType, "boolean"),
+                 (IntegralType, "integral"), (DecimalType, "decimal"),
+                 (FractionalType, "numeric"), (DateType, "date"),
+                 ((TimestampType, TimestampNTZType), "timestamp"))
+_VALUE_GROUPS = ((bool, "boolean"), (int, "integral"), (float, "numeric"),
+                 (Decimal, "decimal"), (str, "string"),
+                 (datetime.datetime, "timestamp"), (datetime.date, "date"))
+
+
+def _group(x, groups) -> str | None:
+    return next((g for t, g in groups if isinstance(x, t)), None)
+
+
+def _check_pred_type(bound: DataType, col: str, values: tuple) -> None:
     """Refuse type-mismatched pruning loudly: comparing a numeric value
     against string-typed bounds (or vice versa) would compare
     lexicographically ("9" > "10") and silently drop matching files —
@@ -73,50 +91,21 @@ def _check_pred_type(bound_dtype: str, col: str, values: tuple) -> None:
     universe, ``parquet_stats_utils.rs:180-320``); the predicate value's
     Python type must land in the same comparison group as the bound
     type, else Catalyst's implicit casts decide the semantics silently."""
-    import datetime
-
-    base = bound_dtype.split("(")[0].strip().lower()
-    group_of = {
-        "string": "string", "varchar": "string",
-        "boolean": "boolean",
-        "tinyint": "integral", "smallint": "integral", "int": "integral",
-        "integer": "integral", "bigint": "integral", "long": "integral",
-        "float": "numeric", "double": "numeric",
-        "decimal": "decimal", "numeric": "decimal",
-        "date": "date",
-        "timestamp": "timestamp", "timestamp_ntz": "timestamp",
-    }
-    expected = group_of.get(base)
+    expected = _group(bound, _BOUND_GROUPS)
     for v in values:
-        if v is None:
+        got = _group(v, _VALUE_GROUPS)
+        if v is None or got == expected:
             continue
-        if isinstance(v, bool):
-            got = "boolean"
-        elif isinstance(v, int):
-            got = "integral"
-        elif isinstance(v, float):
-            got = "numeric"
-        elif isinstance(v, Decimal):
-            got = "decimal"
-        elif isinstance(v, str):
-            got = "string"
-        elif isinstance(v, datetime.datetime):
-            got = "timestamp"
-        elif isinstance(v, datetime.date):
-            got = "date"
-        else:
-            got = type(v).__name__
-        ok = (got == expected
-              # an int predicate against float/double/decimal bounds is
-              # exact; a float against decimal bounds is NOT (binary vs
-              # decimal rounding) and stays refused
-              or (expected in ("numeric", "decimal") and got == "integral"))
-        if not ok:
-            raise TypeError(
-                f"predicate on {col!r}: value {v!r} "
-                f"({type(v).__name__}) is incompatible with the "
-                f"manifest's {bound_dtype}-typed bounds — pruning would "
-                "be implicitly cast and silently wrong")
+        # an int predicate against float/double/decimal bounds is
+        # exact; a float against decimal bounds is NOT (binary vs
+        # decimal rounding) and stays refused
+        if got == "integral" and expected in ("numeric", "decimal"):
+            continue
+        raise TypeError(
+            f"predicate on {col!r}: value {v!r} "
+            f"({type(v).__name__}) is incompatible with the "
+            f"manifest's {bound.simpleString()}-typed bounds — pruning "
+            "would be implicitly cast and silently wrong")
 
 
 _COMPARE = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
@@ -128,14 +117,34 @@ def _is_null(c):
     return c.isNull() if isinstance(c, Column) else c.is_null()
 
 
+def _arrow_operands(lo, hi, values: tuple, bound: DataType):
+    """A predicate's bound fields and literals, recast so that pyarrow
+    orders them as Spark does.  A datetime compares at its UTC time
+    (naive: read as local time, as pyspark reads it): a ``timestamp``
+    column's bounds hold UTC times, and the engine's Spark sessions read
+    them at UTC.  Decimals compare at ``decimal256(76, s)``, ``s`` the
+    largest scale: pyarrow misorders unequal scales and refuses an int
+    literal, and 76 digits hold any 38-digit bound and literal."""
+    if isinstance(bound, DecimalType):
+        t = pa.decimal256(76, max([bound.scale] + [
+            -Decimal(v).as_tuple().exponent for v in values if v is not None]))
+        return (lo.cast(t), hi.cast(t),
+                [pa.scalar(v if v is None else Decimal(v), t) for v in values])
+    if isinstance(bound, (TimestampType, TimestampNTZType)):
+        values = [None if v is None else
+                  v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+                  for v in values]
+    return lo, hi, values
+
+
 def bound_exprs(predicates: Mapping[str, object] | None,
-                dtypes: Mapping[str, str],
+                schema: StructType,
                 field: Callable = F.col) -> list:
     """File pruning by manifest bounds: one keep-expression per
     predicate over ``min_<c>``/``max_<c>``/``null_<c>``/``rows``, built
-    on ``field(name)`` as in :func:`predicate_exprs`; ``dtypes`` maps the
-    manifest's columns to Spark type strings.  Unknown bounds (nulls)
-    are conservatively kept.
+    on ``field(name)`` as in :func:`predicate_exprs`; ``schema`` is the
+    manifest's, as Spark types.  Unknown bounds (nulls) are
+    conservatively kept.
 
     Predicate forms per column:
       value                  — equality
@@ -150,6 +159,7 @@ def bound_exprs(predicates: Mapping[str, object] | None,
     its row count cannot satisfy IS NOT NULL.  Unknown (NULL) counts are
     conservatively kept.
     """
+    types = {f.name: f.dataType for f in schema}
     out = []
     for col, pred in (predicates or {}).items():
         if not isinstance(pred, tuple):
@@ -157,27 +167,20 @@ def bound_exprs(predicates: Mapping[str, object] | None,
         op, values = pred[0], tuple(pred[1:])
         if op in ("is_null", "not_null"):
             nc = f"null_{col}"
-            if nc not in dtypes:
+            if nc not in types:
                 continue  # manifest predates null counts: keep all
             n = field(nc)
             keep = n > 0 if op == "is_null" else n < field("rows")
             out.append(_is_null(n) | keep)
             continue
-        bdt = dtypes.get(f"min_{col}")
-        if bdt is None:
+        bound = types.get(f"min_{col}")
+        if bound is None:
             raise ValueError(f"no bounds for column {col!r} in manifest")
-        _check_pred_type(bdt, col, values)
+        _check_pred_type(bound, col, values)
         lo, hi = field(f"min_{col}"), field(f"max_{col}")
         unknown = _is_null(lo) | _is_null(hi)
-        if bdt.startswith("decimal") and not isinstance(lo, Column):
-            # pyarrow misorders decimals of unequal scale and refuses an
-            # int literal: compare at one type holding both exactly, as
-            # Spark's decimal promotion does
-            t = pa.decimal128(38, max(
-                [int(bdt[:-1].split(",")[1])]
-                + [-Decimal(v).as_tuple().exponent for v in values]))
-            lo, hi = lo.cast(t), hi.cast(t)
-            values = tuple(pa.scalar(Decimal(v), t) for v in values)
+        if not isinstance(lo, Column):
+            lo, hi, values = _arrow_operands(lo, hi, values, bound)
         if op in ("==", "between"):  # == v is between v and v
             keep = (hi >= values[0]) & (lo <= values[-1])
         elif op in _COMPARE:
@@ -193,7 +196,7 @@ def prune_manifest(manifest: DataFrame,
                    predicates: Mapping[str, object] | None) -> DataFrame:
     """Filter manifest entries whose [min,max] bounds can satisfy the
     predicates (:func:`bound_exprs` rendered on Spark Columns)."""
-    for keep in bound_exprs(predicates, dict(manifest.dtypes)):
+    for keep in bound_exprs(predicates, manifest.schema):
         manifest = manifest.filter(keep)
     return manifest
 
@@ -380,15 +383,15 @@ def driver_plan(manifest_paths: Sequence[str],
     aftermath, where a short-lived key set lands in one tiny file and is
     deleted wholesale before compaction reclaims it)."""
     segments = pds.dataset(list(manifest_paths), format="parquet")
-    dtypes = {f.name: from_arrow_type(f.type).simpleString()
-              for f in segments.schema}
     live = ~(pds.field("rows").is_valid()
              & (pc.coalesce(pds.field("dv_cardinality"), 0)
                 >= pds.field("rows")))
     return segments.to_table(
         columns=["path", "dv_path", "dv_cardinality"],
         filter=reduce(operator.and_,
-                      bound_exprs(predicates, dtypes, pds.field), live))
+                      bound_exprs(predicates,
+                                  from_arrow_schema(segments.schema),
+                                  pds.field), live))
 
 
 def scan(

@@ -171,7 +171,8 @@ def test_row_filter_pushdown_parity_both_paths(spark, aftermath,
     assert _multiset(dist2) == _multiset(twin.select(dist2.columns))
 
 
-def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
+def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path,
+                                                        monkeypatch):
     """``scan.predicate_exprs`` renders one mini-language for two
     backends.  Per predicate form, the Spark filter and the pyarrow
     dataset filter over the same parquet file (nulls in every column)
@@ -182,6 +183,7 @@ def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
     import datetime as dt
     import functools
     import operator
+    import time
 
     import pyarrow as pa
     import pyarrow.dataset as pds
@@ -254,7 +256,7 @@ def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
         ({"s": ("a", "c"), "i": (1, 10), "d": (D("1.00"), D("9.95")),
           "day": (d(2024, 1, 1), d(2024, 1, 5)),
           "ts": (ts(2024, 1, 1), ts(2024, 1, 5, 12))}, 0),
-        ({"s": ("d", "f"), "i": (11, 50), "d": (D("10.00"), D("20.50")),
+        ({"s": ("d", "f"), "i": (11, 50), "d": (D("10.00"), D("2000.50")),
           "day": (d(2024, 1, 6), d(2024, 2, 1)),
           "ts": (ts(2024, 1, 6), ts(2024, 2, 1))}, 10),
         ({}, None),
@@ -283,15 +285,32 @@ def test_predicate_renderer_backends_keep_the_same_rows(spark, tmp_path):
                        (">", mid), (">=", hi), ("between", lo, mid),
                        ("is_null",), ("not_null",))]
     cases.append({"i": ("between", 4, 12), "s": ("not_null",)})
-    pruned = 0
-    for preds in cases:
+    # a literal of a larger scale than any bound, against bounds that
+    # need every integer digit their type holds
+    cases += [{"d": (op, D("0." + "0" * 34 + "1"))} for op in ("<", ">=")]
+    # a None literal matches no known bound on either backend
+    cases += [{"d": (">", None)}, {"ts": ("==", None)}]
+
+    def kept(preds):
         via_spark = {r["path"] for r in scan_op.prune_manifest(
             manifest, preds).select("path").collect()}
         via_arrow = set(
             scan_op.driver_plan(segs, preds)["path"].to_pylist())
         assert via_spark == via_arrow, preds
-        pruned += len(via_spark) < len(bounds)
-    assert pruned > len(cases) // 2  # the filters do prune
+        return via_spark
+
+    assert sum(len(kept(p)) < len(bounds) for p in cases) > len(cases) // 2
+    # pyspark reads a naive datetime literal as local time: outside UTC
+    # both backends still agree
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        for preds in cases:
+            if "ts" in preds:
+                kept(preds)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
     for bad, err in [({"i": ("==", "5")}, TypeError),
                      ({"s": ("==", 7)}, TypeError),
                      ({"d": ("==", 10.0)}, TypeError),

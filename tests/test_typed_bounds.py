@@ -249,6 +249,57 @@ def test_temporal_bounds_and_pruning(spark, tmp_path):
         prune_manifest(m, {"ts": ("==", dt.date(2026, 1, 5))})
 
 
+def test_timestamp_key_merge_outside_utc(spark, tmp_path, monkeypatch):
+    """A merge keyed on a Spark-written ``timestamp`` column matches its
+    key on both planners when Python's local zone is not UTC.  The
+    key's bounds hold UTC times (from UTC-adjusted footer statistics);
+    the batch's key range comes back to Python as local times.  Pruning
+    the file on the difference would turn an upsert into a duplicate
+    row and lose a delete."""
+    import time
+
+    from moonlink_spark.operators import distscan
+
+    types = {"k": "timestamp", "v": "string", "_pos": "bigint"}
+    cfg = TableConfig(zorder_columns=(), stats_columns=("k",))
+
+    def change(v, op):
+        return spark.sql("select timestamp'2024-01-01 17:00:00' as k, "
+                         f"{v} as v, '{op}' as _op")
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    # Spark's default INT96 timestamps carry no footer min/max, so no
+    # bounds and nothing to prune
+    spark.conf.set("spark.sql.parquet.outputTimestampType",
+                   "TIMESTAMP_MICROS")
+    try:
+        for limit in (10 ** 9, -1):  # driver plan, then distscan
+            monkeypatch.setattr(distscan, "PLAN_DISTRIBUTED_FILES", limit)
+            w = str(tmp_path / f"wh-ts{limit}")
+            store = SnapshotStore(w)
+            store.init_warehouse()
+            store.commit([], schema=list(types),
+                         stats_columns=cfg.stats_columns,
+                         properties={"flush_lsn": 0, "schema_types": types,
+                                     "schema_ddl": "`k` timestamp, "
+                                     "`v` string, `_pos` bigint"},
+                         expected_parent=None)
+            t = MoonTable(spark, w, cfg)
+            t.merge(change("'a'", "upsert"), key_columns=["k"])
+            assert t.manifest().first()["min_k"] is not None
+            t.merge(change("'b'", "upsert"), key_columns=["k"])
+            rows = t.scan().collect()
+            assert [r["v"] for r in rows] == ["b"], limit
+            assert t.scan(predicates={"k": rows[0]["k"]}).count() == 1
+            t.merge(change("null", "delete"), key_columns=["k"])
+            assert t.scan().count() == 0, limit
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_decimal_bounds_and_pruning(spark, tmp_path):
     """decimal(p,s) columns carry exact decimal128 bounds and prune
     correctly — the decimal Datum of the reference's universe
