@@ -407,11 +407,12 @@ class MoonTable:
         pairs, new_rels = staged_names(self.store, tmp, DV_DIR,
                                        f"dv-{job_id}")
         rename_many(self.store.fs, pairs)
-        # delta commit: only the files whose DV pointer moved rewrite
-        # their manifest segment; everything else carries by reference.
-        # The updated set is the files-with-DVs being consolidated —
-        # the operation's own working set, never the whole table; it is
-        # read back from the renamed sidecars on the driver (no job).
+        # delta commit: the segments holding a file whose DV pointer
+        # moved are patched in place; everything else carries by
+        # reference.  The updated set is the files-with-DVs being
+        # consolidated — the operation's own working set, never the
+        # whole table; its pointers are Arrow columns read from the
+        # renamed sidecars on the driver (no job).
         updated = merge_op.dv_pointers(self.store, new_rels)
         props = dict(base.properties)
         props.update({"flush_lsn": base.flush_lsn, "job_id": job_id,

@@ -288,15 +288,20 @@ def scan_distributed(
     n_files = int(live.agg(F.count(F.lit(1)).alias("n")).first()["n"])
 
     struct = _spark_schema_for(spark, store, live, schema_ddl)
+    # two kinds of predicate stay Spark-side only, where the re-filter
+    # below applies them exactly: a defaulted column's nulls are
+    # backfilled AFTER the read (pyarrow would drop pre-default rows the
+    # Spark-side filter keeps), and pyarrow compares a decimal column at
+    # the literal's scale (dropping matching rows) or refuses an int one
+    spark_only = set(column_defaults or {}) | {
+        f.name for f in struct.fields
+        if isinstance(f.dataType, T.DecimalType)}
+    push_filters = {c: p for c, p in (row_filters or {}).items()
+                    if c not in spark_only} or None
     if project:
         by_name = {f.name: f for f in struct.fields}
         struct = T.StructType([by_name[c] for c in project if c in by_name])
     read_cols = [f.name for f in struct.fields]
-    # a defaulted column's nulls are backfilled AFTER the read — its
-    # predicate must not reach pyarrow (it would drop pre-default rows
-    # the Spark-side filter would keep); it stays Spark-side only
-    push_filters = {c: p for c, p in (row_filters or {}).items()
-                    if c not in (column_defaults or {})} or None
 
     out = _read_plan(spark, store, live.select("path", "dv_path"),
                      n_files, struct, read_cols, push_filters)

@@ -20,14 +20,14 @@ merge-on-sync (``iceberg_table_syncer.rs:376-435``):
 - inserted rows land in fresh snappy "ingest" files (tiny-file MoR debt,
   by design — a later ``optimize()`` folds everything copy-on-write).
 
-Scale shape: the table's manifest is never collected to the driver — the
-successor manifest is computed as a DataFrame (old manifest left-joined
-with the new per-file DV mapping, unioned with the fresh ingest
-entries) and streamed into the commit (cf. the reference's
-manifest-rewrite-as-data design, ``puffin_writer_proxy.rs:253-364``).
-Only change-batch-sized artifacts touch the driver: the affected file
-list, those files' manifest rows and new DV pointers (read with
-pyarrow, no Spark job), and the ingest file stats.
+Scale shape: the table's manifest is never collected to the driver.
+Only change-batch-sized artifacts touch it: the affected file list,
+those files' manifest rows, their new DV pointers as Arrow columns read
+from the sidecars just written (pyarrow, no Spark job), and the ingest
+file stats.  The commit patches only the manifest segments that hold an
+affected file, as Arrow, and carries every other segment by reference
+(cf. the reference's manifest-rewrite-as-data design,
+``puffin_writer_proxy.rs:253-364``); there is no second commit path.
 
 Concurrency: artifact names embed a per-attempt random nonce, so two
 committers racing from the same base version can never overwrite each
@@ -48,6 +48,8 @@ import time as _time
 import uuid
 from typing import Mapping
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,80 +76,21 @@ from moonlink_spark.snapshotstore import (
 
 OP_COL = "_op"
 
-# Above this many DV-affected files a MERGE stops routing the per-file
-# (path -> new dv pointer) mapping through a driver-side dict into
-# commit_delta and instead streams the WHOLE successor manifest
-# relationally (manifest left-join upd, union ingest entries, path
-# order) through ``toLocalIterator`` into a full commit.  Rationale: a
-# change batch is bounded by contract (CDC batches touch a tiny file
-# set), but a table-wide upsert can touch 10^7+ files — at that point
-# every manifest segment is hit anyway, so a full streamed rewrite
-# costs the same I/O while the driver holds one partition of rows, not
-# an O(files) dict.  Tests lower it to force the path.
-RELATIONAL_COMMIT_FILES = 100_000
 
-
-def dv_pointers(store: SnapshotStore,
-                rels: list[str]) -> dict[str, tuple[str, int]]:
-    """path → (sidecar, cardinality) for every row of the just-written
-    DV sidecars ``rels``: two columns read on the driver with pyarrow,
-    for callers that hand the mapping to ``commit_delta`` anyway."""
-    import pyarrow.parquet as pq
-    out = {}
+def dv_pointers(store: SnapshotStore, rels: list[str]) -> pa.Table:
+    """``(path, dv_path, dv_cardinality)`` for every row of the
+    just-written DV sidecars ``rels`` — the ``updated`` table
+    ``commit_delta`` takes: each sidecar's ``referenced_file`` and
+    ``cardinality`` columns, read on the driver with pyarrow, beside the
+    sidecar's own path."""
+    parts = []
     for rel in rels:
         t = pq.read_table(store.abs(rel),
                           columns=["referenced_file", "cardinality"])
-        for f, card in zip(t["referenced_file"].to_pylist(),
-                           t["cardinality"].to_pylist()):
-            out[f] = (rel, card)
-    return out
-
-
-def _commit_full_relational(spark, store, snapshot, upd, added,
-                            props, config):
-    """Table-scale commit path: the successor manifest is computed AS A
-    DATAFRAME (base manifest left-joined with the per-file DV update
-    mapping, unioned with the fresh ingest entries, path-ordered) and
-    STREAMED into a full commit via ``toLocalIterator`` — the driver
-    holds one partition of manifest rows at a time, never an O(affected
-    files) dict.  Used above :data:`RELATIONAL_COMMIT_FILES`, where the
-    change batch touches so much of the table that every manifest
-    segment would be rewritten by the delta path anyway (cf. the
-    reference's manifest-rewrite-as-data design,
-    ``puffin_writer_proxy.rs:253-364``)."""
-    mdf = store.manifest_df(spark, snapshot.version)
-    succ = (mdf.join(upd, on="path", how="left")
-            .withColumn("dv_path", F.coalesce("_new_dv", "dv_path"))
-            .withColumn("dv_cardinality",
-                        F.coalesce(F.col("_new_card").cast("long"),
-                                   F.col("dv_cardinality")))
-            .drop("_new_dv", "_new_card"))
-    if added:
-        # manifest-row shape: flat min_/max_/null_/ndv_ columns
-        rows = []
-        for e in added:
-            flat = {"path": e["path"], "rows": e["rows"],
-                    "bytes": e["bytes"], "dv_path": None,
-                    "dv_cardinality": 0}
-            for c in config.stats_columns:
-                flat[f"min_{c}"], flat[f"max_{c}"] = e["bounds"].get(
-                    c, (None, None))
-                flat[f"null_{c}"] = e["null_counts"].get(c)
-                flat[f"ndv_{c}"] = e.get("ndv", {}).get(c)
-            rows.append(flat)
-        succ = succ.unionByName(
-            spark.createDataFrame(rows, schema=succ.schema),
-            allowMissingColumns=False)
-    ordered = succ.orderBy("path")
-    entries = (r.asDict() for r in ordered.toLocalIterator())
-    return store.commit(
-        entries,
-        schema=snapshot.schema,
-        stats_columns=config.stats_columns,
-        properties=props,
-        expected_parent=snapshot.version,
-        presorted=True,
-    )
+        parts.append(pa.table({"path": t["referenced_file"],
+                               "dv_path": pa.repeat(rel, t.num_rows),
+                               "dv_cardinality": t["cardinality"]}))
+    return pa.concat_tables(parts)
 
 
 def merge_into(
@@ -241,38 +184,23 @@ def merge_into(
                   .persist())
         affected = [r[0] for r in
                     new_dv.select("referenced_file").collect()]
-        relational = len(affected) > RELATIONAL_COMMIT_FILES
-        upd = None  # relational: DataFrame (path, _new_dv, _new_card)
-        updated = {}  # delta commit: path -> (dv_path, dv_cardinality)
+        updated = None
         t_dv = _time.monotonic()
         if affected:
             # each affected file's current sidecar, and its row count:
             # DV sidecars record it (DV-bitmap sizing parity with the
-            # puffin blob property ``mooncake-deletion-vector-max-num-rows``).
-            # Below the relational threshold these are driver lookups in
-            # the manifest segments commit_delta rewrites anyway; above
-            # it the same frame comes from the manifest by join.
-            if relational:
-                cur = (store.manifest_df(spark, snapshot.version)
-                       .join(new_dv.select(
-                           F.col("referenced_file").alias("path")),
-                           on="path", how="left_semi")
-                       .select(F.col("path").alias("referenced_file"),
-                               "dv_path",
-                               F.col("rows").alias("max_row_count")))
-                old_dv_paths = sorted(
-                    r[0] for r in cur.filter(F.col("dv_path").isNotNull())
-                    .select("dv_path").distinct().collect())
-            else:
-                ents = store.manifest_lookup(snapshot.version, affected,
-                                             ("dv_path", "rows"))
-                cur = F.broadcast(local_df(
-                    spark, "referenced_file string, dv_path string, "
-                           "max_row_count long",
-                    [affected, [ents[f]["dv_path"] for f in affected],
-                     [ents[f]["rows"] for f in affected]]))
-                old_dv_paths = sorted({e["dv_path"] for e in ents.values()
-                                       if e["dv_path"]})
+            # puffin blob property ``mooncake-deletion-vector-max-num-rows``)
+            # — driver lookups in the manifest segments commit_delta
+            # patches anyway
+            ents = store.manifest_lookup(snapshot.version, affected,
+                                         ("dv_path", "rows"))
+            cur = F.broadcast(local_df(
+                spark, "referenced_file string, dv_path string, "
+                       "max_row_count long",
+                [affected, [ents[f]["dv_path"] for f in affected],
+                 [ents[f]["rows"] for f in affected]]))
+            old_dv_paths = sorted({e["dv_path"] for e in ents.values()
+                                   if e["dv_path"]})
             merged = new_dv.join(cur, on="referenced_file")
             if old_dv_paths:
                 # each file's row in its CURRENT sidecar only, paired on
@@ -305,20 +233,8 @@ def merge_into(
             pairs, new_rels = staged_names(store, tmp, DV_DIR,
                                            f"dv-{job_id}")
             rename_many(store.fs, pairs)
-            # the per-file mapping (file → sidecar, cardinality): read
-            # back on the driver for a delta commit; as a DataFrame for
-            # the relational one, the sidecar taken from the row's scan
-            # metadata
-            if relational:
-                upd = (_with_relative_file(
-                           read_pinned(spark, [store.abs(r)
-                                               for r in new_rels]),
-                           store, "_new_dv")
-                       .select(F.col("referenced_file").alias("path"),
-                               "_new_dv",
-                               F.col("cardinality").alias("_new_card")))
-            else:
-                updated = dv_pointers(store, new_rels)
+            # the new pointers, read from the sidecars just renamed
+            updated = dv_pointers(store, new_rels)
             store.fs.rmtree(os.path.join(store.warehouse, "tmp", job_id))
             # DV build + publish wall (OTEL sync_deletion_vectors
             # analogue, iceberg_persistence.rs:59-86)
@@ -359,14 +275,11 @@ def merge_into(
 
         # -- 4. commit: manifest DELTA -----------------------------------
         # A MERGE's metadata footprint is exactly its working set: the
-        # affected files' new DV pointers (``updated`` — change-batch-
-        # sized, already driver-safe per the `affected` collect above)
-        # plus the fresh ingest entries.  commit_delta rewrites only the
-        # manifest segments those files live in; the rest of a
-        # 10^12-entry manifest is carried by reference.  Past
-        # ``RELATIONAL_COMMIT_FILES`` affected files the dict would be
-        # the driver's biggest allocation — the commit goes relational
-        # instead (streamed full manifest, O(partition) driver rows).
+        # affected files' new DV pointers (``updated``, an Arrow table
+        # the size of the change batch's file set) plus the fresh
+        # ingest entries.  commit_delta patches only the manifest
+        # segments those files live in; the rest of a 10^12-entry
+        # manifest is carried by reference.
         props = dict(snapshot.properties)
         props.update({
             "flush_lsn": snapshot.flush_lsn + 1,
@@ -377,9 +290,6 @@ def merge_into(
         })
         if extra_properties:
             props.update(extra_properties)
-        if upd is not None:
-            return _commit_full_relational(
-                spark, store, snapshot, upd, new_entries, props, config)
         return store.commit_delta(
             snapshot.version,
             added=new_entries,

@@ -55,7 +55,7 @@ import os
 import re
 import time
 from dataclasses import dataclass
-from typing import Any, Iterable
+from typing import Any, Iterable, Mapping
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -264,19 +264,6 @@ def read_pinned(spark, paths):
     return reader.parquet(*paths)
 
 
-def _range_hits(seg: dict, paths: list[str]) -> bool:
-    """Whether a segment's [min_path, max_path] range holds any of the
-    sorted ``paths``; a segment of unknown range (v1) always may."""
-    import bisect
-    if not paths:
-        return False
-    lo, hi = seg.get("min_path"), seg.get("max_path")
-    if lo is None or hi is None:
-        return True
-    i = bisect.bisect_left(paths, lo)
-    return i < len(paths) and paths[i] <= hi
-
-
 _MANIFEST_BATCH_ROWS = 65_536
 
 
@@ -286,6 +273,32 @@ def _segment_rows(path: str):
     for batch in pq.ParquetFile(path).iter_batches(
             batch_size=_MANIFEST_BATCH_ROWS):
         yield from batch.to_pylist()
+
+
+def _pointer_table(updated) -> pa.Table:
+    """``commit_delta``'s ``updated`` as an Arrow table ``(path, dv_path,
+    dv_cardinality)`` in path order; a ``{path: (dv_path,
+    dv_cardinality)}`` mapping is converted once."""
+    schema = pa.schema([_BASE_FIELDS[0], *_BASE_FIELDS[3:5]])
+    if updated is None:
+        return schema.empty_table()
+    if isinstance(updated, Mapping):
+        updated = pa.table([list(updated),
+                            [d for d, _ in updated.values()],
+                            [c for _, c in updated.values()]],
+                           names=schema.names)
+    return updated.select(schema.names).cast(schema).sort_by("path")
+
+
+def _span(paths: pa.Array, seg: dict) -> tuple[int, int]:
+    """The slice of the sorted ``paths`` inside a segment's [min_path,
+    max_path] range; all of them for a segment of unknown range (v1)."""
+    import bisect
+    lo, hi = seg.get("min_path"), seg.get("max_path")
+    if lo is None or hi is None:
+        return 0, len(paths)
+    return (bisect.bisect_left(paths, lo, key=pa.StringScalar.as_py),
+            bisect.bisect_right(paths, hi, key=pa.StringScalar.as_py))
 
 
 # Entries per manifest segment.  Segments are the unit a delta commit
@@ -437,19 +450,19 @@ class SnapshotStore:
         ``RuntimeError`` if a path is not in the manifest."""
         import pyarrow.compute as pc
 
-        wanted = sorted(set(paths))
+        wanted = pa.array(sorted(set(paths)), type=pa.string())
         cols = ["path", *columns]
         out: dict[str, dict] = {}
         for seg in self.manifest_segments(version):
-            if seg.get("entries") == 0 or not _range_hits(seg, wanted):
+            lo, hi = _span(wanted, seg)
+            if seg.get("entries") == 0 or lo == hi:
                 continue
             t = pq.read_table(self.abs(seg["path"]), columns=cols)
-            t = t.filter(pc.is_in(t["path"], value_set=pa.array(
-                wanted, type=pa.string())))
+            t = t.filter(pc.is_in(t["path"], value_set=wanted[lo:hi]))
             for row in t.to_pylist():
                 out[row.pop("path")] = row
         if len(out) != len(wanted):
-            missing = [p for p in wanted if p not in out]
+            missing = [p for p in wanted.to_pylist() if p not in out]
             raise RuntimeError(
                 f"v{version} manifest lacks {len(missing)} paths "
                 f"(first: {missing[:3]})")
@@ -853,7 +866,7 @@ class SnapshotStore:
         *,
         added: Iterable[dict] = (),
         removed: Iterable[str] = (),
-        updated: dict[str, tuple] | None = None,
+        updated: pa.Table | Mapping[str, tuple] | None = None,
         schema: list[str],
         stats_columns: Iterable[str],
         properties: dict[str, Any] | None = None,
@@ -861,17 +874,20 @@ class SnapshotStore:
     ) -> Snapshot:
         """Publish a new version as a DELTA against ``base_version``:
         ``added`` manifest entries appear, ``removed`` paths disappear,
-        and ``updated`` maps path → (dv_path, dv_cardinality) for
-        entries whose delete-vector pointer changed.
+        and ``updated`` is an Arrow table ``(path, dv_path,
+        dv_cardinality)`` of the entries whose delete-vector pointer
+        changed (a ``{path: (dv_path, dv_cardinality)}`` mapping is
+        converted to one).
 
         Only the segments whose [min_path, max_path] range contains an
-        affected path are rewritten (vectorized arrow filter, one
-        bounded segment at a time); every other segment is carried into
-        the new version BY REFERENCE.  A point MERGE therefore commits
-        in O(segments hit + delta), never O(table) — the manifest-file
-        granularity Iceberg commits have (and the reason the reference's
-        iceberg syncer only writes changed manifests,
-        ``iceberg_table_syncer.rs:723-838``).
+        affected path are rewritten; every other segment is carried into
+        the new version BY REFERENCE.  A hit segment is patched in place
+        with one vectorized lookup of its paths: removed rows drop out,
+        updated rows take their new pointer, and the segment keeps its
+        path order.  A point MERGE therefore commits in O(segments hit +
+        delta), never O(table) — the manifest-file granularity Iceberg
+        commits have (and the reason the reference's iceberg syncer only
+        writes changed manifests, ``iceberg_table_syncer.rs:723-838``).
 
         Raises ``RuntimeError`` if a removed/updated path is not found
         in the base manifest — a delta against the wrong base is a
@@ -894,14 +910,15 @@ class SnapshotStore:
                 f"expected parent v{expected_parent}, found v{current}")
         version = 0 if current is None else current + 1
 
-        added = list(added)
-        updated = dict(updated or {})
-        removed_set = set(removed)
-        affected = sorted(removed_set | set(updated))
-        overlap = removed_set & set(updated)
-        if overlap:
+        added = sorted(added, key=lambda e: e["path"])
+        updated = _pointer_table(updated)
+        removed = pa.array(sorted(set(removed)), type=pa.string())
+        overlap = removed.filter(pc.is_in(removed,
+                                          value_set=updated["path"]))
+        if len(overlap):
             raise ValueError(f"paths both removed and updated: "
-                             f"{sorted(overlap)[:3]}...")
+                             f"{overlap[:3].to_pylist()}...")
+        upd_paths = updated["path"].combine_chunks()
 
         base_segs = self.manifest_segments(base_version)
         # added segments must carry the base segments' exact parquet
@@ -909,80 +926,81 @@ class SnapshotStore:
         base_schema = (pq.ParquetFile(self.abs(base_segs[0]["path"]))
                        .schema_arrow if base_segs else None)
         kept_descs: list[dict] = []
-        patched_rows: list[dict] = []
-        found: set[str] = set()
         next_idx = 0
 
+        # a hit segment: one whose path range holds an updated or a
+        # removed path; it looks up only the paths in its own range
         candidates = []
         for seg in base_segs:
             if seg.get("entries") == 0:
                 continue  # empty segment: nothing to carry
-            if not _range_hits(seg, affected):
+            u, r = _span(upd_paths, seg), _span(removed, seg)
+            if u[0] == u[1] and r[0] == r[1]:
                 kept_descs.append(dict(seg))
                 continue
-            candidates.append(seg)
+            candidates.append((seg, u, r))
 
-        # rewrite the hit segments in a thread pool (bounded arrow
+        # patch the hit segments in a thread pool (bounded arrow
         # filter+write each — the same pooling shape as footer stats /
         # finalization renames); indices are reserved up front so names
         # stay deterministic per segment
-        def _rewrite(seg: dict, idx: int):
+        def _rewrite(cand, idx: int):
+            seg, (u0, u1), (r0, r1) = cand
+            upd = updated.slice(u0, u1 - u0)
+            # one lookup: index < upd.num_rows is an update, the rest
+            # removals
+            keys = pa.chunked_array([*upd["path"].chunks, removed[r0:r1]],
+                                    type=pa.string())
             t = pq.read_table(self.abs(seg["path"]))
-            hit = pc.is_in(t["path"], value_set=pa.array(
-                affected, type=pa.string()))
-            if not (pc.sum(hit).as_py() or 0):
-                return dict(seg), [], []
-            hits = t.filter(hit).to_pylist()
-            kept = t.filter(pc.invert(hit))
-            desc = None
-            if kept.num_rows:
-                final = self.segment_path(version, idx)
-                tmp = final + ".manifest-tmp"
-                pq.write_table(kept, tmp, compression="zstd")
-                self.fs.rename(tmp, final)
-                paths = kept["path"]
-                desc = {
-                    "path": os.path.relpath(final, self.warehouse),
-                    "entries": kept.num_rows,
-                    "min_path": paths[0].as_py(),
-                    "max_path": paths[kept.num_rows - 1].as_py(),
-                    "bytes": self.fs.size(final)}
-            f, patched = [], []
-            for row in hits:
-                f.append(row["path"])
-                if row["path"] in updated:
-                    dv_path, dv_card = updated[row["path"]]
-                    row["dv_path"] = dv_path
-                    row["dv_cardinality"] = int(dv_card or 0)
-                    patched.append(row)
-            return desc, f, patched
+            pos = pc.index_in(t["path"], value_set=keys)
+            hits = t["path"].filter(pc.is_valid(pos))
+            if not len(hits):
+                return dict(seg), hits
+            keep = pc.fill_null(pc.less(pos, upd.num_rows), True)
+            t, pos = t.filter(keep), pos.filter(keep)
+            is_upd = pc.is_valid(pos)
+            for name in ("dv_path", "dv_cardinality"):
+                t = t.set_column(
+                    t.schema.get_field_index(name), name,
+                    pc.if_else(is_upd, upd[name].take(pos), t[name]))
+            if not t.num_rows:
+                return None, hits
+            final = self.segment_path(version, idx)
+            tmp = final + ".manifest-tmp"
+            pq.write_table(t, tmp, compression="zstd")
+            self.fs.rename(tmp, final)
+            return {"path": os.path.relpath(final, self.warehouse),
+                    "entries": t.num_rows,
+                    "min_path": t["path"][0].as_py(),
+                    "max_path": t["path"][t.num_rows - 1].as_py(),
+                    "bytes": self.fs.size(final)}, hits
 
+        found = []
         if candidates:
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(
                     max_workers=min(16, len(candidates))) as pool:
                 results = list(pool.map(
                     _rewrite, candidates, range(len(candidates))))
-            for desc, f, patched in results:
+            for desc, hits in results:
                 if desc is not None:
                     kept_descs.append(desc)
-                found.update(f)
-                patched_rows.extend(patched)
+                found.extend(hits.chunks)
             next_idx = len(candidates)
 
-        missing = [p for p in affected if p not in found]
-        if missing:
+        keys = pa.chunked_array([upd_paths, removed], type=pa.string())
+        missing = keys.filter(pc.invert(pc.is_in(
+            keys, value_set=pa.chunked_array(found, type=pa.string()))))
+        if len(missing):
             raise RuntimeError(
                 f"delta commit against v{base_version}: "
                 f"{len(missing)} removed/updated paths not in the base "
-                f"manifest (first: {missing[:3]})")
+                f"manifest (first: {missing[:3].to_pylist()})")
 
         stats_types = (properties or {}).get("schema_types")
-        new_entries = sorted(
-            list(added) + patched_rows, key=lambda e: e["path"])
-        if new_entries:
+        if added:
             kept_descs.extend(self.write_manifest(
-                version, new_entries, stats_columns,
+                version, added, stats_columns,
                 stats_types=stats_types, presorted=True,
                 start_idx=next_idx, allow_legacy_name=False,
                 arrow_schema=base_schema))
@@ -1007,12 +1025,12 @@ class SnapshotStore:
                     "bytes": int(e["bytes"]),
                     "dv_path": e.get("dv_path"),
                     "dv_cardinality": int(e.get("dv_cardinality") or 0)}})
-            for p in sorted(removed_set):
+            for p in removed.to_pylist():
                 acts.append({"remove": {"path": p}})
-            for p in sorted(updated):
-                dv_path, dv_card = updated[p]
+            for p, dv_path, dv_card in zip(
+                    *(updated[c].to_pylist() for c in updated.column_names)):
                 acts.append({"dv": {"path": p, "dv_path": dv_path,
-                                    "dv_cardinality": int(dv_card or 0)}})
+                                    "dv_cardinality": dv_card}})
             return acts
 
         return self._publish(version, current, kept_descs, schema,

@@ -9,6 +9,7 @@ rolling, reference-carrying, rewrite, and coalescing all trigger at
 test scale.  No SparkSession: the commit path is pure driver code.
 """
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -70,7 +71,11 @@ def test_commit_delta_matches_dict_model(tmp_path_factory, monkeypatch,
             model[target]["dv_cardinality"] = dv[1]
         v = store.current_version()
         store.commit_delta(
-            v, added=added, removed=removed, updated=updated,
+            v, added=added, removed=removed,
+            updated=pa.table({
+                "path": list(updated),
+                "dv_path": [d for d, _ in updated.values()],
+                "dv_cardinality": [c for _, c in updated.values()]}),
             schema=SCHEMA, stats_columns=STATS,
             properties={"flush_lsn": 0, "operation": "model"},
             expected_parent=v)

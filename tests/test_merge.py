@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.config import CompactionConfig, TableConfig
 from moonlink_spark.engine import MoonTable
+from moonlink_spark.operators.scan import FILE_COL
 from moonlink_spark.snapshotstore import SnapshotStore
 from moonlink_spark.synth import synthesize_cdc_aftermath
 from tests.oracle import content_sha_multiset, live_rows_pandas
@@ -117,70 +118,52 @@ def test_merge_salted_path_matches_broadcast(spark, tmp_path):
     assert ha == hb
 
 
-def test_merge_relational_commit_parity_huge_batch(spark, tmp_path,
-                                                   monkeypatch):
-    """Table-wide MERGE (deletes touch ~every file) through the
-    relational commit path (RELATIONAL_COMMIT_FILES forced to 0):
-    content parity with the default delta-dict path on an identical
-    twin warehouse, commit_delta never invoked (the O(affected) driver
-    dict is gone), and the streamed full manifest round-trips
-    (dv pointers, cardinalities, ingest entries)."""
-    import shutil
+def test_merge_every_file_batch(spark, tmp_path):
+    """A batch whose deletes touch every file (every 3rd row by key
+    order) plus 4 inserts commits the right manifest: the scan equals
+    the pandas oracle over the committed manifest and v0 minus the
+    deleted keys plus the inserts, the changelog reports exactly those
+    events, and a follow-up optimize keeps the content."""
+    from pyspark.sql.window import Window
 
-    from moonlink_spark.operators import merge as merge_op
-
-    wa = str(tmp_path / "wh-a")
-    synthesize_cdc_aftermath(wa, seed=53, n_files=10,
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=53, n_files=10,
                              rows_per_file=(30, 60), n_repos=4,
                              content_bytes=(32, 64))
-    wb = str(tmp_path / "wh-b")
-    shutil.copytree(wa, wb)
+    t = MoonTable(spark, w, CFG)
+    live = t.scan(0).select(*KEYS, "lang", "content")
+    dels = (live.withColumn(
+                "_rn", F.row_number().over(Window.orderBy(*KEYS)))
+            .filter(F.col("_rn") % 3 == 0).drop("_rn")
+            .withColumn("_op", F.lit("delete")))
+    fresh = [("orgZ/new", f"src/n{i}.rs", f"{i:040x}", "rust",
+              f"fresh {i}", "upsert") for i in range(4)]
+    ups = spark.createDataFrame(
+        fresh, "repo string, path string, commit string, lang string, "
+               "content string, _op string")
+    deleted = {tuple(r) for r in dels.select(*KEYS).collect()}
+    v0 = live.toPandas()
+    located = t.scan(0, with_location=True)
+    files = lambda df: {r[0] for r in df.select(FILE_COL).distinct()
+                        .collect()}
+    assert files(located.join(dels.select(*KEYS), on=KEYS)) \
+        == files(located)
 
-    def changes_for(t):
-        from pyspark.sql.window import Window
-        live = t.scan(0).select(*KEYS, "lang", "content")
-        # ~30% of every file: every 3rd row by deterministic key order
-        dels = (live.withColumn(
-                    "_rn", F.row_number().over(Window.orderBy(*KEYS)))
-                .filter(F.col("_rn") % 3 == 0).drop("_rn")
-                .withColumn("_op", F.lit("delete")))
-        ups = spark.createDataFrame(
-            [("orgZ/new", f"src/n{i}.rs", f"{i:040x}", "rust",
-              f"fresh {i}", "upsert") for i in range(4)],
-            "repo string, path string, commit string, lang string, "
-            "content string, _op string")
-        return dels.unionByName(ups)
+    snap = t.merge(dels.unionByName(ups), key_columns=KEYS)
+    assert snap.version == 1
+    got = content_sha_multiset(t.scan(1).toPandas())
+    assert got == content_sha_multiset(live_rows_pandas(t.store, 1))
+    kept = v0[[tuple(k) not in deleted
+               for k in v0[KEYS].itertuples(index=False)]]
+    want = list(kept["content"]) + [r[4] for r in fresh]
+    assert got == content_sha_multiset({"content": want})
+    dv_rows = lambda v: sum(e["dv_cardinality"] or 0
+                            for e in t.store.manifest_entries(v))
+    assert dv_rows(1) == dv_rows(0) + len(deleted)
 
-    ta = MoonTable(spark, wa, CFG)
-    snap_a = ta.merge(changes_for(ta), key_columns=KEYS)
-
-    tb = MoonTable(spark, wb, CFG)
-    monkeypatch.setattr(merge_op, "RELATIONAL_COMMIT_FILES", 0)
-    called = []
-    store_b = tb.store
-    real_delta = store_b.commit_delta
-    monkeypatch.setattr(
-        store_b, "commit_delta",
-        lambda *a, **k: called.append(1) or real_delta(*a, **k))
-    snap_b = tb.merge(changes_for(tb), key_columns=KEYS)
-
-    assert not called, "relational path must bypass commit_delta"
-    assert snap_b.version == snap_a.version == 1
-    assert (content_sha_multiset(tb.scan(1).toPandas())
-            == content_sha_multiset(ta.scan(1).toPandas()))
-    # manifest round-trip: same per-file DV cardinality totals
-    agg = lambda t: t.manifest(1).agg(
-        F.sum("dv_cardinality").alias("d"),
-        F.count(F.lit(1)).alias("n")).first()
-    ra, rb = agg(ta), agg(tb)
-    assert ra["d"] == rb["d"] and ra["n"] == rb["n"]
-    # the changelog is manifest-content-based, so it must read
-    # identically across a relational merge commit
-    ev = lambda t: sorted(
-        (r["_change_type"], r["repo"], r["path"], r["commit"])
-        for r in t.changes(0).collect())
-    assert ev(tb) == ev(ta)
-    # and a follow-up optimize on the relational-committed table works
-    snap2 = tb.optimize("full")
-    assert (content_sha_multiset(tb.scan(snap2.version).toPandas())
-            == content_sha_multiset(ta.scan(1).toPandas()))
+    events = sorted((r["_change_type"], r["repo"], r["path"], r["commit"])
+                    for r in t.changes(0).collect())
+    assert events == sorted([("delete", *k) for k in deleted]
+                            + [("insert", *r[:3]) for r in fresh])
+    snap2 = t.optimize("full")
+    assert content_sha_multiset(t.scan(snap2.version).toPandas()) == got

@@ -359,6 +359,45 @@ def test_decimal_bounds_and_pruning(spark, tmp_path):
         prune_manifest(m, {"price": ("==", "10.00")})
 
 
+def test_decimal_row_filters_on_distributed_scan(spark, tmp_path,
+                                                 monkeypatch):
+    """Row filters on a decimal column return the same rows on the
+    distributed scan as Python's Decimal order: a literal of another
+    scale or an int literal neither drops matching rows nor fails."""
+    from decimal import Decimal
+
+    from moonlink_spark.operators import distscan
+
+    w = str(tmp_path / "wh-decimal-rows")
+    store = SnapshotStore(w)
+    store.init_warehouse()
+    types = {"price": "decimal(10,2)", "name": "string", "_pos": "bigint"}
+    cfg = TableConfig(zorder_columns=(), stats_columns=("price",))
+    store.commit([], schema=list(types), stats_columns=cfg.stats_columns,
+                 properties={"flush_lsn": 0, "schema_types": types,
+                             "schema_ddl": "`price` decimal(10,2), "
+                                           "`name` string, `_pos` bigint"},
+                 expected_parent=None)
+    t = MoonTable(spark, w, cfg)
+    prices = [Decimal("10.12"), Decimal("10.13"), Decimal("40.00")]
+    p = store.abs(f"{DATA_DIR}/t000.parquet")
+    pq.write_table(pa.table({
+        "price": pa.array(prices, pa.decimal128(10, 2)),
+        "name": pa.array(["a", "b", "c"]),
+        "_pos": pa.array(np.arange(3, dtype=np.int64)),
+    }), p)
+    t.load_files([p])
+    monkeypatch.setattr(distscan, "PLAN_DISTRIBUTED_FILES", 0)
+
+    def rows(pred):
+        return sorted(r["price"] for r in t.scan(
+            predicates={"price": pred}, apply_row_filters=True).collect())
+
+    assert rows((">", Decimal("10.125"))) == prices[1:]
+    assert rows(("==", Decimal("10.120"))) == prices[:1]
+    assert rows((">=", 10)) == prices
+
+
 def test_null_counts_and_nullness_pruning(spark, tmp_path):
     """null_<col> lands in the manifest from the footer pass and drives
     IS NULL / IS NOT NULL pruning; unknown counts are kept (Iceberg
