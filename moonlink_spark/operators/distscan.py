@@ -106,6 +106,26 @@ def surviving_row_groups(group_rows: list[int],
     return out
 
 
+def sidecar_positions(path: str, files) -> dict:
+    """``{file: sorted unique deleted positions}`` for each of ``files``
+    with a row in the DV sidecar at ``path``.  Sidecars are shared by
+    many files but written sorted by ``referenced_file`` (merge.py /
+    engine._optimize_index), so the dataset filter prunes foreign row
+    groups by footer stats — a reader reads ~its own files' slice, not
+    the whole shared sidecar."""
+    import numpy as np
+    import pyarrow.dataset as pds
+    t = pds.dataset(path, format="parquet").to_table(
+        columns=["referenced_file", "positions"],
+        filter=pds.field("referenced_file").isin(list(files)))
+    out: dict = {}
+    for f, row in zip(t["referenced_file"].to_pylist(), t["positions"]):
+        if row.values is not None:
+            pos = row.values.to_numpy(zero_copy_only=False)
+            out[f] = np.union1d(out.get(f, pos[:0]), pos)
+    return out
+
+
 def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
                  row_filters: Mapping[str, object] | None = None):
     """mapInArrow body: read each plan row's parquet file with pyarrow,
@@ -130,7 +150,6 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
     def reader(batches) -> Iterator:
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.dataset as pds
         import pyarrow.parquet as pq
         logical = [f for f in arrow_schema if f.name != FILE_COL]
@@ -143,21 +162,10 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
 
         def deleted_ordinals(dv_relpath: str, relpath: str):
             """Sorted unique deleted positions of ``relpath`` per its
-            named sidecar.  Sidecars are shared by up to ~512 files but
-            written range-partitioned AND sorted by ``referenced_file``
-            (merge.py / engine._optimize_index), so the dataset filter
-            prunes foreign row groups by footer stats — each dirty
-            file reads ~its own slice, not the whole shared sidecar."""
-            mine = pds.dataset(
-                os.path.join(warehouse, dv_relpath), format="parquet"
-            ).to_table(columns=["positions"],
-                       filter=pds.field("referenced_file") == relpath)
-            if mine.num_rows == 0:
-                return None
-            pos = pc.list_flatten(mine["positions"])
-            if len(pos) == 0:
-                return None
-            return np.unique(pos.to_numpy(zero_copy_only=False))
+            named sidecar, or None when it deletes none."""
+            pos = sidecar_positions(os.path.join(warehouse, dv_relpath),
+                                    [relpath]).get(relpath)
+            return pos if pos is not None and len(pos) else None
 
         def file_batches(path, avail, cols, dels):
             """Yield (record_batch, start_ordinal) pairs."""

@@ -22,11 +22,21 @@ merge-on-sync (``iceberg_table_syncer.rs:376-435``):
 
 Scale shape: the table's manifest is never collected to the driver.
 Only change-batch-sized artifacts touch it: the affected file list,
-those files' manifest rows, their new DV pointers as Arrow columns read
-from the sidecars just written (pyarrow, no Spark job), and the ingest
-file stats.  The commit patches only the manifest segments that hold an
-affected file, as Arrow, and carries every other segment by reference
-(cf. the reference's manifest-rewrite-as-data design,
+those files' manifest rows, their new DV pointers and the ingest file
+stats.  A batch of at most ``DRIVER_ROWS`` rows (the flush budget) is
+read to the driver once, as Arrow: its keys go to the broadcast join
+as a local relation and the matched positions come back as Arrow, and
+the driver unions each affected file's positions with its current
+sidecar row and writes the one DV sidecar and the one ingest file
+itself with pyarrow — no Spark job after the match (the reference
+builds and merges DVs in-process per commit, ``snapshot.rs:925-998``).
+A larger batch, ``broadcast_changes=False``, or affected files whose
+current DVs sum past ``DRIVER_ROWS`` take the Spark path instead: the
+batch is persisted, the DV merge and the ingest write are Spark jobs,
+and the new DV pointers are read back from the sidecars just written.
+The commit patches only the manifest segments that hold an affected
+file, as Arrow, and carries every other segment by reference (cf. the
+reference's manifest-rewrite-as-data design,
 ``puffin_writer_proxy.rs:253-364``); there is no second commit path.
 
 Concurrency: artifact names embed a per-attempt random nonce, so two
@@ -48,15 +58,19 @@ import time as _time
 import uuid
 from typing import Mapping
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 from moonlink_spark import metrics as mtr
 from moonlink_spark.config import TableConfig
 from moonlink_spark.operators import keyindex, skew
 from moonlink_spark.fs import rename_many
+from moonlink_spark.operators.distscan import sidecar_positions
 from moonlink_spark.operators.rewrite import assign_positions, footer_stats_many
 from moonlink_spark.operators.scan import (
     FILE_COL,
@@ -75,22 +89,192 @@ from moonlink_spark.snapshotstore import (
 )
 
 OP_COL = "_op"
+# the mem-slice flush row budget (mooncake_table_config.rs:158-163):
+# ingest files roll at it
+FLUSH_ROWS = 131_072
+# a batch of at most this many rows, whose affected files' current DVs
+# hold at most this many positions, is merged on the driver (one ingest
+# file, one DV sidecar); tests lower it to force the Spark path
+DRIVER_ROWS = FLUSH_ROWS
+# affected files per DV sidecar part (Spark) or row group (driver): a
+# scan reading one file's DV row prunes the rest by footer stats
+DV_FILES_PER_PART = 512
+
+
+def _pointers(sidecar: pa.Table, rel: str) -> pa.Table:
+    """``(path, dv_path, dv_cardinality)`` of every row of the sidecar
+    ``rel``: its ``referenced_file`` and ``cardinality`` columns beside
+    its own path."""
+    return pa.table({"path": sidecar["referenced_file"],
+                     "dv_path": pa.repeat(rel, sidecar.num_rows),
+                     "dv_cardinality": sidecar["cardinality"]})
 
 
 def dv_pointers(store: SnapshotStore, rels: list[str]) -> pa.Table:
-    """``(path, dv_path, dv_cardinality)`` for every row of the
-    just-written DV sidecars ``rels`` — the ``updated`` table
-    ``commit_delta`` takes: each sidecar's ``referenced_file`` and
-    ``cardinality`` columns, read on the driver with pyarrow, beside the
-    sidecar's own path."""
-    parts = []
-    for rel in rels:
-        t = pq.read_table(store.abs(rel),
-                          columns=["referenced_file", "cardinality"])
-        parts.append(pa.table({"path": t["referenced_file"],
-                               "dv_path": pa.repeat(rel, t.num_rows),
-                               "dv_cardinality": t["cardinality"]}))
-    return pa.concat_tables(parts)
+    """The ``updated`` table ``commit_delta`` takes for the just-written
+    DV sidecars ``rels``, read on the driver with pyarrow."""
+    return pa.concat_tables([
+        _pointers(pq.read_table(store.abs(rel),
+                                columns=["referenced_file", "cardinality"]),
+                  rel)
+        for rel in rels])
+
+
+def _publish(store: SnapshotStore, table: pa.Table, sub_dir: str,
+             stem: str, job_id: str, **write_options) -> str:
+    """Write ``table`` as one parquet file and publish it as a one-part
+    Spark write is published: the job's tmp directory, then the rename
+    to ``staged_names``' final name.  Returns that name."""
+    tmp = os.path.join(store.warehouse, "tmp", job_id, sub_dir)
+    store.fs.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"),
+                   **write_options)
+    pairs, rels = staged_names(store, tmp, sub_dir, stem)
+    rename_many(store.fs, pairs)
+    return rels[0]
+
+
+def _key_range(col: pa.ChunkedArray, dtype) -> tuple:
+    """``(lo, hi)`` of the batch's lead key as Spark's ``min``/``max``
+    collect them; ``(None, None)`` — no pruning — for a batch without a
+    non-null key, a type Arrow cannot order, or a float NaN (Spark
+    orders NaN last, Arrow's ``min_max`` skips it)."""
+    try:
+        if (pa.types.is_floating(col.type)
+                and pc.any(pc.is_nan(col)).as_py()):
+            return None, None
+        mm = pc.min_max(col)
+    except pa.ArrowNotImplementedError:
+        return None, None
+    lo, hi = mm["min"], mm["max"]
+    if not lo.is_valid:
+        return None, None
+    if isinstance(dtype, TimestampType):
+        # Spark collects a timestamp as a naive local datetime
+        return tuple(dtype.fromInternal(v.cast(pa.int64()).as_py())
+                     for v in (lo, hi))
+    return lo.as_py(), hi.as_py()
+
+
+def _positions_by_file(hits: pa.Table) -> dict[str, np.ndarray]:
+    """Matched ``(file, position)`` pairs as file → sorted unique
+    positions, in file order."""
+    files = hits[FILE_COL].to_numpy()
+    order = np.argsort(files, kind="stable")
+    names, starts = np.unique(files[order], return_index=True)
+    groups = np.split(hits[POS_COL].to_numpy()[order], starts[1:])
+    return {f: np.unique(g) for f, g in zip(names, groups)}
+
+
+def _driver_dv(store: SnapshotStore, ents: dict, new_pos: dict,
+               job_id: str) -> pa.Table:
+    """Union each affected file's new positions with its row in its
+    current sidecar, write the rows as one zstd sidecar sorted on
+    ``referenced_file`` and return its pointers."""
+    files = sorted(new_pos)
+    by_sidecar: dict[str, list[str]] = {}
+    for f in files:
+        if ents[f]["dv_path"]:
+            by_sidecar.setdefault(ents[f]["dv_path"], []).append(f)
+    old: dict[str, np.ndarray] = {}
+    for rel, named in by_sidecar.items():
+        old.update(sidecar_positions(store.abs(rel), named))
+    positions = [np.union1d(new_pos[f], old[f]) if f in old else new_pos[f]
+                 for f in files]
+    sizes = np.array([len(p) for p in positions], dtype=np.int64)
+    sidecar = pa.table({
+        "referenced_file": pa.array(files, pa.string()),
+        "positions": pa.ListArray.from_arrays(
+            pa.array(np.concatenate([[0], np.cumsum(sizes)]), pa.int32()),
+            pa.array(np.concatenate(positions), pa.int64())),
+        "cardinality": pa.array(sizes, pa.int64()),
+        "max_row_count": pa.array([ents[f]["rows"] for f in files],
+                                  pa.int64()),
+    })
+    rel = _publish(store, sidecar, DV_DIR, f"dv-{job_id}", job_id,
+                   compression="zstd", row_group_size=DV_FILES_PER_PART)
+    return _pointers(sidecar, rel)
+
+
+def _spark_dv(spark: SparkSession, store: SnapshotStore, new_dv: DataFrame,
+              ents: dict, job_id: str) -> pa.Table:
+    """The same sidecar rows as :func:`_driver_dv` from ``new_dv`` (one
+    ``referenced_file, positions`` row per affected file), merged and
+    written by Spark; the pointers are read back from the sidecars."""
+    affected = sorted(ents)
+    # each affected file's current sidecar, and its row count: DV
+    # sidecars record it (DV-bitmap sizing parity with the puffin blob
+    # property ``mooncake-deletion-vector-max-num-rows``)
+    cur = F.broadcast(local_df(
+        spark, "referenced_file string, dv_path string, max_row_count long",
+        [affected, [ents[f]["dv_path"] for f in affected],
+         [ents[f]["rows"] for f in affected]]))
+    old_dv_paths = sorted({e["dv_path"] for e in ents.values()
+                           if e["dv_path"]})
+    merged = new_dv.join(cur, on="referenced_file")
+    if old_dv_paths:
+        # each file's row in its CURRENT sidecar only, paired on
+        # (file, sidecar): superseded rows of the file in older sidecars
+        # never join, so there is nothing to explode and deduplicate —
+        # one array union per file
+        old = (_with_relative_file(
+                   read_pinned(spark, [store.abs(p) for p in old_dv_paths]),
+                   store, "dv_path")
+               .select("referenced_file", "dv_path",
+                       F.col("positions").alias("_old")))
+        merged = (merged.join(old, how="left",
+                              on=["referenced_file", "dv_path"])
+                  .withColumn("positions", F.coalesce(
+                      F.array_sort(F.array_union("positions", "_old")),
+                      F.col("positions"))))
+    merged = merged.select(
+        "referenced_file", "positions",
+        F.size("positions").cast("long").alias("cardinality"),
+        "max_row_count")
+
+    tmp = os.path.join(store.warehouse, "tmp", job_id, "dv")
+    n_dv = max(1, math.ceil(len(affected) / DV_FILES_PER_PART))
+    (merged.repartitionByRange(n_dv, "referenced_file")
+     .sortWithinPartitions("referenced_file")
+     .write.mode("overwrite").option("compression", "zstd")
+     .parquet(tmp))
+    pairs, new_rels = staged_names(store, tmp, DV_DIR, f"dv-{job_id}")
+    rename_many(store.fs, pairs)
+    return dv_pointers(store, new_rels)
+
+
+def _driver_ingest(store: SnapshotStore, batch: pa.Table,
+                   data_cols: list[str], key_columns: list[str],
+                   job_id: str, compression: str) -> list[str]:
+    """The batch's upserts as one ingest file: sorted on the keys with
+    nulls first (Spark's ascending order), ``_pos`` = row number."""
+    ins = (batch.filter(pc.equal(batch[OP_COL], "upsert"))
+           .select(data_cols)
+           .sort_by([(k, "ascending") for k in key_columns],
+                    null_placement="at_start"))
+    ins = ins.append_column(
+        POS_COL, pa.array(np.arange(ins.num_rows, dtype=np.int64)))
+    return [_publish(store, ins, DATA_DIR, f"data-{job_id}", job_id,
+                     compression={"uncompressed": "none"}.get(
+                         compression, compression))]
+
+
+def _spark_ingest(store: SnapshotStore, changes: DataFrame,
+                  data_cols: list[str], key_columns: list[str], n_ins: int,
+                  job_id: str, compression: str) -> list[str]:
+    """The batch's upserts as ingest files written by Spark, rolled at
+    ``FLUSH_ROWS`` rows."""
+    tmp = os.path.join(store.warehouse, "tmp", job_id, "ins")
+    n_files = max(1, math.ceil(n_ins / FLUSH_ROWS))
+    inserts = changes.filter(F.col(OP_COL) == "upsert").select(*data_cols)
+    final = assign_positions(
+        inserts.repartitionByRange(n_files, *key_columns)
+        .sortWithinPartitions(*key_columns))
+    (final.write.mode("overwrite")
+     .option("compression", compression).parquet(tmp))
+    pairs, rels = staged_names(store, tmp, DATA_DIR, f"data-{job_id}")
+    rename_many(store.fs, pairs)
+    return rels
 
 
 def merge_into(
@@ -117,10 +301,36 @@ def merge_into(
     nonce = uuid.uuid4().hex[:8]
     job_id = f"{job_tag}-v{snapshot.version:06d}-{nonce}"
     data_cols = [c for c in snapshot.schema if c != POS_COL]
-    changes = changes.persist()
+    k0 = key_columns[0]
+    # one read of a batch within the budget replaces the persisted batch
+    # and every later pass over it; a larger one is persisted instead
+    batch = None
+    if broadcast_changes:
+        batch = changes.limit(DRIVER_ROWS + 1).toArrow()
+        if batch.num_rows > DRIVER_ROWS:
+            batch = None
+    if batch is None:
+        changes = changes.persist()
     new_dv = None
     try:
         # -- 1. match change keys to live row positions ------------------
+        # the batch's lead-key range (bounds pruning) and upsert count
+        # (ingest-file sizing): from the Arrow batch, or one pass over
+        # the persisted one
+        if batch is not None:
+            lo, hi = _key_range(batch[k0], changes.schema[k0].dataType)
+            n_ins = pc.sum(pc.equal(batch[OP_COL], "upsert")).as_py() or 0
+            keys = spark.createDataFrame(
+                batch.select(key_columns),
+                schema=StructType([changes.schema[k] for k in key_columns]))
+        else:
+            stats = changes.agg(
+                F.min(k0).alias("lo"), F.max(k0).alias("hi"),
+                F.sum(F.when(F.col(OP_COL) == "upsert", 1)
+                      .otherwise(0)).alias("n_ins")).collect()[0]
+            lo, hi = stats["lo"], stats["hi"]
+            n_ins = int(stats["n_ins"] or 0)
+            keys = changes.select(*key_columns)
         # manifest-bounds pruning: files whose [min,max] range on the
         # lead key column cannot intersect the change batch's key range
         # are never scanned — the engine's stand-in for moonlink's
@@ -129,17 +339,8 @@ def merge_into(
         # the difference between scanning thousands of files and
         # scanning all of them.
         predicates = None
-        k0 = key_columns[0]
-        # one pass over the persisted batch yields both the key range
-        # (bounds pruning) and the upsert count (ingest-file sizing) —
-        # no separate count job later
-        stats = changes.agg(
-            F.min(k0).alias("lo"), F.max(k0).alias("hi"),
-            F.sum(F.when(F.col(OP_COL) == "upsert", 1)
-                  .otherwise(0)).alias("n_ins")).collect()[0]
-        n_ins = int(stats["n_ins"] or 0)
-        if k0 in config.stats_columns and stats["lo"] is not None:
-            predicates = {k0: ("between", stats["lo"], stats["hi"])}
+        if k0 in config.stats_columns and lo is not None:
+            predicates = {k0: ("between", lo, hi)}
         # key-index candidate pruning (the actual point-lookup index,
         # operators/keyindex.py): bounds pruning handles key-local
         # batches; the bucket hash index handles SCATTERED point keys —
@@ -150,91 +351,64 @@ def merge_into(
                 and tuple(key_columns) == tuple(config.index_key_columns)):
             keep = keyindex.candidate_files(
                 spark, store, read_pinned(spark, snapshot.manifest_paths),
-                changes, list(key_columns),
-                n_buckets=config.index_buckets)
+                keys, list(key_columns), n_buckets=config.index_buckets)
         loc = scan(spark, store, snapshot, with_location=True,
                    predicates=predicates, keep_files=keep).select(
             *key_columns, FILE_COL, POS_COL)
         # no distinct(): a repeated key matches the same positions
-        # twice, and collect_set below keeps each once
-        keys = changes.select(*key_columns)
+        # twice, and the grouping below keeps each once
         if broadcast_changes:
             matched = loc.join(F.broadcast(keys), on=key_columns,
                                how="inner")
         else:
             # huge change batch: salt the (possibly skewed) first key col
-            plan = skew.plan_salts(loc, key_columns[0])
-            probe = skew.with_salt(loc, key_columns[0], plan,
+            plan = skew.plan_salts(loc, k0)
+            probe = skew.with_salt(loc, k0, plan,
                                    salt_source=key_columns[1:]
                                    or key_columns)
-            build = skew.explode_salts(keys, key_columns[0], plan)
+            build = skew.explode_salts(keys, k0, plan)
             # build side was replicated per salt; probe rows carry one
             # salt — every probe row meets exactly one replica of its key
             matched = probe.join(build, on=[*key_columns, skew.SALT_COL],
                                  how="inner").drop(skew.SALT_COL)
 
         # -- 2. merge with existing DVs per affected file ----------------
-        # One row per affected file: the matched positions grouped once
-        # and cached, so the DV write below reads the cache.  `affected`
-        # is its file column — change-batch-sized (the files a CDC batch
-        # touches), not table-sized, so safe to plan with driver-side.
-        new_dv = (matched.groupBy(F.col(FILE_COL).alias("referenced_file"))
-                  .agg(F.array_sort(F.collect_set(POS_COL))
-                       .alias("positions"))
-                  .persist())
-        affected = [r[0] for r in
-                    new_dv.select("referenced_file").collect()]
+        # One row per affected file — change-batch-sized (the files a
+        # CDC batch touches), not table-sized, so safe to plan with
+        # driver-side: an Arrow read of the matched positions, or a
+        # grouped frame cached for the Spark DV write
+        new_pos = None
+        if batch is not None:
+            new_pos = _positions_by_file(
+                matched.select(FILE_COL, POS_COL).toArrow())
+            affected = list(new_pos)
+        else:
+            new_dv = (matched.groupBy(F.col(FILE_COL)
+                                      .alias("referenced_file"))
+                      .agg(F.array_sort(F.collect_set(POS_COL))
+                           .alias("positions"))
+                      .persist())
+            affected = [r[0] for r in
+                        new_dv.select("referenced_file").collect()]
         updated = None
         t_dv = _time.monotonic()
         if affected:
-            # each affected file's current sidecar, and its row count:
-            # DV sidecars record it (DV-bitmap sizing parity with the
-            # puffin blob property ``mooncake-deletion-vector-max-num-rows``)
-            # — driver lookups in the manifest segments commit_delta
+            # driver lookups in the manifest segments commit_delta
             # patches anyway
-            ents = store.manifest_lookup(snapshot.version, affected,
-                                         ("dv_path", "rows"))
-            cur = F.broadcast(local_df(
-                spark, "referenced_file string, dv_path string, "
-                       "max_row_count long",
-                [affected, [ents[f]["dv_path"] for f in affected],
-                 [ents[f]["rows"] for f in affected]]))
-            old_dv_paths = sorted({e["dv_path"] for e in ents.values()
-                                   if e["dv_path"]})
-            merged = new_dv.join(cur, on="referenced_file")
-            if old_dv_paths:
-                # each file's row in its CURRENT sidecar only, paired on
-                # (file, sidecar): superseded rows of the file in older
-                # sidecars never join, so there is nothing to explode
-                # and deduplicate — one array union per file
-                old = (_with_relative_file(
-                           read_pinned(spark, [store.abs(p)
-                                               for p in old_dv_paths]),
-                           store, "dv_path")
-                       .select("referenced_file", "dv_path",
-                               F.col("positions").alias("_old")))
-                merged = (merged.join(old, how="left",
-                                      on=["referenced_file", "dv_path"])
-                          .withColumn("positions", F.coalesce(
-                              F.array_sort(F.array_union("positions",
-                                                         "_old")),
-                              F.col("positions"))))
-            merged = merged.select(
-                "referenced_file", "positions",
-                F.size("positions").cast("long").alias("cardinality"),
-                "max_row_count")
-
-            tmp = os.path.join(store.warehouse, "tmp", job_id, "dv")
-            n_dv = max(1, math.ceil(len(affected) / 512))
-            (merged.repartitionByRange(n_dv, "referenced_file")
-             .sortWithinPartitions("referenced_file")
-             .write.mode("overwrite").option("compression", "zstd")
-             .parquet(tmp))
-            pairs, new_rels = staged_names(store, tmp, DV_DIR,
-                                           f"dv-{job_id}")
-            rename_many(store.fs, pairs)
-            # the new pointers, read from the sidecars just renamed
-            updated = dv_pointers(store, new_rels)
+            ents = store.manifest_lookup(
+                snapshot.version, affected,
+                ("dv_path", "rows", "dv_cardinality"))
+            if (new_pos is not None
+                    and sum(e["dv_cardinality"] or 0 for e in ents.values())
+                    <= DRIVER_ROWS):
+                updated = _driver_dv(store, ents, new_pos, job_id)
+            else:
+                if new_dv is None:
+                    new_dv = local_df(
+                        spark, "referenced_file string, positions "
+                               "array<bigint>",
+                        [affected, [new_pos[f] for f in affected]])
+                updated = _spark_dv(spark, store, new_dv, ents, job_id)
             store.fs.rmtree(os.path.join(store.warehouse, "tmp", job_id))
             # DV build + publish wall (OTEL sync_deletion_vectors
             # analogue, iceberg_persistence.rs:59-86)
@@ -242,22 +416,15 @@ def merge_into(
                        (_time.monotonic() - t_dv) * 1000.0)
 
         # -- 3. write inserted rows as fresh ingest files ----------------
-        inserts = changes.filter(F.col(OP_COL) == "upsert") \
-            .select(*data_cols)
         new_entries: list[dict] = []
         if n_ins:
-            tmp = os.path.join(store.warehouse, "tmp", job_id, "ins")
-            # roll ingest files at ~the mem-slice flush row budget
-            # (131072 rows, mooncake_table_config.rs:158-163)
-            n_files = max(1, math.ceil(n_ins / 131_072))
-            final = assign_positions(
-                inserts.repartitionByRange(n_files, *key_columns)
-                .sortWithinPartitions(*key_columns))
-            (final.write.mode("overwrite")
-             .option("compression", config.ingest_compression).parquet(tmp))
-            pairs, rels = staged_names(store, tmp, DATA_DIR,
-                                       f"data-{job_id}")
-            rename_many(store.fs, pairs)
+            if batch is not None:
+                rels = _driver_ingest(store, batch, data_cols, key_columns,
+                                      job_id, config.ingest_compression)
+            else:
+                rels = _spark_ingest(store, changes, data_cols, key_columns,
+                                     n_ins, job_id,
+                                     config.ingest_compression)
             for rel, st in zip(rels, footer_stats_many(
                     [store.abs(r) for r in rels], config.stats_columns)):
                 if st["rows"]:
@@ -302,4 +469,5 @@ def merge_into(
     finally:
         if new_dv is not None:
             new_dv.unpersist()
-        changes.unpersist()
+        if batch is None:
+            changes.unpersist()

@@ -301,6 +301,73 @@ def _span(paths: pa.Array, seg: dict) -> tuple[int, int]:
             bisect.bisect_right(paths, hi, key=pa.StringScalar.as_py))
 
 
+def _entry_schema(stats_columns: list[str], stats_types: dict | None,
+                  arrow_schema: pa.Schema | None = None):
+    """Arrow schema + per-column bound types for manifest rows.  An
+    ``arrow_schema`` pins both to an existing segment's: delta commits
+    write with the BASE segments' exact parquet schema — mixed bound
+    types across segments of one version would break the unioned
+    manifest read."""
+    if arrow_schema is not None:
+        return arrow_schema, {c: arrow_schema.field(f"min_{c}").type
+                              for c in stats_columns}
+    stats_types = stats_types or {}
+    fields = list(_BASE_FIELDS)
+    btypes: dict[str, pa.DataType | None] = {}
+    for c in stats_columns:
+        bt = bound_type(stats_types.get(c, "string"))
+        btypes[c] = bt
+        t = bt if bt is not None else pa.string()
+        fields.append((f"min_{c}", t))
+        fields.append((f"max_{c}", t))
+    # per-column null counts (Iceberg null_value_counts analogue, free
+    # from parquet footers): NULL = unknown, never pruned on
+    for c in stats_columns:
+        fields.append((f"null_{c}", pa.int64()))
+    # per-column approx distinct counts (HLL++, Iceberg distinct_counts
+    # analogue) when the table opts into ``collect_ndv``; NULL = not
+    # collected
+    for c in stats_columns:
+        fields.append((f"ndv_{c}", pa.int64()))
+    return pa.schema(fields), btypes
+
+
+def _entries_batch(entries: list[dict], schema: pa.Schema,
+                   stats_columns: list[str], btypes: dict
+                   ) -> pa.RecordBatch:
+    """Manifest entries as one record batch of ``schema``.  Entries
+    carry bounds nested (``bounds={col: (mn, mx)}``) or flat
+    (``min_<col>``/``max_<col>`` keys, i.e. manifest-row shape); a
+    column without a bound type gets NULL bounds."""
+    cols: dict[str, list] = {name: [] for name in schema.names}
+    for e in entries:
+        cols["path"].append(e["path"])
+        cols["rows"].append(int(e["rows"]))
+        cols["bytes"].append(int(e["bytes"]))
+        cols["dv_path"].append(e.get("dv_path"))
+        cols["dv_cardinality"].append(int(e.get("dv_cardinality") or 0))
+        bounds = e.get("bounds")
+        for c in stats_columns:
+            if bounds is not None:
+                mn, mx = bounds.get(c, (None, None))
+            else:
+                mn, mx = e.get(f"min_{c}"), e.get(f"max_{c}")
+            if btypes[c] is None:
+                mn = mx = None
+            cols[f"min_{c}"].append(mn)
+            cols[f"max_{c}"].append(mx)
+        nulls = e.get("null_counts")
+        ndv = e.get("ndv")
+        for c in stats_columns:
+            nv = nulls.get(c) if nulls is not None else e.get(f"null_{c}")
+            cols[f"null_{c}"].append(int(nv) if nv is not None else None)
+            dv = ndv.get(c) if ndv is not None else e.get(f"ndv_{c}")
+            cols[f"ndv_{c}"].append(int(dv) if dv is not None else None)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], type=f.type) for f in schema],
+        schema=schema)
+
+
 # Entries per manifest segment.  Segments are the unit a delta commit
 # rewrites and the unit the list file tracks: smaller segments mean a
 # point-MERGE rewrites less metadata; larger segments mean a shorter
@@ -559,29 +626,6 @@ class SnapshotStore:
 
         return _ctx()
 
-    def _manifest_schema(self, stats_columns: list[str],
-                         stats_types: dict | None):
-        """Arrow schema + per-column bound types for manifest rows."""
-        stats_types = stats_types or {}
-        fields = list(_BASE_FIELDS)
-        btypes: dict[str, pa.DataType | None] = {}
-        for c in stats_columns:
-            bt = bound_type(stats_types.get(c, "string"))
-            btypes[c] = bt
-            t = bt if bt is not None else pa.string()
-            fields.append((f"min_{c}", t))
-            fields.append((f"max_{c}", t))
-        # per-column null counts (Iceberg null_value_counts analogue,
-        # free from parquet footers): NULL = unknown, never pruned on
-        for c in stats_columns:
-            fields.append((f"null_{c}", pa.int64()))
-        # per-column approx distinct counts (HLL++, Iceberg
-        # distinct_counts analogue) when the table opts into
-        # ``collect_ndv``; NULL = not collected
-        for c in stats_columns:
-            fields.append((f"ndv_{c}", pa.int64()))
-        return pa.schema(fields), btypes, fields
-
     def write_manifest(self, version: int, entries: Iterable[dict],
                        stats_columns: Iterable[str],
                        stats_types: dict | None = None,
@@ -612,18 +656,8 @@ class SnapshotStore:
         readers of small tables see the familiar object.
         """
         stats_columns = list(stats_columns)
-        if arrow_schema is not None:
-            # delta commits pin added segments to the BASE segments'
-            # exact parquet schema — mixed bound types across segments
-            # of one version would break the unioned manifest read
-            schema = arrow_schema
-            fields = [(f.name, f.type) for f in schema]
-            btypes = {c: schema.field(f"min_{c}").type
-                      for c in stats_columns}
-        else:
-            schema, btypes, fields = self._manifest_schema(
-                stats_columns, stats_types)
-
+        schema, btypes = _entry_schema(stats_columns, stats_types,
+                                       arrow_schema)
         if not presorted:
             entries = sorted(entries, key=lambda e: e["path"])
 
@@ -652,59 +686,29 @@ class SnapshotStore:
             state["idx"] += 1
             state["writer"] = None
 
-        def _flush(cols: dict, n: int) -> None:
+        def _flush(batch: pa.RecordBatch) -> None:
             if state["writer"] is None:
                 _open()
-            arrays = [pa.array(cols[name], type=typ)
-                      for name, typ in fields]
-            state["writer"].write_batch(
-                pa.RecordBatch.from_arrays(arrays, schema=schema))
+            state["writer"].write_batch(batch)
+            n = batch.num_rows
             if n:
                 if state["min"] is None:
-                    state["min"] = cols["path"][0]
-                state["max"] = cols["path"][-1]
+                    state["min"] = batch["path"][0].as_py()
+                state["max"] = batch["path"][n - 1].as_py()
             state["n"] += n
             if state["n"] >= SEGMENT_ROWS:
                 _finalize()
 
-        cols: dict[str, list] = {name: [] for name, _ in fields}
-        n = 0
         try:
+            chunk: list[dict] = []
             for e in entries:
-                cols["path"].append(e["path"])
-                cols["rows"].append(int(e["rows"]))
-                cols["bytes"].append(int(e["bytes"]))
-                cols["dv_path"].append(e.get("dv_path"))
-                cols["dv_cardinality"].append(
-                    int(e.get("dv_cardinality") or 0))
-                bounds = e.get("bounds")
-                for c in stats_columns:
-                    if bounds is not None:
-                        mn, mx = bounds.get(c, (None, None))
-                    else:
-                        mn, mx = e.get(f"min_{c}"), e.get(f"max_{c}")
-                    if btypes[c] is None:
-                        mn = mx = None
-                    cols[f"min_{c}"].append(mn)
-                    cols[f"max_{c}"].append(mx)
-                nulls = e.get("null_counts")
-                ndv = e.get("ndv")
-                for c in stats_columns:
-                    nv = (nulls.get(c) if nulls is not None
-                          else e.get(f"null_{c}"))
-                    cols[f"null_{c}"].append(
-                        int(nv) if nv is not None else None)
-                    dv = (ndv.get(c) if ndv is not None
-                          else e.get(f"ndv_{c}"))
-                    cols[f"ndv_{c}"].append(
-                        int(dv) if dv is not None else None)
-                n += 1
-                if n >= _MANIFEST_BATCH_ROWS:
-                    _flush(cols, n)
-                    cols = {name: [] for name, _ in fields}
-                    n = 0
-            if n or (not descs and state["writer"] is None):
-                _flush(cols, n)
+                chunk.append(e)
+                if len(chunk) >= _MANIFEST_BATCH_ROWS:
+                    _flush(_entries_batch(chunk, schema, stats_columns,
+                                          btypes))
+                    chunk = []
+            if chunk or (not descs and state["writer"] is None):
+                _flush(_entries_batch(chunk, schema, stats_columns, btypes))
             if state["writer"] is not None:
                 _finalize()
         finally:
@@ -940,11 +944,10 @@ class SnapshotStore:
                 continue
             candidates.append((seg, u, r))
 
-        # patch the hit segments in a thread pool (bounded arrow
-        # filter+write each — the same pooling shape as footer stats /
-        # finalization renames); indices are reserved up front so names
-        # stay deterministic per segment
-        def _rewrite(cand, idx: int):
+        def _patch(cand):
+            """The segment's rows with its removed paths dropped and its
+            updated paths' new pointers, and the paths it holds among
+            them; None for rows when it holds none (carried as is)."""
             seg, (u0, u1), (r0, r1) = cand
             upd = updated.slice(u0, u1 - u0)
             # one lookup: index < upd.num_rows is an update, the rest
@@ -955,7 +958,7 @@ class SnapshotStore:
             pos = pc.index_in(t["path"], value_set=keys)
             hits = t["path"].filter(pc.is_valid(pos))
             if not len(hits):
-                return dict(seg), hits
+                return None, hits
             keep = pc.fill_null(pc.less(pos, upd.num_rows), True)
             t, pos = t.filter(keep), pos.filter(keep)
             is_upd = pc.is_valid(pos)
@@ -963,20 +966,44 @@ class SnapshotStore:
                 t = t.set_column(
                     t.schema.get_field_index(name), name,
                     pc.if_else(is_upd, upd[name].take(pos), t[name]))
-            if not t.num_rows:
-                return None, hits
-            final = self.segment_path(version, idx)
-            tmp = final + ".manifest-tmp"
-            pq.write_table(t, tmp, compression="zstd")
-            self.fs.rename(tmp, final)
-            return {"path": os.path.relpath(final, self.warehouse),
-                    "entries": t.num_rows,
-                    "min_path": t["path"][0].as_py(),
-                    "max_path": t["path"][t.num_rows - 1].as_py(),
-                    "bytes": self.fs.size(final)}, hits
+            return t, hits
 
         found = []
-        if candidates:
+        stats_types = (properties or {}).get("schema_types")
+        if sum(SEGMENT_ROWS if seg.get("entries") is None else seg["entries"]
+               for seg, _, _ in candidates) < SEGMENT_ROWS:
+            # hit segments that hold fewer than SEGMENT_ROWS entries
+            # together are written as ONE path-sorted run with the added
+            # entries: repeated point commits fold the small ingest
+            # segments they hit instead of rewriting each of them again
+            seg_schema, btypes = _entry_schema(
+                list(stats_columns), stats_types, base_schema)
+            parts = [pa.Table.from_batches([_entries_batch(
+                added, seg_schema, list(stats_columns), btypes)])]
+            for cand in candidates:
+                t, hits = _patch(cand)
+                found.extend(hits.chunks)
+                if t is None:
+                    kept_descs.append(dict(cand[0]))
+                else:
+                    parts.append(t.cast(seg_schema))
+            run = pa.concat_tables(parts).sort_by("path")
+            for off in range(0, run.num_rows, SEGMENT_ROWS):
+                kept_descs.append(self._write_segment(
+                    version, next_idx, run.slice(off, SEGMENT_ROWS)))
+                next_idx += 1
+        else:
+            # patch and write the hit segments in a thread pool (bounded
+            # arrow filter+write each — the same pooling shape as footer
+            # stats / finalization renames); indices are reserved up
+            # front so names stay deterministic per segment
+            def _rewrite(cand, idx: int):
+                t, hits = _patch(cand)
+                if t is None:
+                    return dict(cand[0]), hits
+                return (self._write_segment(version, idx, t)
+                        if t.num_rows else None), hits
+
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(
                     max_workers=min(16, len(candidates))) as pool:
@@ -987,6 +1014,12 @@ class SnapshotStore:
                     kept_descs.append(desc)
                 found.extend(hits.chunks)
             next_idx = len(candidates)
+            if added:
+                kept_descs.extend(self.write_manifest(
+                    version, added, stats_columns,
+                    stats_types=stats_types, presorted=True,
+                    start_idx=next_idx, allow_legacy_name=False,
+                    arrow_schema=base_schema))
 
         keys = pa.chunked_array([upd_paths, removed], type=pa.string())
         missing = keys.filter(pc.invert(pc.is_in(
@@ -997,13 +1030,6 @@ class SnapshotStore:
                 f"{len(missing)} removed/updated paths not in the base "
                 f"manifest (first: {missing[:3].to_pylist()})")
 
-        stats_types = (properties or {}).get("schema_types")
-        if added:
-            kept_descs.extend(self.write_manifest(
-                version, added, stats_columns,
-                stats_types=stats_types, presorted=True,
-                start_idx=next_idx, allow_legacy_name=False,
-                arrow_schema=base_schema))
         if not kept_descs:
             # empty table: one empty segment keeps every reader trivial
             kept_descs = self.write_manifest(
@@ -1035,6 +1061,19 @@ class SnapshotStore:
 
         return self._publish(version, current, kept_descs, schema,
                              properties, actions=_delta_actions)
+
+    def _write_segment(self, version: int, idx: int, t: pa.Table) -> dict:
+        """Write the path-sorted rows ``t`` as segment ``idx`` of
+        ``version`` (tmp name, then rename) and return its descriptor."""
+        final = self.segment_path(version, idx)
+        tmp = final + ".manifest-tmp"
+        pq.write_table(t, tmp, compression="zstd")
+        self.fs.rename(tmp, final)
+        return {"path": os.path.relpath(final, self.warehouse),
+                "entries": t.num_rows,
+                "min_path": t["path"][0].as_py(),
+                "max_path": t["path"][t.num_rows - 1].as_py(),
+                "bytes": self.fs.size(final)}
 
     def _coalesce_segments(self, version: int, descs: list[dict],
                            stats_columns, stats_types,

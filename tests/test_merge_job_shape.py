@@ -297,3 +297,140 @@ def test_scan_plans_without_spark_job(spark, tmp_path, monkeypatch):
         assert sorted(map(tuple, other.select(df.columns).collect())) \
             == sorted(map(tuple, df.collect())), kw
     assert len(dist) == len(cases)
+
+
+def _decoded_dvs(store, version) -> dict:
+    """file → (positions, cardinality, max_row_count, manifest
+    cardinality) from the row each live entry's sidecar holds for it."""
+    out = {}
+    for e in store.manifest_entries(version):
+        if e["dv_path"]:
+            rows = [r for r in pq.read_table(store.abs(e["dv_path"]))
+                    .to_pylist() if r["referenced_file"] == e["path"]]
+            assert len(rows) == 1, e
+            r = rows[0]
+            out[e["path"]] = (r["positions"], r["cardinality"],
+                              r["max_row_count"], e["dv_cardinality"])
+    return out
+
+
+def _ingest_files(store, version) -> list:
+    """The data files ``version`` adds over its parent: each one's
+    manifest entry (without its name and byte size) and its rows in
+    ``_pos`` order."""
+    prev = {e["path"] for e in store.manifest_entries(version - 1)}
+    return [({k: v for k, v in e.items() if k not in ("path", "bytes")},
+             pq.read_table(store.abs(e["path"])).sort_by("_pos").to_pylist())
+            for e in store.manifest_entries(version)
+            if e["path"] not in prev]
+
+
+@pytest.mark.parametrize("seed", [1, 5])
+def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
+                                          seed):
+    """The same batches merged on the driver (``DRIVER_ROWS`` at its
+    default) and by Spark (``DRIVER_ROWS`` = 0) give equal decoded DV
+    rows, equal ingest files and equal scans — over a file whose
+    current DV is in a synth-written sidecar, then in a merge-written
+    one, a file with no DV, a hot file merged four times, a batch whose
+    affected files' DVs exceed the budget (Spark DV write) and a batch
+    of budget + 1 rows (Spark path throughout)."""
+    from moonlink_spark.operators import merge as merge_op
+
+    tables = {}
+    for name in ("spark", "driver"):
+        w = str(tmp_path / name)
+        synthesize_cdc_aftermath(w, seed=seed, n_files=12,
+                                 rows_per_file=(40, 90), n_repos=4,
+                                 content_bytes=(16, 48))
+        tables[name] = MoonTable(spark, w, CFG)
+    store = tables["driver"].store
+    loc = scan(spark, store, store.read_snapshot(), with_location=True)
+    by_file: dict[str, list] = {}
+    for r in loc.select(*KEYS, "lang", FILE_COL).orderBy(*KEYS).collect():
+        by_file.setdefault(r[FILE_COL], []).append(tuple(r[:4]))
+    ents = {e["path"]: e for e in store.manifest_entries(0)}
+    big = [f for f in sorted(by_file) if len(by_file[f]) >= 8]
+    dirty = next(f for f in big if ents[f]["dv_path"])
+    clean = next(f for f in big if not ents[f]["dv_path"])
+    hot = max((f for f in big if f not in (dirty, clean)),
+              key=lambda f: len(by_file[f]))
+    d, c, h = by_file[dirty], by_file[clean], by_file[hot]
+
+    def dele(k):
+        return (*k[:3], None, None, "delete")
+
+    def up(k, i):
+        return (*k, f"updated {i}", "upsert")
+
+    def new(i):
+        return (f"orgN/r{i % 2}", f"src/new{i}.rs", f"{i:040x}", "rust",
+                f"new {i}", "upsert")
+
+    # (rows, the driver run's budget, the Spark steps the driver run takes)
+    batches = [
+        # upserts out of key order: the ingest file is sorted
+        ([dele(d[0]), dele(d[1]), dele(c[0]), dele(c[1]), new(1),
+          up(h[1], 1), new(0), up(h[0], 0)], None, []),
+        ([dele(d[2]), dele(d[3]), dele(h[2]), new(2)], None, []),
+        ([dele(h[3]), up(c[2], 2)], None, []),
+        ([dele(h[4])], None, []),
+        ([dele(d[4]), dele(d[5])], 2, ["_spark_dv"]),
+        ([dele(c[3]), new(3), new(4)], 2, ["_spark_dv", "_spark_ingest"]),
+    ]
+    calls = []
+    for fn in ("_spark_dv", "_spark_ingest"):
+        def spy(*a, _fn=fn, _real=getattr(merge_op, fn), **k):
+            calls.append(_fn)
+            return _real(*a, **k)
+        monkeypatch.setattr(merge_op, fn, spy)
+
+    sidecars = []
+    for i, (rows, budget, spark_steps) in enumerate(batches):
+        got = {}
+        sidecars.append(store.manifest_lookup(
+            store.current_version(), [dirty, clean], ("dv_path",)))
+        for name, t in tables.items():
+            monkeypatch.setattr(
+                merge_op, "DRIVER_ROWS",
+                0 if name == "spark" else budget or merge_op.FLUSH_ROWS)
+            calls.clear()
+            snap = t.merge(spark.createDataFrame(rows, CHANGE_DDL),
+                           key_columns=KEYS)
+            if name == "driver":
+                assert calls == spark_steps, i
+            got[name] = (_decoded_dvs(t.store, snap.version),
+                         _ingest_files(t.store, snap.version),
+                         sorted(map(tuple, t.scan().collect())))
+        assert got["driver"] == got["spark"], i
+    # premises: the hot file's five merged deletes are all in its DV;
+    # the dirty file's DV sat in a synth sidecar before the first batch
+    # and in a merge-written one before the second; the clean file had
+    # none
+    assert got["driver"][0][hot][1] == ents[hot]["dv_cardinality"] + 5
+    assert sidecars[0][dirty]["dv_path"] == ents[dirty]["dv_path"]
+    assert "merge-" in sidecars[1][dirty]["dv_path"]
+    assert sidecars[0][clean]["dv_path"] is None
+
+
+def test_benchmark_shaped_merge_runs_at_most_six_jobs(spark, tmp_path):
+    """A batch shaped like the ingest benchmark's (150 upserts, 150
+    deletes, 150 new keys) starts at most six Spark jobs: the batch read
+    and the key match; the DV merge and the ingest write start none."""
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=1, n_files=20, content_bytes=(16, 64))
+    t = MoonTable(spark, w, CFG)
+    rows = t.scan(0).select(*KEYS, "lang").orderBy(*KEYS).collect()
+    assert len(rows) >= 300
+    batch = ([(*r, "NEW", "upsert") for r in rows[0:300:2]]
+             + [(*r[:3], None, None, "delete") for r in rows[1:300:2]]
+             + [("orgN/new", f"p{i}", f"{i:040x}", "go", "x", "upsert")
+                for i in range(150)])
+    df = spark.createDataFrame(batch, CHANGE_DDL)
+    before = _job_ids(spark)
+    snap = t.merge(df, key_columns=KEYS)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = _jobs_since(spark, before)
+    assert 0 < len(jobs) <= 6, jobs
+    assert snap.properties["inserted_rows"] == 300
+    assert t.scan().count() == len(rows) - 150 + 150

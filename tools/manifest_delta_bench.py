@@ -11,7 +11,13 @@ commit cost is pure metadata work), then measures:
   schema evolution cost now);
 - ``tablewide`` — ``store.commit_delta`` updating the DV pointer of
   EVERY entry (a batch that touches every file), with the process's
-  resident set sampled before and at its peak during that commit.
+  resident set sampled before and at its peak during that commit;
+- ``point_loop`` — 60 point commits on a 20-entry base, each updating
+  the DV pointers of the first 10 live paths and adding 3 entries whose
+  paths spread over the shard prefixes (the ingest-merge shape): the
+  manifest segments the loop reads and writes, its median commit time,
+  and a sha256 of the decoded final manifest rows (equal across code
+  versions that commit the same content).
 
 Writes one JSON line with every run; commit as ``MANIFEST_DELTA.json``.
 The claim this artifact records: delta/reuse commit cost is flat in
@@ -24,19 +30,26 @@ Usage: python tools/manifest_delta_bench.py [sizes ...]
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import json
 import os
 import random
+import re
+import statistics
 import sys
 import tempfile
 import threading
 import time
+import zlib
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
+from moonlink_spark.fs import PosixFileSystem  # noqa: E402
 from moonlink_spark.snapshotstore import SnapshotStore  # noqa: E402
 
 STATS = ("repo", "path", "commit", "lang")
@@ -143,18 +156,100 @@ def bench(n: int, tmp: str) -> dict:
             "tablewide_peak_rss_mb": round(rss_peak)}
 
 
+_SEGMENT = re.compile(r"manifest-v\d+(-p\d+)?\.parquet$")
+
+
+class _SegmentWrites(PosixFileSystem):
+    """Counts manifest-segment writes: the rename that publishes one."""
+
+    writes = 0
+
+    def rename(self, src, dst):
+        self.writes += bool(_SEGMENT.search(dst))
+        super().rename(src, dst)
+
+
+@contextlib.contextmanager
+def _segment_reads(counter: dict):
+    """Count segment opens through ``pq.read_table`` / ``pq.ParquetFile``
+    (the names ``snapshotstore`` calls) in ``counter["reads"]``."""
+    saved = pq.read_table, pq.ParquetFile
+
+    def counted(fn):
+        def wrap(path, *a, **k):
+            counter["reads"] += bool(_SEGMENT.search(str(path)))
+            return fn(path, *a, **k)
+        return wrap
+    pq.read_table, pq.ParquetFile = map(counted, saved)
+    try:
+        yield
+    finally:
+        pq.read_table, pq.ParquetFile = saved
+
+
+def point_loop(tmp: str, commits: int = 60) -> dict:
+    """The ingest-merge commit shape repeated: see ``point_loop`` in the
+    module docstring."""
+    fs, reads = _SegmentWrites(), {"reads": 0}
+    store = SnapshotStore(f"{tmp}/loop", fs)
+    store.init_warehouse()
+    store.commit(entries(20), schema=SCHEMA, stats_columns=STATS,
+                 properties={"flush_lsn": 0})
+    live = sorted(e["path"] for e in entries(20))
+    secs = []
+    fs.writes = 0
+    with _segment_reads(reads):
+        for c in range(commits):
+            names = [f"data-c{c:03d}-{j}.parquet" for j in range(3)]
+            added = [dict(e, path=f"data/s{zlib.crc32(n.encode()) % 64:02x}"
+                                  f"/{n}")
+                     for e, n in zip(entries(3), names)]
+            t0 = time.monotonic()
+            store.commit_delta(
+                c, added=added,
+                updated=pointers(live[:10], f"dv/s00/dv-c{c:03d}.parquet",
+                                 c + 1),
+                schema=SCHEMA, stats_columns=STATS,
+                properties={"flush_lsn": c + 1}, expected_parent=c)
+            secs.append(time.monotonic() - t0)
+            live = sorted(live + [e["path"] for e in added])
+    rows = store.manifest_entries(commits)
+    return {"commits": commits, "segment_reads": reads["reads"],
+            "segment_writes": fs.writes,
+            "segments_after": len(store.manifest_segments(commits)),
+            "median_commit_s": round(statistics.median(secs), 4),
+            "manifest_sha256": hashlib.sha256(json.dumps(
+                rows, sort_keys=True, default=str).encode()).hexdigest()}
+
+
+def _sha256_probe_s(mb: int = 256) -> float:
+    """Host CPU probe: seconds to sha256 ``mb`` MiB in one thread."""
+    data = b"\x5a" * (1 << 20)
+    h = hashlib.sha256()
+    t0 = time.monotonic()
+    for _ in range(mb):
+        h.update(data)
+    return round(time.monotonic() - t0, 3)
+
+
 def main():
     # a size given k times is measured k times, each in a fresh warehouse
-    rows = []
+    rows, loops = [], []
     for n in [int(s) for s in sys.argv[1:]] or [10_000, 100_000, 1_000_000]:
         with tempfile.TemporaryDirectory() as tmp:
             rows.append(bench(n, tmp))
+    for _ in range(3):
+        with tempfile.TemporaryDirectory() as tmp:
+            loops.append(point_loop(tmp))
     out = {"metric": "manifest_commit_seconds",
            "nproc": len(os.sched_getaffinity(0)),
+           "sha256_probe_s": _sha256_probe_s(),
            "delta_shape": ("scattered: 100 random updates + 100 adds; "
                            "keylocal: 100 contiguous updates; "
-                           "tablewide: every entry updated"),
-           "rows": rows}
+                           "tablewide: every entry updated; point_loop: "
+                           "60 commits of 10 updates of the first live "
+                           "paths + 3 adds on a 20-entry base"),
+           "rows": rows, "point_loop": loops}
     print(json.dumps(out))
 
 
