@@ -23,21 +23,26 @@ merge-on-sync (``iceberg_table_syncer.rs:376-435``):
 Scale shape: the table's manifest is never collected to the driver.
 Only change-batch-sized artifacts touch it: the affected file list,
 those files' manifest rows, their new DV pointers and the ingest file
-stats.  A batch of at most ``DRIVER_ROWS`` rows (the flush budget) is
-read to the driver once, as Arrow: its keys go to the broadcast join
-as a local relation and the matched positions come back as Arrow, and
-the driver unions each affected file's positions with its current
-sidecar row and writes the one DV sidecar and the one ingest file
-itself with pyarrow — no Spark job after the match (the reference
-builds and merges DVs in-process per commit, ``snapshot.rs:925-998``).
-A larger batch, ``broadcast_changes=False``, or affected files whose
-current DVs sum past ``DRIVER_ROWS`` take the Spark path instead: the
-batch is persisted, the DV merge and the ingest write are Spark jobs,
-and the new DV pointers are read back from the sidecars just written.
-The commit patches only the manifest segments that hold an affected
-file, as Arrow, and carries every other segment by reference (cf. the
-reference's manifest-rewrite-as-data design,
-``puffin_writer_proxy.rs:253-364``); there is no second commit path.
+stats.  The batch is persisted, and a key-sized read of at most
+``FLUSH_ROWS`` + 1 of its rows (keys, ``_op`` and each upsert's
+estimated bytes) picks the write path.  A batch of at most
+``FLUSH_ROWS`` rows (one ingest file) whose upserts fit
+``driver_budget`` (a sixteenth of the smaller of
+``spark.driver.maxResultSize`` and the driver heap) is written on the
+driver: its keys go to the broadcast join as a local relation, the
+matched positions come back as Arrow, the driver unions each affected
+file's positions with its current sidecar row and writes the one DV
+sidecar with pyarrow, and the upserts are read once as Arrow and
+written as the one ingest file — no Spark job after the match and that
+read (the reference builds and merges DVs in-process per commit,
+``snapshot.rs:925-998``).  A larger or wider batch, or
+``broadcast_changes=False``, takes the Spark path: the DV merge and the
+ingest write are Spark jobs, and the new DV pointers are read back
+from the sidecars just written.  The commit patches only the manifest
+segments that hold an affected file, as Arrow, and carries every other
+segment by reference (cf. the reference's manifest-rewrite-as-data
+design, ``puffin_writer_proxy.rs:253-364``); there is no second commit
+path.
 
 Concurrency: artifact names embed a per-attempt random nonce, so two
 committers racing from the same base version can never overwrite each
@@ -62,9 +67,16 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    MapType,
+    StringType,
+    StructType,
+    TimestampType,
+)
 
 from moonlink_spark import metrics as mtr
 from moonlink_spark.config import TableConfig
@@ -90,15 +102,46 @@ from moonlink_spark.snapshotstore import (
 
 OP_COL = "_op"
 # the mem-slice flush row budget (mooncake_table_config.rs:158-163):
-# ingest files roll at it
+# ingest files roll at it, so a batch of at most this many rows is one
+# ingest file on either write path
 FLUSH_ROWS = 131_072
-# a batch of at most this many rows, whose affected files' current DVs
-# hold at most this many positions, is merged on the driver (one ingest
-# file, one DV sidecar); tests lower it to force the Spark path
-DRIVER_ROWS = FLUSH_ROWS
 # affected files per DV sidecar part (Spark) or row group (driver): a
 # scan reading one file's DV row prunes the rest by footer stats
 DV_FILES_PER_PART = 512
+
+
+def driver_budget(spark: SparkSession) -> int:
+    """Estimated upsert payload bytes the driver write path may read:
+    a sixteenth of the smaller of ``spark.driver.maxResultSize`` (what
+    one job may return to the driver; 0 = unlimited) and the driver
+    heap.  The JVM holds the read in the cached batch, in a task's
+    Arrow buffer and in the collected result, and in local mode the
+    executors share that heap.  On a 1 GiB driver the budget is 64 MiB;
+    the widest batch ``tools/merge_path_bench.py`` measured (63 MiB of
+    upserts) completed there on the driver path, faster than the Spark
+    write (``MERGE_PATH_CROSSOVER.json``)."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    limits = [conf.getSizeAsBytes(k, "1g")
+              for k in ("spark.driver.maxResultSize", "spark.driver.memory")]
+    return min(b for b in limits if b > 0) // 16
+
+
+def _row_bytes(schema: StructType, cols: list[str]) -> Column:
+    """A row's size over ``cols`` as the driver read holds it: the
+    encoded length of a string or binary, the JSON length of a nested
+    value, and 16 bytes (the widest fixed-width Arrow value, a decimal)
+    for any other type."""
+    parts = []
+    for c in cols:
+        t = schema[c].dataType
+        if isinstance(t, (StringType, BinaryType)):
+            size = F.octet_length(c)
+        elif isinstance(t, (ArrayType, MapType, StructType)):
+            size = F.octet_length(F.to_json(c))
+        else:
+            size = F.lit(16)
+        parts.append(F.coalesce(size, F.lit(0)))
+    return sum(parts[1:], parts[0])
 
 
 def _pointers(sidecar: pa.Table, rel: str) -> pa.Table:
@@ -243,15 +286,13 @@ def _spark_dv(spark: SparkSession, store: SnapshotStore, new_dv: DataFrame,
     return dv_pointers(store, new_rels)
 
 
-def _driver_ingest(store: SnapshotStore, batch: pa.Table,
-                   data_cols: list[str], key_columns: list[str],
-                   job_id: str, compression: str) -> list[str]:
-    """The batch's upserts as one ingest file: sorted on the keys with
-    nulls first (Spark's ascending order), ``_pos`` = row number."""
-    ins = (batch.filter(pc.equal(batch[OP_COL], "upsert"))
-           .select(data_cols)
-           .sort_by([(k, "ascending") for k in key_columns],
-                    null_placement="at_start"))
+def _driver_ingest(store: SnapshotStore, inserts: pa.Table,
+                   key_columns: list[str], job_id: str,
+                   compression: str) -> list[str]:
+    """The upserts as one ingest file: sorted on the keys with nulls
+    first (Spark's ascending order), ``_pos`` = row number."""
+    ins = inserts.sort_by([(k, "ascending") for k in key_columns],
+                          null_placement="at_start")
     ins = ins.append_column(
         POS_COL, pa.array(np.arange(ins.num_rows, dtype=np.int64)))
     return [_publish(store, ins, DATA_DIR, f"data-{job_id}", job_id,
@@ -259,14 +300,13 @@ def _driver_ingest(store: SnapshotStore, batch: pa.Table,
                          compression, compression))]
 
 
-def _spark_ingest(store: SnapshotStore, changes: DataFrame,
-                  data_cols: list[str], key_columns: list[str], n_ins: int,
-                  job_id: str, compression: str) -> list[str]:
-    """The batch's upserts as ingest files written by Spark, rolled at
+def _spark_ingest(store: SnapshotStore, inserts: DataFrame,
+                  key_columns: list[str], n_ins: int, job_id: str,
+                  compression: str) -> list[str]:
+    """The upserts as ingest files written by Spark, rolled at
     ``FLUSH_ROWS`` rows."""
     tmp = os.path.join(store.warehouse, "tmp", job_id, "ins")
     n_files = max(1, math.ceil(n_ins / FLUSH_ROWS))
-    inserts = changes.filter(F.col(OP_COL) == "upsert").select(*data_cols)
     final = assign_positions(
         inserts.repartitionByRange(n_files, *key_columns)
         .sortWithinPartitions(*key_columns))
@@ -302,32 +342,43 @@ def merge_into(
     job_id = f"{job_tag}-v{snapshot.version:06d}-{nonce}"
     data_cols = [c for c in snapshot.schema if c != POS_COL]
     k0 = key_columns[0]
-    # one read of a batch within the budget replaces the persisted batch
-    # and every later pass over it; a larger one is persisted instead
-    batch = None
-    if broadcast_changes:
-        batch = changes.limit(DRIVER_ROWS + 1).toArrow()
-        if batch.num_rows > DRIVER_ROWS:
-            batch = None
-    if batch is None:
-        changes = changes.persist()
+    is_up = F.col(OP_COL) == "upsert"
+    changes = changes.persist()
     new_dv = None
     try:
+        # a batch that is one ingest file and whose upserts fit the
+        # driver's budget is written on the driver.  A key-sized read of
+        # at most FLUSH_ROWS + 1 rows decides it, and gives that batch's
+        # key range (bounds pruning), upsert count (ingest-file sizing)
+        # and keys
+        key_rows = None
+        if broadcast_changes:
+            key_rows = changes.select(
+                *key_columns, OP_COL,
+                F.when(is_up, _row_bytes(changes.schema, data_cols))
+                .alias("_bytes")).limit(FLUSH_ROWS + 1).toArrow()
+            if (key_rows.num_rows > FLUSH_ROWS
+                    or (pc.sum(key_rows["_bytes"]).as_py() or 0)
+                    > driver_budget(spark)):
+                key_rows = None
+        on_driver = key_rows is not None
+
         # -- 1. match change keys to live row positions ------------------
-        # the batch's lead-key range (bounds pruning) and upsert count
-        # (ingest-file sizing): from the Arrow batch, or one pass over
-        # the persisted one
-        if batch is not None:
-            lo, hi = _key_range(batch[k0], changes.schema[k0].dataType)
-            n_ins = pc.sum(pc.equal(batch[OP_COL], "upsert")).as_py() or 0
+        if on_driver:
+            lo, hi = _key_range(key_rows[k0],
+                                changes.schema[k0].dataType)
+            n_ins = (pc.sum(pc.equal(key_rows[OP_COL], "upsert")).as_py()
+                     or 0)
             keys = spark.createDataFrame(
-                batch.select(key_columns),
+                key_rows.select(key_columns),
                 schema=StructType([changes.schema[k] for k in key_columns]))
         else:
+            # one pass over the persisted batch yields both the key
+            # range and the upsert count — no separate count job later
             stats = changes.agg(
                 F.min(k0).alias("lo"), F.max(k0).alias("hi"),
-                F.sum(F.when(F.col(OP_COL) == "upsert", 1)
-                      .otherwise(0)).alias("n_ins")).collect()[0]
+                F.sum(F.when(is_up, 1).otherwise(0)).alias("n_ins")
+            ).collect()[0]
             lo, hi = stats["lo"], stats["hi"]
             n_ins = int(stats["n_ins"] or 0)
             keys = changes.select(*key_columns)
@@ -377,8 +428,7 @@ def merge_into(
         # CDC batch touches), not table-sized, so safe to plan with
         # driver-side: an Arrow read of the matched positions, or a
         # grouped frame cached for the Spark DV write
-        new_pos = None
-        if batch is not None:
+        if on_driver:
             new_pos = _positions_by_file(
                 matched.select(FILE_COL, POS_COL).toArrow())
             affected = list(new_pos)
@@ -395,19 +445,11 @@ def merge_into(
         if affected:
             # driver lookups in the manifest segments commit_delta
             # patches anyway
-            ents = store.manifest_lookup(
-                snapshot.version, affected,
-                ("dv_path", "rows", "dv_cardinality"))
-            if (new_pos is not None
-                    and sum(e["dv_cardinality"] or 0 for e in ents.values())
-                    <= DRIVER_ROWS):
+            ents = store.manifest_lookup(snapshot.version, affected,
+                                         ("dv_path", "rows"))
+            if on_driver:
                 updated = _driver_dv(store, ents, new_pos, job_id)
             else:
-                if new_dv is None:
-                    new_dv = local_df(
-                        spark, "referenced_file string, positions "
-                               "array<bigint>",
-                        [affected, [new_pos[f] for f in affected]])
                 updated = _spark_dv(spark, store, new_dv, ents, job_id)
             store.fs.rmtree(os.path.join(store.warehouse, "tmp", job_id))
             # DV build + publish wall (OTEL sync_deletion_vectors
@@ -418,13 +460,13 @@ def merge_into(
         # -- 3. write inserted rows as fresh ingest files ----------------
         new_entries: list[dict] = []
         if n_ins:
-            if batch is not None:
-                rels = _driver_ingest(store, batch, data_cols, key_columns,
+            inserts = changes.filter(is_up).select(*data_cols)
+            if on_driver:
+                rels = _driver_ingest(store, inserts.toArrow(), key_columns,
                                       job_id, config.ingest_compression)
             else:
-                rels = _spark_ingest(store, changes, data_cols, key_columns,
-                                     n_ins, job_id,
-                                     config.ingest_compression)
+                rels = _spark_ingest(store, inserts, key_columns, n_ins,
+                                     job_id, config.ingest_compression)
             for rel, st in zip(rels, footer_stats_many(
                     [store.abs(r) for r in rels], config.stats_columns)):
                 if st["rows"]:
@@ -469,5 +511,4 @@ def merge_into(
     finally:
         if new_dv is not None:
             new_dv.unpersist()
-        if batch is None:
-            changes.unpersist()
+        changes.unpersist()

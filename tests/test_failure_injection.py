@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from moonlink_spark.config import CompactionConfig, TableConfig
 from moonlink_spark.engine import MoonTable
 from moonlink_spark.fs import LocalObjectStoreFileSystem, PosixFileSystem
+from moonlink_spark.operators import merge as merge_op
 from moonlink_spark.snapshotstore import SnapshotStore
 from moonlink_spark.synth import synthesize_cdc_aftermath
 
@@ -170,6 +171,26 @@ def test_orphans_from_failed_merge_are_expired(spark, wh, flaky_cls):
     assert out["deleted_files"]  # the orphaned artifacts went away
     assert sha_set(t) == before
     batch.unpersist()
+
+
+@pytest.fixture()
+def spark_write_path(monkeypatch):
+    """A driver budget no batch fits: every merge takes the Spark DV
+    and ingest write instead of the driver one."""
+    monkeypatch.setattr(merge_op, "driver_budget", lambda spark: -1)
+
+
+@pytest.mark.parametrize("op", ["write_atomic", "rename", "publish_cas",
+                                "create_exclusive"])
+def test_spark_path_merge_failure_leaves_table_intact_and_retryable(
+        spark, wh, op, flaky_cls, spark_write_path):
+    test_merge_failure_leaves_table_intact_and_retryable(spark, wh, op,
+                                                         flaky_cls)
+
+
+def test_spark_path_orphans_from_failed_merge_are_expired(
+        spark, wh, flaky_cls, spark_write_path):
+    test_orphans_from_failed_merge_are_expired(spark, wh, flaky_cls)
 
 
 def test_objectstore_rename_crash_leaves_published_state_intact(spark, wh):

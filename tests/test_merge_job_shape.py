@@ -5,6 +5,10 @@ file's current sidecar row only."""
 
 import datetime
 import decimal
+import json
+import os
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 import pytest
@@ -328,13 +332,13 @@ def _ingest_files(store, version) -> list:
 @pytest.mark.parametrize("seed", [1, 5])
 def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
                                           seed):
-    """The same batches merged on the driver (``DRIVER_ROWS`` at its
-    default) and by Spark (``DRIVER_ROWS`` = 0) give equal decoded DV
+    """The same batches merged on the driver (``driver_budget`` at its
+    default) and by Spark (a budget no batch fits) give equal decoded DV
     rows, equal ingest files and equal scans — over a file whose
     current DV is in a synth-written sidecar, then in a merge-written
-    one, a file with no DV, a hot file merged four times, a batch whose
-    affected files' DVs exceed the budget (Spark DV write) and a batch
-    of budget + 1 rows (Spark path throughout)."""
+    one, a file with no DV, a hot file merged four times, a batch of
+    ``FLUSH_ROWS`` + 1 rows (Spark path in both runs) and an empty
+    batch."""
     from moonlink_spark.operators import merge as merge_op
 
     tables = {}
@@ -367,7 +371,8 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
         return (f"orgN/r{i % 2}", f"src/new{i}.rs", f"{i:040x}", "rust",
                 f"new {i}", "upsert")
 
-    # (rows, the driver run's budget, the Spark steps the driver run takes)
+    # (rows, FLUSH_ROWS for both runs, the Spark steps the driver run
+    # takes)
     batches = [
         # upserts out of key order: the ingest file is sorted
         ([dele(d[0]), dele(d[1]), dele(c[0]), dele(c[1]), new(1),
@@ -375,8 +380,8 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
         ([dele(d[2]), dele(d[3]), dele(h[2]), new(2)], None, []),
         ([dele(h[3]), up(c[2], 2)], None, []),
         ([dele(h[4])], None, []),
-        ([dele(d[4]), dele(d[5])], 2, ["_spark_dv"]),
         ([dele(c[3]), new(3), new(4)], 2, ["_spark_dv", "_spark_ingest"]),
+        ([], None, []),
     ]
     calls = []
     for fn in ("_spark_dv", "_spark_ingest"):
@@ -386,20 +391,23 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
         monkeypatch.setattr(merge_op, fn, spy)
 
     sidecars = []
-    for i, (rows, budget, spark_steps) in enumerate(batches):
+    real_budget, flush_rows = merge_op.driver_budget, merge_op.FLUSH_ROWS
+    for i, (rows, flush, spark_steps) in enumerate(batches):
         got = {}
         sidecars.append(store.manifest_lookup(
             store.current_version(), [dirty, clean], ("dv_path",)))
+        monkeypatch.setattr(merge_op, "FLUSH_ROWS", flush or flush_rows)
         for name, t in tables.items():
             monkeypatch.setattr(
-                merge_op, "DRIVER_ROWS",
-                0 if name == "spark" else budget or merge_op.FLUSH_ROWS)
+                merge_op, "driver_budget",
+                (lambda _: -1) if name == "spark" else real_budget)
             calls.clear()
             snap = t.merge(spark.createDataFrame(rows, CHANGE_DDL),
                            key_columns=KEYS)
             if name == "driver":
                 assert calls == spark_steps, i
             got[name] = (_decoded_dvs(t.store, snap.version),
+                         snap.properties["inserted_rows"],
                          _ingest_files(t.store, snap.version),
                          sorted(map(tuple, t.scan().collect())))
         assert got["driver"] == got["spark"], i
@@ -415,8 +423,9 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
 
 def test_benchmark_shaped_merge_runs_at_most_six_jobs(spark, tmp_path):
     """A batch shaped like the ingest benchmark's (150 upserts, 150
-    deletes, 150 new keys) starts at most six Spark jobs: the batch read
-    and the key match; the DV merge and the ingest write start none."""
+    deletes, 150 new keys) starts at most six Spark jobs: the key-sized
+    read that sizes the batch, the key match and the read of the
+    upserts; the DV merge and the ingest write start none."""
     w = str(tmp_path / "wh")
     synthesize_cdc_aftermath(w, seed=1, n_files=20, content_bytes=(16, 64))
     t = MoonTable(spark, w, CFG)
@@ -434,3 +443,76 @@ def test_benchmark_shaped_merge_runs_at_most_six_jobs(spark, tmp_path):
     assert 0 < len(jobs) <= 6, jobs
     assert snap.properties["inserted_rows"] == 300
     assert t.scan().count() == len(rows) - 150 + 150
+
+
+_WIDE_MERGE = """
+import json, os, sys
+from pyspark.sql import SparkSession
+from moonlink_spark.engine import MoonTable
+from moonlink_spark.operators import merge as merge_op
+from moonlink_spark.synth import synthesize_cdc_aftermath
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.driver.maxResultSize", "1m")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+w = sys.argv[1]
+synthesize_cdc_aftermath(w, seed=3, n_files=4, rows_per_file=(20, 40),
+                         n_repos=2, content_bytes=(16, 32))
+t = MoonTable(spark, w)
+live = t.scan().count()
+victims = [(*r, None, None, "delete")
+           for r in t.scan().select("repo", "path", "commit").collect()[:5]]
+wide = [("orgW/wide", f"f{i}", f"{i:040x}", "rust",
+         os.urandom(4096).hex(), "upsert") for i in range(300)]
+calls = []
+for fn in ("_spark_dv", "_spark_ingest"):
+    def spy(*a, _real=getattr(merge_op, fn), _fn=fn, **k):
+        calls.append(_fn)
+        return _real(*a, **k)
+    setattr(merge_op, fn, spy)
+t.merge(spark.createDataFrame(victims + wide, "%s"),
+        key_columns=["repo", "path", "commit"])
+print(json.dumps({
+    "calls": calls, "live": live, "after": t.scan().count(),
+    "wide_bytes": t.scan().filter("repo = 'orgW/wide'")
+    .selectExpr("sum(octet_length(content))").first()[0]}))
+spark.stop()
+""" % CHANGE_DDL
+
+
+def test_wide_batch_merges_under_low_max_result_size(tmp_path):
+    """300 upserts of 8 KB each (2.4 MB) under a 1 MB
+    ``spark.driver.maxResultSize``: the batch's payload exceeds the
+    driver budget, so the merge reads only its keys to the driver, takes
+    the Spark DV and ingest write and commits every row.  A session of
+    its own, as that limit is fixed at launch."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _WIDE_MERGE, str(tmp_path / "wh")],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["calls"] == ["_spark_dv", "_spark_ingest"]
+    assert out["after"] == out["live"] - 5 + 300
+    assert out["wide_bytes"] == 300 * 8192
+
+
+def test_row_bytes_sizes_every_column_type(spark):
+    """The driver budget's row size: encoded bytes of strings and
+    binaries, JSON bytes of nested values, 16 bytes of any fixed-width
+    value, nothing for a null string."""
+    from moonlink_spark.operators.merge import _row_bytes
+
+    df = spark.createDataFrame(
+        [("abc", None, bytearray(b"\x00\x01"), ["a", "b"], {"k": 1},
+          (1,), 7, decimal.Decimal("1.50"),
+          datetime.datetime(2024, 1, 2), True)],
+        "s string, n string, b binary, a array<string>, m map<string,int>, "
+        "st struct<x:int>, i int, d decimal(12,2), ts timestamp, "
+        "f boolean")
+    got = df.select(_row_bytes(df.schema, df.columns)).first()[0]
+    assert got == 3 + 0 + 2 + len('["a","b"]') + len('{"k":1}') \
+        + len('{"x":1}') + 4 * 16
