@@ -26,6 +26,7 @@ import math
 import os
 from typing import Mapping
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,7 @@ from moonlink_spark.snapshotstore import (
     CommitConflict,
     Snapshot,
     SnapshotStore,
+    bound_type,
     read_pinned,
     staged_names,
 )
@@ -53,6 +55,31 @@ from moonlink_spark.snapshotstore import (
 # index-merge trigger: min 16 small DV sidecars, mirroring
 # index_merge_config.rs:258-268 (min 16 / max 32 index blocks).
 MIN_DV_SIDECARS_TO_MERGE = 16
+
+
+def _column_batches(paths: list[str], columns: list[str],
+                    types: Mapping[str, str] | None):
+    """``columns`` of the parquet files ``paths`` as Arrow record
+    batches, one file after another in the order given, streamed a
+    batch at a time (a consumer that stops early reads no further), cast
+    to the table's column types (``types``: column → DDL type, the
+    snapshot's ``schema_types``) as Spark reads them under the pinned
+    schema: a column a file lacks reads as nulls.  A column without a
+    known type is typed by the first file's footer, as Spark's
+    inference types it."""
+    first = pq.read_schema(paths[0])
+    types = types or {}
+    schema = pa.schema([
+        (c, (bound_type(types[c]) if c in types else None)
+         or first.field(c).type) for c in columns])
+    for path in paths:
+        pf = pq.ParquetFile(path)
+        have = [c for c in columns if c in pf.schema_arrow.names]
+        for part in pf.iter_batches(columns=have):
+            yield pa.record_batch(
+                [part.column(f.name).cast(f.type) if f.name in have
+                 else pa.nulls(part.num_rows, f.type) for f in schema],
+                schema=schema)
 
 
 class MoonTable:
@@ -182,9 +209,9 @@ class MoonTable:
             return base  # the `Nothing` outcome
         t_plan = _time.monotonic() - t_start
 
-        # one column-pruned pass over the candidate files to fix the
-        # Z-order quantile boundaries for the whole job (deterministic,
-        # so resumed runs re-derive identical boundaries)
+        # one column-pruned pass over a sample of the candidate files
+        # fixes the Z-order quantile boundaries for the whole job
+        # (deterministic, so resumed runs re-derive identical boundaries)
         all_inputs = [p for b in bins for p in b.files]
         total_rows = sum(b.rows for b in bins)
         # boundary sample: a deterministic ~64-file subset keeps the
@@ -197,19 +224,15 @@ class MoonTable:
         sample_files = sorted(all_inputs)[::stride][:64]
         approx_rows = max(1, int(total_rows * len(sample_files)
                                  / len(all_inputs)))
-        reader = self.spark.read
-        if base.properties.get("schema_ddl"):
-            # pinning the schema skips a footer-inference pass over the
-            # full candidate file set (one job per 10^12-file plan)
-            reader = reader.schema(base.properties["schema_ddl"])
         if self.config.zorder_columns:
-            sample = reader.parquet(
-                *[self.store.abs(p) for p in sample_files]
-            ).select(*self.config.zorder_columns)
+            zcols = list(self.config.zorder_columns)
+            # the generator reads the sample files with pyarrow inside
+            # the call: the boundary step starts no Spark job
             boundaries = compute_zorder_boundaries(
-                sample, list(self.config.zorder_columns),
-                bits=self.config.zorder_bits, total_rows=approx_rows,
-                curve=self.config.zorder_curve)
+                _column_batches([self.store.abs(p) for p in sample_files],
+                                zcols, base.properties.get("schema_types")),
+                zcols, bits=self.config.zorder_bits,
+                total_rows=approx_rows, curve=self.config.zorder_curve)
         else:
             # clustering off (zorder_columns=()): rewrite preserves
             # (file, pos) order — the reference's own compaction order
@@ -228,16 +251,19 @@ class MoonTable:
         run_bins = bins if max_bins is None else bins[:max_bins]
         from concurrent.futures import ThreadPoolExecutor
 
-        # the candidate set's delete vectors, exploded once and cached —
-        # every bin anti-joins against (a filter of) this one DataFrame
-        # instead of re-reading the DV sidecar parquet per bin
-        all_dv = sorted({p for b in run_bins for p in b.dv_paths})
+        # each bin reads its own delete vectors on the driver
+        # (scan_files) while the whole job's deleted rows are few enough
+        # (the bins run concurrently).  Above that, the candidate set's
+        # DVs are read by Spark once and cached, and every bin
+        # anti-joins against (a filter of) that one DataFrame
+        dv_files = {f: p for b in run_bins for f, p in b.dv_files.items()}
         deletes = None
-        if all_dv:
+        if dv_files and not scan_op.dv_side_on_driver(
+                self.spark, sum(b.deleted_rows for b in run_bins),
+                dv_files):
             deletes = scan_op.deletes_df(
-                self.spark, self.store, all_dv,
-                {f: p for b in run_bins for f, p in b.dv_files.items()}
-            ).persist()
+                self.spark, self.store, sorted(set(dv_files.values())),
+                dv_files).persist()
 
         # AQE is disabled for the rewrite fan-out: adaptive re-planning
         # adds a materialization barrier per shuffle, and concurrent bin

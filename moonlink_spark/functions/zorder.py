@@ -11,8 +11,9 @@ BASELINE.json's north rule.  Design:
    within the prefix), numerics cast to float64;
 2. per-dimension quantile boundaries rank-normalize the proxy into
    ``2**bits`` buckets, so skewed distributions still fill the key space
-   evenly.  They come from one seeded, bounded sample collected to the
-   driver (:func:`compute_zorder_boundaries`); the quantiles are numpy;
+   evenly.  They come from one seeded, bounded sample of Arrow batches
+   read on the driver (:func:`compute_zorder_boundaries`); the
+   quantiles are numpy;
 3. the bucket bits are interleaved (Morton part1by1 spread) into one
    long ``zkey``.  The default Morton key is a plain Spark expression
    (:func:`with_zorder_key`), so the rewrite's scan stage never leaves
@@ -29,9 +30,11 @@ committed data files.
 from __future__ import annotations
 
 import threading
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,7 +109,7 @@ def _quantiles(values: np.ndarray, probs: np.ndarray) -> np.ndarray:
 
 
 def compute_zorder_boundaries(
-    df: DataFrame,
+    batches: pa.Table | Iterable[pa.RecordBatch],
     columns: list[str],
     bits: int = 12,
     sample_cap: int = 262_144,
@@ -114,36 +117,54 @@ def compute_zorder_boundaries(
     total_rows: int | None = None,
     curve: str = "morton",
 ) -> dict[str, np.ndarray]:
-    """Quantile boundaries per clustering column from a seeded sample.
+    """Quantile boundaries per clustering column from a seeded sample of
+    ``batches`` (an Arrow table, or record batches holding ``columns``),
+    drawn and ranked on the driver: no Spark job.
 
-    One column-pruned count + one seeded-sample collect (≤ ``sample_cap``
-    rows regardless of table size); the quantiles themselves are numpy
-    on the driver.  Deterministic for a fixed input file set, so a
-    resumed job re-derives identical boundaries.  (An approxQuantile
-    pass would be exact-er but costs a full aggregate with 2^bits
-    quantile targets — the sample is statistically equivalent for a
-    *layout* decision: bucket skew only costs write balance, never
-    correctness.)"""
-    sel = df.select(*columns)
-    # callers that know the row count (e.g. from manifest metadata) pass
-    # it to skip the count job — at 10^12-file scale the count is a full
-    # footer sweep, while the manifest sum is free
-    n = total_rows if total_rows is not None else sel.count()
-    if n == 0:
+    The sample keeps each row with probability ``fraction = sample_cap
+    * 1.25 / total_rows`` (callers that know the row count from
+    manifest metadata pass it; otherwise the input is counted).  At a
+    fraction of 1 every row is kept, the multiset Spark's ``sample``
+    keeps.  Below it, a ``np.random.default_rng(seed)`` draw keeps rows
+    batch by batch until ``sample_cap`` are held, and no further batch
+    is read.  Deterministic for a fixed batch sequence, so a resumed
+    job re-derives identical boundaries.  (An approxQuantile pass would
+    be exact-er but costs a full aggregate with 2^bits quantile targets
+    — the sample is statistically equivalent for a *layout* decision:
+    bucket skew only costs write balance, never correctness.)
+
+    A null string ranks as ``""`` and a null number as 0, as the
+    rewrite's zkey (:func:`with_zorder_key`) keys them."""
+    if isinstance(batches, pa.Table):
+        batches = batches.to_batches()
+    if total_rows is None:
+        batches = list(batches)
+        total_rows = sum(b.num_rows for b in batches)
+    fraction = min(1.0, (sample_cap * 1.25) / max(1, total_rows))
+    rng = np.random.default_rng(seed)
+    kept, held = [], 0
+    for b in batches:
+        b = b.select(columns)
+        if fraction < 1.0:
+            b = b.filter(pa.array(rng.random(b.num_rows) < fraction))
+        kept.append(b.slice(0, sample_cap - held))
+        held += kept[-1].num_rows
+        if held >= sample_cap:
+            break
+    if not held:
         return ZOrderBoundaries(
             {c: np.array([], dtype=np.float64) for c in columns})
-    fraction = min(1.0, (sample_cap * 1.25) / n)
-    sample = (sel.sample(fraction=fraction, seed=seed).limit(sample_cap)
-              .toPandas())
-    dtypes = dict(df.dtypes)
+    sample = pa.Table.from_batches(kept)
     n_b = (1 << bits) - 1
     probs = np.linspace(0.0, 1.0, n_b + 2)[1:-1]
     out = ZOrderBoundaries()
     bucketed = []
     for c in columns:
-        vals = (_string_proxy_np(sample[c].astype(str))
-                if dtypes[c] == "string"
-                else sample[c].fillna(0).to_numpy(dtype=np.float64))
+        t = sample.schema.field(c).type
+        s = sample[c].to_pandas()
+        vals = (_string_proxy_np(s)
+                if pa.types.is_string(t) or pa.types.is_large_string(t)
+                else s.fillna(0).to_numpy(dtype=np.float64))
         out[c] = _quantiles(vals, probs).astype(np.float64)
         bucketed.append(np.searchsorted(out[c], vals, side="right"))
     # global zkey distribution cutpoints (ZCUTS_KEY): rewrite bins carve

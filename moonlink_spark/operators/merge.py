@@ -27,7 +27,7 @@ stats.  The batch is persisted, and a key-sized read of at most
 ``FLUSH_ROWS`` + 1 of its rows (keys, ``_op`` and each upsert's
 estimated bytes) picks the write path.  A batch of at most
 ``FLUSH_ROWS`` rows (one ingest file) whose upserts fit
-``driver_budget`` (a sixteenth of the smaller of
+``scan.driver_budget`` (a sixteenth of the smaller of
 ``spark.driver.maxResultSize`` and the driver heap) is written on the
 driver: its keys go to the broadcast join as a local relation, the
 matched positions come back as Arrow, the driver unions each affected
@@ -82,12 +82,13 @@ from moonlink_spark import metrics as mtr
 from moonlink_spark.config import TableConfig
 from moonlink_spark.operators import keyindex, skew
 from moonlink_spark.fs import rename_many
-from moonlink_spark.operators.distscan import sidecar_positions
 from moonlink_spark.operators.rewrite import assign_positions, footer_stats_many
 from moonlink_spark.operators.scan import (
     FILE_COL,
     POS_COL,
     _with_relative_file,
+    driver_budget,
+    dv_positions,
     local_df,
     scan,
 )
@@ -108,22 +109,6 @@ FLUSH_ROWS = 131_072
 # affected files per DV sidecar part (Spark) or row group (driver): a
 # scan reading one file's DV row prunes the rest by footer stats
 DV_FILES_PER_PART = 512
-
-
-def driver_budget(spark: SparkSession) -> int:
-    """Estimated upsert payload bytes the driver write path may read:
-    a sixteenth of the smaller of ``spark.driver.maxResultSize`` (what
-    one job may return to the driver; 0 = unlimited) and the driver
-    heap.  The JVM holds the read in the cached batch, in a task's
-    Arrow buffer and in the collected result, and in local mode the
-    executors share that heap.  On a 1 GiB driver the budget is 64 MiB;
-    the widest batch ``tools/merge_path_bench.py`` measured (63 MiB of
-    upserts) completed there on the driver path, faster than the Spark
-    write (``MERGE_PATH_CROSSOVER.json``)."""
-    conf = spark.sparkContext._jsc.sc().conf()
-    limits = [conf.getSizeAsBytes(k, "1g")
-              for k in ("spark.driver.maxResultSize", "spark.driver.memory")]
-    return min(b for b in limits if b > 0) // 16
 
 
 def _row_bytes(schema: StructType, cols: list[str]) -> Column:
@@ -215,13 +200,8 @@ def _driver_dv(store: SnapshotStore, ents: dict, new_pos: dict,
     current sidecar, write the rows as one zstd sidecar sorted on
     ``referenced_file`` and return its pointers."""
     files = sorted(new_pos)
-    by_sidecar: dict[str, list[str]] = {}
-    for f in files:
-        if ents[f]["dv_path"]:
-            by_sidecar.setdefault(ents[f]["dv_path"], []).append(f)
-    old: dict[str, np.ndarray] = {}
-    for rel, named in by_sidecar.items():
-        old.update(sidecar_positions(store.abs(rel), named))
+    old = dv_positions(store, {f: ents[f]["dv_path"] for f in files
+                               if ents[f]["dv_path"]})
     positions = [np.union1d(new_pos[f], old[f]) if f in old else new_pos[f]
                  for f in files]
     sizes = np.array([len(p) for p in positions], dtype=np.int64)

@@ -9,10 +9,12 @@ The Spark expression of moonlink's read path:
 - here the same semantics are one declarative plan: read the snapshot's
   file list, anti-join ``(file, _pos)`` against the exploded delete
   vectors.  Catalyst keeps predicate pushdown / column pruning on the
-  parquet scan; the DV side is broadcast when the manifest says total
-  deleted-row cardinality is small (the common case — DVs are per-file
-  bitmaps), else it is a regular shuffled join on a high-cardinality key
-  (no skew: the key is (file, position)).
+  parquet scan.  While the manifest's deleted-row cardinality is small
+  (``DRIVER_DV_ROWS``; the common case — DVs are per-file bitmaps), the
+  DV side is read from the sidecars on the driver with pyarrow and
+  broadcast as a local relation; above it Spark reads the sidecars, and
+  past ``BROADCAST_DV_ROWS`` the join is a regular shuffled one on a
+  high-cardinality key (no skew: the key is (file, position)).
 - file pruning via manifest min/max bounds happens *before* the scan,
   as the plan is read from the manifest segments on the driver
   (:func:`driver_plan`; cf. per-file stats pruning,
@@ -32,6 +34,7 @@ from decimal import Decimal
 from functools import reduce
 from typing import Callable, Mapping, Sequence
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pds
@@ -40,8 +43,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (BooleanType, DataType, DateType, DecimalType,
-                               FractionalType, IntegralType, StringType,
-                               StructType, TimestampNTZType, TimestampType)
+                               FractionalType, IntegralType, LongType,
+                               StringType, StructField, StructType,
+                               TimestampNTZType, TimestampType)
 
 from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
 
@@ -49,9 +53,20 @@ from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
 # side is broadcast.  8M (file,pos) pairs ≈ a few hundred MB broadcast —
 # comfortably under typical executor memory.
 BROADCAST_DV_ROWS = 8_000_000
+# The most deleted rows a DV side is read on the driver for.  The driver
+# read hands its rows to Spark as a local relation, whose broadcast ships
+# them out in a job's tasks and collects them back.  Up to 46k rows a
+# scan took as long either way; at 92k the driver read was slower in
+# every run, and at 288k a scan took 2.7x as long as with Spark's read
+# of the sidecars (tools/driver_read_bench.py, DRIVER_READ_SCALE.json)
+DRIVER_DV_ROWS = 32_768
 
 FILE_COL = "_mlfile"
 POS_COL = "_pos"
+# the driver-read DV side's schema, built without a DDL parse (a py4j
+# round trip per call)
+_DV_SIDE = StructType([StructField(FILE_COL, StringType()),
+                       StructField(POS_COL, LongType())])
 
 
 def _with_relative_file(df: DataFrame, store: SnapshotStore,
@@ -229,20 +244,25 @@ def predicate_exprs(predicates: Mapping[str, object] | None,
 
 
 def local_df(spark: SparkSession, schema: str | StructType,
-             columns: Sequence[Sequence] = ()) -> DataFrame:
-    """A driver-built DataFrame from column value lists (none: empty),
-    handed to Spark as one Arrow table.
+             columns: Sequence[Sequence] | pa.Table = ()) -> DataFrame:
+    """A driver-built DataFrame from an Arrow table or column value
+    lists (none: empty), handed to Spark as one Arrow table.
 
     ``spark.createDataFrame`` on Python rows plans as ``Scan
     ExistingRDD``: the rows are pickled into a ``PythonRDD``, and every
     job that reads the frame starts Python workers to unpickle them
     again (0.2-0.5 s per job on a 4-core host, even for a handful of
-    rows).  An Arrow table plans as ``LocalTableScan`` and never leaves
-    the JVM once handed over."""
+    rows).  An Arrow table never leaves the JVM once handed over, and
+    starts no Python worker.  It is not free of jobs, though: a
+    broadcast of the frame still starts one job of one task per core
+    (the no-input 4-task stages of both benchmark workloads' traces on
+    a 4-core host)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    if columns:
+    if isinstance(columns, pa.Table):
+        table = columns
+    elif columns:
         table = pa.table([pa.array(vals, type=f.type)
                           for vals, f in zip(columns, arrow_schema)],
                          schema=arrow_schema)
@@ -261,6 +281,68 @@ def file_list_df(spark: SparkSession, files: list[str],
     (:func:`local_df`), so the semi-join's jobs start no Python
     worker."""
     return local_df(spark, f"`{col}` string", [files])
+
+
+def driver_budget(spark: SparkSession) -> int:
+    """Bytes of change- or delete-sized data a driver-side read may
+    hold: a sixteenth of the smaller of ``spark.driver.maxResultSize``
+    (what one job may return to the driver; 0 = unlimited) and the
+    driver heap.  The JVM holds such a read more than once (a merge's
+    cached batch, a task's Arrow buffer and the collected result; a DV
+    side's local relation and its broadcast copy), and in local mode the
+    executors share that heap.  On a 1 GiB driver the budget is 64 MiB;
+    the widest merge batch ``tools/merge_path_bench.py`` measured (63
+    MiB of upserts) completed there on the driver path, faster than the
+    Spark write (``MERGE_PATH_CROSSOVER.json``)."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    limits = [conf.getSizeAsBytes(k, "1g")
+              for k in ("spark.driver.maxResultSize", "spark.driver.memory")]
+    return min(b for b in limits if b > 0) // 16
+
+
+def dv_side_on_driver(spark: SparkSession, dv_rows: int, files) -> bool:
+    """Whether a DV side of ``dv_rows`` deleted rows over ``files`` is
+    read on the driver (:func:`driver_deletes`) rather than by Spark:
+    at most ``DRIVER_DV_ROWS`` rows, whose ``UnsafeRow`` bytes (a null
+    word, the position and the path's offset word, 24 bytes, plus the
+    path) fit :func:`driver_budget`.  The budget binds only in a
+    session whose ``spark.driver.maxResultSize`` or heap is a few MiB."""
+    width = 24 + max((len(f) for f in files), default=0)
+    return (dv_rows <= DRIVER_DV_ROWS
+            and dv_rows * width <= driver_budget(spark))
+
+
+def dv_positions(store: SnapshotStore,
+                 dv_files: Mapping[str, str]) -> dict[str, np.ndarray]:
+    """``{file: sorted unique deleted positions}`` of each file
+    ``dv_files`` maps to the sidecar its manifest entry names, read on
+    the driver with pyarrow, one read per sidecar (a file without a row
+    there is left out)."""
+    from moonlink_spark.operators.distscan import sidecar_positions
+    by_sidecar: dict[str, list[str]] = {}
+    for f, rel in dv_files.items():
+        by_sidecar.setdefault(rel, []).append(f)
+    out: dict[str, np.ndarray] = {}
+    for rel, named in sorted(by_sidecar.items()):
+        out.update(sidecar_positions(store.abs(rel), named))
+    return out
+
+
+def driver_deletes(spark: SparkSession, store: SnapshotStore,
+                   dv_files: Mapping[str, str]) -> DataFrame:
+    """The rows :func:`deletes_df` returns, read on the driver
+    (:func:`dv_positions`) and handed to Spark as one Arrow table whose
+    file column is dictionary-encoded: no Spark job reads a sidecar."""
+    pos = dv_positions(store, dv_files)
+    sizes = [len(p) for p in pos.values()]
+    table = pa.table({
+        FILE_COL: pa.DictionaryArray.from_arrays(
+            np.repeat(np.arange(len(pos), dtype=np.int32), sizes),
+            pa.array(list(pos), pa.string())),
+        POS_COL: pa.array(np.concatenate([np.empty(0, np.int64),
+                                          *pos.values()]), pa.int64()),
+    })
+    return local_df(spark, _DV_SIDE, table)
 
 
 def deletes_df(spark: SparkSession, store: SnapshotStore,
@@ -310,11 +392,6 @@ def scan_files(
 ) -> DataFrame:
     """Read an explicit file set applying its delete vectors.
 
-    ``deletes`` overrides the DV read with a prebuilt (file, pos)
-    DataFrame — callers running many scans over one snapshot (the
-    compaction fan-out) build and persist it once instead of re-reading
-    the DV sidecars per scan.
-
     ``dv_files`` maps each file of ``data_files`` that carries a DV to
     the sidecar its manifest entry names (``dv_path``); each file's
     deletes come from that sidecar only (see :func:`deletes_df`).  Only
@@ -326,6 +403,15 @@ def scan_files(
     (the per-file routing mirrors the reference attaching a
     ``RowSelection`` only to files that have one,
     ``moonlink_datafusion/src/table_provider.rs:96-130``).
+
+    A DV side of at most ``DRIVER_DV_ROWS`` deleted rows
+    (``dv_cardinality``; :func:`dv_side_on_driver`) is read on the
+    driver and broadcast as a local relation (:func:`driver_deletes`); a
+    larger one is read by Spark (:func:`deletes_df`).  ``deletes``, a
+    prebuilt (file, pos) DataFrame, takes the place of that Spark read:
+    callers running many concurrent scans whose deletes together are
+    too many for the driver read (the compaction fan-out) build and
+    persist it once, and each scan semi-joins its own files out of it.
 
     ``schema_ddl`` pins the read schema (schema evolution: files written
     before an added column came along simply yield nulls for it — no
@@ -360,6 +446,9 @@ def scan_files(
             dels = deletes.join(
                 F.broadcast(file_list_df(spark, dirty)),
                 on=FILE_COL, how="left_semi")
+        elif dv_side_on_driver(spark, dv_cardinality, dirty):
+            dels = driver_deletes(
+                spark, store, {f: dv_files[f] for f in dirty})
         else:
             dels = deletes_df(spark, store, dv_paths, dv_files)
         if dv_cardinality <= BROADCAST_DV_ROWS:

@@ -421,11 +421,12 @@ def test_driver_merge_matches_spark_merge(spark, tmp_path, monkeypatch,
     assert sidecars[0][clean]["dv_path"] is None
 
 
-def test_benchmark_shaped_merge_runs_at_most_six_jobs(spark, tmp_path):
+def test_benchmark_shaped_merge_runs_at_most_five_jobs(spark, tmp_path):
     """A batch shaped like the ingest benchmark's (150 upserts, 150
-    deletes, 150 new keys) starts at most six Spark jobs: the key-sized
-    read that sizes the batch, the key match and the read of the
-    upserts; the DV merge and the ingest write start none."""
+    deletes, 150 new keys) starts at most five Spark jobs: the key-sized
+    read that sizes the batch, the broadcasts of its keys and of the
+    scan's driver-read delete vectors, the key match and the read of
+    the upserts; the DV merge and the ingest write start none."""
     w = str(tmp_path / "wh")
     synthesize_cdc_aftermath(w, seed=1, n_files=20, content_bytes=(16, 64))
     t = MoonTable(spark, w, CFG)
@@ -440,9 +441,182 @@ def test_benchmark_shaped_merge_runs_at_most_six_jobs(spark, tmp_path):
     snap = t.merge(df, key_columns=KEYS)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = _jobs_since(spark, before)
-    assert 0 < len(jobs) <= 6, jobs
+    assert 0 < len(jobs) <= 5, jobs
     assert snap.properties["inserted_rows"] == 300
     assert t.scan().count() == len(rows) - 150 + 150
+
+
+def test_benchmark_shaped_optimize_runs_at_most_four_jobs(
+        spark, tmp_path, monkeypatch):
+    """An ``optimize("full")`` shaped like the maintain benchmark's (the
+    20-file aftermath planned as 2 bins of 2 outputs) starts at most
+    four Spark jobs: per bin, the broadcast of its driver-read delete
+    vectors and its rewrite.  The Z-order boundary sample is read on
+    the driver and starts none."""
+    from moonlink_spark import engine
+    from perfbench.workloads import SYNTH, table_config
+
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=1, **SYNTH)
+    cfg = table_config(sum(e["bytes"]
+                           for e in SnapshotStore(w).manifest_entries(0)))
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    real = engine.compute_zorder_boundaries
+    sample_jobs = []
+
+    def spy(*a, **k):
+        before = _job_ids(spark)
+        out = real(*a, **k)
+        bus.waitUntilEmpty()
+        sample_jobs.extend(_jobs_since(spark, before))
+        return out
+
+    monkeypatch.setattr(engine, "compute_zorder_boundaries", spy)
+    t = MoonTable(spark, w, cfg)
+    before = _job_ids(spark)
+    snap = t.optimize("full")
+    bus.waitUntilEmpty()
+    jobs = _jobs_since(spark, before)
+    assert snap.properties["metrics"]["bins"] == 2
+    assert sample_jobs == []
+    assert 0 < len(jobs) <= 4, jobs
+
+
+_OVER_BUDGET = """
+import json, sys
+from pyspark.sql import SparkSession
+from moonlink_spark.engine import MoonTable
+from moonlink_spark.operators import scan as scan_op
+from moonlink_spark.snapshotstore import SnapshotStore
+from moonlink_spark.synth import synthesize_cdc_aftermath
+from tests.test_merge_job_shape import _dv_read_digests
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.driver.maxResultSize", "1m")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+w = sys.argv[1]
+synthesize_cdc_aftermath(w, seed=5, n_files=40)
+plan = scan_op.driver_plan(SnapshotStore(w).read_snapshot().manifest_paths,
+                           None).to_pylist()
+rows = sum(e["dv_cardinality"] or 0 for e in plan)
+over = not scan_op.dv_side_on_driver(
+    spark, rows, [e["path"] for e in plan if e["dv_path"]])
+print(json.dumps({"over": over, "few_rows": rows <= scan_op.DRIVER_DV_ROWS,
+                  **_dv_read_digests(spark, w)}))
+spark.stop()
+"""
+
+
+def _dv_read_digests(spark, w: str) -> dict:
+    """Which DV reads a ``scan()`` and an ``optimize("full")`` of the
+    table at ``w`` took, and sha256 digests of the rows they return
+    and commit."""
+    from moonlink_spark.operators import scan as scan_op
+
+    calls = []
+    for fn in ("deletes_df", "driver_deletes"):
+        def spy(*a, _real=getattr(scan_op, fn), _fn=fn, **k):
+            calls.append(_fn)
+            return _real(*a, **k)
+        setattr(scan_op, fn, spy)
+
+    def digest(df) -> str:
+        """sha256 of the sorted row digests, folded by Spark: the
+        digests themselves exceed a 1 MB result limit"""
+        cols = [c for c in df.columns if c != "_pos"]
+        rows = F.collect_list(F.sha2(F.to_json(F.struct(*cols)), 256))
+        return df.select(F.sha2(F.concat_ws("", F.sort_array(rows)),
+                                256)).first()[0]
+
+    t = MoonTable(spark, w, CFG)
+    out = {"scan": digest(t.scan())}
+    out["scan_calls"], calls[:] = list(calls), []
+    snap = t.optimize("full")
+    out["optimize_calls"] = sorted(set(calls))
+    out["committed"] = digest(t.scan(snap.version))
+    out["rows_out"] = snap.properties["metrics"]["rows_out"]
+    return out
+
+
+def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
+                                              monkeypatch):
+    """Under a 1 MB ``spark.driver.maxResultSize`` the aftermath's
+    deleted rows exceed the driver budget: ``scan()`` and
+    ``optimize("full")`` read the delete vectors with Spark
+    (``deletes_df``), and return and commit the same rows as the
+    driver-read side does under the default conf."""
+    from moonlink_spark.operators import scan as scan_op
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _OVER_BUDGET, str(tmp_path / "low")],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    low = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert low.pop("over") and low.pop("few_rows")  # the budget binds
+    assert low["scan_calls"] == ["deletes_df"]
+    assert low["optimize_calls"] == ["deletes_df"]
+
+    for fn in ("deletes_df", "driver_deletes"):  # undo _dv_read_digests
+        monkeypatch.setattr(scan_op, fn, getattr(scan_op, fn))
+    w = str(tmp_path / "default")
+    synthesize_cdc_aftermath(w, seed=5, n_files=40)
+    default = _dv_read_digests(spark, w)
+    assert default["scan_calls"] == ["driver_deletes"]
+    assert default["optimize_calls"] == ["driver_deletes"]
+    for k in ("scan", "committed", "rows_out"):
+        assert low[k] == default[k], k
+
+
+def test_resume_on_spark_dv_read_matches_driver_read(spark, tmp_path,
+                                                     monkeypatch):
+    """The Spark DV read under a kill and resume: with every DV side
+    over the driver budget, an optimize killed after two of its bins
+    and then resumed reads its deletes once per run as the persisted
+    ``deletes_df`` frame the concurrent bins semi-join, and commits the
+    manifest and rows of an uninterrupted job that read them on the
+    driver."""
+    from moonlink_spark.operators import scan as scan_op
+    from tests.oracle import content_sha_multiset, live_rows_pandas
+
+    cfg = TableConfig(compaction=CompactionConfig(
+        target_file_bytes=64 << 10, bin_target_bytes=128 << 10,
+        bin_concurrency=2))
+    killed, clean = str(tmp_path / "killed"), str(tmp_path / "clean")
+    for w in (killed, clean):
+        synthesize_cdc_aftermath(w, seed=23, n_files=24,
+                                 rows_per_file=(50, 150), n_repos=6,
+                                 content_bytes=(64, 512))
+    calls = []
+    for fn in ("deletes_df", "driver_deletes"):
+        def spy(*a, _real=getattr(scan_op, fn), _fn=fn, **k):
+            calls.append(_fn)
+            return _real(*a, **k)
+        monkeypatch.setattr(scan_op, fn, spy)
+
+    uninterrupted = MoonTable(spark, clean, cfg).optimize("full")
+    assert set(calls) == {"driver_deletes"}
+    calls.clear()
+    monkeypatch.setattr(scan_op, "driver_budget", lambda spark: -1)
+    # the first of the 4 bins carries no DV: the kill lands after the
+    # second, so both runs rewrite bins with deletes
+    assert (MoonTable(spark, killed, cfg).optimize("full", max_bins=2)
+            .version == 0)
+    resumed = MoonTable(spark, killed, cfg).optimize("full")
+    assert calls == ["deletes_df", "deletes_df"]
+    assert resumed.version == uninterrupted.version == 1
+
+    def fingerprint(w):
+        return [(e["path"], e["rows"], e["bytes"], e["dv_path"],
+                 e["dv_cardinality"])
+                for e in SnapshotStore(w).manifest_entries(1)]
+
+    assert fingerprint(killed) == fingerprint(clean)
+    assert (content_sha_multiset(live_rows_pandas(SnapshotStore(killed), 1))
+            == content_sha_multiset(live_rows_pandas(SnapshotStore(clean),
+                                                     1)))
 
 
 _WIDE_MERGE = """

@@ -210,7 +210,8 @@ def test_jvm_zkey_matches_numpy_reference(spark):
              float(rng.randint(-500, 500)))
             for i, s in enumerate(strings)]
     df = spark.createDataFrame(rows, "repo string, score double")
-    bnds = compute_zorder_boundaries(df, ["repo", "score"], bits=12)
+    bnds = compute_zorder_boundaries(df.toArrow(), ["repo", "score"],
+                                     bits=12)
 
     got = {(r["repo"], r["score"]): r["_zkey"] for r in
            with_zorder_key(df, ["repo", "score"], bnds,
@@ -295,7 +296,8 @@ def test_zorder_key_evaluates_string_proxy_once(spark):
         [("org1/r", "a/b.py", 1.0), ("org2/s", "c/d.py", -2.0),
          (None, "e.py", None)],
         "repo string, path string, score double")
-    bnds = compute_zorder_boundaries(df, ["repo", "path", "score"], bits=12)
+    bnds = compute_zorder_boundaries(df.toArrow(), ["repo", "path", "score"],
+                                     bits=12)
     first = with_zorder_key(df, ["repo", "path"], bnds, bits=12)
     plan = first._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("conv(") == 2
@@ -339,3 +341,108 @@ def test_zorder_key_stages_built_once_under_concurrent_bins():
     assert not any(t.is_alive() for t in threads)
     assert len(builds) == 1 and len(got) == 16
     assert all(g is got[0] for g in got)
+
+
+# -- the boundary sample ------------------------------------------------
+
+def _bit_equal(a: dict, b: dict) -> bool:
+    return sorted(a) == sorted(b) and all(
+        np.asarray(a[k]).dtype == np.asarray(b[k]).dtype
+        and np.array_equal(np.asarray(a[k]).view(np.uint64),
+                           np.asarray(b[k]).view(np.uint64))
+        for k in a)
+
+
+def test_boundaries_rank_null_strings_as_empty():
+    """The rewrite's JVM zkey keys a null string as ``""``: a sample
+    with nulls must give the boundaries (and zkey cutpoints) of the
+    same sample with ``""`` in their place — not those of ``"None"``."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(8)
+    repos = [None if i % 3 == 0 else f"org{rng.integers(0, 9)}/r{i}"
+             for i in range(3000)]
+    score = rng.normal(size=3000)
+    with_nulls = pa.table({"repo": repos, "score": score})
+    blanked = pa.table({"repo": [r if r is not None else "" for r in repos],
+                        "score": score})
+    got = compute_zorder_boundaries(with_nulls, ["repo", "score"], bits=12)
+    want = compute_zorder_boundaries(blanked, ["repo", "score"], bits=12)
+    assert _bit_equal(got, want)
+    renamed = pa.table({"repo": [r if r is not None else "None"
+                                 for r in repos], "score": score})
+    assert not _bit_equal(got, compute_zorder_boundaries(
+        renamed, ["repo", "score"], bits=12))
+
+
+def test_bernoulli_sample_is_seeded_and_capped():
+    """Below a fraction of 1 the sample is a seeded draw: the same
+    batches give the same boundaries, and no batch past the one that
+    fills ``sample_cap`` is read."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(4)
+    batches = [pa.record_batch({"x": rng.normal(size=1000)})
+               for _ in range(20)]
+    read = []
+
+    def stream():
+        for b in batches:
+            read.append(1)
+            yield b
+
+    # fraction 1250/20000: the 1000-row cap fills after ~16 batches
+    a = compute_zorder_boundaries(stream(), ["x"], bits=6,
+                                  sample_cap=1000, total_rows=20_000)
+    assert 10 < len(read) < 20
+    b = compute_zorder_boundaries(batches, ["x"], bits=6,
+                                  sample_cap=1000, total_rows=20_000)
+    assert _bit_equal(a, b)
+    c = compute_zorder_boundaries(batches, ["x"], bits=6, seed=7,
+                                  sample_cap=1000, total_rows=20_000)
+    assert not _bit_equal(a, c)
+
+
+def test_driver_sample_boundaries_equal_spark_read(spark, tmp_path,
+                                                   monkeypatch):
+    """optimize reads its boundary sample on the driver.  Below the
+    Bernoulli threshold every sampled row is kept, so the boundaries
+    it ranks — each column's and the zkey cutpoints — are bit-equal to
+    those of Spark's read of the same files under the pinned schema."""
+    import pyarrow as pa
+
+    from moonlink_spark import engine
+    from moonlink_spark.operators.planner import plan_compaction
+
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=5, n_files=12)
+    cfg = TableConfig(compaction=CompactionConfig(
+        target_file_bytes=64 << 10, bin_target_bytes=256 << 10,
+        bin_concurrency=2))
+    real = engine.compute_zorder_boundaries
+    seen = []
+
+    def spy(batches, columns, **kw):
+        table = pa.Table.from_batches(list(batches))
+        seen.append((table, kw))
+        return real(table, columns, **kw)
+
+    monkeypatch.setattr(engine, "compute_zorder_boundaries", spy)
+    t = MoonTable(spark, w, cfg)
+    base = t.snapshot()
+    got = t.optimize("full")
+    [(table, kw)] = seen
+    assert kw["total_rows"] * 1.25 <= 262_144  # fraction 1: no draw
+    bins = plan_compaction(base.manifest_paths,
+                           cfg.compaction.for_full_mode())
+    files = sorted(p for b in bins for p in b.files)
+    assert len(files) <= 64  # every candidate file is sampled
+    cols = list(cfg.zorder_columns)
+    spark_read = (spark.read.schema(base.properties["schema_ddl"])
+                  .parquet(*[t.store.abs(f) for f in files])
+                  .select(*cols).toArrow())
+    key = lambda r: tuple("" if v is None else v for v in r.values())
+    assert (sorted(table.to_pylist(), key=key)
+            == sorted(spark_read.to_pylist(), key=key))
+    assert _bit_equal(real(table, cols, **kw), real(spark_read, cols, **kw))
+    assert got.version == base.version + 1
