@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark import metrics as mtr
-from moonlink_spark.config import CompactionConfig, TableConfig
+from moonlink_spark.config import TableConfig
 from moonlink_spark.fs import rename_many
 from moonlink_spark.functions.zorder import compute_zorder_boundaries
 from moonlink_spark.operators import changelog
@@ -656,10 +656,7 @@ class MoonTable:
         Iceberg metadata-aggregate pushdown shape (cf. the reference
         keeping per-file row counts in its file metadata,
         ``storage/storage_utils.rs`` DiskFileEntry)."""
-        r = self.manifest(version).agg(
-            F.sum("rows").alias("r"),
-            F.sum("dv_cardinality").alias("d")).first()
-        return int((r["r"] or 0) - (r["d"] or 0))
+        return self.stats(version)["rows_live"]
 
     def column_bounds(self, column: str,
                       version: int | None = None) -> dict:
@@ -673,41 +670,49 @@ class MoonTable:
         means the extremal row(s) might all be deleted (the same caveat
         Iceberg's lower_bounds/upper_bounds carry); callers needing the
         exact extremum fall back to one pruned scan."""
-        m = self.manifest(version)
         lo_c, hi_c = f"min_{column}", f"max_{column}"
-        if lo_c not in m.columns:
+
+        def extremes(t: pa.Table) -> pa.Table:
+            # rows with known bounds at t's least lower or greatest upper
+            t = t.filter(pc.is_valid(t[lo_c]))
+            return t.filter(pc.fill_null(pc.or_(
+                pc.equal(t[lo_c], pc.min(t[lo_c])),
+                pc.equal(t[hi_c], pc.max(t[hi_c]))), False))
+
+        try:  # one segment at a time, as planner.trigger_counts reads
+            t = extremes(pa.concat_tables([extremes(pq.read_table(
+                p, columns=[lo_c, hi_c, "dv_cardinality"]))
+                for p in self.store.read_snapshot(version).manifest_paths]))
+        except pa.ArrowInvalid:
             raise ValueError(
                 f"no manifest bounds for {column!r}; stats_columns are "
-                f"{self.config.stats_columns}")
-        m = m.filter(F.col(lo_c).isNotNull())
-        r = m.agg(F.min(lo_c).alias("lo"), F.max(hi_c).alias("hi")).first()
-        if r is None or r["lo"] is None:
+                f"{self.config.stats_columns}") from None
+        if not t.num_rows:
             return {"lower": None, "upper": None,
                     "lower_exact": True, "upper_exact": True}
-        clean = F.col("dv_cardinality") == 0
-        ex = m.agg(
-            F.max(F.when((F.col(lo_c) == F.lit(r["lo"])) & clean,
-                         True).otherwise(False)).alias("le"),
-            F.max(F.when((F.col(hi_c) == F.lit(r["hi"])) & clean,
-                         True).otherwise(False)).alias("ue")).first()
-        return {"lower": r["lo"], "upper": r["hi"],
-                "lower_exact": bool(ex["le"]), "upper_exact": bool(ex["ue"])}
+        clean = pc.equal(t["dv_cardinality"], 0)
+        lo, hi = pc.min(t[lo_c]), pc.max(t[hi_c])
+        return {"lower": lo.as_py(), "upper": hi.as_py(),
+                **{f"{k}_exact": bool(pc.any(pc.and_(
+                    pc.equal(t[c], v), clean)).as_py())
+                   for k, c, v in (("lower", lo_c, lo), ("upper", hi_c, hi))}}
 
     def stats(self, version: int | None = None) -> dict:
         """One-pass metadata-only table profile: files, bytes, total /
-        deleted / live rows, DV sidecar count.  O(manifest)."""
-        r = self.manifest(version).agg(
-            F.count(F.lit(1)).alias("files"),
-            F.sum("bytes").alias("bytes"),
-            F.sum("rows").alias("rows"),
-            F.sum("dv_cardinality").alias("deleted"),
-            F.count("dv_path").alias("dv_files")).first()
-        rows = int(r["rows"] or 0)
-        deleted = int(r["deleted"] or 0)
-        return {"files": int(r["files"]), "bytes": int(r["bytes"] or 0),
+        deleted / live rows, DV sidecar count.  O(manifest), read one
+        segment at a time on the driver: no Spark job."""
+        sums = dict.fromkeys(("bytes", "rows", "dv_cardinality"), 0)
+        files = dv_files = 0
+        for p in self.store.read_snapshot(version).manifest_paths:
+            t = pq.read_table(p, columns=[*sums, "dv_path"])
+            files += t.num_rows
+            dv_files += t.num_rows - t["dv_path"].null_count
+            for c in sums:
+                sums[c] += pc.sum(t[c]).as_py() or 0
+        rows, deleted = sums["rows"], sums["dv_cardinality"]
+        return {"files": files, "bytes": sums["bytes"],
                 "rows_total": rows, "rows_deleted": deleted,
-                "rows_live": rows - deleted,
-                "files_with_dv": int(r["dv_files"])}
+                "rows_live": rows - deleted, "files_with_dv": dv_files}
 
     def clustering_health(self, col: str | None = None) -> dict:
         """Interval-sweep clustering disorder of the current layout:

@@ -58,16 +58,6 @@ _FEATURE_FIELDS = [
 FEATURE_SCHEMA = T.StructType(_FEATURE_FIELDS)
 
 
-def _have_real_decoder() -> bool:
-    """A general-purpose codec library (beyond the built-in PNG
-    support) is importable."""
-    try:  # pragma: no cover - container has no codec libs
-        import PIL.Image  # noqa: F401
-        return True
-    except Exception:
-        return False
-
-
 def _fold(a: np.ndarray) -> np.ndarray:
     """Fold a uint8 sample stream into FEATURE_DIM float accumulators
     (vectorized numpy) — the shared feature head for real pixels and

@@ -23,7 +23,6 @@ sizes (balanced by construction — centroids come from a corpus sample).
 
 from __future__ import annotations
 
-from typing import Iterator
 
 import numpy as np
 import pandas as pd

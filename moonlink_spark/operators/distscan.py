@@ -46,11 +46,17 @@ import os
 from collections.abc import Iterator, Mapping
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from moonlink_spark.operators.scan import FILE_COL, POS_COL, predicate_exprs
+from moonlink_spark.operators.scan import (FILE_COL, POS_COL, parse_ddl,
+                                          predicate_exprs)
 from moonlink_spark.snapshotstore import SnapshotStore
 
 # Manifest entry count (the snapshot header's unpruned total,
@@ -71,9 +77,7 @@ def _spark_schema_for(spark: SparkSession, store: SnapshotStore,
     snapshot's pinned DDL (schema evolution source of truth); fall back
     to ONE file footer — an O(1) driver read, not a footer sweep."""
     if schema_ddl:
-        return T.StructType.fromDDL(schema_ddl)
-    from pyspark.sql.pandas.types import from_arrow_schema
-    import pyarrow.parquet as pq
+        return parse_ddl(schema_ddl)
     sample = manifest.select("path").limit(1).collect()
     if not sample:
         raise ValueError("empty manifest and no schema_ddl: cannot "
@@ -93,7 +97,6 @@ def surviving_row_groups(group_rows: list[int],
     (``moonlink_datafusion/src/table_provider.rs:96-130``).  Pure
     (numpy searchsorted over the cumulative ranges) so the decision is
     unit-testable without Spark or files."""
-    import numpy as np
     out = []
     start = 0
     for g, n in enumerate(group_rows):
@@ -113,8 +116,6 @@ def sidecar_positions(path: str, files) -> dict:
     engine._optimize_index), so the dataset filter prunes foreign row
     groups by footer stats — a reader reads ~its own files' slice, not
     the whole shared sidecar."""
-    import numpy as np
-    import pyarrow.dataset as pds
     t = pds.dataset(path, format="parquet").to_table(
         columns=["referenced_file", "positions"],
         filter=pds.field("referenced_file").isin(list(files)))
@@ -127,15 +128,17 @@ def sidecar_positions(path: str, files) -> dict:
 
 
 def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
-                 row_filters: Mapping[str, object] | None = None):
+                 expr=None, filter_cols: frozenset = frozenset()):
     """mapInArrow body: read each plan row's parquet file with pyarrow,
     emit its live rows cast to the target schema with (file, pos)
     attached.  Everything inside is Arrow-native C++ — the Python layer
     only routes batches.
 
-    ``row_filters`` pushes the predicate into the pyarrow dataset
-    scanner (row-level, single-threaded per file so row order — and
-    with it positional semantics — is preserved).  Pushdown is skipped
+    ``expr``, a dataset expression over ``filter_cols`` rendered on the
+    driver (where a naive datetime literal reads as local time, as
+    Spark's does), is pushed into the pyarrow dataset scanner
+    (row-level, single-threaded per file so row order — and with it
+    positional semantics — is preserved).  Pushdown is skipped
     for a file that needs SYNTHESIZED ordinals (no materialized
     ``_pos`` column): filtering there would renumber positions; such
     files read unfiltered and the Spark-side filter finishes the job.
@@ -148,17 +151,7 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
     rows whose position is among them.  The skip is exact: the named
     row is the file's whole deleted set."""
     def reader(batches) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.dataset as pds
-        import pyarrow.parquet as pq
         logical = [f for f in arrow_schema if f.name != FILE_COL]
-        # built here from the plain mapping: dataset expressions are
-        # not shipped
-        expr = (reduce(operator.and_, predicate_exprs(row_filters,
-                                                      pds.field))
-                if row_filters else None)
-        filter_cols = set(row_filters or ())
 
         def deleted_ordinals(dv_relpath: str, relpath: str):
             """Sorted unique deleted positions of ``relpath`` per its
@@ -250,13 +243,15 @@ def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
 def _read_plan(spark: SparkSession, store: SnapshotStore, plan: DataFrame,
                n_files: int, struct: T.StructType,
                read_cols: list[str] | None,
-               row_filters: Mapping[str, object] | None = None
+               row_filters: Mapping[str, object] | None = None,
+               schema_types: Mapping[str, str] | None = None
                ) -> DataFrame:
     """Turn a ``(path, dv_path)`` plan DataFrame into the live rows of
     those files.  Parallelism: one task per plan partition;
     round-robin repartition spreads files so stragglers are
     single-file, not single-task-many-files."""
-    from pyspark.sql.pandas.types import to_arrow_schema
+    expr = (reduce(operator.and_, predicate_exprs(
+        row_filters, pds.field, schema_types)) if row_filters else None)
     fields = list(struct.fields)
     if POS_COL not in {f.name for f in fields}:
         fields.append(T.StructField(POS_COL, T.LongType()))
@@ -265,7 +260,8 @@ def _read_plan(spark: SparkSession, store: SnapshotStore, plan: DataFrame,
                         spark.sparkContext.defaultParallelism * 2))
     return (plan.repartition(nparts)
             .mapInArrow(_file_reader(store.warehouse, to_arrow_schema(out),
-                                     read_cols, row_filters),
+                                     read_cols, expr,
+                                     frozenset(row_filters or ())),
                         schema=out))
 
 
@@ -279,6 +275,7 @@ def scan_distributed(
     column_defaults: Mapping[str, object] | None = None,
     with_location: bool = False,
     row_filters: Mapping[str, object] | None = None,
+    schema_types: Mapping[str, str] | None = None,
 ) -> DataFrame:
     """Scan the (already pruned) manifest without collecting its file
     list.  Driver-side state: one aggregate row (the entry count) and,
@@ -286,40 +283,36 @@ def scan_distributed(
     the fully-deleted skip, the reads, each file's deletes — is the
     distributed plan.
 
-    ``row_filters`` (scan's predicate mini-language) is pushed into the
-    pyarrow reader per file (row-level) AND re-applied as a Spark
-    filter on the result — exact either way; the pushdown is the
-    scale win a post-``mapInArrow`` filter cannot reach."""
+    ``row_filters`` (scan's predicate mini-language, typed by
+    ``schema_types``) is pushed into the pyarrow reader per file
+    (row-level) AND re-applied as a Spark filter on the result; the
+    pushdown is the scale win a post-``mapInArrow`` filter cannot
+    reach."""
     live = manifest.filter(
         ~(F.col("rows").isNotNull()
           & (F.coalesce("dv_cardinality", F.lit(0)) >= F.col("rows"))))
     n_files = int(live.agg(F.count(F.lit(1)).alias("n")).first()["n"])
 
     struct = _spark_schema_for(spark, store, live, schema_ddl)
-    # two kinds of predicate stay Spark-side only, where the re-filter
-    # below applies them exactly: a defaulted column's nulls are
-    # backfilled AFTER the read (pyarrow would drop pre-default rows the
-    # Spark-side filter keeps), and pyarrow compares a decimal column at
-    # the literal's scale (dropping matching rows) or refuses an int one
-    spark_only = set(column_defaults or {}) | {
-        f.name for f in struct.fields
-        if isinstance(f.dataType, T.DecimalType)}
+    # the pushdown keeps the rows the Spark re-filter keeps (one typed
+    # comparison core renders both), but a defaulted column's nulls are
+    # backfilled AFTER the read: its predicate stays Spark-side only
     push_filters = {c: p for c, p in (row_filters or {}).items()
-                    if c not in spark_only} or None
+                    if c not in (column_defaults or {})} or None
     if project:
         by_name = {f.name: f for f in struct.fields}
         struct = T.StructType([by_name[c] for c in project if c in by_name])
     read_cols = [f.name for f in struct.fields]
 
     out = _read_plan(spark, store, live.select("path", "dv_path"),
-                     n_files, struct, read_cols, push_filters)
+                     n_files, struct, read_cols, push_filters, schema_types)
     if column_defaults:
         for col, default in column_defaults.items():
             if default is not None and col in out.columns:
                 out = out.withColumn(col, F.coalesce(F.col(col),
                                                      F.lit(default)))
     if row_filters:
-        for cond in predicate_exprs(row_filters):
+        for cond in predicate_exprs(row_filters, schema_types=schema_types):
             out = out.filter(cond)
     if not with_location:
         # mirror scan.scan: FILE_COL is scan metadata, always shed;

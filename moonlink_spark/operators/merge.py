@@ -75,7 +75,6 @@ from pyspark.sql.types import (
     MapType,
     StringType,
     StructType,
-    TimestampType,
 )
 
 from moonlink_spark import metrics as mtr
@@ -162,9 +161,9 @@ def _publish(store: SnapshotStore, table: pa.Table, sub_dir: str,
     return rels[0]
 
 
-def _key_range(col: pa.ChunkedArray, dtype) -> tuple:
-    """``(lo, hi)`` of the batch's lead key as Spark's ``min``/``max``
-    collect them; ``(None, None)`` — no pruning — for a batch without a
+def _key_range(col: pa.ChunkedArray) -> tuple:
+    """``(lo, hi)`` of the batch's lead key (a ``timestamp`` as an aware
+    UTC datetime); ``(None, None)`` — no pruning — for a batch without a
     non-null key, a type Arrow cannot order, or a float NaN (Spark
     orders NaN last, Arrow's ``min_max`` skips it)."""
     try:
@@ -177,10 +176,6 @@ def _key_range(col: pa.ChunkedArray, dtype) -> tuple:
     lo, hi = mm["min"], mm["max"]
     if not lo.is_valid:
         return None, None
-    if isinstance(dtype, TimestampType):
-        # Spark collects a timestamp as a naive local datetime
-        return tuple(dtype.fromInternal(v.cast(pa.int64()).as_py())
-                     for v in (lo, hi))
     return lo.as_py(), hi.as_py()
 
 
@@ -345,8 +340,7 @@ def merge_into(
 
         # -- 1. match change keys to live row positions ------------------
         if on_driver:
-            lo, hi = _key_range(key_rows[k0],
-                                changes.schema[k0].dataType)
+            lo, hi = _key_range(key_rows[k0])
             n_ins = (pc.sum(pc.equal(key_rows[OP_COL], "upsert")).as_py()
                      or 0)
             keys = spark.createDataFrame(

@@ -20,6 +20,9 @@ The Spark expression of moonlink's read path:
   (:func:`driver_plan`; cf. per-file stats pruning,
   ``parquet_stats_utils.rs:327-412``) — files whose bound range cannot
   contain the predicate value are never listed to the reader.
+- bound pruning (:func:`bound_exprs`) and row filters
+  (:func:`predicate_exprs`) compile through one comparison core typed by
+  the table's ``schema_types`` (:func:`_keep`), on Spark and pyarrow.
 
 Snapshot isolation is structural: the plan is built from one immutable
 manifest version, so concurrent maintenance commits never change what a
@@ -31,7 +34,7 @@ from __future__ import annotations
 import datetime
 import operator
 from decimal import Decimal
-from functools import reduce
+from functools import lru_cache, reduce
 from typing import Callable, Mapping, Sequence
 
 import numpy as np
@@ -41,13 +44,14 @@ import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import (from_arrow_schema, from_arrow_type,
+                                      to_arrow_schema)
 from pyspark.sql.types import (BooleanType, DataType, DateType, DecimalType,
-                               FractionalType, IntegralType, LongType,
-                               StringType, StructField, StructType,
-                               TimestampNTZType, TimestampType)
+                               FractionalType, IntegralType, StringType,
+                               StructType, TimestampNTZType, TimestampType)
 
-from moonlink_spark.snapshotstore import Snapshot, SnapshotStore, read_pinned
+from moonlink_spark.snapshotstore import (Snapshot, SnapshotStore,
+                                         bound_type, read_pinned)
 
 # Below this many deleted rows (summed manifest dv_cardinality) the DV
 # side is broadcast.  8M (file,pos) pairs ≈ a few hundred MB broadcast —
@@ -63,10 +67,7 @@ DRIVER_DV_ROWS = 32_768
 
 FILE_COL = "_mlfile"
 POS_COL = "_pos"
-# the driver-read DV side's schema, built without a DDL parse (a py4j
-# round trip per call)
-_DV_SIDE = StructType([StructField(FILE_COL, StringType()),
-                       StructField(POS_COL, LongType())])
+_DV_SIDE = f"`{FILE_COL}` string, `{POS_COL}` long"
 
 
 def _with_relative_file(df: DataFrame, store: SnapshotStore,
@@ -82,8 +83,9 @@ def _with_relative_file(df: DataFrame, store: SnapshotStore,
     )
 
 
-# A predicate value must fall in its bounds' comparison group; the first
-# match wins (a bool is an int, a datetime a date, a decimal fractional).
+# A predicate value must fall in its column's comparison group; the
+# first match wins (a bool is an int, a datetime a date, a decimal
+# fractional).
 _BOUND_GROUPS = ((StringType, "string"), (BooleanType, "boolean"),
                  (IntegralType, "integral"), (DecimalType, "decimal"),
                  (FractionalType, "numeric"), (DateType, "date"),
@@ -93,38 +95,36 @@ _VALUE_GROUPS = ((bool, "boolean"), (int, "integral"), (float, "numeric"),
                  (datetime.datetime, "timestamp"), (datetime.date, "date"))
 
 
-def _group(x, groups) -> str | None:
-    return next((g for t, g in groups if isinstance(x, t)), None)
-
-
 def _check_pred_type(bound: DataType, col: str, values: tuple) -> None:
-    """Refuse type-mismatched pruning loudly: comparing a numeric value
-    against string-typed bounds (or vice versa) would compare
-    lexicographically ("9" > "10") and silently drop matching files —
-    wrong results, not a crash.  Bounds are typed per column
-    (``snapshotstore.bound_type``, covering the reference's Datum
-    universe, ``parquet_stats_utils.rs:180-320``); the predicate value's
-    Python type must land in the same comparison group as the bound
-    type, else Catalyst's implicit casts decide the semantics silently."""
-    expected = _group(bound, _BOUND_GROUPS)
+    """Refuse type-mismatched predicates loudly: comparing a numeric
+    value against a string column (or vice versa) would compare
+    lexicographically ("9" > "10") and silently drop matching files.
+    Columns are typed (``schema_types``, else the manifest's bounds,
+    covering the reference's Datum universe,
+    ``parquet_stats_utils.rs:180-320``); a value's Python type must land
+    in its column type's comparison group.  An aware datetime (an
+    instant) is refused against a ``timestamp_ntz`` column."""
+    expected = next((g for t, g in _BOUND_GROUPS if isinstance(bound, t)),
+                    None)
     for v in values:
-        got = _group(v, _VALUE_GROUPS)
-        if v is None or got == expected:
+        got = next((g for t, g in _VALUE_GROUPS if isinstance(v, t)), None)
+        if v is None or got == expected and not (
+                isinstance(bound, TimestampNTZType) and v.tzinfo):
             continue
-        # an int predicate against float/double/decimal bounds is
-        # exact; a float against decimal bounds is NOT (binary vs
+        # an int predicate against float/double/decimal columns is
+        # exact; a float against a decimal column is NOT (binary vs
         # decimal rounding) and stays refused
         if got == "integral" and expected in ("numeric", "decimal"):
             continue
         raise TypeError(
-            f"predicate on {col!r}: value {v!r} "
-            f"({type(v).__name__}) is incompatible with the "
-            f"manifest's {bound.simpleString()}-typed bounds — pruning "
+            f"predicate on {col!r}: value {v!r} is incompatible with the "
+            f"column's {bound.simpleString()} type — the comparison "
             "would be implicitly cast and silently wrong")
 
 
 _COMPARE = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
             ">": operator.gt, ">=": operator.ge}
+_NULL_OPS = ("is_null", "not_null")
 
 
 def _is_null(c):
@@ -132,34 +132,68 @@ def _is_null(c):
     return c.isNull() if isinstance(c, Column) else c.is_null()
 
 
-def _arrow_operands(lo, hi, values: tuple, bound: DataType):
-    """A predicate's bound fields and literals, recast so that pyarrow
-    orders them as Spark does.  A datetime compares at its UTC time
-    (naive: read as local time, as pyspark reads it): a ``timestamp``
-    column's bounds hold UTC times, and the engine's Spark sessions read
-    them at UTC.  Decimals compare at ``decimal256(76, s)``, ``s`` the
-    largest scale: pyarrow misorders unequal scales and refuses an int
-    literal, and 76 digits hold any 38-digit bound and literal."""
-    if isinstance(bound, DecimalType):
-        t = pa.decimal256(76, max([bound.scale] + [
-            -Decimal(v).as_tuple().exponent for v in values if v is not None]))
-        return (lo.cast(t), hi.cast(t),
-                [pa.scalar(v if v is None else Decimal(v), t) for v in values])
-    if isinstance(bound, (TimestampType, TimestampNTZType)):
-        values = [None if v is None else
-                  v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-                  for v in values]
-    return lo, hi, values
+def _forms(predicates: Mapping[str, object] | None,
+           schema_types: Mapping[str, str] | None):
+    """``(column, op, values, type)`` per predicate (a bare value is
+    ``==``), ``type`` the column's Spark type in ``schema_types``, if it
+    carries bounds (``snapshotstore.bound_type``), else None."""
+    for col, pred in (predicates or {}).items():
+        op, *values = pred if isinstance(pred, tuple) else ("==", pred)
+        if op not in _COMPARE and op not in ("between", *_NULL_OPS):
+            raise ValueError(f"unknown predicate op {op!r}")
+        ddl = (schema_types or {}).get(col) or ""
+        arrow = bound_type(ddl) if ddl else None
+        yield col, op, tuple(values), (
+            TimestampNTZType() if ddl.strip().lower() == "timestamp_ntz"
+            else None if arrow is None else from_arrow_type(arrow))
+
+
+def _keep(col: str, op: str, values: tuple, lo, hi, dtype):
+    """The one comparison core: whether some value in ``[lo, hi]`` (a
+    file's bounds, or a row's value twice; Spark or pyarrow) satisfies
+    ``(op, values)``.  A known column type ``dtype`` checks the literals
+    and recasts the operands so every backend orders as the type does:
+    decimals at ``decimal256(76, s)`` in pyarrow (it misorders unequal
+    scales); a ``timestamp`` at its UTC instant (a naive literal is local
+    time, as pyspark reads it; pyarrow casts a ``tz=UTC`` or naive file
+    column and the bounds to naive UTC times; Spark reads the bounds at
+    the session zone, UTC in the engine); a ``timestamp_ntz`` at wall
+    clock (in Spark a zone-free NTZ literal, not ``F.lit``'s instant)."""
+    if dtype is not None:
+        _check_pred_type(dtype, col, values)
+        ntz = isinstance(dtype, TimestampNTZType)
+        if isinstance(lo, Column):
+            values = [F.lit(v.isoformat()).cast(dtype) if ntz and v else v
+                      for v in values]
+        elif isinstance(dtype, DecimalType):
+            t = pa.decimal256(76, max([dtype.scale] + [
+                -Decimal(v).as_tuple().exponent for v in values
+                if v is not None]))
+            lo, hi = lo.cast(t), hi.cast(t)
+            values = [pa.scalar(v if v is None else Decimal(v), t)
+                      for v in values]
+        elif isinstance(dtype, (TimestampType, TimestampNTZType)):
+            lo, hi = lo.cast(pa.timestamp("us")), hi.cast(pa.timestamp("us"))
+            if not ntz:
+                values = [v if v is None else v.astimezone(
+                    datetime.timezone.utc).replace(tzinfo=None)
+                    for v in values]
+    if op in ("==", "between"):  # == v is between v and v
+        return (hi >= values[0]) & (lo <= values[-1])
+    # some value can be < v only if the least one is (> v: the greatest)
+    return _COMPARE[op](lo if op[0] == "<" else hi, values[0])
 
 
 def bound_exprs(predicates: Mapping[str, object] | None,
                 schema: StructType,
-                field: Callable = F.col) -> list:
+                field: Callable = F.col,
+                schema_types: Mapping[str, str] | None = None) -> list:
     """File pruning by manifest bounds: one keep-expression per
-    predicate over ``min_<c>``/``max_<c>``/``null_<c>``/``rows``, built
-    on ``field(name)`` as in :func:`predicate_exprs`; ``schema`` is the
+    predicate, :func:`_keep` over ``(min_<c>, max_<c>)`` built on
+    ``field(name)`` as in :func:`predicate_exprs`; ``schema`` is the
     manifest's, as Spark types.  Unknown bounds (nulls) are
-    conservatively kept.
+    conservatively kept.  The table's ``schema_types`` type the
+    comparison, else the bounds' types do (both timestamps as UTC).
 
     Predicate forms per column:
       value                  — equality
@@ -176,11 +210,8 @@ def bound_exprs(predicates: Mapping[str, object] | None,
     """
     types = {f.name: f.dataType for f in schema}
     out = []
-    for col, pred in (predicates or {}).items():
-        if not isinstance(pred, tuple):
-            pred = ("==", pred)
-        op, values = pred[0], tuple(pred[1:])
-        if op in ("is_null", "not_null"):
+    for col, op, values, dtype in _forms(predicates, schema_types):
+        if op in _NULL_OPS:
             nc = f"null_{col}"
             if nc not in types:
                 continue  # manifest predates null counts: keep all
@@ -191,56 +222,49 @@ def bound_exprs(predicates: Mapping[str, object] | None,
         bound = types.get(f"min_{col}")
         if bound is None:
             raise ValueError(f"no bounds for column {col!r} in manifest")
-        _check_pred_type(bound, col, values)
+        if isinstance(bound, TimestampNTZType):
+            bound = TimestampType()
         lo, hi = field(f"min_{col}"), field(f"max_{col}")
-        unknown = _is_null(lo) | _is_null(hi)
-        if not isinstance(lo, Column):
-            lo, hi, values = _arrow_operands(lo, hi, values, bound)
-        if op in ("==", "between"):  # == v is between v and v
-            keep = (hi >= values[0]) & (lo <= values[-1])
-        elif op in _COMPARE:
-            # any row can be < v only if the file's min is (> v: max)
-            keep = _COMPARE[op](lo if op[0] == "<" else hi, values[0])
-        else:
-            raise ValueError(f"unknown predicate op {op!r}")
-        out.append(unknown | keep)
+        out.append(_is_null(lo) | _is_null(hi)
+                   | _keep(col, op, values, lo, hi, dtype or bound))
     return out
 
 
 def prune_manifest(manifest: DataFrame,
-                   predicates: Mapping[str, object] | None) -> DataFrame:
+                   predicates: Mapping[str, object] | None,
+                   schema_types: Mapping[str, str] | None = None
+                   ) -> DataFrame:
     """Filter manifest entries whose [min,max] bounds can satisfy the
     predicates (:func:`bound_exprs` rendered on Spark Columns)."""
-    for keep in bound_exprs(predicates, manifest.schema):
+    for keep in bound_exprs(predicates, manifest.schema,
+                            schema_types=schema_types):
         manifest = manifest.filter(keep)
     return manifest
 
 
 def predicate_exprs(predicates: Mapping[str, object] | None,
-                    field: Callable = F.col) -> list:
+                    field: Callable = F.col,
+                    schema_types: Mapping[str, str] | None = None) -> list:
     """The same predicate mini-language as :func:`bound_exprs`,
-    rendered as row filters (for callers that want the rows filtered,
-    not just the files pruned): one expression per column, built on
-    ``field(col)``.  ``F.col`` renders Spark Columns;
-    ``pyarrow.dataset.field`` renders dataset expressions for filtering
-    AT the reader.  Both backends share ``== < <= > >= & ~`` and spell
-    only the null test differently."""
+    rendered as row filters: one expression per column, :func:`_keep`
+    over ``(field(col), field(col))`` typed by ``schema_types`` (else
+    as the literal).  ``F.col`` renders Spark Columns;
+    ``pyarrow.dataset.field`` dataset expressions for the reader."""
     out = []
-    for col, pred in (predicates or {}).items():
+    for col, op, values, dtype in _forms(predicates, schema_types):
         c = field(col)
-        if not isinstance(pred, tuple):
-            pred = ("==", pred)
-        op = pred[0]
-        if op in _COMPARE:
-            out.append(_COMPARE[op](c, pred[1]))
-        elif op == "between":
-            out.append((c >= pred[1]) & (c <= pred[2]))
-        elif op in ("is_null", "not_null"):
-            null = _is_null(c)
-            out.append(null if op == "is_null" else ~null)
+        if op in _NULL_OPS:
+            out.append(_is_null(c) if op == "is_null" else ~_is_null(c))
         else:
-            raise ValueError(f"unknown predicate op {op!r}")
+            out.append(_keep(col, op, values, c, c, dtype))
     return out
+
+
+@lru_cache(maxsize=None)
+def parse_ddl(ddl: str) -> StructType:
+    """``StructType.fromDDL``, once per DDL string per process (a py4j
+    round trip of 6-16 ms); callers share the result unmodified."""
+    return StructType.fromDDL(ddl)
 
 
 def local_df(spark: SparkSession, schema: str | StructType,
@@ -258,7 +282,7 @@ def local_df(spark: SparkSession, schema: str | StructType,
     (the no-input 4-task stages of both benchmark workloads' traces on
     a 4-core host)."""
     if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
+        schema = parse_ddl(schema)
     arrow_schema = to_arrow_schema(schema)
     if isinstance(columns, pa.Table):
         table = columns
@@ -360,7 +384,7 @@ def deletes_df(spark: SparkSession, store: SnapshotStore,
     those, so no (file, position) repeats and nothing needs
     deduplicating."""
     if not dv_paths or not data_files:
-        return local_df(spark, f"{FILE_COL} string, {POS_COL} long")
+        return local_df(spark, _DV_SIDE)
     dv = _with_relative_file(
         read_pinned(spark, [store.abs(p) for p in dv_paths]), store,
         "dv_path")
@@ -463,7 +487,8 @@ def scan_files(
 
 
 def driver_plan(manifest_paths: Sequence[str],
-                predicates: Mapping[str, object] | None) -> pa.Table:
+                predicates: Mapping[str, object] | None,
+                schema_types: Mapping[str, str] | None = None) -> pa.Table:
     """``(path, dv_path, dv_cardinality)`` of the manifest entries whose
     bounds can satisfy ``predicates`` (:func:`bound_exprs`) and that hold
     a live row, read on the driver with pyarrow (no Spark job), as every
@@ -480,7 +505,7 @@ def driver_plan(manifest_paths: Sequence[str],
         filter=reduce(operator.and_,
                       bound_exprs(predicates,
                                   from_arrow_schema(segments.schema),
-                                  pds.field), live))
+                                  pds.field, schema_types), live))
 
 
 def scan(
@@ -515,6 +540,11 @@ def scan(
     # pruned plan (``Snapshot.entry_count``); pre-upgrade snapshots sum
     # the segment footers' row counts
     from moonlink_spark.operators import distscan
+    props = snapshot.properties
+    types = props.get("schema_types")
+    read = dict(schema_ddl=props.get("schema_ddl"), project=snapshot.schema,
+                column_defaults=props.get("column_defaults"),
+                with_location=with_location)
     n_entries = snapshot.entry_count
     if n_entries is None:
         n_entries = sum(pq.read_metadata(p).num_rows
@@ -523,17 +553,13 @@ def scan(
         # the manifest stays a DataFrame end to end: executors read
         # their own plan slices
         manifest = prune_manifest(
-            read_pinned(spark, snapshot.manifest_paths), predicates)
+            read_pinned(spark, snapshot.manifest_paths), predicates, types)
         if keep_files is not None:
             manifest = manifest.join(keep_files, on="path", how="left_semi")
         return distscan.scan_distributed(
-            spark, store, manifest,
-            schema_ddl=snapshot.properties.get("schema_ddl"),
-            project=snapshot.schema,
-            column_defaults=snapshot.properties.get("column_defaults"),
-            with_location=with_location,
+            spark, store, manifest, schema_types=types, **read,
             row_filters=predicates if apply_row_filters else None)
-    plan = driver_plan(snapshot.manifest_paths, predicates)
+    plan = driver_plan(snapshot.manifest_paths, predicates, types)
     if keep_files is not None:
         keep = keep_files.select("path").toArrow()["path"]
         plan = plan.filter(pc.is_in(plan["path"], value_set=keep))
@@ -547,23 +573,16 @@ def scan(
         # e.g. a MERGE batch of brand-new keys outside all file bounds).
         # The shape must match scan_files output exactly: callers like
         # merge_into select the location columns unconditionally.
-        ddl = snapshot.properties.get("schema_ddl")
-        if not ddl:
-            ddl = ", ".join(f"`{c}` string" for c in snapshot.schema)
-        empty = local_df(spark, ddl)
+        empty = local_df(spark, read["schema_ddl"] or ", ".join(
+            f"`{c}` string" for c in snapshot.schema))
         if with_location:
             empty = empty.withColumn(FILE_COL, F.lit(None).cast("string"))
             if POS_COL not in empty.columns:
                 empty = empty.withColumn(POS_COL, F.lit(None).cast("long"))
         return empty
-    out = scan_files(
-        spark, store, files, dv_paths, dv_card,
-        with_location=with_location,
-        schema_ddl=snapshot.properties.get("schema_ddl"),
-        project=snapshot.schema,
-        column_defaults=snapshot.properties.get("column_defaults"),
-        dv_files=dv_files)
+    out = scan_files(spark, store, files, dv_paths, dv_card,
+                     dv_files=dv_files, **read)
     if apply_row_filters:
-        for cond in predicate_exprs(predicates):
+        for cond in predicate_exprs(predicates, schema_types=types):
             out = out.filter(cond)  # Catalyst pushes to the parquet scan
     return out

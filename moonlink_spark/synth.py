@@ -34,7 +34,6 @@ rest) to exercise skew salting.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
