@@ -41,13 +41,12 @@ from moonlink_spark.operators import expire as expire_op
 from moonlink_spark.operators import merge as merge_op
 from moonlink_spark.operators import scan as scan_op
 from moonlink_spark.operators.planner import plan_compaction, trigger_counts
-from moonlink_spark.operators.rewrite import rewrite_bin
+from moonlink_spark.operators.rewrite import driver_rewrite, rewrite_bin
 from moonlink_spark.snapshotstore import (
     DV_DIR,
     CommitConflict,
     Snapshot,
     SnapshotStore,
-    bound_type,
     read_pinned,
     staged_names,
 )
@@ -55,31 +54,6 @@ from moonlink_spark.snapshotstore import (
 # index-merge trigger: min 16 small DV sidecars, mirroring
 # index_merge_config.rs:258-268 (min 16 / max 32 index blocks).
 MIN_DV_SIDECARS_TO_MERGE = 16
-
-
-def _column_batches(paths: list[str], columns: list[str],
-                    types: Mapping[str, str] | None):
-    """``columns`` of the parquet files ``paths`` as Arrow record
-    batches, one file after another in the order given, streamed a
-    batch at a time (a consumer that stops early reads no further), cast
-    to the table's column types (``types``: column → DDL type, the
-    snapshot's ``schema_types``) as Spark reads them under the pinned
-    schema: a column a file lacks reads as nulls.  A column without a
-    known type is typed by the first file's footer, as Spark's
-    inference types it."""
-    first = pq.read_schema(paths[0])
-    types = types or {}
-    schema = pa.schema([
-        (c, (bound_type(types[c]) if c in types else None)
-         or first.field(c).type) for c in columns])
-    for path in paths:
-        pf = pq.ParquetFile(path)
-        have = [c for c in columns if c in pf.schema_arrow.names]
-        for part in pf.iter_batches(columns=have):
-            yield pa.record_batch(
-                [part.column(f.name).cast(f.type) if f.name in have
-                 else pa.nulls(part.num_rows, f.type) for f in schema],
-                schema=schema)
 
 
 class MoonTable:
@@ -229,8 +203,9 @@ class MoonTable:
             # the generator reads the sample files with pyarrow inside
             # the call: the boundary step starts no Spark job
             boundaries = compute_zorder_boundaries(
-                _column_batches([self.store.abs(p) for p in sample_files],
-                                zcols, base.properties.get("schema_types")),
+                scan_op.column_batches(
+                    [self.store.abs(p) for p in sample_files], zcols,
+                    base.properties.get("schema_types")),
                 zcols, bits=self.config.zorder_bits,
                 total_rows=approx_rows, curve=self.config.zorder_curve)
         else:
@@ -251,46 +226,31 @@ class MoonTable:
         run_bins = bins if max_bins is None else bins[:max_bins]
         from concurrent.futures import ThreadPoolExecutor
 
-        # each bin reads its own delete vectors on the driver
-        # (scan_files) while the whole job's deleted rows are few enough
-        # (the bins run concurrently).  Above that, the candidate set's
-        # DVs are read by Spark once and cached, and every bin
-        # anti-joins against (a filter of) that one DataFrame
-        dv_files = {f: p for b in run_bins for f, p in b.dv_files.items()}
-        deletes = None
-        if dv_files and not scan_op.dv_side_on_driver(
-                self.spark, sum(b.deleted_rows for b in run_bins),
-                dv_files):
-            deletes = scan_op.deletes_df(
-                self.spark, self.store, sorted(set(dv_files.values())),
-                dv_files).persist()
+        # a job whose planned input is small rewrites every bin with
+        # pyarrow on the driver and starts no Spark job (the same rows
+        # in the same files, see rewrite.driver_rewrite); the plan alone
+        # decides, so a resumed job takes the same path
+        types = base.properties.get("schema_types")
+        defaults = base.properties.get("column_defaults")
+        on_driver = driver_rewrite(self.spark, bins, cfg, base.schema,
+                                   types, defaults)
 
-        # AQE is disabled for the rewrite fan-out: adaptive re-planning
-        # adds a materialization barrier per shuffle, and concurrent bin
-        # jobs serialized on those barriers (~6x slowdown measured at 16
-        # concurrent bins, back when the zkey ran Arrow/pandas UDFs in
-        # the scan stages).  The zkey is JVM-only now and this rationale
-        # has not been measured since (ROADMAP #3, step 1).  The bin jobs
-        # have a fixed two-stage shape (scan→sort-write), so AQE has
-        # nothing to adapt anyway.
-        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        def rewrite_all(deletes=None) -> list[dict]:
             with ThreadPoolExecutor(max_workers=comp.bin_concurrency) as pool:
-                records = list(pool.map(
+                return list(pool.map(
                     lambda b: rewrite_bin(
                         self.spark, self.store, b, config=cfg,
                         boundaries=boundaries, job_id=job_id,
                         schema_ddl=base.properties.get("schema_ddl"),
-                        project=base.schema,
-                        column_defaults=base.properties.get(
-                            "column_defaults"),
-                        deletes=deletes),
+                        project=base.schema, column_defaults=defaults,
+                        deletes=deletes, schema_types=types,
+                        on_driver=on_driver),
                     run_bins))
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            if deletes is not None:
-                deletes.unpersist()
+
+        if on_driver:
+            records = rewrite_all()
+        else:
+            records = self._rewrite_on_spark(run_bins, rewrite_all)
         if max_bins is not None and len(bins) > max_bins:
             return base  # simulated kill; lineage already on disk
 
@@ -305,6 +265,7 @@ class MoonTable:
             "rows_out": sum(r["rows_out"] for r in records),
             "bytes_in": sum(r["bytes_in"] for r in records),
             "bytes_out": sum(r["bytes_out"] for r in records),
+            "writer": "driver" if on_driver else "spark",
             # driver-side phase wall (the OTEL histogram analogue,
             # observability/iceberg_persistence.rs:59-86): plan =
             # manifest read + candidate selection + binning;
@@ -385,6 +346,41 @@ class MoonTable:
                         "compacted inputs changed concurrently; "
                         "rerun optimize") from None
                 commit_base = new_base
+
+    def _rewrite_on_spark(self, run_bins, rewrite_all) -> list[dict]:
+        """Run ``rewrite_all`` (the bins' Spark jobs, concurrently) with
+        AQE off and the job's delete vectors at hand.
+
+        Each bin reads its own delete vectors on the driver (scan_files)
+        while the whole job's deleted rows are few enough (the bins run
+        concurrently).  Above that, the candidate set's DVs are read by
+        Spark once and cached, and every bin anti-joins against (a
+        filter of) that one DataFrame.
+
+        AQE is disabled for the rewrite fan-out: adaptive re-planning
+        adds a materialization barrier per shuffle, and concurrent bin
+        jobs serialized on those barriers (~6x slowdown measured at 16
+        concurrent bins, back when the zkey ran Arrow/pandas UDFs in the
+        scan stages).  The zkey is JVM-only now and this rationale has
+        not been measured since (ROADMAP #3, step 1).  The bin jobs have
+        a fixed two-stage shape (scan→sort-write), so AQE has nothing to
+        adapt anyway."""
+        dv_files = {f: p for b in run_bins for f, p in b.dv_files.items()}
+        deletes = None
+        if dv_files and not scan_op.dv_side_on_driver(
+                self.spark, sum(b.deleted_rows for b in run_bins),
+                dv_files):
+            deletes = scan_op.deletes_df(
+                self.spark, self.store, sorted(set(dv_files.values())),
+                dv_files).persist()
+        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return rewrite_all(deletes)
+        finally:
+            self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            if deletes is not None:
+                deletes.unpersist()
 
     def _optimize_index(self, base: Snapshot, job_id: str) -> Snapshot:
         """Index maintenance: consolidate the key-hash bucket index

@@ -4,7 +4,8 @@ surface.
 The reference exports OTEL histograms for its persistence stages
 (``observability/iceberg_persistence.rs:59-86``: Overall / DataFiles /
 FileIndices / DeletionVectors / TransactionCommit, ms buckets
-[50,100,200,300,400,500]) through ``moonlink_service``'s otel endpoint.
+[50,100,200,300,400,500], a subset of ours) through ``moonlink_service``'s
+otel endpoint.
 This module is that meter, Python-side: engine operations observe into
 a process-global registry, and the REST server renders it as JSON under
 ``GET /metrics`` (``service/rest_server.py``) for any scraper.
@@ -37,7 +38,13 @@ from __future__ import annotations
 import threading
 from typing import Any
 
-BOUNDARIES_MS = (50.0, 100.0, 200.0, 300.0, 400.0, 500.0)
+# Bucket upper bounds, 10 ms to 30 min, about three per decade (1-2-5),
+# so a multi-second merge and a 70 s maintenance pass each land in a
+# bucket of their own instead of ``+inf``; the reference's six
+# 50-500 ms boundaries are all kept.
+BOUNDARIES_MS = (10.0, 20.0, 50.0, 100.0, 200.0, 300.0, 400.0, 500.0,
+                 1_000.0, 2_000.0, 5_000.0, 10_000.0, 20_000.0, 50_000.0,
+                 100_000.0, 200_000.0, 500_000.0, 1_000_000.0, 1_800_000.0)
 
 FAMILIES = (
     "snapshot_synchronization_latency",

@@ -74,12 +74,14 @@ def _with_relative_file(df: DataFrame, store: SnapshotStore,
                         col: str = FILE_COL) -> DataFrame:
     """Attach, as ``col``, the manifest-relative path of the parquet file
     each row was read from (JVM-side expression on the scan metadata,
-    no UDF)."""
+    no UDF).  Spark percent-encodes that path as a URI (a space reads
+    ``%20``, a ``%`` ``%25``) and leaves ``+`` as it is; ``url_decode``
+    would read a ``+`` as a space, so it is escaped first."""
+    uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
     return df.withColumn(
         col,
-        F.replace(
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
-            F.lit(store.warehouse + "/"), F.lit("")),
+        F.replace(F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B"))),
+                  F.lit(store.warehouse + "/"), F.lit("")),
     )
 
 
@@ -95,6 +97,22 @@ _VALUE_GROUPS = ((bool, "boolean"), (int, "integral"), (float, "numeric"),
                  (datetime.datetime, "timestamp"), (datetime.date, "date"))
 
 
+_SPARK_DECIMAL_DIGITS = 38
+
+
+def _fits_spark_decimal(v: Decimal) -> bool:
+    """Whether ``F.lit(v)`` makes a Spark decimal: its precision (digits
+    and trailing zeros of a positive exponent, at least its scale) is at
+    most 38.  A longer literal raises there while pyarrow compares it,
+    so both backends refuse it."""
+    if not v.is_finite():
+        return False
+    _sign, digits, exp = v.as_tuple()
+    precision = (len(digits) + exp if exp > 0
+                 else max(len(digits), -exp))
+    return precision <= _SPARK_DECIMAL_DIGITS
+
+
 def _check_pred_type(bound: DataType, col: str, values: tuple) -> None:
     """Refuse type-mismatched predicates loudly: comparing a numeric
     value against a string column (or vice versa) would compare
@@ -103,11 +121,17 @@ def _check_pred_type(bound: DataType, col: str, values: tuple) -> None:
     covering the reference's Datum universe,
     ``parquet_stats_utils.rs:180-320``); a value's Python type must land
     in its column type's comparison group.  An aware datetime (an
-    instant) is refused against a ``timestamp_ntz`` column."""
+    instant) is refused against a ``timestamp_ntz`` column, and a
+    decimal Spark cannot hold (:func:`_fits_spark_decimal`) everywhere."""
     expected = next((g for t, g in _BOUND_GROUPS if isinstance(bound, t)),
                     None)
     for v in values:
         got = next((g for t, g in _VALUE_GROUPS if isinstance(v, t)), None)
+        if got == "decimal" and not _fits_spark_decimal(v):
+            raise TypeError(
+                f"predicate on {col!r}: decimal value {v!r} has more than "
+                f"{_SPARK_DECIMAL_DIGITS} digits (or is not finite); "
+                "no Spark decimal holds it")
         if v is None or got == expected and not (
                 isinstance(bound, TimestampNTZType) and v.tzinfo):
             continue
@@ -484,6 +508,31 @@ def scan_files(
     if not with_location:
         live = live.drop(FILE_COL)
     return live
+
+
+def column_batches(paths: list[str], columns: list[str],
+                    types: Mapping[str, str] | None):
+    """``columns`` of the parquet files ``paths`` as Arrow record
+    batches, one file after another in the order given, streamed a
+    batch at a time (a consumer that stops early reads no further), cast
+    to the table's column types (``types``: column → DDL type, the
+    snapshot's ``schema_types``) as Spark reads them under the pinned
+    schema: a column a file lacks reads as nulls.  A column without a
+    known type is typed by the first file's footer, as Spark's
+    inference types it."""
+    first = pq.read_schema(paths[0])
+    types = types or {}
+    schema = pa.schema([
+        (c, (bound_type(types[c]) if c in types else None)
+         or first.field(c).type) for c in columns])
+    for path in paths:
+        pf = pq.ParquetFile(path)
+        have = [c for c in columns if c in pf.schema_arrow.names]
+        for part in pf.iter_batches(columns=have):
+            yield pa.record_batch(
+                [part.column(f.name).cast(f.type) if f.name in have
+                 else pa.nulls(part.num_rows, f.type) for f in schema],
+                schema=schema)
 
 
 def driver_plan(manifest_paths: Sequence[str],

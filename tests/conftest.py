@@ -26,3 +26,11 @@ def warehouse(tmp_path):
     w = tmp_path / "warehouse"
     os.makedirs(w, exist_ok=True)
     return str(w)
+
+
+@pytest.fixture()
+def spark_rewrite(monkeypatch):
+    """Lower the driver-rewrite switch: every optimize job rewrites its
+    bins as Spark jobs, whatever its size."""
+    from moonlink_spark.operators import rewrite
+    monkeypatch.setattr(rewrite, "DRIVER_REWRITE_BYTES", -1)

@@ -25,6 +25,12 @@ from moonlink_spark.synth import (
     write_users_file,
 )
 
+@pytest.fixture(autouse=True)
+def _spark_rewrite(spark_rewrite):
+    """These cases pin the Spark rewrite (the driver rewrite has its
+    own, in test_driver_rewrite.py)."""
+
+
 USERS_CONFIG = TableConfig(
     zorder_columns=("id",),
     stats_columns=("name",),

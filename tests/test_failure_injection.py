@@ -135,7 +135,8 @@ def test_merge_failure_leaves_table_intact_and_retryable(spark, wh, op,
     batch.unpersist()
 
 
-def test_optimize_commit_failure_then_resume(spark, wh, flaky_cls):
+def test_optimize_commit_failure_then_resume(spark, wh, flaky_cls,
+                                            spark_rewrite):
     t = MoonTable(spark, wh, CFG)
     v0 = t.current_version()
     want = sha_set(t)

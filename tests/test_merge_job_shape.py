@@ -129,10 +129,11 @@ def test_pinned_dv_schema_equals_inferred(spark, tmp_path):
         assert footer_schema(spark, path) == spark.read.parquet(path).schema
 
 
-def test_write_path_runs_no_schema_inference_job(spark, tmp_path):
+def test_write_path_runs_no_schema_inference_job(spark, tmp_path,
+                                                 spark_rewrite):
     """A merge, a merge-on-read scan, changes() and optimize("full")
-    read manifests, DV sidecars and index parts with pinned schemas: no
-    ``parquet at …`` inference job runs."""
+    (its Spark rewrite) read manifests, DV sidecars and index parts with
+    pinned schemas: no ``parquet at …`` inference job runs."""
     w = str(tmp_path / "wh")
     _aftermath(w)
     t = MoonTable(spark, w, CFG)
@@ -446,13 +447,13 @@ def test_benchmark_shaped_merge_runs_at_most_five_jobs(spark, tmp_path):
     assert t.scan().count() == len(rows) - 150 + 150
 
 
-def test_benchmark_shaped_optimize_runs_at_most_four_jobs(
-        spark, tmp_path, monkeypatch):
+def test_benchmark_shaped_optimize_runs_no_spark_job(spark, tmp_path,
+                                                     monkeypatch):
     """An ``optimize("full")`` shaped like the maintain benchmark's (the
-    20-file aftermath planned as 2 bins of 2 outputs) starts at most
-    four Spark jobs: per bin, the broadcast of its driver-read delete
-    vectors and its rewrite.  The Z-order boundary sample is read on
-    the driver and starts none."""
+    20-file aftermath planned as 2 bins of 2 outputs) starts no Spark
+    job: its planned input is under ``rewrite.DRIVER_REWRITE_BYTES``, so
+    the bins are read, keyed, sorted and written with pyarrow on the
+    driver, and the Z-order boundary sample is read there too."""
     from moonlink_spark import engine
     from perfbench.workloads import SYNTH, table_config
 
@@ -473,23 +474,29 @@ def test_benchmark_shaped_optimize_runs_at_most_four_jobs(
 
     monkeypatch.setattr(engine, "compute_zorder_boundaries", spy)
     t = MoonTable(spark, w, cfg)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     before = _job_ids(spark)
     snap = t.optimize("full")
     bus.waitUntilEmpty()
     jobs = _jobs_since(spark, before)
     assert snap.properties["metrics"]["bins"] == 2
+    assert snap.properties["metrics"]["writer"] == "driver"
     assert sample_jobs == []
-    assert 0 < len(jobs) <= 4, jobs
+    assert jobs == []
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
 
 _OVER_BUDGET = """
 import json, sys
 from pyspark.sql import SparkSession
 from moonlink_spark.engine import MoonTable
+from moonlink_spark.operators import rewrite
 from moonlink_spark.operators import scan as scan_op
 from moonlink_spark.snapshotstore import SnapshotStore
 from moonlink_spark.synth import synthesize_cdc_aftermath
 from tests.test_merge_job_shape import _dv_read_digests
+
+rewrite.DRIVER_REWRITE_BYTES = -1  # the Spark rewrite, as in the caller
 
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.driver.maxResultSize", "1m")
@@ -540,7 +547,7 @@ def _dv_read_digests(spark, w: str) -> dict:
 
 
 def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
-                                              monkeypatch):
+                                              monkeypatch, spark_rewrite):
     """Under a 1 MB ``spark.driver.maxResultSize`` the aftermath's
     deleted rows exceed the driver budget: ``scan()`` and
     ``optimize("full")`` read the delete vectors with Spark
@@ -571,7 +578,8 @@ def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
 
 
 def test_resume_on_spark_dv_read_matches_driver_read(spark, tmp_path,
-                                                     monkeypatch):
+                                                     monkeypatch,
+                                                     spark_rewrite):
     """The Spark DV read under a kill and resume: with every DV side
     over the driver budget, an optimize killed after two of its bins
     and then resumed reads its deletes once per run as the persisted

@@ -131,7 +131,8 @@ def _accepts(col, v):
     if col == "f":
         return type(v) in (int, float)
     if col in ("d10", "d38"):
-        return type(v) in (int, D)
+        return type(v) is int or (type(v) is D
+                                   and scan_op._fits_spark_decimal(v))
     if col == "day":
         return type(v) is dt.date
     if col == "ts":
@@ -179,6 +180,9 @@ _aware = st.builds(
 _int = st.one_of(st.integers(-60, 60), st.sampled_from([2 ** 40, -2 ** 41]))
 _dec = st.builds(lambda n, s: D(n).scaleb(-s),
                  st.integers(-10 ** 14, 10 ** 14), st.integers(0, 20))
+# more digits than any Spark decimal holds: refused on every backend
+_huge_dec = st.builds(lambda n, s: D(n).scaleb(-s),
+                      st.integers(10 ** 38, 10 ** 42), st.integers(0, 24))
 
 
 def _stored(col):
@@ -199,7 +203,7 @@ _OWN = {"i": _int, "b": _int,
 
 def _literal(col):
     own = st.one_of(_stored(col), _OWN[col])
-    return st.one_of(own, own, own, _int, _dec, _naive, _aware)
+    return st.one_of(own, own, own, _int, _dec, _huge_dec, _naive, _aware)
 
 
 def _forms(col):

@@ -21,6 +21,12 @@ from moonlink_spark.snapshotstore import CommitConflict, SnapshotStore
 from moonlink_spark.synth import synthesize_cdc_aftermath
 from tests.oracle import content_sha_multiset, live_rows_pandas
 
+@pytest.fixture(autouse=True)
+def _spark_rewrite(spark_rewrite):
+    """These cases pin the Spark rewrite (the driver rewrite has its
+    own, in test_driver_rewrite.py)."""
+
+
 # small files + small bins => several bins to interrupt between
 SMALL_BINS = TableConfig(compaction=CompactionConfig(
     target_file_bytes=64 << 10, bin_target_bytes=128 << 10,
