@@ -41,7 +41,8 @@ from moonlink_spark.operators import expire as expire_op
 from moonlink_spark.operators import merge as merge_op
 from moonlink_spark.operators import scan as scan_op
 from moonlink_spark.operators.planner import plan_compaction, trigger_counts
-from moonlink_spark.operators.rewrite import driver_rewrite, rewrite_bin
+from moonlink_spark.operators import rewrite as rewrite_op
+from moonlink_spark.operators.rewrite import rewrite_bin
 from moonlink_spark.snapshotstore import (
     DV_DIR,
     CommitConflict,
@@ -226,31 +227,23 @@ class MoonTable:
         run_bins = bins if max_bins is None else bins[:max_bins]
         from concurrent.futures import ThreadPoolExecutor
 
-        # a job whose planned input is small rewrites every bin with
-        # pyarrow on the driver and starts no Spark job (the same rows
-        # in the same files, see rewrite.driver_rewrite); the plan alone
-        # decides, so a resumed job takes the same path
-        types = base.properties.get("schema_types")
-        defaults = base.properties.get("column_defaults")
-        on_driver = driver_rewrite(self.spark, bins, cfg, base.schema,
-                                   types, defaults)
-
-        def rewrite_all(deletes=None) -> list[dict]:
-            with ThreadPoolExecutor(max_workers=comp.bin_concurrency) as pool:
-                return list(pool.map(
-                    lambda b: rewrite_bin(
-                        self.spark, self.store, b, config=cfg,
-                        boundaries=boundaries, job_id=job_id,
-                        schema_ddl=base.properties.get("schema_ddl"),
-                        project=base.schema, column_defaults=defaults,
-                        deletes=deletes, schema_types=types,
-                        on_driver=on_driver),
-                    run_bins))
-
-        if on_driver:
-            records = rewrite_all()
-        else:
-            records = self._rewrite_on_spark(run_bins, rewrite_all)
+        # a job whose planned input is small runs the rewrite kernel
+        # in-process on the driver and starts no Spark job; a larger one
+        # runs it in Spark tasks (the same rows in the same files, see
+        # operators/rewrite.py).  The plan alone decides, so a resumed
+        # job takes the same path
+        on_driver = (sum(b.bytes for b in bins)
+                     <= rewrite_op.DRIVER_REWRITE_BYTES)
+        with ThreadPoolExecutor(max_workers=comp.bin_concurrency) as pool:
+            records = list(pool.map(
+                lambda b: rewrite_bin(
+                    self.spark, self.store, b, config=cfg,
+                    boundaries=boundaries, job_id=job_id,
+                    project=base.schema,
+                    column_defaults=base.properties.get("column_defaults"),
+                    schema_types=base.properties.get("schema_types"),
+                    on_driver=on_driver),
+                run_bins))
         if max_bins is not None and len(bins) > max_bins:
             return base  # simulated kill; lineage already on disk
 
@@ -346,41 +339,6 @@ class MoonTable:
                         "compacted inputs changed concurrently; "
                         "rerun optimize") from None
                 commit_base = new_base
-
-    def _rewrite_on_spark(self, run_bins, rewrite_all) -> list[dict]:
-        """Run ``rewrite_all`` (the bins' Spark jobs, concurrently) with
-        AQE off and the job's delete vectors at hand.
-
-        Each bin reads its own delete vectors on the driver (scan_files)
-        while the whole job's deleted rows are few enough (the bins run
-        concurrently).  Above that, the candidate set's DVs are read by
-        Spark once and cached, and every bin anti-joins against (a
-        filter of) that one DataFrame.
-
-        AQE is disabled for the rewrite fan-out: adaptive re-planning
-        adds a materialization barrier per shuffle, and concurrent bin
-        jobs serialized on those barriers (~6x slowdown measured at 16
-        concurrent bins, back when the zkey ran Arrow/pandas UDFs in the
-        scan stages).  The zkey is JVM-only now and this rationale has
-        not been measured since (ROADMAP #3, step 1).  The bin jobs have
-        a fixed two-stage shape (scan→sort-write), so AQE has nothing to
-        adapt anyway."""
-        dv_files = {f: p for b in run_bins for f, p in b.dv_files.items()}
-        deletes = None
-        if dv_files and not scan_op.dv_side_on_driver(
-                self.spark, sum(b.deleted_rows for b in run_bins),
-                dv_files):
-            deletes = scan_op.deletes_df(
-                self.spark, self.store, sorted(set(dv_files.values())),
-                dv_files).persist()
-        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return rewrite_all(deletes)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            if deletes is not None:
-                deletes.unpersist()
 
     def _optimize_index(self, base: Snapshot, job_id: str) -> Snapshot:
         """Index maintenance: consolidate the key-hash bucket index
@@ -589,10 +547,17 @@ class MoonTable:
                    default=None) -> Snapshot:
         """Add a column.  Metadata-only: existing files are untouched;
         scans fill the column with NULL (or ``default``) for
-        pre-existing rows; the next compaction bakes values in."""
+        pre-existing rows; the next compaction bakes values in.
+
+        A ``default`` must be a value of the column's type, which scans
+        and compaction both fill it as (an ``int`` column with a default
+        past 2**31 would otherwise read as ``bigint`` and then fail to
+        read once compacted); one that is not raises ``ValueError``."""
         base = self.store.read_snapshot()
         if name in base.schema:
             raise ValueError(f"column {name!r} already exists")
+        if default is not None:
+            self._check_default(name, type_ddl, default)
         schema = [c for c in base.schema if c != self.POS_COL] \
             + [name, self.POS_COL]
         props = dict(base.properties)
@@ -614,6 +579,16 @@ class MoonTable:
         return self.store.commit_reuse(
             base.version, schema=schema, properties=props,
             expected_parent=base.version)
+
+    @staticmethod
+    def _check_default(name: str, type_ddl: str, default) -> None:
+        """Raise ``ValueError`` unless ``default`` is a value of
+        ``type_ddl``: compaction bakes it in as that Arrow scalar."""
+        try:
+            pa.scalar(default, rewrite_op.column_type(type_ddl))
+        except (pa.ArrowException, OverflowError, TypeError) as e:
+            raise ValueError(f"default {default!r} of column {name!r} is "
+                             f"not a {type_ddl} value: {e}") from None
 
     def drop_column(self, name: str) -> Snapshot:
         """Drop a column.  Metadata-only: the column simply leaves the

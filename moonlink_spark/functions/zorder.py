@@ -6,18 +6,20 @@ its compactor emits files strictly in input file-id order,
 ``(repo, path)`` is mandated on top of compaction semantics by
 BASELINE.json's north rule.  Design:
 
-1. each dimension is mapped to a *numeric proxy* that preserves order —
-   strings take their first-7-bytes big-endian integer (lexicographic
-   within the prefix), numerics cast to float64;
+1. each dimension is mapped to a *numeric proxy* that preserves order
+   (:func:`zorder_proxy`) — strings take their first-7-bytes big-endian
+   integer (lexicographic within the prefix), numbers, dates and
+   timestamps their float64 value; a null or NaN is 0;
 2. per-dimension quantile boundaries rank-normalize the proxy into
    ``2**bits`` buckets, so skewed distributions still fill the key space
    evenly.  They come from one seeded, bounded sample of Arrow batches
    read on the driver (:func:`compute_zorder_boundaries`); the
    quantiles are numpy;
-3. the bucket bits are interleaved (Morton part1by1 spread) into one
-   long ``zkey``.  The default Morton key is a plain Spark expression
-   (:func:`with_zorder_key`), so the rewrite's scan stage never leaves
-   the JVM; only the Hilbert curve runs as a pandas UDF.
+3. the bucket bits are interleaved into one long ``zkey`` by the
+   curve's numpy kernel (:data:`CURVES`: Morton part1by1 spread, or
+   Hilbert).  The rewrite keys its rows with the same proxy and kernel
+   in whichever process reads them, the driver or a Spark task
+   (``operators/rewrite.py``).
 
 The zkey is a *physical layout* device only: rewrites split it into
 ranges at the global zkey cutpoints (``ZCUTS_KEY``) and sort within
@@ -29,45 +31,15 @@ committed data files.
 
 from __future__ import annotations
 
-import threading
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # key under which compute_zorder_boundaries stores the global zkey
 # quantile cutpoints (int64 array) alongside the per-column boundaries
 ZCUTS_KEY = "__zcuts__"
-
-
-class ZOrderBoundaries(dict):
-    """One job's boundaries: ``{column: float64 array, ZCUTS_KEY: int64
-    array}``, as returned by :func:`compute_zorder_boundaries`.
-
-    Every bin of a job keys its rows from the same boundaries, so the
-    zkey's Column expressions are built once per job and kept here:
-    :func:`with_zorder_key` looks them up instead of re-spelling two
-    4095-element literal arrays per dimension (and the interleave) on
-    the driver for every bin.  The lock makes the concurrently-submitted
-    bins wait for the first build instead of each doing their own."""
-
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self._lock = threading.Lock()
-        self._key_stages: dict[tuple, list] = {}
-
-    def key_stages(self, key: tuple, build):
-        """The stages memoized under ``key``; ``build()`` makes them on
-        the first call."""
-        with self._lock:
-            if key not in self._key_stages:
-                self._key_stages[key] = build()
-            return self._key_stages[key]
 
 
 def _string_proxy_np(s: pd.Series) -> np.ndarray:
@@ -76,6 +48,24 @@ def _string_proxy_np(s: pd.Series) -> np.ndarray:
     raw = encoded.to_numpy(dtype="S8")  # truncate/pad to 8 bytes
     v = np.frombuffer(raw.tobytes(), dtype=">u8").astype(np.uint64)
     return (v >> np.uint64(8)).astype(np.float64)  # top 7 bytes, fits f64<2^56
+
+
+def zorder_proxy(values: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """The float64 proxy a column's values are ranked by, for the
+    boundary sample and the rewrite's zkey alike: a string's first 7
+    UTF-8 bytes as a big-endian integer (:func:`_string_proxy_np`, a
+    null as ``""``), any other value its number (a date or timestamp its
+    integer storage value), with a null or NaN as 0."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    t = values.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return _string_proxy_np(values.to_pandas())
+    if pa.types.is_temporal(t):
+        values = values.view(pa.int32() if t.bit_width == 32
+                             else pa.int64())
+    v = values.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
+    return np.where(np.isnan(v), 0.0, v)
 
 
 def _quantiles(values: np.ndarray, probs: np.ndarray) -> np.ndarray:
@@ -133,8 +123,8 @@ def compute_zorder_boundaries(
     — the sample is statistically equivalent for a *layout* decision:
     bucket skew only costs write balance, never correctness.)
 
-    A null string ranks as ``""`` and a null number as 0, as the
-    rewrite's zkey (:func:`with_zorder_key`) keys them."""
+    Each column is ranked by :func:`zorder_proxy`, as the rewrite
+    keys it."""
     if isinstance(batches, pa.Table):
         batches = batches.to_batches()
     if total_rows is None:
@@ -152,19 +142,14 @@ def compute_zorder_boundaries(
         if held >= sample_cap:
             break
     if not held:
-        return ZOrderBoundaries(
-            {c: np.array([], dtype=np.float64) for c in columns})
+        return {c: np.array([], dtype=np.float64) for c in columns}
     sample = pa.Table.from_batches(kept)
     n_b = (1 << bits) - 1
     probs = np.linspace(0.0, 1.0, n_b + 2)[1:-1]
-    out = ZOrderBoundaries()
+    out = {}
     bucketed = []
     for c in columns:
-        t = sample.schema.field(c).type
-        s = sample[c].to_pandas()
-        vals = (_string_proxy_np(s)
-                if pa.types.is_string(t) or pa.types.is_large_string(t)
-                else s.fillna(0).to_numpy(dtype=np.float64))
+        vals = zorder_proxy(sample[c])
         out[c] = _quantiles(vals, probs).astype(np.float64)
         bucketed.append(np.searchsorted(out[c], vals, side="right"))
     # global zkey distribution cutpoints (ZCUTS_KEY): rewrite bins carve
@@ -234,181 +219,3 @@ def hilbert_interleave(buckets: list[np.ndarray], bits: int) -> np.ndarray:
 
 
 CURVES = {"morton": morton_interleave, "hilbert": hilbert_interleave}
-
-
-def _jvm_string_proxy(col):
-    """JVM twin of :func:`_string_proxy_np`: first-7-bytes big-endian
-    integer of the UTF-8 encoding, zero-padded, surfaced as double
-    (both sides round the same 56-bit integer to the nearest f64, so
-    ranks agree bit-for-bit with the numpy boundary computation)."""
-    b = F.encode(F.coalesce(col, F.lit("")), "UTF-8")
-    h = F.rpad(F.hex(F.substring(b, 1, 7)), 14, "0")
-    return F.conv(h, 16, 10).cast("double")
-
-
-def _double_array_lit(vals: list[float]):
-    """A literal ``array<double>`` whose plan footprint is THREE nodes.
-
-    ``F.lit(list)`` / ``F.array(*lits)`` round-trips every element
-    through py4j (measured 29 s for a 4095-element boundary array) and
-    ``F.expr("array(...)")`` still parses to a ``CreateArray`` with
-    4095 children that every analyzer/optimizer pass re-traverses —
-    at 24 rank-subtree occurrences in the Morton interleave this was
-    the dominant driver-side serial term in the maintenance scaling
-    profile.  ``cast(split(<one string literal>))`` is a 3-node
-    subtree that the optimizer constant-folds exactly once into a
-    single array Literal before codegen."""
-    def _fmt(v: float) -> str:
-        # repr() spells non-finite floats 'inf'/'nan', which Spark's
-        # string->double cast does NOT parse (silent NULL -> boundary
-        # dropped -> every rank shifts).  Spark accepts the Java
-        # spellings.
-        if v != v:
-            return "NaN"
-        if v == float("inf"):
-            return "Infinity"
-        if v == float("-inf"):
-            return "-Infinity"
-        return repr(v)
-
-    body = ",".join(_fmt(float(v)) for v in vals)
-    return F.expr(f"CAST(split('{body}', ',') AS array<double>)")
-
-
-# boundaries per fine block of the two-level rank search
-_RANK_BLOCK = 64
-
-
-def _jvm_block(proxy, bnds: np.ndarray):
-    """Coarse step of :func:`_jvm_rank`: how many of every-64th boundary
-    are <= proxy, i.e. the 64-boundary block the proxy falls in."""
-    coarse = _double_array_lit(bnds[_RANK_BLOCK - 1::_RANK_BLOCK])
-    return F.size(F.filter(coarse, lambda b: b <= proxy))
-
-
-def _jvm_rank(proxy, bnds: np.ndarray, block=None):
-    """#{boundary <= proxy} (``np.searchsorted`` side='right') as a
-    Spark expression: a two-level search over *literal* boundary arrays
-    — a coarse filter over every-64th boundary picks the block
-    (:func:`_jvm_block`, or the precomputed ``block`` column), a fine
-    filter over that 64-element slice finishes.  ~128 comparisons per
-    row instead of 4095.
-
-    ``proxy`` is evaluated inside the filter lambdas once per array
-    element, and the block index twice, so callers keying many rows
-    pass both as column references (see :func:`with_zorder_key`)."""
-    vals = [float(x) for x in bnds]
-    if not vals:
-        return F.lit(0).cast("long")
-    if len(vals) <= _RANK_BLOCK:
-        # small boundary sets (bits <= 6): one flat filter — the coarse
-        # slice would be EMPTY and an empty array literal cannot be
-        # spelled through split('') under ANSI casts
-        return F.size(F.filter(_double_array_lit(vals),
-                               lambda b: b <= proxy)).cast("long")
-    if block is None:
-        block = _jvm_block(proxy, bnds)
-    fine = F.slice(_double_array_lit(vals), block * _RANK_BLOCK + 1,
-                   _RANK_BLOCK)
-    return (block * _RANK_BLOCK
-            + F.size(F.filter(fine, lambda b: b <= proxy))).cast("long")
-
-
-def _jvm_part1by1(x, bits: int):
-    """JVM twin of :func:`_part1by1_16` (the same spread steps) on the
-    low ``bits`` bits of a long Column."""
-    x = x.bitwiseAND(F.lit((1 << bits) - 1))
-    for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F),
-                        (2, 0x33333333), (1, 0x55555555)):
-        x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
-    return x
-
-
-def _jvm_morton(ranks: list, bits: int):
-    """JVM twin of :func:`morton_interleave` (same bit layout: dim 0
-    takes the higher interleaved bit)."""
-    ndim = len(ranks)
-    ranks = [r.cast("long") for r in ranks]
-    if ndim == 1:
-        return ranks[0]
-    if ndim == 2 and bits <= 16:
-        return F.shiftleft(_jvm_part1by1(ranks[0], bits), 1).bitwiseOR(
-            _jvm_part1by1(ranks[1], bits))
-    out = F.lit(0).cast("long")
-    for d, r in enumerate(ranks):
-        for i in range(bits):
-            bit = F.shiftright(r, i).bitwiseAND(F.lit(1))
-            out = out + F.shiftleft(bit, i * ndim + (ndim - 1 - d))
-    return out
-
-
-def _morton_stages(col_kinds: list[tuple[str, bool]],
-                   bnds: dict[str, np.ndarray], bits: int,
-                   out_col: str) -> list[dict]:
-    """The Morton zkey as successive projections: proxies, coarse block
-    indices, ranks, then the interleave.  Each intermediate is its own
-    column, so the string proxy (four string conversions) and the block
-    search run once per row instead of once per boundary compared
-    inside the rank's filter lambdas, and each rank once instead of
-    once per interleaved bit: Catalyst does not inline a non-trivial
-    projection back into a consumer that uses it more than once."""
-    proxies, blocks, ranks = {}, {}, {}
-    for i, (c, is_str) in enumerate(col_kinds):
-        proxy, block = f"__zproxy{i}", None
-        proxies[proxy] = (
-            _jvm_string_proxy(F.col(c)) if is_str
-            else F.coalesce(F.col(c).cast("double"), F.lit(0.0)))
-        if len(bnds[c]) > _RANK_BLOCK:
-            block = f"__zblock{i}"
-            blocks[block] = _jvm_block(F.col(proxy), bnds[c])
-            block = F.col(block)
-        ranks[f"__zrank{i}"] = _jvm_rank(F.col(proxy), bnds[c], block)
-    zkey = _jvm_morton([F.col(r) for r in ranks], bits)
-    return [proxies, blocks, ranks, {out_col: zkey}]
-
-
-def with_zorder_key(
-    df: DataFrame,
-    columns: list[str],
-    boundaries: dict[str, np.ndarray],
-    bits: int = 12,
-    out_col: str = "_zkey",
-    curve: str = "morton",
-) -> DataFrame:
-    """Append the space-filling-curve key column (Morton or Hilbert).
-
-    Morton (the default) is computed entirely JVM-side — per dimension
-    one proxy, one coarse and one fine literal-array filter (~128
-    comparisons per row at 12 bits), then a shift/or interleave —
-    keeping the rewrite scan stage free of any Arrow round-trip through
-    Python.  Given a :class:`ZOrderBoundaries` the Column expressions
-    are built once and reused by every later call.  Hilbert (stateful
-    per-bit rotations) stays a vectorized pandas UDF."""
-    dtypes = dict(df.dtypes)
-    col_kinds = [(c, dtypes[c] == "string") for c in columns]
-    bnds = {c: np.asarray(boundaries[c], dtype=np.float64) for c in columns}
-
-    if curve == "morton":
-        def build():
-            return _morton_stages(col_kinds, bnds, bits, out_col)
-        stages = (boundaries.key_stages((tuple(col_kinds), bits, out_col),
-                                        build)
-                  if isinstance(boundaries, ZOrderBoundaries) else build())
-        for stage in stages:
-            if stage:
-                df = df.withColumns(stage)
-        return df.drop(*[n for st in stages[:-1] for n in st])
-
-    interleave = CURVES[curve]
-
-    @pandas_udf(T.LongType())
-    def _zkey(*cols: pd.Series) -> pd.Series:
-        bucketed = []
-        for (name, is_str), s in zip(col_kinds, cols):
-            proxy = (_string_proxy_np(s) if is_str
-                     else s.fillna(0).to_numpy(dtype=np.float64))
-            bucketed.append(
-                np.searchsorted(bnds[name], proxy, side="right"))
-        return pd.Series(interleave(bucketed, bits))
-
-    return df.withColumn(out_col, _zkey(*[F.col(c) for c in columns]))

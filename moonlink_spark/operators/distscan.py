@@ -55,8 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from moonlink_spark.operators.scan import (FILE_COL, POS_COL, parse_ddl,
-                                          predicate_exprs)
+from moonlink_spark.operators.scan import (FILE_COL, POS_COL, fill_defaults,
+                                           parse_ddl, predicate_exprs)
 from moonlink_spark.snapshotstore import SnapshotStore
 
 # Manifest entry count (the snapshot header's unpruned total,
@@ -127,116 +127,138 @@ def sidecar_positions(path: str, files) -> dict:
     return out
 
 
-def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
-                 expr=None, filter_cols: frozenset = frozenset()):
-    """mapInArrow body: read each plan row's parquet file with pyarrow,
-    emit its live rows cast to the target schema with (file, pos)
-    attached.  Everything inside is Arrow-native C++ — the Python layer
-    only routes batches.
+def grouped_sidecar_positions(dv_files: Mapping[str, str]) -> dict:
+    """``{file: sorted unique deleted positions}`` of each file
+    ``dv_files`` maps to its sidecar's path, one read per sidecar (a
+    file without a row there is left out)."""
+    by_sidecar: dict[str, list[str]] = {}
+    for f, path in dv_files.items():
+        by_sidecar.setdefault(path, []).append(f)
+    out: dict = {}
+    for path, named in sorted(by_sidecar.items()):
+        out.update(sidecar_positions(path, named))
+    return out
 
-    ``expr``, a dataset expression over ``filter_cols`` rendered on the
-    driver (where a naive datetime literal reads as local time, as
-    Spark's does), is pushed into the pyarrow dataset scanner
-    (row-level, single-threaded per file so row order — and with it
-    positional semantics — is preserved).  Pushdown is skipped
-    for a file that needs SYNTHESIZED ordinals (no materialized
-    ``_pos`` column): filtering there would renumber positions; such
-    files read unfiltered and the Spark-side filter finishes the job.
 
-    A plan row's ``dv_path`` names the sidecar holding the file's
-    deleted positions.  They are read once per file and used twice:
-    row groups whose ordinal range they fully cover are never read (the
-    common CDC aftermath — a wholly-deleted commit file's worth of rows
-    inside a partially dirty bin), and every yielded batch drops the
-    rows whose position is among them.  The skip is exact: the named
-    row is the file's whole deleted set."""
-    def reader(batches) -> Iterator:
-        logical = [f for f in arrow_schema if f.name != FILE_COL]
+def file_deletes(dv_path: str, relpath: str):
+    """Sorted unique deleted positions of the file ``relpath`` per the
+    sidecar at ``dv_path`` (its manifest entry's), or None when it
+    deletes none."""
+    pos = sidecar_positions(dv_path, [relpath]).get(relpath)
+    return pos if pos is not None and len(pos) else None
 
-        def deleted_ordinals(dv_relpath: str, relpath: str):
-            """Sorted unique deleted positions of ``relpath`` per its
-            named sidecar, or None when it deletes none."""
-            pos = sidecar_positions(os.path.join(warehouse, dv_relpath),
-                                    [relpath]).get(relpath)
-            return pos if pos is not None and len(pos) else None
 
-        def file_batches(path, avail, cols, dels):
-            """Yield (record_batch, start_ordinal) pairs."""
-            pf = pq.ParquetFile(path)
-            if dels is not None:
-                md = pf.metadata
-                sizes = [md.row_group(g).num_rows
-                         for g in range(md.num_row_groups)]
-                surv = surviving_row_groups(sizes, dels)
-                if len(surv) < len(sizes):
-                    for g, start in surv:
-                        pos = start
-                        for rb in pf.iter_batches(
-                                batch_size=_READ_BATCH_ROWS,
-                                row_groups=[g], columns=cols):
-                            yield rb, pos
-                            pos += rb.num_rows
-                    return
-            # push only when _pos is a REAL file column AND it is being
-            # read: the output schema always carries positions (the DV
-            # key), and synthesized ordinals over a filtered read
-            # would renumber — including when a caller's projection
-            # omitted _pos from ``cols`` even though the file has it
-            can_push = (expr is not None and POS_COL in avail
-                        and filter_cols <= avail
-                        and (cols is None or POS_COL in cols))
-            pos = 0
-            if not can_push:
-                for rb in pf.iter_batches(
-                        batch_size=_READ_BATCH_ROWS, columns=cols):
+def _file_batches(path, pf, avail, cols, dels, expr, filter_cols):
+    """Yield the (record_batch, start_ordinal) pairs of the file at
+    ``path`` (opened as ``pf``; column names ``avail``) read as
+    ``cols``."""
+    if dels is not None:
+        md = pf.metadata
+        sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+        surv = surviving_row_groups(sizes, dels)
+        if len(surv) < len(sizes):
+            for g, start in surv:
+                pos = start
+                for rb in pf.iter_batches(batch_size=_READ_BATCH_ROWS,
+                                          row_groups=[g], columns=cols):
                     yield rb, pos
                     pos += rb.num_rows
-                return
-            scanner = pds.Scanner.from_dataset(
-                pds.dataset(path, format="parquet"),
-                columns=cols, filter=expr,
-                batch_size=_READ_BATCH_ROWS, use_threads=False)
-            for rb in scanner.to_batches():
-                # ordinals are never synthesized here (can_push
-                # guarantees _pos is read); the counter is unused
-                yield rb, pos
-                pos += rb.num_rows
+            return
+    # push only when _pos is a REAL file column AND it is being read: the
+    # output schema always carries positions (the DV key), and
+    # synthesized ordinals over a filtered read would renumber —
+    # including when a caller's projection omitted _pos from ``cols``
+    # even though the file has it
+    can_push = (expr is not None and POS_COL in avail
+                and filter_cols <= avail
+                and (cols is None or POS_COL in cols))
+    pos = 0
+    if not can_push:
+        for rb in pf.iter_batches(batch_size=_READ_BATCH_ROWS, columns=cols):
+            yield rb, pos
+            pos += rb.num_rows
+        return
+    scanner = pds.Scanner.from_dataset(
+        pds.dataset(path, format="parquet"), columns=cols, filter=expr,
+        batch_size=_READ_BATCH_ROWS, use_threads=False)
+    for rb in scanner.to_batches():
+        # ordinals are never synthesized here (can_push guarantees _pos
+        # is read); the counter is unused
+        yield rb, pos
+        pos += rb.num_rows
 
+
+def live_file_batches(path: str, fields: list[pa.Field], dels,
+                      read_cols: list[str] | None = None, expr=None,
+                      filter_cols: frozenset = frozenset()
+                      ) -> Iterator[pa.RecordBatch]:
+    """The live rows of the parquet file at ``path`` as record batches
+    of ``fields``: each column cast to its field's type, a column the
+    file lacks as nulls, and ``_pos`` as row ordinals where the file
+    carries none (writers materialize it as a data column, the DV key;
+    positions ARE row ordinals).  Everything inside is Arrow-native
+    C++ — the Python layer only routes batches.
+
+    ``dels`` (sorted unique deleted positions, or None) is used twice:
+    row groups whose ordinal range it fully covers are never read (the
+    common CDC aftermath — a wholly-deleted commit file's worth of rows
+    inside a partially dirty bin), and every yielded batch drops the
+    rows whose position is among them.  The skip is exact when ``dels``
+    is the file's whole deleted set.
+
+    ``expr``, a dataset expression over ``filter_cols`` rendered on the
+    caller's side (where a naive datetime literal reads as local time,
+    as Spark's does), is pushed into the pyarrow dataset scanner
+    (row-level, single-threaded per file so row order — and with it
+    positional semantics — is preserved).  Pushdown is skipped for a
+    file that needs SYNTHESIZED ordinals (no materialized ``_pos``
+    column): filtering there would renumber positions; such files read
+    unfiltered and the caller's filter finishes the job."""
+    schema = pa.schema(fields)
+    pf = pq.ParquetFile(path)
+    avail = set(pf.schema_arrow.names)
+    cols = ([c for c in read_cols if c in avail]
+            if read_cols is not None else None)
+    for rb, pos in _file_batches(path, pf, avail, cols, dels, expr,
+                                 filter_cols):
+        n = rb.num_rows
+        arrays = []
+        for fld in fields:
+            if rb.schema.get_field_index(fld.name) >= 0:
+                arrays.append(rb.column(fld.name).cast(fld.type))
+            elif fld.name == POS_COL:
+                arrays.append(pa.array(np.arange(pos, pos + n), pa.int64()))
+            else:
+                arrays.append(pa.nulls(n, fld.type))
+        out = pa.RecordBatch.from_arrays(arrays, schema=schema)
+        if dels is not None:
+            positions = out.column(POS_COL).to_numpy(zero_copy_only=False)
+            out = out.filter(pa.array(~np.isin(positions, dels)))
+        yield out
+
+
+def _file_reader(warehouse: str, arrow_schema, read_cols: list[str] | None,
+                 expr=None, filter_cols: frozenset = frozenset()):
+    """mapInArrow body: read each plan row's parquet file with pyarrow
+    (:func:`live_file_batches`), emit its live rows cast to the target
+    schema with (file, pos) attached.  A plan row's ``dv_path`` names
+    the sidecar holding the file's deleted positions
+    (:func:`file_deletes`): the named row is the file's whole deleted
+    set."""
+    def reader(batches) -> Iterator:
+        logical = [f for f in arrow_schema if f.name != FILE_COL]
+        file_field = arrow_schema.field(FILE_COL)
         for b in batches:
             for relpath, dv_relpath in zip(b.column("path").to_pylist(),
                                            b.column("dv_path").to_pylist()):
-                fpath = os.path.join(warehouse, relpath)
-                dels = (deleted_ordinals(dv_relpath, relpath)
+                dels = (file_deletes(os.path.join(warehouse, dv_relpath),
+                                     relpath)
                         if dv_relpath is not None else None)
-                avail = set(pq.read_schema(fpath).names)
-                cols = ([c for c in read_cols if c in avail]
-                        if read_cols is not None else None)
-                for rb, pos in file_batches(fpath, avail, cols, dels):
-                    n = rb.num_rows
-                    tb = pa.Table.from_batches([rb])
-                    arrays = []
-                    for fld in logical:
-                        if fld.name in tb.column_names:
-                            arrays.append(
-                                tb.column(fld.name).combine_chunks()
-                                .cast(fld.type))
-                        elif fld.name == POS_COL:
-                            # writers materialize _pos as a data column
-                            # (the DV key); a file without it gets
-                            # ordinals — positions ARE row ordinals
-                            arrays.append(pa.array(
-                                np.arange(pos, pos + n), pa.int64()))
-                        else:
-                            arrays.append(pa.nulls(n, fld.type))
-                    arrays.append(pa.array([relpath] * n, pa.string()))
-                    out = pa.RecordBatch.from_arrays(
-                        arrays, schema=arrow_schema)
-                    if dels is not None:
-                        positions = out.column(POS_COL).to_numpy(
-                            zero_copy_only=False)
-                        out = out.filter(
-                            pa.array(~np.isin(positions, dels)))
-                    yield out
+                for out in live_file_batches(
+                        os.path.join(warehouse, relpath), logical, dels,
+                        read_cols, expr, filter_cols):
+                    yield out.append_column(file_field, pa.array(
+                        [relpath] * out.num_rows, pa.string()))
     return reader
 
 
@@ -306,11 +328,7 @@ def scan_distributed(
 
     out = _read_plan(spark, store, live.select("path", "dv_path"),
                      n_files, struct, read_cols, push_filters, schema_types)
-    if column_defaults:
-        for col, default in column_defaults.items():
-            if default is not None and col in out.columns:
-                out = out.withColumn(col, F.coalesce(F.col(col),
-                                                     F.lit(default)))
+    out = fill_defaults(out, column_defaults)
     if row_filters:
         for cond in predicate_exprs(row_filters, schema_types=schema_types):
             out = out.filter(cond)

@@ -1,41 +1,48 @@
-"""Per-bin compaction rewrite: read → DV anti-join → Z-order → write.
+"""Per-bin compaction rewrite: read → drop deleted rows → Z-order → write.
 
-The Spark expression of moonlink's compaction executor
-(``storage/compaction/compactor.rs:180-331``): stream the bin's input
-files, drop DV-deleted rows, emit size-capped ZSTD output files
+moonlink's compaction executor (``storage/compaction/compactor.rs:
+180-331``) as one Arrow kernel: stream the bin's input files, drop
+DV-deleted rows, emit size-capped ZSTD output files
 (``parquet_utils.rs:15-20``; roll at ``data_file_final_size``,
 ``compactor.rs:286-292``), with the sanity check ``rows_out == rows_in −
-rows_deleted`` (``compactor.rs:277-279``).  Differences by design:
+rows_deleted`` (``compactor.rs:277-279``).  The kernel is two functions:
+
+1. :func:`key_files`, input files → their live rows, each keyed with
+   its zkey (``_z``), its output partition (``_p``, from
+   :meth:`BinLayout.partitions`) and its file's rank (``_f``);
+2. :func:`write_partition`, one partition's rows → its part files:
+   one sort by (zkey, Z-order columns, file, position), a new file
+   every ``rows_per_file`` rows, positions renumbered from 0.
+
+The kernel runs in one of two placements, chosen per job by its planned
+input bytes alone (``DRIVER_REWRITE_BYTES``): in-process on the driver,
+or in Spark tasks — ``mapInArrow`` of stage 1 over the bin's file list,
+then ``groupBy("_p").applyInArrow`` of stage 2 (:func:`_write_in_tasks`).
+Both run the same code on the same Arrow types, so they lay out the
+same rows in the same files by construction.
+
+Differences from the reference, by design:
 
 - moonlink preserves input order and builds an old→new row remap for
   still-pending deletes (``compactor.rs:388-465``); we compact *at a
   snapshot* in copy-on-write style — every DV is folded in, so no remap
-  exists afterwards, and rows are re-clustered by Z-order key
-  (``repartitionByRange`` on the Morton key + sort within partitions),
-  which moonlink does not do at all (north-rule addition).
-- output row positions (`_pos`) are re-assigned per bin partition
-  (JVM-side, see :func:`assign_positions`); they are unique within each
-  rolled output file — all any future delete vector needs (DVs address
-  rows by the (file, _pos) *value*, not by contiguity).
+  exists afterwards, and rows are re-clustered by Z-order key, which
+  moonlink does not do at all (north-rule addition).
+- output row positions (`_pos`) are re-assigned per output file; they
+  are unique within each file — all any future delete vector needs (DVs
+  address rows by the (file, _pos) *value*, not by contiguity).
 - per-file min/max bounds for the manifest are read back from parquet
   footers (the same footer statistics moonlink aggregates in
   ``parquet_stats_utils.rs:34-174``) — a metadata-only pass.
-- a job whose planned input is at most ``DRIVER_REWRITE_BYTES`` writes
-  its bins with pyarrow on the driver instead (:func:`driver_rewrite`),
-  in one process like moonlink's compactor: the same rows in the same
-  files as the Spark plan (:func:`bin_layout` places rows for both, the
-  driver hashes with a numpy port of Spark's ``xxhash64``), through the
-  same finalization; it starts no Spark job.
 
 Every bin writes a **lineage record** (inputs, outputs, row/byte
 counters) atomically into the job's checkpoint directory *before*
 commit; a restarted job validates and skips completed bins — the
 engine's WAL-recovery analogue (``storage/wal.rs:710-780``).
 
-Determinism: input file order, range-partitioner sampling (seeded per
-partition in Spark), and a total sort key (zkey, cluster cols, source
-file, source position) make reruns byte-stable, so resumed and fresh
-runs commit identical manifests.
+Determinism: the layout is a function of the plan and the job's
+boundaries, and the sort key is total, so reruns and resumes write
+byte-identical files and commit identical manifests.
 """
 
 from __future__ import annotations
@@ -44,10 +51,11 @@ import datetime
 import json
 import math
 import os
+import tempfile
 import time
 from dataclasses import dataclass
 from decimal import Decimal
-from typing import Mapping
+from typing import Iterator, Mapping
 
 import numpy as np
 import pyarrow as pa
@@ -55,76 +63,36 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from moonlink_spark.config import TableConfig
-from moonlink_spark.functions.zorder import (CURVES, ZCUTS_KEY,
-                                             _string_proxy_np,
-                                             with_zorder_key)
+from moonlink_spark.functions.zorder import CURVES, ZCUTS_KEY, zorder_proxy
+from moonlink_spark.operators.distscan import (grouped_sidecar_positions,
+                                               live_file_batches)
 from moonlink_spark.operators.planner import CompactionBin
-from moonlink_spark.operators.scan import (FILE_COL, POS_COL, column_batches,
-                                           dv_positions, scan_files)
+# scan_files is not called here; perfbench/trace.py resolves
+# ``operators.rewrite.scan_files`` by name
+from moonlink_spark.operators.scan import (FILE_COL, POS_COL, dv_positions,
+                                           local_df, scan_files)  # noqa: F401
 from moonlink_spark.fs import rename_many
 from moonlink_spark.snapshotstore import (DATA_DIR, SnapshotStore,
                                           bound_type, staged_names)
 
-ZKEY_COL = "_zkey"
-OLDPOS_COL = "_oldpos"
-OFILE_COL = "_ofile"
 # zstd recompresses snappy input roughly ~0.7×; used only to size the
 # output partition count, actual rolling is by partition.
 RECOMPRESS_FACTOR = 0.75
 
 
-def _murmur3_int32(v: int, seed: int = 42) -> int:
-    """Spark's ``hash()`` for IntegerType: Murmur3 x86_32 of the 4-byte
-    value (parity asserted against ``F.hash`` in tests)."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    k = v & 0xFFFFFFFF
-    k = (k * c1) & 0xFFFFFFFF
-    k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-    k = (k * c2) & 0xFFFFFFFF
-    h = (seed ^ k) & 0xFFFFFFFF
-    h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-    h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h ^= 4
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
-def range_salts(n: int) -> list[int]:
-    """``salts[i]`` is an int whose Spark hash places it in partition
-    ``i`` of an ``n``-way hash repartition (``pmod(murmur3(salt), n)``).
-
-    Lets a DataFrame route each of ``n`` zkey ranges to exactly one
-    shuffle partition deterministically — perfect packing.  Plain
-    ``repartition(k, range_id)`` hashes the range ids, and at k ≈ 2n the
-    birthday collisions co-locate two ranges in one task (a 2× straggler
-    tail measured at ~10 % of the rewrite wall) while leaving other
-    tasks empty.  The search is coupon-collector cheap (~n·ln n probes,
-    driver-side, no Spark job)."""
-    salts: list[int | None] = [None] * n
-    found, s = 0, 0
-    while found < n:
-        p = _murmur3_int32(s) % n  # python % is already non-negative
-        if salts[p] is None:
-            salts[p] = s
-            found += 1
-        s += 1
-    return salts  # type: ignore[return-value]
-
-
 def assign_positions(df: DataFrame, pos_col: str = POS_COL) -> DataFrame:
     """Append a 0-based row position within each partition (= within each
-    output file, since one task writes one file).
+    output file, since one task writes one file) — the Spark writes of
+    append and merge.
 
     Uses ``monotonically_increasing_id`` — partition id in the upper 31
     bits, per-partition record counter in the lower 33 — and masks off
-    the partition id.  Pure JVM expression: the hot rewrite path never
-    leaves whole-stage codegen (vs. a mapInPandas counter, which would
+    the partition id.  Pure JVM expression: the write never leaves
+    whole-stage codegen (vs. a mapInPandas counter, which would
     Arrow-round-trip every payload byte through Python).  The expression
     is nondeterministic-tagged, so Catalyst will not reorder it across
     the preceding sort; row order within the partition is the sorted
@@ -278,7 +246,7 @@ def load_valid_lineage(store: SnapshotStore, job_id: str,
 
 @dataclass(frozen=True)
 class BinLayout:
-    """Where a bin's live rows go, shared by both writers: ``cuts``
+    """Where a bin's live rows go: ``cuts``
     (ascending zkeys; empty: the whole bin is partition 0) carve the zkey
     line into ranges, range ``r`` owns partitions ``offs[r]`` to
     ``offs[r] + subs[r] - 1`` and picks among them by the row's source
@@ -297,8 +265,7 @@ class BinLayout:
     def partitions(self, zkey: np.ndarray,
                    source_hash: np.ndarray) -> np.ndarray:
         """Each row's partition from its zkey and the hash of its source
-        (file, position) (:func:`xxhash64`): the numpy twin of the Spark
-        writer's salted range id."""
+        (file, position) (:func:`xxhash64`)."""
         if not len(self.cuts):
             return np.zeros(len(zkey), dtype=np.int64)
         r = np.searchsorted(self.cuts, zkey, side="right")
@@ -426,97 +393,177 @@ def xxhash64(file: str, pos: np.ndarray, seed: int = 42) -> np.ndarray:
     return _xxh64_longs(pos, np.full(len(pos), h, dtype=np.uint64))
 
 
-# -- the driver writer -------------------------------------------------------
+# -- the rewrite kernel ------------------------------------------------------
 
 # The most planned input bytes (summed over all of a job's bins) that an
-# optimize job rewrites with pyarrow on the driver; a larger job runs
-# every bin as a Spark job.  The driver rewrite won every run at every
-# size measured on a 4-core host with a 1 GiB driver: 0.10 against 1.22 s
-# at the benchmark's 3 MB, 2.86 against 6.62 s at 172 MB, and 1.55
-# against 2.77 s over 2,000 tiny files, so no file-count cap.  Its peak
-# RSS (process plus driver JVM) was 3.6 GB against 2.5 GB at 172 MB,
-# and grows with the input, so the switch stays at the largest size
+# optimize job rewrites in-process on the driver; a larger job runs the
+# same kernel in Spark tasks.  In-process won every run at every size
+# measured on a 4-core host with a 1 GiB driver: 0.10 against 1.22 s at
+# the benchmark's 3 MB, 2.86 against 6.62 s at 172 MB, and 1.55 against
+# 2.77 s over 2,000 tiny files, so no file-count cap.  Its peak RSS
+# (process plus driver JVM) was 3.6 GB against 2.5 GB at 172 MB, and
+# grows with the input, so the switch stays at the largest size
 # measured, rounded down (tools/rewrite_path_bench.py,
-# REWRITE_PATH_CROSSOVER.json)
+# REWRITE_PATH_CROSSOVER.json).  Those runs raced the Spark writer the
+# task placement replaced, not the task placement itself
 DRIVER_REWRITE_BYTES = 160 << 20
 
-# DDL types the driver writer reads and writes as Spark does (decimals:
-# every ``decimal(p, s)`` with bounds, i.e. up to 38 digits).
-_DRIVER_TYPES = {"string", "boolean", "int", "integer", "bigint", "long",
-                 "float", "double", "date", "timestamp", "timestamp_ntz",
-                 "decimal"}
-# Z-order column types whose zkey proxy (``cast(double)``) and sort
-# order are the same in numpy and pyarrow as in Spark.  Floats are not:
-# pyarrow sorts NaN before the numbers under nulls-first, Spark after.
-_DRIVER_ZORDER_TYPES = {"string", "int", "integer", "bigint", "long"}
-# Spark's parquet codec names, as pyarrow spells them
-_DRIVER_CODECS = {"zstd": "zstd", "snappy": "snappy", "gzip": "gzip",
-                  "none": "none", "uncompressed": "none"}
-# a default Spark's ``coalesce(col, lit(default))`` fills without widening
-# the column's type: the JSON value types and the columns they fit
-_DEFAULT_TYPES = {str: ("string",), bool: ("boolean",),
-                  int: ("int", "integer", "bigint", "long"),
-                  float: ("double",)}
+# the most Arrow bytes of one row group: parquet-mr's block size, and so
+# the row group Spark's writer rolls
+ROW_GROUP_BYTES = 128 << 20
+# stage 1 keys live rows in blocks of about this many Arrow bytes, so
+# tiny files share one keying pass, and hands a partition's rows to the
+# shuffle as Arrow IPC blobs of about as many: no blob nears Spark's
+# 2 GiB value limit
+_BLOCK_BYTES = 8 << 20
+# the key columns stage 1 appends: zkey, output partition, file rank
+_Z, _P, _F = "_z", "_p", "_f"
 
 
-def _base(ddl: str) -> str:
-    return ddl.split("(")[0].strip().lower()
+@dataclass(frozen=True)
+class RewriteKernel:
+    """One bin's rewrite parameters, built on the driver
+    (:func:`rewrite_kernel`) and shipped to the tasks as is: ``schema``
+    is the output files' schema (the table's columns under their pinned
+    Arrow types, ``_pos`` last), ``defaults`` the Arrow scalars that fill
+    added columns' nulls."""
+
+    schema: pa.Schema
+    defaults: Mapping[str, pa.Scalar]
+    zorder_columns: tuple[str, ...]
+    boundaries: Mapping[str, np.ndarray]
+    bits: int
+    curve: str
+    layout: BinLayout
+    compression: str
+    stats_columns: tuple[str, ...]
+
+    @property
+    def keyed_schema(self) -> pa.Schema:
+        """Stage 1's output: the data columns with the source ``_pos``
+        (nullable), then the three key columns."""
+        fields = [f.with_nullable(True) for f in self.schema]
+        return pa.schema(fields + [pa.field(_Z, pa.int64()),
+                                   pa.field(_P, pa.int64()),
+                                   pa.field(_F, pa.int64())])
 
 
-def _default_scalar(default, ddl: str) -> pa.Scalar | None:
-    """``default`` as the Arrow scalar of the column's type, if Spark's
-    ``coalesce`` keeps that type (else None)."""
-    if _base(ddl) not in _DEFAULT_TYPES.get(type(default), ()):
+# the DDL types the rewrite writes as other than their manifest bounds
+# type: a ``timestamp`` as UTC-adjusted microseconds (so its footer
+# carries min/max, whatever ``outputTimestampType`` says), the narrow
+# integers as Spark writes them
+_WRITE_TYPES = {"timestamp": pa.timestamp("us", "UTC"), "tinyint": pa.int8(),
+                "smallint": pa.int16()}
+
+
+def column_type(ddl: str | None) -> pa.DataType | None:
+    """The Arrow type a column of DDL type ``ddl`` is rewritten as: a
+    scalar as :data:`_WRITE_TYPES` or the manifest bounds type it, any
+    other DDL as Spark's Arrow mapping; None for no DDL."""
+    if ddl is None:
         return None
-    if (_base(ddl) in ("int", "integer")
-            and not -(1 << 31) <= default < (1 << 31)):
-        return None  # a long literal widens an int column to bigint
-    return pa.scalar(default, bound_type(ddl))
+    return (_WRITE_TYPES.get(ddl.split("(")[0].strip().lower())
+            or bound_type(ddl)
+            or to_arrow_type(T._parse_datatype_string(ddl)))
 
 
-def driver_rewrite(spark: SparkSession, bins: list[CompactionBin],
-                   config: TableConfig, schema: list[str],
-                   types: Mapping[str, str] | None,
-                   column_defaults: Mapping[str, object] | None) -> bool:
-    """Whether a job rewrites its ``bins`` on the driver: their planned
-    input is at most ``DRIVER_REWRITE_BYTES``, and the driver writer
-    lays out the table's rows as the Spark plan does.  It does for typed
-    columns of :data:`_DRIVER_TYPES`, Z-order columns of
-    :data:`_DRIVER_ZORDER_TYPES` with a curve numpy keys, defaults that
-    keep their column's type, and a codec pyarrow writes; and for
-    ``timestamp`` columns written as Spark writes them under
-    ``spark.sql.parquet.outputTimestampType`` (INT96 timestamps only
-    where no ``timestamp_ntz`` column needs INT64).  A function of the
-    plan, the table and the session's conf: a resumed job takes the same
-    path."""
+def rewrite_kernel(store: SnapshotStore, bin: CompactionBin,
+                   config: TableConfig, boundaries: dict,
+                   schema: list[str], types: Mapping[str, str] | None,
+                   column_defaults: Mapping[str, object] | None
+                   ) -> RewriteKernel:
+    """The kernel parameters of ``bin``.  A column without a pinned DDL
+    type is typed by the first input file's footer, as Spark's inference
+    types it."""
     types = types or {}
-    kinds = {c: _base(types.get(c) or "") for c in schema}
-    zcols = config.zorder_columns
-    if (sum(b.bytes for b in bins) > DRIVER_REWRITE_BYTES
-            or POS_COL not in schema
-            or config.compact_compression not in _DRIVER_CODECS
-            or any(k not in _DRIVER_TYPES
-                   or (k == "decimal" and bound_type(types[c]) is None)
-                   for c, k in kinds.items())
-            or any(kinds.get(c) not in _DRIVER_ZORDER_TYPES for c in zcols)
-            or len(zcols) > 1 and (config.zorder_bits > 16
-                                   or len(zcols) > 4)
-            or any(_default_scalar(v, types[c]) is None
-                   for c, v in (column_defaults or {}).items()
-                   if v is not None and c in kinds)):
-        return False
-    return "timestamp" not in kinds.values() or _timestamps_as_spark(
-        spark, "timestamp_ntz" in kinds.values()) is not None
+    cols = [c for c in schema if c != POS_COL]
+    footer = None
+    fields = []
+    for c in cols:
+        t = column_type(types.get(c))
+        if t is None:
+            footer = footer or pq.read_schema(store.abs(bin.files[0]))
+            t = footer.field(c).type
+        fields.append(pa.field(c, t))
+    out = pa.schema(fields + [pa.field(POS_COL, pa.int64(), False)])
+    zcols = tuple(config.zorder_columns)
+    return RewriteKernel(
+        schema=out,
+        defaults={c: pa.scalar(v, out.field(c).type)
+                  for c, v in (column_defaults or {}).items()
+                  if v is not None and c in cols},
+        zorder_columns=zcols,
+        boundaries={c: np.asarray(boundaries[c], dtype=np.float64)
+                    for c in zcols},
+        bits=config.zorder_bits, curve=config.zorder_curve,
+        layout=bin_layout(bin, config, boundaries),
+        compression={"uncompressed": "none"}.get(
+            config.compact_compression, config.compact_compression),
+        stats_columns=tuple(c for c in config.stats_columns
+                            if c in out.names))
 
 
-def _timestamps_as_spark(spark: SparkSession, ntz: bool) -> bool | None:
-    """Whether pyarrow writes ``timestamp`` columns as INT96, as Spark's
-    ``spark.sql.parquet.outputTimestampType`` does (None: pyarrow cannot
-    write them as Spark does)."""
-    out = spark.conf.get("spark.sql.parquet.outputTimestampType", "INT96")
-    if out.upper() == "INT96":
-        return None if ntz else True
-    return False if out.upper() == "TIMESTAMP_MICROS" else None
+def key_files(kernel: RewriteKernel, files) -> Iterator[pa.RecordBatch]:
+    """Stage 1: the live rows of ``files`` (``(path, manifest name, rank
+    among the bin's files by name, deleted positions or None)``), keyed.
+
+    Each file streams a batch at a time under the kernel's types through
+    the scan's per-file reader (``distscan.live_file_batches``), which
+    drops its deleted positions and skips wholly-deleted row groups.
+    The batches gather into blocks of about ``_BLOCK_BYTES``, so tiny
+    files share one keying pass (:func:`_key_block`)."""
+    names = kernel.schema.names
+    fields = list(kernel.keyed_schema)[:len(names)]
+    block, held = [], 0
+    for path, rel, rank, dels in files:
+        seed = _xxh64_bytes(rel.encode("utf-8"), 42)
+        for rb in live_file_batches(path, fields, dels, names):
+            if rb.num_rows:
+                block.append((rb, rank, seed))
+                held += rb.nbytes
+            if held >= _BLOCK_BYTES:
+                yield _key_block(kernel, block)
+                block, held = [], 0
+    if block:
+        yield _key_block(kernel, block)
+
+
+def _key_block(kernel: RewriteKernel, block: list) -> pa.RecordBatch:
+    """One block of ``(live batch, file rank, file hash seed)``, keyed:
+    added columns' nulls take their defaults, and each row gets its zkey
+    (the proxy's ranks among the boundaries, interleaved by the curve),
+    its output partition from its zkey and the ``xxhash64`` of its
+    source (file, position) — a null position hashes as its file alone —
+    and its file's rank."""
+    names = kernel.schema.names
+    counts = [rb.num_rows for rb, _r, _s in block]
+    cols = [c.combine_chunks() for c in pa.Table.from_batches(
+        [rb for rb, _r, _s in block]).columns]
+    for c, v in kernel.defaults.items():
+        i = names.index(c)
+        cols[i] = pc.fill_null(cols[i], v)
+    n = sum(counts)
+    if kernel.zorder_columns:
+        zkey = np.asarray(CURVES[kernel.curve](
+            [np.searchsorted(kernel.boundaries[c],
+                             zorder_proxy(cols[names.index(c)]),
+                             side="right")
+             for c in kernel.zorder_columns], kernel.bits), np.int64)
+    else:
+        zkey = np.zeros(n, np.int64)
+    pos = cols[names.index(POS_COL)]
+    seeds = np.repeat(np.array([s for _rb, _r, s in block], np.uint64),
+                      counts)
+    source = _xxh64_longs(pc.fill_null(pos, 0).to_numpy(), seeds)
+    if pos.null_count:
+        source = np.where(pc.is_valid(pos).to_numpy(zero_copy_only=False),
+                          source, seeds.view(np.int64))
+    ranks = np.repeat(np.array([r for _rb, r, _s in block], np.int64),
+                      counts)
+    return pa.RecordBatch.from_arrays(
+        cols + [pa.array(zkey), pa.array(kernel.layout.partitions(
+            zkey, source), pa.int64()), pa.array(ranks)],
+        schema=kernel.keyed_schema)
 
 
 def _dictionary_columns(table: pa.Table) -> list[str]:
@@ -531,6 +578,8 @@ def _dictionary_columns(table: pa.Table) -> list[str]:
 
     out = []
     for name, col in zip(table.column_names, table.columns):
+        if pa.types.is_nested(col.type):
+            continue  # pc.unique cannot hash it: written plain
         uniq = pc.unique(col)
         index_bits = max(1, math.ceil(math.log2(len(uniq) + 1)))
         if size(uniq) + len(col) * index_bits / 8 < size(col):
@@ -538,172 +587,173 @@ def _dictionary_columns(table: pa.Table) -> list[str]:
     return out
 
 
-def _driver_write(spark: SparkSession, store: SnapshotStore,
-                  bin: CompactionBin, layout: BinLayout, *,
-                  config: TableConfig, boundaries: dict, tmp_dir: str,
-                  schema: list[str], types: Mapping[str, str],
-                  column_defaults: Mapping[str, object] | None) -> None:
-    """Write the bin's part files into ``tmp_dir`` with pyarrow: the rows
-    and files of the Spark plan (:func:`_spark_write`), named so
-    ``staged_names`` orders them as it orders Spark's.
+def write_partition(kernel: RewriteKernel, rows: pa.Table, part: int,
+                    out_dir: str) -> list[tuple[str, int]]:
+    """Stage 2: write one layout partition's keyed ``rows`` (stage 1's
+    output, in any order) as part files into ``out_dir``; returns each
+    file's name and row count.
 
-    Each input file is read under the table's column types
-    (``scan.column_batches``, a missing column as nulls), its deleted
-    positions (``scan.dv_positions``) are masked out and the column
-    defaults filled in.  The zkey is the numpy twin of
-    :func:`with_zorder_key` (string proxy, ``searchsorted`` ranks, the
-    curve's interleave); the layout assigns partitions
-    (:meth:`BinLayout.partitions`); one sort by (partition, zkey, Z-order
-    columns, file, position), nulls first, orders the rows; each
-    partition's rows take positions 0.. and roll into a new file every
-    ``rows_per_file`` rows."""
-    cols = [c for c in schema if c != POS_COL] + [POS_COL]
-    dels = dv_positions(store, bin.dv_files) if bin.dv_files else {}
-    # a file's rank orders it as its string does
-    rank = {f: i for i, f in enumerate(sorted(bin.files))}
-    parts, ranks, seeds = [], [], []
-    for f in bin.files:
-        t = pa.Table.from_batches(
-            list(column_batches([store.abs(f)], cols, types)))
-        if f in dels:
-            t = t.filter(pc.invert(pc.is_in(
-                t[POS_COL], pa.array(dels[f], pa.int64()))))
-        parts.append(t)
-        ranks.append(np.full(t.num_rows, rank[f], np.int64))
-        seeds.append(np.full(t.num_rows, _xxh64_bytes(f.encode(), 42),
-                             np.uint64))
-    live = pa.concat_tables(parts)
-    store.fs.makedirs(tmp_dir)
-    if not live.num_rows:
-        return
-    for c, v in (column_defaults or {}).items():
-        if v is not None and c in cols:
-            i = live.column_names.index(c)
-            live = live.set_column(i, c, pc.fill_null(
-                live[c], _default_scalar(v, types[c])))
-    oldpos = live[POS_COL]
-    zcols = list(config.zorder_columns)
-    if zcols:
-        buckets = []
-        for c in zcols:
-            if pa.types.is_string(live[c].type):
-                proxy = _string_proxy_np(live[c].to_pandas())
-            else:
-                proxy = pc.fill_null(live[c], 0).to_numpy().astype(
-                    np.float64)
-            buckets.append(np.searchsorted(
-                np.asarray(boundaries[c], dtype=np.float64), proxy,
-                side="right"))
-        zkey = CURVES[config.zorder_curve](buckets, config.zorder_bits)
-    else:
-        zkey = np.zeros(live.num_rows, np.int64)
-    # Spark's xxhash64 skips a null column: a null position hashes as
-    # its file alone
-    seed = np.concatenate(seeds)
-    part = layout.partitions(zkey, np.where(
-        pc.is_valid(oldpos).to_numpy(),
-        _xxh64_longs(pc.fill_null(oldpos, 0).to_numpy(), seed),
-        seed.view(np.int64)))
-    keys = pa.table({"p": part, "z": np.asarray(zkey, np.int64),
-                     **{f"c{i}": live[c] for i, c in enumerate(zcols)},
-                     "f": np.concatenate(ranks),
-                     "o": oldpos})
-    order = pc.sort_indices(keys, sort_keys=[(k, "ascending")
-                                             for k in keys.column_names],
+    One sort by (zkey, Z-order columns, file rank, source position),
+    nulls first — a total key, so the files are byte-stable across
+    reruns — orders the rows; a new file starts every ``rows_per_file``
+    rows, its positions renumbered from 0.  Each row group is one
+    ``take`` of at most ``ROW_GROUP_BYTES`` of Arrow bytes in sorted
+    order, so a memory-mapped ``rows`` is never copied whole.  Columns
+    are dictionary-encoded as parquet-mr would for this partition's
+    values."""
+    keys = [_Z, *kernel.zorder_columns, _F, POS_COL]
+    order = pc.sort_indices(rows, sort_keys=[(k, "ascending") for k in keys],
                             null_placement="at_start")
-    out = live.drop_columns([POS_COL]).take(order)
-    counts = np.bincount(part, minlength=layout.n_parts)
-    fields = [pa.field(c, pa.timestamp("us", "UTC"))
-              if _base(types.get(c) or "") == "timestamp"
-              else out.schema.field(c) for c in out.column_names]
-    schema_out = pa.schema(fields + [pa.field(POS_COL, pa.int64(), False)])
-    opts = dict(
-        compression=_DRIVER_CODECS[config.compact_compression],
-        compression_level=(3 if config.compact_compression == "zstd"
-                           else None),
-        use_dictionary=_dictionary_columns(out),
-        write_statistics=[c for c in config.stats_columns if c in cols],
-        use_deprecated_int96_timestamps=bool(
-            "timestamp" in (_base(v) for v in types.values())
-            and _timestamps_as_spark(spark, False)))
-    start = 0
-    for p, n in enumerate(counts):
-        # Spark's first task writes a file even when it has no row; the
-        # finalization drops it, but it takes the first staged name
-        for k, first in enumerate(range(0, max(n, p == 0),
-                                        layout.rows_per_file)):
-            rows = out.slice(start + first,
-                             min(layout.rows_per_file, n - first))
-            rows = rows.append_column(
-                POS_COL, pa.array(np.arange(first, first + rows.num_rows),
-                                  pa.int64()))
-            pq.write_table(rows.cast(schema_out), os.path.join(
-                tmp_dir, f"part-{p:05d}-c{k:03d}.parquet"), **opts)
-        start += n
+    data = rows.select(kernel.schema.names[:-1])
+    n, per_file = rows.num_rows, kernel.layout.rows_per_file
+    group = max(1, int(ROW_GROUP_BYTES * n // max(1, data.nbytes)))
+    opts = dict(compression=kernel.compression,
+                compression_level=(3 if kernel.compression == "zstd"
+                                   else None),
+                use_dictionary=_dictionary_columns(data),
+                write_statistics=list(kernel.stats_columns))
+    pos_field = kernel.schema.field(POS_COL)
+    out = []
+    for k, first in enumerate(range(0, n, per_file)):
+        end = min(n, first + per_file)
+        name = f"part-{part:05d}-c{k:03d}.parquet"
+        with pq.ParquetWriter(os.path.join(out_dir, name), kernel.schema,
+                              **opts) as w:
+            for lo in range(first, end, group):
+                hi = min(end, lo + group)
+                t = data.take(order.slice(lo, hi - lo)).append_column(
+                    pos_field, pa.array(np.arange(lo - first, hi - first),
+                                        pa.int64()))
+                w.write_table(t, row_group_size=t.num_rows)
+        out.append((name, end - first))
+    return out
 
 
-def _spark_write(spark: SparkSession, store: SnapshotStore,
-                 bin: CompactionBin, layout: BinLayout, *,
-                 config: TableConfig, boundaries: dict, tmp_dir: str,
-                 schema_ddl: str | None, project: list[str] | None,
-                 column_defaults: dict | None,
-                 deletes: DataFrame | None) -> None:
-    """Write the bin's part files into ``tmp_dir`` with one Spark job:
-    read → DV anti-join → zkey → salted repartition → sort → write.
+def _write_on_driver(store: SnapshotStore, bin: CompactionBin,
+                     kernel: RewriteKernel, tmp_dir: str) -> None:
+    """The driver placement: stage 1 over the bin's files in-process
+    (their deleted positions read by one ``dv_positions`` call), the
+    rows split by partition, stage 2 per partition."""
+    dels = dv_positions(store, bin.dv_files) if bin.dv_files else {}
+    live = pa.Table.from_batches(list(key_files(kernel, [
+        (store.abs(f), f, i, dels.get(f))
+        for i, f in enumerate(sorted(bin.files))])),
+        schema=kernel.keyed_schema)
+    store.fs.makedirs(tmp_dir)
+    parts = live[_P].to_numpy()
+    ids = np.unique(parts)
+    for p in ids:
+        write_partition(kernel, live.filter(parts == p) if len(ids) > 1
+                        else live, int(p), tmp_dir)
 
-    Each row's partition is its range's first partition plus
-    ``pmod(xxhash64(file, pos), subs)`` (:func:`bin_layout`), mapped
-    through a salt table (:func:`range_salts`) so the hash shuffle places
-    each partition in its own task — one task = one target-sized output
-    file, no collision stragglers, no empty tasks.  ``maxRecordsPerFile``
-    rolls a task's sorted output (the analogue of moonlink's size-rolled
-    writer, disk_slice.rs:183-254).  The sort key is total ((zkey,
-    cluster cols, source file, source pos) is unique), so outputs are
-    byte-stable across reruns."""
-    live = scan_files(spark, store, bin.files, bin.dv_paths,
-                      bin.deleted_rows, with_location=True,
-                      schema_ddl=schema_ddl, project=project,
-                      column_defaults=column_defaults, deletes=deletes,
-                      dv_files=bin.dv_files)
-    live = live.withColumnRenamed(POS_COL, OLDPOS_COL)
 
-    zcols = [c for c in config.zorder_columns]
-    if zcols:
-        live = with_zorder_key(live, zcols, boundaries,
-                               bits=config.zorder_bits, out_col=ZKEY_COL,
-                               curve=config.zorder_curve)
-    else:  # compaction without clustering: preserve (file, pos) order
-        live = live.withColumn(ZKEY_COL, F.lit(0).cast("long"))
+def _ipc_blob(batches: list[pa.RecordBatch], schema: pa.Schema) -> pa.Array:
+    """``batches`` as one Arrow IPC stream, held in a one-value binary
+    array."""
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, schema) as w:
+        for b in batches:
+            w.write_batch(b)
+    buf = sink.getvalue()
+    return pa.Array.from_buffers(pa.binary(), 1, [
+        None, pa.array([0, buf.size], pa.int32()).buffers()[1], buf])
 
-    if len(layout.cuts):
-        cut_arr = F.array(*[F.lit(int(c)).cast("long") for c in layout.cuts])
-        salt_arr = F.array(*[F.lit(s) for s in range_salts(layout.n_parts)])
-        subs_arr = F.array(*[F.lit(int(s)) for s in layout.subs])
-        offs_arr = F.array(*[F.lit(int(o)) for o in layout.offs])
-        rid = (F.size(F.filter(cut_arr,
-                               lambda c: c <= F.col(ZKEY_COL))) + 1)
-        sub = F.pmod(F.xxhash64(F.col(FILE_COL), F.col(OLDPOS_COL)),
-                     F.element_at(subs_arr, rid))
-        ranged = live.withColumn(
-            OFILE_COL,
-            F.element_at(
-                salt_arr,
-                (F.element_at(offs_arr, rid) + sub + 1).cast("int")))
-        clustered = (
-            ranged.repartition(layout.n_parts, OFILE_COL)
-            .sortWithinPartitions(ZKEY_COL, *zcols, FILE_COL, OLDPOS_COL)
-            .drop(ZKEY_COL, FILE_COL, OLDPOS_COL, OFILE_COL)
-        )
-    else:
-        clustered = (
-            live.repartition(1)
-            .sortWithinPartitions(ZKEY_COL, *zcols, FILE_COL, OLDPOS_COL)
-            .drop(ZKEY_COL, FILE_COL, OLDPOS_COL)
-        )
-    (assign_positions(clustered).write.mode("overwrite")
-     .option("compression", config.compact_compression)
-     .option("maxRecordsPerFile", layout.rows_per_file)
-     .parquet(tmp_dir))
+
+def _key_files(kernel: RewriteKernel):
+    """mapInArrow body of the task placement's stage 1: :func:`key_files`
+    over the plan rows (the bin's input files), each file's deleted
+    positions read from the sidecar its row names, one read per sidecar
+    and plan batch; the keyed rows leave as ``(_p, IPC blob)`` rows, a
+    partition's rows gathered to about ``_BLOCK_BYTES`` per blob.  The
+    blob carries stage 1's Arrow types through the shuffle unchanged."""
+    schema = kernel.keyed_schema
+
+    def stage1(plans: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held: dict[int, list] = {}
+        size: dict[int, int] = {}
+
+        def blob(p: int) -> pa.RecordBatch:
+            del size[p]
+            return pa.RecordBatch.from_arrays(
+                [pa.array([p], pa.int64()), _ipc_blob(held.pop(p), schema)],
+                names=[_P, "_b"])
+
+        for plan in plans:
+            paths, rels, dvs, ranks = (plan.column(c).to_pylist()
+                                       for c in ("path", "rel", "dv", "rank"))
+            dels = grouped_sidecar_positions(
+                {r: dv for r, dv in zip(rels, dvs) if dv is not None})
+            for rb in key_files(kernel, [(path, r, k, dels.get(r))
+                                         for path, r, k in zip(paths, rels,
+                                                               ranks)]):
+                parts = rb.column(_P).to_numpy()
+                for p in np.unique(parts).tolist():
+                    part = rb.filter(pa.array(parts == p))
+                    held.setdefault(p, []).append(part)
+                    size[p] = size.get(p, 0) + part.nbytes
+                    if size[p] >= _BLOCK_BYTES:
+                        yield blob(p)
+        for p in sorted(held):
+            yield blob(p)
+    return stage1
+
+
+def _spill(blobs: Iterator[pa.RecordBatch], schema: pa.Schema,
+           local_dir: str | None) -> pa.Table:
+    """A group's ``(_p, IPC blob)`` rows written batch by batch to one
+    Arrow IPC file under ``local_dir`` and read back memory-mapped: the
+    task holds one blob at a time, and stage 2's sort reads only the key
+    columns' pages.  The file is unlinked at once; the mapping keeps it
+    readable until the table is released."""
+    fd, path = tempfile.mkstemp(suffix=".arrow", dir=local_dir)
+    os.close(fd)
+    try:
+        with pa.OSFile(path, "wb") as sink, \
+                pa.ipc.new_file(sink, schema) as w:
+            for rb in blobs:
+                for v in rb.column("_b"):
+                    for b in pa.ipc.open_stream(v.as_buffer()):
+                        w.write_batch(b)
+        return pa.ipc.open_file(pa.memory_map(path)).read_all()
+    finally:
+        os.unlink(path)
+
+
+def _write_groups(kernel: RewriteKernel, tmp_dir: str):
+    """applyInArrow body of the task placement's stage 2: spill the
+    group (:func:`_spill`, into the executor's first local dir), then
+    :func:`write_partition`; returns the written files' names and
+    rows."""
+    def stage2(key: tuple, blobs: Iterator[pa.RecordBatch]
+               ) -> Iterator[pa.RecordBatch]:
+        local = (os.environ.get("SPARK_LOCAL_DIRS") or "").split(",")[0]
+        rows = _spill(blobs, kernel.keyed_schema, local or None)
+        written = write_partition(kernel, rows, key[0].as_py(), tmp_dir)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([f for f, _ in written], pa.string()),
+             pa.array([r for _, r in written], pa.int64())],
+            names=["file", "rows"])
+    return stage2
+
+
+def _write_in_tasks(spark: SparkSession, store: SnapshotStore,
+                    bin: CompactionBin, kernel: RewriteKernel,
+                    tmp_dir: str) -> None:
+    """The task placement, one Spark job per bin: a plan frame of one
+    row per input file (path, manifest name, sidecar, rank) →
+    ``mapInArrow`` of stage 1 → ``groupBy("_p").applyInArrow`` of stage
+    2, under the caller's session conf.  A group is one layout partition,
+    about one target-sized file."""
+    files = sorted(bin.files)
+    plan = local_df(spark, "path string, rel string, dv string, rank long", [
+        [store.abs(f) for f in files], files,
+        [store.abs(bin.dv_files[f]) if f in bin.dv_files else None
+         for f in files], list(range(len(files)))])
+    store.fs.makedirs(tmp_dir)
+    (plan.mapInArrow(_key_files(kernel), f"{_P} long, _b binary")
+     .groupBy(_P)
+     .applyInArrow(_write_groups(kernel, tmp_dir), "file string, rows long")
+     .collect())
 
 
 def rewrite_bin(
@@ -714,37 +764,29 @@ def rewrite_bin(
     config: TableConfig,
     boundaries: dict,
     job_id: str,
-    schema_ddl: str | None = None,
-    project: list[str] | None = None,
-    column_defaults: dict | None = None,
-    deletes: DataFrame | None = None,
+    project: list[str],
+    column_defaults: Mapping[str, object] | None = None,
     schema_types: Mapping[str, str] | None = None,
     on_driver: bool = False,
 ) -> dict:
     """Execute (or resume past) one bin; returns its lineage record.
-    ``on_driver`` (:func:`driver_rewrite`, which needs ``project`` and
-    ``schema_types``) writes its files with pyarrow on the driver
-    instead of a Spark job; either way they go through the same
+    The kernel writes the bin's files in-process when ``on_driver``,
+    else in Spark tasks; either way they go through the same
     finalization."""
     cached = load_valid_lineage(store, job_id, bin.bin_id)
     if cached is not None:
         return cached
 
     t_entry = time.monotonic()
-    layout = bin_layout(bin, config, boundaries)
+    kernel = rewrite_kernel(store, bin, config, boundaries, project,
+                            schema_types, column_defaults)
     tmp_dir = os.path.join(store.warehouse, "tmp", job_id,
                            f"bin-{bin.bin_id:05d}")
     t0 = time.monotonic()
     if on_driver:
-        _driver_write(spark, store, bin, layout, config=config,
-                      boundaries=boundaries, tmp_dir=tmp_dir,
-                      schema=project, types=schema_types,
-                      column_defaults=column_defaults)
+        _write_on_driver(store, bin, kernel, tmp_dir)
     else:
-        _spark_write(spark, store, bin, layout, config=config,
-                     boundaries=boundaries, tmp_dir=tmp_dir,
-                     schema_ddl=schema_ddl, project=project,
-                     column_defaults=column_defaults, deletes=deletes)
+        _write_in_tasks(spark, store, bin, kernel, tmp_dir)
     t_rewrite = time.monotonic() - t0
 
     # deterministic final names (assigned in part order before any
@@ -755,14 +797,8 @@ def rewrite_bin(
     t_finalize = time.monotonic() - t0 - t_rewrite
     stats = footer_stats_many([store.abs(r) for r in rels],
                               config.stats_columns)
-    outputs = []
-    rows_out = 0
-    for rel, st in zip(rels, stats):
-        if st["rows"] == 0:
-            store.fs.remove(store.abs(rel))
-            continue
-        rows_out += st["rows"]
-        outputs.append({"path": rel, **st})
+    outputs = [{"path": rel, **st} for rel, st in zip(rels, stats)]
+    rows_out = sum(o["rows"] for o in outputs)
 
     store.fs.rmtree(tmp_dir)
 

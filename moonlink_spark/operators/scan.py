@@ -366,14 +366,9 @@ def dv_positions(store: SnapshotStore,
     ``dv_files`` maps to the sidecar its manifest entry names, read on
     the driver with pyarrow, one read per sidecar (a file without a row
     there is left out)."""
-    from moonlink_spark.operators.distscan import sidecar_positions
-    by_sidecar: dict[str, list[str]] = {}
-    for f, rel in dv_files.items():
-        by_sidecar.setdefault(rel, []).append(f)
-    out: dict[str, np.ndarray] = {}
-    for rel, named in sorted(by_sidecar.items()):
-        out.update(sidecar_positions(store.abs(rel), named))
-    return out
+    from moonlink_spark.operators.distscan import grouped_sidecar_positions
+    return grouped_sidecar_positions(
+        {f: store.abs(rel) for f, rel in dv_files.items()})
 
 
 def driver_deletes(spark: SparkSession, store: SnapshotStore,
@@ -424,6 +419,20 @@ def deletes_df(spark: SparkSession, store: SnapshotStore,
     )
 
 
+def fill_defaults(df: DataFrame,
+                  column_defaults: Mapping[str, object] | None) -> DataFrame:
+    """``df`` with each added column's nulls filled with its default
+    (coalesce semantics: genuine nulls in new data are filled too), cast
+    to the column's type so the fill never widens it."""
+    fills = {c: v for c, v in (column_defaults or {}).items()
+             if v is not None and c in df.columns}
+    types = {f.name: f.dataType for f in df.schema.fields} if fills else {}
+    for col, default in fills.items():
+        df = df.withColumn(col, F.coalesce(
+            F.col(col), F.lit(default).cast(types[col])))
+    return df
+
+
 def scan_files(
     spark: SparkSession,
     store: SnapshotStore,
@@ -435,7 +444,6 @@ def scan_files(
     schema_ddl: str | None = None,
     project: list[str] | None = None,
     column_defaults: Mapping[str, object] | None = None,
-    deletes: DataFrame | None = None,
     dv_files: Mapping[str, str],
 ) -> DataFrame:
     """Read an explicit file set applying its delete vectors.
@@ -455,11 +463,7 @@ def scan_files(
     A DV side of at most ``DRIVER_DV_ROWS`` deleted rows
     (``dv_cardinality``; :func:`dv_side_on_driver`) is read on the
     driver and broadcast as a local relation (:func:`driver_deletes`); a
-    larger one is read by Spark (:func:`deletes_df`).  ``deletes``, a
-    prebuilt (file, pos) DataFrame, takes the place of that Spark read:
-    callers running many concurrent scans whose deletes together are
-    too many for the driver read (the compaction fan-out) build and
-    persist it once, and each scan semi-joins its own files out of it.
+    larger one is read by Spark (:func:`deletes_df`).
 
     ``schema_ddl`` pins the read schema (schema evolution: files written
     before an added column came along simply yield nulls for it — no
@@ -478,23 +482,14 @@ def scan_files(
         d = _with_relative_file(d, store)
         if project:
             d = d.select(*project, FILE_COL)
-        if column_defaults:
-            for col, default in column_defaults.items():
-                if default is not None and col in d.columns:
-                    d = d.withColumn(col, F.coalesce(F.col(col),
-                                                     F.lit(default)))
-        return d
+        return fill_defaults(d, column_defaults)
 
     dirty = [f for f in data_files if f in dv_files]
     clean = [f for f in data_files if f not in dv_files]
-    if not dirty or (deletes is None and not dv_paths):
+    if not dirty or not dv_paths:
         live = _read(data_files)  # no delete row can touch any file
     else:
-        if deletes is not None:
-            dels = deletes.join(
-                F.broadcast(file_list_df(spark, dirty)),
-                on=FILE_COL, how="left_semi")
-        elif dv_side_on_driver(spark, dv_cardinality, dirty):
+        if dv_side_on_driver(spark, dv_cardinality, dirty):
             dels = driver_deletes(
                 spark, store, {f: dv_files[f] for f in dirty})
         else:

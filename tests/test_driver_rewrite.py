@@ -1,10 +1,10 @@
-"""The driver rewrite: a job whose planned input is small writes its bins
-with pyarrow on the driver (``rewrite.driver_rewrite``), and must lay out
-the same rows in the same files as the Spark rewrite it replaces.  Each
-parity case runs one table both ways (the Spark way by lowering
-``DRIVER_REWRITE_BYTES``) and compares every output file: its manifest
-entry (rows, bounds, null counts; not its bytes) and its decoded rows in
-order, ``_pos`` included."""
+"""The rewrite kernel's two placements: a job whose planned input is at
+most ``rewrite.DRIVER_REWRITE_BYTES`` runs it in-process on the driver, a
+larger one in Spark tasks, and both must lay out the same rows in the
+same files.  Each parity case runs one table both ways (the task
+placement by lowering ``DRIVER_REWRITE_BYTES``) and compares every
+output file: its manifest entry (rows, bounds, null counts; not its
+bytes) and its decoded rows in order, ``_pos`` included."""
 
 import dataclasses
 import datetime
@@ -36,18 +36,22 @@ def _aftermath_config(w: str, **kw) -> TableConfig:
 
 
 def _layout(w: str, version: int) -> list:
-    """Each output file's manifest entry without its size, and its rows."""
+    """Each output file's manifest entry without its size, and its rows
+    (a NaN as the string ``"NaN"``, which compares equal to itself)."""
     store = SnapshotStore(w)
     out = []
     for e in store.manifest_entries(version):
-        rows = pq.read_table(store.abs(e["path"])).to_pylist()
+        rows = [{k: "NaN" if isinstance(v, float) and v != v else v
+                 for k, v in r.items()}
+                for r in pq.read_table(store.abs(e["path"])).to_pylist()]
         out.append(({k: v for k, v in e.items() if k != "bytes"}, rows))
     return out
 
 
 def _both_ways(spark, tmp_path, monkeypatch, make, config=None) -> list:
-    """Build the table twice with ``make(w)``, optimize it on each path
-    and assert the layouts equal; returns the driver one."""
+    """Build the table twice with ``make(w)``, optimize it in each
+    placement (``writer`` "driver", or "spark" for the tasks) and assert
+    the layouts equal; returns the driver one."""
     got = {}
     for writer in ("driver", "spark"):
         w = str(tmp_path / writer)
@@ -107,6 +111,33 @@ def test_added_column_default_parity(spark, tmp_path, monkeypatch):
     rows = [r for _e, rs in out for r in rs]
     assert {(r["license"], r["stars"], r["note"]) for r in rows} == {
         ("mit", 7, None)}
+
+
+def test_add_column_refuses_default_outside_its_type(spark, tmp_path):
+    """A default that is not a value of its column's type is refused and
+    commits nothing: on an ``int`` column 3,000,000,000 would read as
+    ``bigint`` while compaction writes INT32 files, and the table would
+    become unreadable.  Defaults at a type's edge, or of a narrower
+    type than Spark gives their literal, scan, compact and read back as
+    their column's type."""
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=7, n_files=6)
+    t = MoonTable(spark, w)
+    for ddl, default in (("int", 3_000_000_000), ("tinyint", 300),
+                         ("int", "x"), ("string", 5),
+                         ("decimal(5,2)", decimal.Decimal("1234.5"))):
+        with pytest.raises(ValueError, match="default"):
+            t.add_column("n", ddl, default=default)
+    assert t.store.read_snapshot().version == 0
+    t.add_column("n", "int", default=2**31 - 1)
+    t.add_column("b", "tinyint", default=-128)
+    t.add_column("f", "float", default=1.5)
+    want = {"n": "int", "b": "tinyint", "f": "float"}
+    for _ in range(2):
+        assert {c: d for c, d in t.scan().dtypes if c in want} == want
+        assert t.scan().where((F.col("n") == 2**31 - 1) & (F.col("b") == -128)
+                              & (F.col("f") == 1.5)).count() == t.count()
+        t.optimize("full")
 
 
 def _typed_table(w: str, schema: pa.Schema, types: dict, files: list,
@@ -188,8 +219,8 @@ _TYPED_CONFIG = TableConfig(
 def test_typed_table_parity(spark, tmp_path, monkeypatch, out_ts):
     """decimal (integer- and array-backed), date, timestamp and double
     columns, with nulls, Z-ordered on a non-ASCII string and a long; a
-    timestamp column is written as the session's
-    ``outputTimestampType`` says (INT96 carries no bounds)."""
+    timestamp column is written as INT64 microseconds, with bounds,
+    whatever the session's ``outputTimestampType`` says."""
     rng = np.random.default_rng(11)
     files = _typed_files(rng, 6, 400)
 
@@ -208,7 +239,7 @@ def test_typed_table_parity(spark, tmp_path, monkeypatch, out_ts):
     assert len(out) > 2
     entry = out[0][0]
     assert isinstance(entry["min_price"], decimal.Decimal)
-    assert (entry["min_ts"] is None) == (out_ts == "INT96")
+    assert entry["min_ts"] is not None
 
 
 def test_fully_deleted_bin_parity(spark, tmp_path, monkeypatch):
@@ -233,6 +264,154 @@ def test_fully_deleted_bin_parity(spark, tmp_path, monkeypatch):
     out = _both_ways(spark, tmp_path, monkeypatch, make, config)
     assert [e["path"].split("-b")[-1][:5] for e, _ in out] == ["00001"]
     assert out[0][0]["rows"] == 2 * 300 - 2
+
+
+def test_nan_and_null_zorder_double_parity(spark, tmp_path, monkeypatch):
+    """A ``double`` Z-order column holding NaN and null keys (both rank
+    as 0) and sorts (nulls first) the same in both placements."""
+    rng = np.random.default_rng(13)
+    files = _typed_files(rng, 6, 400)
+    for cols in files:
+        cols[6] = [float("nan") if i % 11 == 0 else v
+                   for i, v in enumerate(cols[6])]
+
+    def make(w):
+        _typed_table(w, _TYPED_SCHEMA, _TYPED_TYPES, files,
+                     {2: list(range(0, 400, 5))}, _TYPED_CONFIG.stats_columns)
+
+    out = _both_ways(spark, tmp_path, monkeypatch, make,
+                     dataclasses.replace(_TYPED_CONFIG,
+                                         zorder_columns=("score", "id")))
+    scores = [r["score"] for _e, rs in out for r in rs]
+    assert None in scores and "NaN" in scores
+    assert len(out) > 2
+
+
+def test_nested_types_parity(spark, tmp_path, monkeypatch):
+    """Array and struct columns (``test_nested_types``' schema) pass
+    through both placements unchanged, deleted rows dropped."""
+    from pyspark.sql import functions as F
+
+    from moonlink_spark.catalog import Catalog
+    from tests.test_nested_types import NESTED_SCHEMA, NESTED_TYPES, nested_df
+
+    cfg = TableConfig(zorder_columns=("id",),
+                      stats_columns=("id", "content"),
+                      compaction=CompactionConfig(
+                          target_file_bytes=4 << 10, bin_target_bytes=16 << 10,
+                          bin_concurrency=2))
+
+    got = {}
+    for writer in ("driver", "spark"):
+        t = Catalog(spark, str(tmp_path / writer)).create_table(
+            "db", "nested", schema=NESTED_SCHEMA, schema_types=NESTED_TYPES,
+            config=cfg)
+        for i in range(3):
+            t.merge(nested_df(spark, 200).withColumn("id", F.col("id")
+                                                     + 200 * i),
+                    key_columns=["id"], job_tag=f"seed{i}")
+        t.merge(nested_df(spark, 50).withColumn("_op", F.lit("delete")),
+                key_columns=["id"], job_tag="del")
+        with monkeypatch.context() as m:
+            if writer == "spark":
+                m.setattr(rewrite, "DRIVER_REWRITE_BYTES", -1)
+            snap = t.optimize("full")
+        assert snap.properties["metrics"]["writer"] == writer
+        got[writer] = _layout(t.store.warehouse, snap.version)
+    assert got["driver"] == got["spark"]
+    rows = sorted((r for _e, rs in got["driver"] for r in rs),
+                  key=lambda r: r["id"])
+    assert len(rows) == 550 and rows[0]["id"] == 50
+    assert rows[13]["tags"] == ["t0", "common"]
+    assert rows[13]["meta"] == {"stars": 13, "forks": 0}
+
+
+def test_spark_written_int96_timestamps_get_bounds(spark, tmp_path,
+                                                    monkeypatch):
+    """A table whose files Spark wrote under the default INT96
+    ``outputTimestampType`` (footers without min/max) records non-null
+    ``min_ts``/``max_ts`` for its compacted files in both placements."""
+    from pyspark.sql import functions as F
+
+    from moonlink_spark.catalog import Catalog
+
+    cfg = TableConfig(zorder_columns=("k",), stats_columns=("k", "ts"))
+    key = "spark.sql.parquet.outputTimestampType"
+    assert spark.conf.get(key, "INT96") == "INT96"
+    got = {}
+    for writer in ("driver", "spark"):
+        t = Catalog(spark, str(tmp_path / writer)).create_table(
+            "db", "events", schema=["k", "ts", "_pos"],
+            schema_types={"k": "bigint", "ts": "timestamp"}, config=cfg)
+        for i in range(3):
+            t.append(spark.range(100 * i, 100 * i + 100).select(
+                F.col("id").alias("k"),
+                F.timestamp_seconds(F.col("id") * 3600).alias("ts")))
+        before = t.store.manifest_entries()
+        assert all(e.get("min_ts") is None for e in before)
+        first = pq.ParquetFile(t.store.abs(before[0]["path"])).metadata
+        assert first.schema.column(1).physical_type == "INT96"
+        with monkeypatch.context() as m:
+            if writer == "spark":
+                m.setattr(rewrite, "DRIVER_REWRITE_BYTES", -1)
+            snap = t.optimize("full")
+        assert snap.properties["metrics"]["writer"] == writer
+        ents = t.store.manifest_entries(snap.version)
+        assert ents and all(e["min_ts"] is not None for e in ents)
+        assert min(e["min_ts"] for e in ents) == datetime.datetime(1970, 1, 1)
+        got[writer] = _layout(t.store.warehouse, snap.version)
+    assert got["driver"] == got["spark"]
+
+
+def test_spilled_partition_writes_identical_files(tmp_path):
+    """Stage 2 writes byte-identical files from a partition's rows held
+    in memory and from the same rows spilled to an Arrow IPC file and
+    memory-mapped (the task placement), and the spill holds no copy of
+    the rows in Arrow's memory pool."""
+    w = str(tmp_path / "wh")
+    synthesize_cdc_aftermath(w, seed=4, n_files=20)
+    store = SnapshotStore(w)
+    cfg = _aftermath_config(w)
+    snap = store.read_snapshot()
+    from moonlink_spark.operators.planner import plan_compaction
+    bin = max(plan_compaction(snap.manifest_paths,
+                              cfg.compaction.for_full_mode()),
+              key=lambda b: len(b.files))
+    from moonlink_spark.functions.zorder import compute_zorder_boundaries
+    from moonlink_spark.operators.scan import column_batches, dv_positions
+    zcols = list(cfg.zorder_columns)
+    bnds = compute_zorder_boundaries(
+        column_batches([store.abs(f) for f in bin.files], zcols,
+                       snap.properties["schema_types"]), zcols)
+    kernel = rewrite.rewrite_kernel(
+        store, bin, cfg, bnds, snap.schema, snap.properties["schema_types"],
+        None)
+    dels = dv_positions(store, bin.dv_files)
+    batches = list(rewrite.key_files(kernel, [
+        (store.abs(f), f, i, dels.get(f))
+        for i, f in enumerate(sorted(bin.files))]))
+    rows = pa.Table.from_batches(batches, schema=kernel.keyed_schema)
+    assert rows.num_rows == bin.live_rows
+    batches = rows.to_batches(max_chunksize=500)
+    blobs = [pa.RecordBatch.from_arrays(
+        [pa.array([0], pa.int64()),
+         rewrite._ipc_blob(batches[i:i + 3], kernel.keyed_schema)],
+        names=["_p", "_b"]) for i in range(0, len(batches), 3)]
+    pool = pa.total_allocated_bytes()
+    spilled = rewrite._spill(iter(blobs), kernel.keyed_schema,
+                             str(tmp_path))
+    assert pa.total_allocated_bytes() - pool < rows.nbytes // 4
+    assert spilled.equals(rows)
+    assert os.listdir(tmp_path) == ["wh"]  # the spill file is unlinked
+    out = {}
+    for name, table in (("memory", rows), ("mapped", spilled)):
+        d = tmp_path / name
+        d.mkdir()
+        written = rewrite.write_partition(kernel, table, 0, str(d))
+        assert sum(n for _f, n in written) == rows.num_rows
+        out[name] = {f: (d / f).read_bytes() for f, _n in written}
+    assert len(out["memory"]) > 1
+    assert out["memory"] == out["mapped"]
 
 
 def test_xxhash64_matches_spark(spark):

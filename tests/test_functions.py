@@ -351,22 +351,6 @@ def test_ngram_decontaminate_flags_overlap(spark):
     assert all(v >= 1 for v in got.values())
 
 
-def test_jvm_rank_nonfinite_and_small_boundary_sets(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-    from moonlink_spark.functions.zorder import _jvm_rank
-    df = spark.createDataFrame([(-5.0,), (5.0,), (100.0,)], "x double")
-    # non-finite boundaries must parse (Java spellings, not repr());
-    # sub-64 boundary sets must not build an empty coarse array
-    for bnds in (np.array([float("-inf"), 0.0, 10.0, float("inf")]),
-                 np.linspace(0.0, 100.0, 62)):
-        got = {r["x"]: r["r"] for r in
-               df.select("x", _jvm_rank(F.col("x"), bnds).alias("r"))
-               .collect()}
-        exp = {x: int(np.searchsorted(bnds, x, side="right")) for x in got}
-        assert got == exp
-
-
 def test_line_dedup_strips_boilerplate(spark):
     hdr = "// SPDX-License-Identifier: MIT"
     rows = [

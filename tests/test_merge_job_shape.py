@@ -549,10 +549,10 @@ def _dv_read_digests(spark, w: str) -> dict:
 def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
                                               monkeypatch, spark_rewrite):
     """Under a 1 MB ``spark.driver.maxResultSize`` the aftermath's
-    deleted rows exceed the driver budget: ``scan()`` and
-    ``optimize("full")`` read the delete vectors with Spark
-    (``deletes_df``), and return and commit the same rows as the
-    driver-read side does under the default conf."""
+    deleted rows exceed the driver budget: ``scan()`` reads the delete
+    vectors with Spark (``deletes_df``), and it and ``optimize("full")``
+    (whose tasks read each file's own sidecar, through neither DV side)
+    return and commit the same rows as under the default conf."""
     from moonlink_spark.operators import scan as scan_op
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -564,7 +564,7 @@ def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
     low = json.loads(proc.stdout.strip().splitlines()[-1])
     assert low.pop("over") and low.pop("few_rows")  # the budget binds
     assert low["scan_calls"] == ["deletes_df"]
-    assert low["optimize_calls"] == ["deletes_df"]
+    assert low["optimize_calls"] == []
 
     for fn in ("deletes_df", "driver_deletes"):  # undo _dv_read_digests
         monkeypatch.setattr(scan_op, fn, getattr(scan_op, fn))
@@ -572,7 +572,7 @@ def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
     synthesize_cdc_aftermath(w, seed=5, n_files=40)
     default = _dv_read_digests(spark, w)
     assert default["scan_calls"] == ["driver_deletes"]
-    assert default["optimize_calls"] == ["driver_deletes"]
+    assert default["optimize_calls"] == []
     for k in ("scan", "committed", "rows_out"):
         assert low[k] == default[k], k
 
@@ -580,12 +580,11 @@ def test_over_budget_dv_side_takes_spark_read(spark, tmp_path,
 def test_resume_on_spark_dv_read_matches_driver_read(spark, tmp_path,
                                                      monkeypatch,
                                                      spark_rewrite):
-    """The Spark DV read under a kill and resume: with every DV side
+    """The task placement under a kill and resume: with every DV side
     over the driver budget, an optimize killed after two of its bins
-    and then resumed reads its deletes once per run as the persisted
-    ``deletes_df`` frame the concurrent bins semi-join, and commits the
-    manifest and rows of an uninterrupted job that read them on the
-    driver."""
+    and then resumed reads no DV side (its tasks read each file's own
+    sidecar), and commits the manifest and rows of an uninterrupted
+    job under the default budget."""
     from moonlink_spark.operators import scan as scan_op
     from tests.oracle import content_sha_multiset, live_rows_pandas
 
@@ -605,15 +604,14 @@ def test_resume_on_spark_dv_read_matches_driver_read(spark, tmp_path,
         monkeypatch.setattr(scan_op, fn, spy)
 
     uninterrupted = MoonTable(spark, clean, cfg).optimize("full")
-    assert set(calls) == {"driver_deletes"}
-    calls.clear()
+    assert calls == []
     monkeypatch.setattr(scan_op, "driver_budget", lambda spark: -1)
     # the first of the 4 bins carries no DV: the kill lands after the
     # second, so both runs rewrite bins with deletes
     assert (MoonTable(spark, killed, cfg).optimize("full", max_bins=2)
             .version == 0)
     resumed = MoonTable(spark, killed, cfg).optimize("full")
-    assert calls == ["deletes_df", "deletes_df"]
+    assert calls == []
     assert resumed.version == uninterrupted.version == 1
 
     def fingerprint(w):

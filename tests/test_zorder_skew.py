@@ -10,7 +10,6 @@ from moonlink_spark.functions.zorder import (
     _string_proxy_np,
     compute_zorder_boundaries,
     morton_interleave,
-    with_zorder_key,
 )
 from moonlink_spark.operators import skew
 from moonlink_spark.operators.scan import prune_manifest
@@ -185,78 +184,6 @@ def test_salted_partition_balance(spark):
     assert max(sizes) < 2000        # no single-partition pileup
 
 
-def test_jvm_zkey_matches_numpy_reference(spark):
-    """The JVM Morton path (two-level literal-array rank + shift/or
-    interleave) must agree bit-for-bit with the numpy reference
-    (_string_proxy_np + searchsorted + morton_interleave) — same proxy,
-    same f64 rounding, same boundary comparisons — across empty strings,
-    NULLs, unicode, shared prefixes, and >7-byte strings."""
-    import random
-
-    from moonlink_spark.functions.zorder import (
-        _string_proxy_np,
-        compute_zorder_boundaries,
-        morton_interleave,
-        with_zorder_key,
-    )
-    import pandas as pd
-
-    rng = random.Random(99)
-    strings = (["", "a", "zz", "ümlaut-unicode-日本語", "prefix/shared/x",
-                "prefix/shared/y", "exactly7", "longer-than-seven-bytes"]
-               + [f"org{rng.randint(0, 9)}/repo{rng.randint(0, 999):04d}"
-                  for _ in range(200)])
-    rows = [(s if s != "a" or i % 7 else None,  # sprinkle NULLs
-             float(rng.randint(-500, 500)))
-            for i, s in enumerate(strings)]
-    df = spark.createDataFrame(rows, "repo string, score double")
-    bnds = compute_zorder_boundaries(df.toArrow(), ["repo", "score"],
-                                     bits=12)
-
-    got = {(r["repo"], r["score"]): r["_zkey"] for r in
-           with_zorder_key(df, ["repo", "score"], bnds,
-                           bits=12, curve="morton").collect()}
-
-    pdf = pd.DataFrame(rows, columns=["repo", "score"])
-    bx = np.searchsorted(bnds["repo"],
-                         _string_proxy_np(pdf["repo"].astype(str)
-                                          .where(pdf["repo"].notna(), "")),
-                         side="right")
-    by = np.searchsorted(bnds["score"],
-                         pdf["score"].fillna(0).to_numpy(np.float64),
-                         side="right")
-    expect = morton_interleave([bx, by], 12)
-    for (row, zk) in zip(rows, expect):
-        assert got[row] == int(zk), f"mismatch for {row}"
-
-
-def test_range_salts_perfect_packing(spark):
-    """The rewrite's range->partition routing: each salt must land in
-    its own partition of an n-way hash repartition (this is what removes
-    the 2x collision-straggler tail from the sort+write stage), and the
-    pure-Python Murmur3 must agree with Spark's hash() exactly."""
-    from moonlink_spark.operators.rewrite import _murmur3_int32, range_salts
-
-    vals = list(range(300)) + [-1, -7, 2**31 - 1, -(2**31), 123456789]
-    got = {
-        r["v"]: r["h"]
-        for r in spark.createDataFrame([(v,) for v in vals], "v int")
-        .select("v", F.hash("v").alias("h")).collect()
-    }
-    assert all(got[v] == _murmur3_int32(v) for v in vals)
-
-    for n in (1, 2, 7, 106):
-        salts = range_salts(n)
-        assert len(set(salts)) == n
-        df = (spark.createDataFrame([(s,) for s in salts], "s int")
-              .repartition(n, "s")
-              .select("s", F.spark_partition_id().alias("pid")))
-        placed = {r["s"]: r["pid"] for r in df.collect()}
-        # salts[i] must occupy partition i: a bijection, no collisions
-        assert sorted(placed.values()) == list(range(n))
-        assert all(placed[s] == i for i, s in enumerate(salts))
-
-
 def test_quantiles_bit_equal_to_np_quantile():
     """The one-sort quantile helper must return exactly what
     np.quantile returns — boundaries decide every row's zkey, and so
@@ -285,62 +212,6 @@ def test_quantiles_bit_equal_to_np_quantile():
         assert got.dtype == exp.dtype, name
         assert np.array_equal(got.view(np.uint64), exp.view(np.uint64)), \
             name
-
-
-def test_zorder_key_evaluates_string_proxy_once(spark):
-    """Each string dimension's proxy (encode/hex/rpad/conv) must be its
-    own projection: inlined into the rank's filter lambdas it would be
-    re-evaluated for every boundary compared.  The second call on the
-    same job's boundaries reuses the built expressions."""
-    df = spark.createDataFrame(
-        [("org1/r", "a/b.py", 1.0), ("org2/s", "c/d.py", -2.0),
-         (None, "e.py", None)],
-        "repo string, path string, score double")
-    bnds = compute_zorder_boundaries(df.toArrow(), ["repo", "path", "score"],
-                                     bits=12)
-    first = with_zorder_key(df, ["repo", "path"], bnds, bits=12)
-    plan = first._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("conv(") == 2
-    second = with_zorder_key(df, ["repo", "path"], bnds, bits=12)
-    assert len(bnds._key_stages) == 1
-    assert (sorted(first.collect(), key=str)
-            == sorted(second.collect(), key=str))
-
-
-def test_zorder_key_stages_built_once_under_concurrent_bins():
-    """A job's bins key their rows concurrently from one boundaries
-    object: exactly one of them may build the zkey expressions, and
-    every bin must get that same build."""
-    import sys
-    import threading
-    import time
-
-    from moonlink_spark.functions.zorder import ZOrderBoundaries
-
-    bnds = ZOrderBoundaries(repo=np.array([1.0]))
-    builds = []
-
-    def build():
-        builds.append(1)
-        time.sleep(0.01)  # widen the check-then-act window
-        return [object()]
-
-    got = []
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(
-            target=lambda: got.append(bnds.key_stages(("k",), build)))
-            for _ in range(16)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=10)
-    finally:
-        sys.setswitchinterval(old)
-    assert not any(t.is_alive() for t in threads)
-    assert len(builds) == 1 and len(got) == 16
-    assert all(g is got[0] for g in got)
 
 
 # -- the boundary sample ------------------------------------------------

@@ -1,50 +1,58 @@
-"""Optimize rewrite-path crossover: the driver rewrite against the Spark one.
+"""Optimize rewrite placements, timed in alternating pairs.
 
 Synthesizes CDC aftermaths from the maintain benchmark's shape (20
 files, ~3 MB) up to ~200 MB, plus a many-tiny-files shape (2,000 files
-of 3-10 rows), and runs ``optimize("full")`` on fresh copies of each,
-once per rewrite path of ``operators/rewrite.py``: the driver path
-(``DRIVER_REWRITE_BYTES`` raised past every cell) and the Spark path
-(lowered below every cell).  Each cell is planned as the benchmark plans
-its table (``perfbench.workloads.table_config``: 2 bins of 2 outputs).
-The session has the benchmark's 1 GiB driver (``local[4]``).  Per run
-it records the optimize wall seconds (or its error) and the peak RSS of
-this process plus the driver JVM, sampled every 10 ms while the job
-runs.  The host fingerprint is ``nproc`` and a same-session sha2 probe
-(4M rows, ``bench.run_cpu_calibration``).
+of 3-10 rows), and runs ``optimize("full")`` on fresh copies of each.
+Every run belongs to one of two sides, and the sides alternate within
+each pair of runs (A then B, then B then A):
+
+- by default both sides run this checkout, side A in-process on the
+  driver (``rewrite.DRIVER_REWRITE_BYTES`` raised past every cell) and
+  side B in Spark tasks (lowered below every cell) — the crossover that
+  sets ``DRIVER_REWRITE_BYTES``;
+- with ``--parent DIR`` side A is this checkout and side B the checkout
+  at ``DIR``, both with ``DRIVER_REWRITE_BYTES`` lowered, so each runs
+  its Spark-side rewrite.
+
+Each side is its own worker process (this script with ``--worker``) with
+its own ``local[4]`` session and the benchmark's 1 GiB driver, importing
+the engine from its checkout; one side idles while the other runs.
+Each cell is planned as the benchmark plans its table
+(``perfbench.workloads.table_config``: 2 bins of 2 outputs).  Per run a
+worker records the optimize wall seconds (or its error), peak RSS
+sampled every 10 ms while the job runs — of the worker process plus its
+driver JVM, and of the JVM's descendant Python workers (the largest
+one's RSS and anonymous RSS, and their summed RSS; found through
+``/proc/<pid>/task/*/children``) — and,
+after the timed job, digests of the decoded rows of every output file
+in name order, one without ``_pos`` and one of ``_pos`` alone.  The host fingerprint is ``nproc`` and each worker's
+sha2 probe (4M rows, ``bench.run_cpu_calibration``).
 
 Prints one JSON line per run as it ends, then one summary line; commit
-the summary as ``REWRITE_PATH_CROSSOVER.json``.  The summary names the
-largest cell whose every driver run beat the Spark run of its pair;
-``DRIVER_REWRITE_BYTES`` is set at that cell's planned input bytes.
+the summary as ``REWRITE_PATH_CROSSOVER.json`` (placements) or
+``REWRITE_PLACEMENT.json`` (``--parent``).
 
 Usage: python tools/rewrite_path_bench.py [--reps 3] [--cells a,b]
+                                          [--parent DIR]
 """
 
 from __future__ import annotations
 
 import argparse
 import gc
+import glob
+import hashlib
 import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import tempfile
 import threading
 import time
 
-from pyspark.sql import SparkSession
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))))
-
-from bench import run_cpu_calibration  # noqa: E402
-from moonlink_spark.engine import MoonTable  # noqa: E402
-from moonlink_spark.operators import rewrite  # noqa: E402
-from moonlink_spark.snapshotstore import SnapshotStore  # noqa: E402
-from moonlink_spark.synth import synthesize_cdc_aftermath  # noqa: E402
-from perfbench.workloads import table_config  # noqa: E402
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # name → synthesize_cdc_aftermath arguments, in order of input bytes
 CELLS = {
@@ -58,25 +66,66 @@ CELLS = {
 }
 
 
-def _rss_kb(pid: int) -> int:
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmRSS:"):
-                return int(line.split()[1])
+def _rss_kb(pid: int, field: str = "VmRSS") -> int:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith(field + ":"):
+                    return int(line.split()[1])
+    except OSError:  # exited between listing and reading
+        pass
     return 0
 
 
-class PeakRss:
-    """Peak summed RSS of ``pids`` while the block runs (10 ms samples)."""
+def _is_python(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            argv0 = f.read().split(b"\0")[0]
+    except OSError:
+        return False
+    return os.path.basename(argv0).startswith(b"python")
 
-    def __init__(self, pids):
-        self.pids, self.peak_kb = pids, 0
+
+def _python_descendants(pid: int) -> list[int]:
+    """Every live Python descendant of ``pid``, from the kernel's
+    per-thread child lists.  Other descendants are left out: a child
+    the JVM spawns shows the JVM's own RSS until it execs."""
+    out, todo = [], [pid]
+    while todo:
+        for path in glob.glob(f"/proc/{todo.pop()}/task/*/children"):
+            try:
+                with open(path) as f:
+                    kids = [int(k) for k in f.read().split()]
+            except OSError:
+                continue
+            out += [k for k in kids if _is_python(k)]
+            todo += kids
+    return out
+
+
+class PeakRss:
+    """While the block runs (10 ms samples): the peak summed RSS of
+    ``pids``, and of the JVM ``jvm``'s Python descendants (the Python
+    workers) the largest one's peak RSS and anonymous RSS (``RssAnon``:
+    without the page cache a memory-mapped spill file is read through)
+    and their sum's RSS."""
+
+    def __init__(self, pids, jvm: int):
+        self.pids, self.jvm = pids, jvm
+        self.peak_kb = self.worker_kb = self.worker_anon_kb = 0
+        self.workers_kb = 0
         self._stop = threading.Event()
 
     def _sample(self):
         while not self._stop.is_set():
             self.peak_kb = max(self.peak_kb,
                                sum(_rss_kb(p) for p in self.pids))
+            kids = _python_descendants(self.jvm)
+            rss = [_rss_kb(p) for p in kids]
+            self.worker_kb = max([self.worker_kb, *rss])
+            self.worker_anon_kb = max([self.worker_anon_kb, *(
+                _rss_kb(p, "RssAnon") for p in kids)])
+            self.workers_kb = max(self.workers_kb, sum(rss))
             self._stop.wait(0.01)
 
     def __enter__(self):
@@ -89,12 +138,40 @@ class PeakRss:
         self._thread.join()
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--cells", default=",".join(CELLS))
-    args = ap.parse_args()
-    cells = [c for c in args.cells.split(",") if c]
+def rows_digests(store, version: int) -> dict:
+    """sha256 digests over the output files of ``version`` in the order
+    of their base names (bin, then file): ``rows_digest`` over each
+    file's row count and its rows' ``pandas.util.hash_pandas_object``
+    without ``_pos`` (values, not encodings: equal decoded rows give
+    equal digests), ``pos_digest`` over its ``_pos`` column."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+    rows, pos = hashlib.sha256(), hashlib.sha256()
+    for e in sorted(store.manifest_entries(version),
+                    key=lambda e: os.path.basename(e["path"])):
+        df = pq.read_table(store.abs(e["path"])).to_pandas()
+        rows.update(len(df).to_bytes(8, "little"))
+        rows.update(pd.util.hash_pandas_object(
+            df.drop(columns="_pos"), index=False).values.tobytes())
+        pos.update(df["_pos"].to_numpy().tobytes())
+    return {"rows_digest": rows.hexdigest(), "pos_digest": pos.hexdigest()}
+
+
+def worker(root: str, placement: str) -> None:
+    """One side: read ``{"base": dir}`` requests from stdin, run
+    ``optimize("full")`` on a fresh copy of the table at ``dir`` in
+    ``placement`` ("driver" or "tasks"), answer one ``RESULT {json}``
+    line per request."""
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = root  # Python workers import it
+    from pyspark.sql import SparkSession
+
+    from bench import run_cpu_calibration
+    from moonlink_spark.engine import MoonTable
+    from moonlink_spark.operators import rewrite
+    from moonlink_spark.snapshotstore import SnapshotStore
+    from perfbench.workloads import table_config
+
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.driver.memory", "1g")
              .config("spark.sql.shuffle.partitions", "4")
@@ -104,89 +181,168 @@ def main():
              .getOrCreate())
     spark.sparkContext.setLogLevel("OFF")
     jvm = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-    pids = [os.getpid(), jvm]
-    probe_s = run_cpu_calibration(spark, 4, rows=4_000_000)
-    runs, sizes = [], {}
+    rewrite.DRIVER_REWRITE_BYTES = 1 << 62 if placement == "driver" else -1
+    print("RESULT " + json.dumps(
+        {"sha2_probe_4m_rows_s": run_cpu_calibration(
+            spark, 4, rows=4_000_000)}), flush=True)
     with tempfile.TemporaryDirectory() as tmp:
-        for ci, name in enumerate([cells[0]] + cells):
-            base = os.path.join(tmp, name)
-            if not os.path.isdir(base):
-                synthesize_cdc_aftermath(base, seed=1, **CELLS[name])
-            entries = SnapshotStore(base).manifest_entries(0)
-            sizes[name] = {"files": len(entries),
-                           "bytes": sum(e["bytes"] for e in entries)}
-            cfg = table_config(sizes[name]["bytes"])
-            # the first cell once more, unrecorded, warms both paths
-            for rep in range(args.reps if ci else 1):
-                order = ["driver", "spark"]
-                for path in order if rep % 2 == 0 else order[::-1]:
-                    gc.collect()
-                    w = os.path.join(tmp, "w")
-                    shutil.rmtree(w, ignore_errors=True)
-                    shutil.copytree(base, w)
-                    rewrite.DRIVER_REWRITE_BYTES = (
-                        1 << 62 if path == "driver" else -1)
-                    t = MoonTable(spark, w, cfg)
-                    t0 = time.monotonic()
-                    try:
-                        with PeakRss(pids) as rss:
-                            snap = t.optimize("full")
-                        run = {"seconds": round(time.monotonic() - t0, 3),
-                               "peak_rss_mb": round(rss.peak_kb / 1024, 1),
-                               "writer": snap.properties["metrics"]
-                               ["writer"]}
-                    except Exception as e:  # noqa: BLE001 — recorded
-                        run = {"error": str(e).splitlines()[0][:200]}
-                    run = {"cell": name, **sizes[name], "path": path,
-                           "rep": rep, **run}
-                    if ci:
-                        runs.append(run)
-                        print(json.dumps(run), flush=True)
-            if ci:
-                shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(os.path.join(tmp, "w"), ignore_errors=True)
+        w = os.path.join(tmp, "w")
+        for line in sys.stdin:
+            req = json.loads(line)
+            gc.collect()
+            shutil.rmtree(w, ignore_errors=True)
+            shutil.copytree(req["base"], w)
+            store = SnapshotStore(w)
+            t = MoonTable(spark, w, table_config(
+                sum(e["bytes"] for e in store.manifest_entries(0))))
+            t0 = time.monotonic()
+            try:
+                with PeakRss([os.getpid(), jvm], jvm) as rss:
+                    snap = t.optimize("full")
+                run = {"seconds": round(time.monotonic() - t0, 3),
+                       "peak_rss_mb": round(rss.peak_kb / 1024, 1),
+                       "py_worker_peak_rss_mb": round(rss.worker_kb / 1024,
+                                                      1),
+                       "py_worker_peak_anon_mb": round(
+                           rss.worker_anon_kb / 1024, 1),
+                       "py_workers_peak_rss_mb": round(
+                           rss.workers_kb / 1024, 1),
+                       "writer": snap.properties["metrics"]["writer"],
+                       **rows_digests(store, snap.version)}
+            except Exception as e:  # noqa: BLE001 — recorded
+                run = {"error": str(e).splitlines()[0][:200]}
+            print("RESULT " + json.dumps(run), flush=True)
     spark.stop()
+
+
+class Side:
+    """A worker process for one side, and its request/answer channel."""
+
+    def __init__(self, name: str, root: str, placement: str):
+        self.name, self.root, self.placement = name, root, placement
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "--worker",
+             "--root", root, "--placement", placement],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+            cwd=root)
+        self.probe_s = self._answer()["sha2_probe_4m_rows_s"]
+
+    def _answer(self) -> dict:
+        for line in self.proc.stdout:
+            if line.startswith("RESULT "):
+                return json.loads(line[len("RESULT "):])
+        raise RuntimeError(f"worker {self.name} exited "
+                           f"({self.proc.wait()})")
+
+    def run(self, req: dict) -> dict:
+        self.proc.stdin.write(json.dumps(req) + "\n")
+        self.proc.stdin.flush()
+        return self._answer()
+
+    def close(self):
+        self.proc.stdin.close()
+        self.proc.wait(timeout=120)
+
+
+def _median(runs: list[dict], key: str) -> float:
+    vals = [r[key] for r in runs if key in r]
+    return statistics.median(vals) if vals else float("nan")
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--cells", default=",".join(CELLS))
+    ap.add_argument("--parent", help="checkout to time against")
+    ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
+    ap.add_argument("--root", default=REPO, help=argparse.SUPPRESS)
+    ap.add_argument("--placement", help=argparse.SUPPRESS)
+    args = ap.parse_args()
+    if args.worker:
+        return worker(args.root, args.placement)
+    sys.path.insert(0, REPO)
+    from moonlink_spark.snapshotstore import SnapshotStore
+    from moonlink_spark.synth import synthesize_cdc_aftermath
+
+    cells = [c for c in args.cells.split(",") if c]
+    if args.parent:
+        specs = [("change", REPO, "tasks"),
+                 ("parent", os.path.abspath(args.parent), "tasks")]
+    else:
+        specs = [("driver", REPO, "driver"), ("tasks", REPO, "tasks")]
+    sides = [Side(*s) for s in specs]
+    runs, sizes = [], {}
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            for ci, name in enumerate([cells[0]] + cells):
+                base = os.path.join(tmp, name)
+                if not os.path.isdir(base):
+                    synthesize_cdc_aftermath(base, seed=1, **CELLS[name])
+                entries = SnapshotStore(base).manifest_entries(0)
+                sizes[name] = {"files": len(entries),
+                               "bytes": sum(e["bytes"] for e in entries)}
+                # the first cell once more, unrecorded, warms both sides
+                for rep in range(args.reps if ci else 1):
+                    for side in sides if rep % 2 == 0 else sides[::-1]:
+                        run = side.run({"base": base})
+                        run = {"cell": name, **sizes[name],
+                               "side": side.name, "rep": rep, **run}
+                        if ci:
+                            runs.append(run)
+                            print(json.dumps(run), flush=True)
+                if ci:
+                    shutil.rmtree(base, ignore_errors=True)
+    finally:
+        for side in sides:
+            side.close()
+    a, b = (s.name for s in sides)
     cells_out = []
     for name in cells:
-        mine = [r for r in runs if r["cell"] == name]
-        by = {p: [r for r in mine if r["path"] == p] for p in
-              ("driver", "spark")}
-        med = {p: statistics.median([r["seconds"] for r in rs
-                                     if "seconds" in r] or [float("nan")])
-               for p, rs in by.items()}
-        pairs = list(zip(by["driver"], by["spark"]))
+        by = {s: [r for r in runs if r["cell"] == name and r["side"] == s]
+              for s in (a, b)}
+        med = {s: _median(rs, "seconds") for s, rs in by.items()}
         cells_out.append({
             "cell": name, **sizes[name],
-            "errors": {p: sum("error" in r for r in rs)
-                       for p, rs in by.items()},
-            "driver_median_s": med["driver"],
-            "spark_median_s": med["spark"],
-            "driver_over_spark": round(med["driver"] / med["spark"], 3),
-            "driver_wins_every_run": all(
-                d.get("seconds", 1e9) < s.get("seconds", 0)
-                for d, s in pairs),
-            "driver_peak_rss_mb_max": max(
-                (r.get("peak_rss_mb", 0) for r in by["driver"]), default=0),
-            "spark_peak_rss_mb_max": max(
-                (r.get("peak_rss_mb", 0) for r in by["spark"]), default=0),
+            "errors": {s: sum("error" in r for r in rs)
+                       for s, rs in by.items()},
+            f"{a}_median_s": med[a], f"{b}_median_s": med[b],
+            f"{a}_over_{b}": round(med[a] / med[b], 3),
+            f"{a}_wins": sum(x.get("seconds", 1e9) < y.get("seconds", 0)
+                             for x, y in zip(by[a], by[b])),
+            "pairs": min(len(by[a]), len(by[b])),
+            **{f"{k}s_equal": len({r.get(k) for rs in by.values()
+                                   for r in rs}) == 1
+               for k in ("rows_digest", "pos_digest")},
+            **{f"{s}_{k}_max": max((r.get(k, 0) for r in rs), default=0)
+               for s, rs in by.items()
+               for k in ("peak_rss_mb", "py_worker_peak_rss_mb",
+                         "py_worker_peak_anon_mb", "py_workers_peak_rss_mb")},
         })
-    by_size = sorted((c for c in cells_out if not c["cell"].startswith(
-        "tiny")), key=lambda c: c["bytes"])
-    crossover = None
-    for c in by_size:
-        if not c["driver_wins_every_run"]:
-            break
-        crossover = c
-    print(json.dumps({
+    summary = {
         "metric": "optimize_full_seconds",
         "host": {"nproc": len(os.sched_getaffinity(0)),
-                 "sha2_probe_4m_rows_s": probe_s},
+                 "sha2_probe_4m_rows_s": {s.name: s.probe_s
+                                          for s in sides}},
+        "sides": {s.name: {"checkout": "this" if s.root == REPO
+                           else "parent", "placement": s.placement}
+                  for s in sides},
         "driver_memory": "1g", "master": "local[4]", "reps": args.reps,
         "shape": "synth seed 1 per cell; perfbench table_config: 2 bins "
                  "of 2 outputs; a fresh copy per run",
-        "largest_driver_win_cell": crossover and crossover["cell"],
-        "largest_driver_win_bytes": crossover and crossover["bytes"],
-        "cells": cells_out, "runs": runs}))
+        "cells": cells_out, "runs": runs}
+    if not args.parent:
+        # the largest cell whose every driver run beat its pair's tasks run
+        crossover = None
+        for c in sorted((c for c in cells_out
+                         if not c["cell"].startswith("tiny")),
+                        key=lambda c: c["bytes"]):
+            if c["driver_wins"] < c["pairs"]:
+                break
+            crossover = c
+        summary["largest_driver_win_cell"] = crossover and crossover["cell"]
+        summary["largest_driver_win_bytes"] = (crossover
+                                               and crossover["bytes"])
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":
