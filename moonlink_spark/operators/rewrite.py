@@ -64,7 +64,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from moonlink_spark.config import TableConfig
 from moonlink_spark.functions.zorder import CURVES, ZCUTS_KEY, zorder_proxy
@@ -397,24 +397,23 @@ def xxhash64(file: str, pos: np.ndarray, seed: int = 42) -> np.ndarray:
 
 # The most planned input bytes (summed over all of a job's bins) that an
 # optimize job rewrites in-process on the driver; a larger job runs the
-# same kernel in Spark tasks.  In-process won every run at every size
-# measured on a 4-core host with a 1 GiB driver: 0.10 against 1.22 s at
-# the benchmark's 3 MB, 2.86 against 6.62 s at 172 MB, and 1.55 against
-# 2.77 s over 2,000 tiny files, so no file-count cap.  Its peak RSS
-# (process plus driver JVM) was 3.6 GB against 2.5 GB at 172 MB, and
-# grows with the input, so the switch stays at the largest size
+# same kernel in Spark tasks.  In-process won every pair at every size
+# measured against the task placement on a 4-core host with a 1 GiB
+# driver: 0.11 against 1.10 s at the benchmark's 3 MB, 3.49 against
+# 4.89 s at 172 MB, and 1.32 against 1.57 s over 2,000 tiny files, so
+# no file-count cap.  Its peak RSS (process plus driver JVM) was 2.1 GB
+# at 172 MB and grows with the input, where the task placement's
+# Python workers peak per task, so the switch stays at the largest size
 # measured, rounded down (tools/rewrite_path_bench.py,
-# REWRITE_PATH_CROSSOVER.json).  Those runs raced the Spark writer the
-# task placement replaced, not the task placement itself
+# REWRITE_PATH_CROSSOVER.json)
 DRIVER_REWRITE_BYTES = 160 << 20
 
 # the most Arrow bytes of one row group: parquet-mr's block size, and so
 # the row group Spark's writer rolls
 ROW_GROUP_BYTES = 128 << 20
 # stage 1 keys live rows in blocks of about this many Arrow bytes, so
-# tiny files share one keying pass, and hands a partition's rows to the
-# shuffle as Arrow IPC blobs of about as many: no blob nears Spark's
-# 2 GiB value limit
+# tiny files share one keying pass; stage 2 chooses a partition's
+# dictionary columns from its first rows of about as many
 _BLOCK_BYTES = 8 << 20
 # the key columns stage 1 appends: zkey, output partition, file rank
 _Z, _P, _F = "_z", "_p", "_f"
@@ -567,9 +566,10 @@ def _key_block(kernel: RewriteKernel, block: list) -> pa.RecordBatch:
 
 
 def _dictionary_columns(table: pa.Table) -> list[str]:
-    """The columns parquet-mr (Spark's writer) keeps dictionary-encoded:
-    those whose dictionary plus indices come out smaller than the plain
-    values (``isCompressionSatisfying``); an all-distinct ``content`` or
+    """The columns parquet-mr (Spark's writer) keeps dictionary-encoded
+    in ``table``: those whose dictionary plus indices come out smaller
+    than the plain values (``isCompressionSatisfying``, which parquet-mr
+    checks on a column's first page); an all-distinct ``content`` or
     ``commit`` column is written plain."""
     def size(a) -> int:  # plain-encoded bytes
         if pa.types.is_string(a.type) or pa.types.is_binary(a.type):
@@ -587,6 +587,27 @@ def _dictionary_columns(table: pa.Table) -> list[str]:
     return out
 
 
+def _take(batches: list[pa.RecordBatch], starts: np.ndarray,
+          idx: np.ndarray) -> pa.Table:
+    """Rows ``idx`` of the table made of ``batches`` (which start at rows
+    ``starts``), in the order of ``idx``.  pyarrow's ``Table.take``
+    first concatenates a many-batch table's columns — a copy of every
+    row, on every call — so each batch is taken from alone, and the
+    pieces, gathered, are put back in ``idx`` order."""
+    chunk = np.searchsorted(starts, idx, side="right") - 1
+    by_chunk = np.argsort(chunk, kind="stable")
+    cs = chunk[by_chunk]
+    edges = np.concatenate(([0], np.flatnonzero(np.diff(cs)) + 1,
+                            [len(cs)]))
+    gathered = pa.Table.from_batches([
+        batches[cs[a]].take(pa.array(idx[by_chunk[a:b]] - starts[cs[a]]))
+        for a, b in zip(edges[:-1], edges[1:])])
+    if len(edges) == 2:  # one batch: already in ``idx`` order
+        return gathered
+    gathered = gathered.combine_chunks()  # frees the pieces
+    return gathered.take(pa.array(np.argsort(by_chunk)))
+
+
 def write_partition(kernel: RewriteKernel, rows: pa.Table, part: int,
                     out_dir: str) -> list[tuple[str, int]]:
     """Stage 2: write one layout partition's keyed ``rows`` (stage 1's
@@ -597,20 +618,27 @@ def write_partition(kernel: RewriteKernel, rows: pa.Table, part: int,
     nulls first — a total key, so the files are byte-stable across
     reruns — orders the rows; a new file starts every ``rows_per_file``
     rows, its positions renumbered from 0.  Each row group is one
-    ``take`` of at most ``ROW_GROUP_BYTES`` of Arrow bytes in sorted
-    order, so a memory-mapped ``rows`` is never copied whole.  Columns
-    are dictionary-encoded as parquet-mr would for this partition's
-    values."""
+    :func:`_take` of at most ``ROW_GROUP_BYTES`` of Arrow bytes in
+    sorted order, so a memory-mapped ``rows`` is never copied whole.
+    Columns are dictionary-encoded as parquet-mr would for the
+    partition's first ``_BLOCK_BYTES`` of sorted rows — all of a
+    benchmark-sized one."""
     keys = [_Z, *kernel.zorder_columns, _F, POS_COL]
     order = pc.sort_indices(rows, sort_keys=[(k, "ascending") for k in keys],
-                            null_placement="at_start")
+                            null_placement="at_start").to_numpy().view(
+                                np.int64)
     data = rows.select(kernel.schema.names[:-1])
+    batches = data.to_batches()
+    starts = np.cumsum([0] + [b.num_rows for b in batches[:-1]])
     n, per_file = rows.num_rows, kernel.layout.rows_per_file
-    group = max(1, int(ROW_GROUP_BYTES * n // max(1, data.nbytes)))
+    row_bytes = max(1, data.nbytes) / max(1, n)
+    group = max(1, int(ROW_GROUP_BYTES / row_bytes))
+    head = _take(batches, starts,
+                 order[:max(1, int(_BLOCK_BYTES / row_bytes))])
     opts = dict(compression=kernel.compression,
                 compression_level=(3 if kernel.compression == "zstd"
                                    else None),
-                use_dictionary=_dictionary_columns(data),
+                use_dictionary=_dictionary_columns(head),
                 write_statistics=list(kernel.stats_columns))
     pos_field = kernel.schema.field(POS_COL)
     out = []
@@ -621,10 +649,11 @@ def write_partition(kernel: RewriteKernel, rows: pa.Table, part: int,
                               **opts) as w:
             for lo in range(first, end, group):
                 hi = min(end, lo + group)
-                t = data.take(order.slice(lo, hi - lo)).append_column(
-                    pos_field, pa.array(np.arange(lo - first, hi - first),
-                                        pa.int64()))
-                w.write_table(t, row_group_size=t.num_rows)
+                # one row group held at a time
+                w.write_table(_take(batches, starts, order[lo:hi])
+                              .append_column(pos_field, pa.array(
+                                  np.arange(lo - first, hi - first),
+                                  pa.int64())), row_group_size=hi - lo)
         out.append((name, end - first))
     return out
 
@@ -647,73 +676,39 @@ def _write_on_driver(store: SnapshotStore, bin: CompactionBin,
                         else live, int(p), tmp_dir)
 
 
-def _ipc_blob(batches: list[pa.RecordBatch], schema: pa.Schema) -> pa.Array:
-    """``batches`` as one Arrow IPC stream, held in a one-value binary
-    array."""
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, schema) as w:
-        for b in batches:
-            w.write_batch(b)
-    buf = sink.getvalue()
-    return pa.Array.from_buffers(pa.binary(), 1, [
-        None, pa.array([0, buf.size], pa.int32()).buffers()[1], buf])
-
-
 def _key_files(kernel: RewriteKernel):
     """mapInArrow body of the task placement's stage 1: :func:`key_files`
     over the plan rows (the bin's input files), each file's deleted
     positions read from the sidecar its row names, one read per sidecar
-    and plan batch; the keyed rows leave as ``(_p, IPC blob)`` rows, a
-    partition's rows gathered to about ``_BLOCK_BYTES`` per blob.  The
-    blob carries stage 1's Arrow types through the shuffle unchanged."""
-    schema = kernel.keyed_schema
-
+    and plan batch.  The keyed rows leave as they are, in blocks of about
+    ``_BLOCK_BYTES``, and Spark shuffles them as typed rows."""
     def stage1(plans: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        held: dict[int, list] = {}
-        size: dict[int, int] = {}
-
-        def blob(p: int) -> pa.RecordBatch:
-            del size[p]
-            return pa.RecordBatch.from_arrays(
-                [pa.array([p], pa.int64()), _ipc_blob(held.pop(p), schema)],
-                names=[_P, "_b"])
-
         for plan in plans:
             paths, rels, dvs, ranks = (plan.column(c).to_pylist()
                                        for c in ("path", "rel", "dv", "rank"))
             dels = grouped_sidecar_positions(
                 {r: dv for r, dv in zip(rels, dvs) if dv is not None})
-            for rb in key_files(kernel, [(path, r, k, dels.get(r))
-                                         for path, r, k in zip(paths, rels,
-                                                               ranks)]):
-                parts = rb.column(_P).to_numpy()
-                for p in np.unique(parts).tolist():
-                    part = rb.filter(pa.array(parts == p))
-                    held.setdefault(p, []).append(part)
-                    size[p] = size.get(p, 0) + part.nbytes
-                    if size[p] >= _BLOCK_BYTES:
-                        yield blob(p)
-        for p in sorted(held):
-            yield blob(p)
+            yield from key_files(kernel, [(path, r, k, dels.get(r))
+                                          for path, r, k in zip(paths, rels,
+                                                                ranks)])
     return stage1
 
 
-def _spill(blobs: Iterator[pa.RecordBatch], schema: pa.Schema,
+def _spill(batches: Iterator[pa.RecordBatch], schema: pa.Schema,
            local_dir: str | None) -> pa.Table:
-    """A group's ``(_p, IPC blob)`` rows written batch by batch to one
+    """A group's batches, cast back to stage 1's ``schema`` (Spark hands
+    a timestamp over in the session's zone), written one at a time to an
     Arrow IPC file under ``local_dir`` and read back memory-mapped: the
-    task holds one blob at a time, and stage 2's sort reads only the key
-    columns' pages.  The file is unlinked at once; the mapping keeps it
-    readable until the table is released."""
+    task holds one of Spark's row-capped batches at a time, and stage 2's
+    sort reads only the key columns' pages.  The file is unlinked at
+    once; the mapping keeps it readable until the table is released."""
     fd, path = tempfile.mkstemp(suffix=".arrow", dir=local_dir)
     os.close(fd)
     try:
         with pa.OSFile(path, "wb") as sink, \
                 pa.ipc.new_file(sink, schema) as w:
-            for rb in blobs:
-                for v in rb.column("_b"):
-                    for b in pa.ipc.open_stream(v.as_buffer()):
-                        w.write_batch(b)
+            for rb in batches:
+                w.write_batch(rb.cast(schema))
         return pa.ipc.open_file(pa.memory_map(path)).read_all()
     finally:
         os.unlink(path)
@@ -724,10 +719,10 @@ def _write_groups(kernel: RewriteKernel, tmp_dir: str):
     group (:func:`_spill`, into the executor's first local dir), then
     :func:`write_partition`; returns the written files' names and
     rows."""
-    def stage2(key: tuple, blobs: Iterator[pa.RecordBatch]
+    def stage2(key: tuple, batches: Iterator[pa.RecordBatch]
                ) -> Iterator[pa.RecordBatch]:
         local = (os.environ.get("SPARK_LOCAL_DIRS") or "").split(",")[0]
-        rows = _spill(blobs, kernel.keyed_schema, local or None)
+        rows = _spill(batches, kernel.keyed_schema, local or None)
         written = write_partition(kernel, rows, key[0].as_py(), tmp_dir)
         yield pa.RecordBatch.from_arrays(
             [pa.array([f for f, _ in written], pa.string()),
@@ -750,7 +745,8 @@ def _write_in_tasks(spark: SparkSession, store: SnapshotStore,
         [store.abs(bin.dv_files[f]) if f in bin.dv_files else None
          for f in files], list(range(len(files)))])
     store.fs.makedirs(tmp_dir)
-    (plan.mapInArrow(_key_files(kernel), f"{_P} long, _b binary")
+    keyed = from_arrow_schema(kernel.keyed_schema, prefer_timestamp_ntz=True)
+    (plan.mapInArrow(_key_files(kernel), keyed)
      .groupBy(_P)
      .applyInArrow(_write_groups(kernel, tmp_dir), "file string, rows long")
      .collect())

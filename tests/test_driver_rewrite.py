@@ -215,12 +215,16 @@ _TYPED_CONFIG = TableConfig(
                                 bin_concurrency=2))
 
 
-@pytest.mark.parametrize("out_ts", ["INT96", "TIMESTAMP_MICROS"])
-def test_typed_table_parity(spark, tmp_path, monkeypatch, out_ts):
+@pytest.mark.parametrize("out_ts,zone", [("INT96", "UTC"),
+                                         ("TIMESTAMP_MICROS", "Asia/Kolkata")],
+                         ids=["INT96", "TIMESTAMP_MICROS"])
+def test_typed_table_parity(spark, tmp_path, monkeypatch, out_ts, zone):
     """decimal (integer- and array-backed), date, timestamp and double
     columns, with nulls, Z-ordered on a non-ASCII string and a long; a
     timestamp column is written as INT64 microseconds, with bounds,
-    whatever the session's ``outputTimestampType`` says."""
+    whatever the session's ``outputTimestampType`` says, and keeps its
+    instants through the task placement's shuffle in any session time
+    zone."""
     rng = np.random.default_rng(11)
     files = _typed_files(rng, 6, 400)
 
@@ -229,13 +233,16 @@ def test_typed_table_parity(spark, tmp_path, monkeypatch, out_ts):
                      {1: list(range(0, 400, 3)), 4: [5, 6, 7]},
                      _TYPED_CONFIG.stats_columns)
 
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, out_ts)
+    conf = {"spark.sql.parquet.outputTimestampType": out_ts,
+            "spark.sql.session.timeZone": zone}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         out = _both_ways(spark, tmp_path, monkeypatch, make, _TYPED_CONFIG)
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     assert len(out) > 2
     entry = out[0][0]
     assert isinstance(entry["min_price"], decimal.Decimal)
@@ -392,14 +399,9 @@ def test_spilled_partition_writes_identical_files(tmp_path):
         for i, f in enumerate(sorted(bin.files))]))
     rows = pa.Table.from_batches(batches, schema=kernel.keyed_schema)
     assert rows.num_rows == bin.live_rows
-    batches = rows.to_batches(max_chunksize=500)
-    blobs = [pa.RecordBatch.from_arrays(
-        [pa.array([0], pa.int64()),
-         rewrite._ipc_blob(batches[i:i + 3], kernel.keyed_schema)],
-        names=["_p", "_b"]) for i in range(0, len(batches), 3)]
     pool = pa.total_allocated_bytes()
-    spilled = rewrite._spill(iter(blobs), kernel.keyed_schema,
-                             str(tmp_path))
+    spilled = rewrite._spill(iter(rows.to_batches(max_chunksize=500)),
+                             kernel.keyed_schema, str(tmp_path))
     assert pa.total_allocated_bytes() - pool < rows.nbytes // 4
     assert spilled.equals(rows)
     assert os.listdir(tmp_path) == ["wh"]  # the spill file is unlinked
@@ -412,6 +414,24 @@ def test_spilled_partition_writes_identical_files(tmp_path):
         out[name] = {f: (d / f).read_bytes() for f, _n in written}
     assert len(out["memory"]) > 1
     assert out["memory"] == out["mapped"]
+
+
+def test_take_across_batches_matches_table_take():
+    """``rewrite._take`` gathers rows from a many-batch table batch by
+    batch and returns them in the order asked, as ``Table.take`` would."""
+    rng = np.random.default_rng(5)
+    n = 5_000
+    table = pa.table({
+        "s": [None if i % 97 == 0 else f"v{i}" for i in range(n)],
+        "x": rng.integers(-9, 9, n),
+        "l": [[i, -i] for i in range(n)]})
+    batches = table.to_batches(max_chunksize=333)
+    starts = np.cumsum([0] + [b.num_rows for b in batches[:-1]])
+    for idx in (rng.permutation(n)[:1_234], np.arange(n)[::-1],
+                np.array([4_999, 0, 333, 332])):
+        got = rewrite._take(batches, starts, idx)
+        assert got.equals(table.take(idx))
+        assert got.column(0).num_chunks == 1
 
 
 def test_xxhash64_matches_spark(spark):

@@ -18,15 +18,17 @@ Each side is its own worker process (this script with ``--worker``) with
 its own ``local[4]`` session and the benchmark's 1 GiB driver, importing
 the engine from its checkout; one side idles while the other runs.
 Each cell is planned as the benchmark plans its table
-(``perfbench.workloads.table_config``: 2 bins of 2 outputs).  Per run a
+(``perfbench.workloads.table_config``: 2 bins of 2 outputs), except
+``default_640mb``, planned under the default table config (one bin of
+one 512 MiB target file).  Per run a
 worker records the optimize wall seconds (or its error), peak RSS
 sampled every 10 ms while the job runs — of the worker process plus its
 driver JVM, and of the JVM's descendant Python workers (the largest
 one's RSS and anonymous RSS, and their summed RSS; found through
-``/proc/<pid>/task/*/children``) — and,
-after the timed job, digests of the decoded rows of every output file
-in name order, one without ``_pos`` and one of ``_pos`` alone.  The host fingerprint is ``nproc`` and each worker's
-sha2 probe (4M rows, ``bench.run_cpu_calibration``).
+``/proc/<pid>/task/*/children``) — and, after the timed job, digests
+of the decoded rows of every output file in name order, one without
+``_pos`` and one of ``_pos`` alone.  The host fingerprint is ``nproc``
+and each worker's sha2 probe (4M rows, ``bench.run_cpu_calibration``).
 
 Prints one JSON line per run as it ends, then one summary line; commit
 the summary as ``REWRITE_PATH_CROSSOVER.json`` (placements) or
@@ -34,6 +36,10 @@ the summary as ``REWRITE_PATH_CROSSOVER.json`` (placements) or
 
 Usage: python tools/rewrite_path_bench.py [--reps 3] [--cells a,b]
                                           [--parent DIR]
+
+``--cells`` defaults to every cell but ``default_640mb``: name it to run
+it (it needs ~2 GB of disk per copy and, in-process on the driver,
+several GB of memory).
 """
 
 from __future__ import annotations
@@ -63,7 +69,12 @@ CELLS = {
     "200mb": dict(n_files=160, rows_per_file=(800, 6_400)),
     "tiny_2000": dict(n_files=2_000, rows_per_file=(3, 10),
                       content_bytes=(64, 512)),
+    "default_640mb": dict(n_files=600, rows_per_file=(800, 6_400)),
 }
+# cells planned under the default table config, not the benchmark's:
+# one bin of one output file, so the task placement's one stage-2 group
+# holds the whole ~640 MB bin
+DEFAULT_CONFIG_CELLS = {"default_640mb"}
 
 
 def _rss_kb(pid: int, field: str = "VmRSS") -> int:
@@ -149,24 +160,27 @@ def rows_digests(store, version: int) -> dict:
     rows, pos = hashlib.sha256(), hashlib.sha256()
     for e in sorted(store.manifest_entries(version),
                     key=lambda e: os.path.basename(e["path"])):
-        df = pq.read_table(store.abs(e["path"])).to_pandas()
-        rows.update(len(df).to_bytes(8, "little"))
-        rows.update(pd.util.hash_pandas_object(
-            df.drop(columns="_pos"), index=False).values.tobytes())
-        pos.update(df["_pos"].to_numpy().tobytes())
+        f = pq.ParquetFile(store.abs(e["path"]))
+        rows.update(f.metadata.num_rows.to_bytes(8, "little"))
+        for rb in f.iter_batches(batch_size=65_536):  # a file at a time
+            df = rb.to_pandas()                       # would not fit
+            rows.update(pd.util.hash_pandas_object(
+                df.drop(columns="_pos"), index=False).values.tobytes())
+            pos.update(df["_pos"].to_numpy().tobytes())
     return {"rows_digest": rows.hexdigest(), "pos_digest": pos.hexdigest()}
 
 
 def worker(root: str, placement: str) -> None:
-    """One side: read ``{"base": dir}`` requests from stdin, run
-    ``optimize("full")`` on a fresh copy of the table at ``dir`` in
-    ``placement`` ("driver" or "tasks"), answer one ``RESULT {json}``
-    line per request."""
+    """One side: read ``{"base": dir, "default_config": bool}`` requests
+    from stdin, run ``optimize("full")`` on a fresh copy of the table at
+    ``dir`` in ``placement`` ("driver" or "tasks"), answer one ``RESULT
+    {json}`` line per request."""
     sys.path.insert(0, root)
     os.environ["PYTHONPATH"] = root  # Python workers import it
     from pyspark.sql import SparkSession
 
     from bench import run_cpu_calibration
+    from moonlink_spark.config import TableConfig
     from moonlink_spark.engine import MoonTable
     from moonlink_spark.operators import rewrite
     from moonlink_spark.snapshotstore import SnapshotStore
@@ -193,8 +207,9 @@ def worker(root: str, placement: str) -> None:
             shutil.rmtree(w, ignore_errors=True)
             shutil.copytree(req["base"], w)
             store = SnapshotStore(w)
-            t = MoonTable(spark, w, table_config(
-                sum(e["bytes"] for e in store.manifest_entries(0))))
+            t = MoonTable(spark, w, TableConfig() if req["default_config"]
+                          else table_config(sum(
+                              e["bytes"] for e in store.manifest_entries(0))))
             t0 = time.monotonic()
             try:
                 with PeakRss([os.getpid(), jvm], jvm) as rss:
@@ -252,7 +267,8 @@ def _median(runs: list[dict], key: str) -> float:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--cells", default=",".join(CELLS))
+    ap.add_argument("--cells", default=",".join(
+        c for c in CELLS if c not in DEFAULT_CONFIG_CELLS))
     ap.add_argument("--parent", help="checkout to time against")
     ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--root", default=REPO, help=argparse.SUPPRESS)
@@ -284,7 +300,8 @@ def main():
                 # the first cell once more, unrecorded, warms both sides
                 for rep in range(args.reps if ci else 1):
                     for side in sides if rep % 2 == 0 else sides[::-1]:
-                        run = side.run({"base": base})
+                        run = side.run({"base": base, "default_config":
+                                        name in DEFAULT_CONFIG_CELLS})
                         run = {"cell": name, **sizes[name],
                                "side": side.name, "rep": rep, **run}
                         if ci:
@@ -328,13 +345,15 @@ def main():
                   for s in sides},
         "driver_memory": "1g", "master": "local[4]", "reps": args.reps,
         "shape": "synth seed 1 per cell; perfbench table_config: 2 bins "
-                 "of 2 outputs; a fresh copy per run",
+                 "of 2 outputs (default_640mb: the default TableConfig); a "
+                 "fresh copy per run",
         "cells": cells_out, "runs": runs}
     if not args.parent:
         # the largest cell whose every driver run beat its pair's tasks run
         crossover = None
         for c in sorted((c for c in cells_out
-                         if not c["cell"].startswith("tiny")),
+                         if not c["cell"].startswith("tiny")
+                         and c["cell"] not in DEFAULT_CONFIG_CELLS),
                         key=lambda c: c["bytes"]):
             if c["driver_wins"] < c["pairs"]:
                 break
